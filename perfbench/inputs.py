@@ -33,26 +33,6 @@ def _cached_dir(cache: str, name: str, build) -> str:
     return out
 
 
-def replay_log(cache: str, seed: int, n_events: int, n_files: int) -> str:
-    """The bulk-backfill binlog: a 20% hot repo, 5% deletes, 5% duplicate
-    re-deliveries and an additive ``lang`` column from mid-log on."""
-    spec = EventLogSpec(
-        seed=seed,
-        n_events=n_events,
-        n_repos=max(200, n_events // 500),
-        paths_per_repo=40,
-        hot_ratio=0.2,
-        p_delete=0.05,
-        n_files=n_files,
-        evolve_at=0.5,
-        content_repeat=2,
-        duplicate_ratio=0.05,
-    )
-    return _cached_dir(
-        cache, f"replay-s{seed}-n{n_events}-f{n_files}", lambda d: generate_event_log(d, spec)
-    )
-
-
 def round_segments(cache: str, seed: int, seg_events: int, n_segments: int) -> list[str]:
     """Equal-sized, arrival-ordered segments of one log; the caller lands
     a prefix as the seed table and the rest one per round."""

@@ -3,8 +3,8 @@
     python3 perfbench/run.py --workload incremental_rounds --seed 1 --seconds 10 --trace 0
 
 Runs from the root of a checkout. ``--trace 0`` prints the end-to-end
-metrics; ``--trace 1`` alternates untraced and traced passes and prints
-the per-layer metrics plus the tracing overhead. ``--smoke`` runs every
+metrics; ``--trace 1`` runs an untraced and a traced pass, each in a JVM
+of its own, and prints the per-layer metrics plus the tracing overhead. ``--smoke`` runs every
 workload in both modes at tiny sizes and checks that every metric in
 ``BENCHMARK.json`` is printed with its unit. See perfbench/README.md.
 """
@@ -86,9 +86,6 @@ LAYERS = {
 }
 PER_LAYER = {**LAYERS, **WORKLOAD_FIGURES}
 
-SETUP_REPEATS = 3
-
-
 def _median(values) -> float:
     values = list(values)
     return float(statistics.median(values)) if values else 0.0
@@ -135,13 +132,11 @@ def _stop_jvm(spark) -> None:
 
 def _workload_figures(name: str, passes: list[dict], wl) -> dict:
     get = lambda k: [p[k] for p in passes if k in p]  # noqa: E731
-    reads = [r for p in passes for r in p.get("reads", [])]
     out = {k: 0.0 for k in WORKLOAD_FIGURES}
     out["op_fail_ratio"] = wl.failed / max(wl.attempted, 1)
     out["space_amp"] = getattr(wl, "space_amp", 0.0)
-    if name == "replay_cow":
-        out["replay_events_per_s"] = _median(get("replay_events_per_s"))
-    elif name == "incremental_rounds":
+    if name == "incremental_rounds":
+        reads = [r for p in passes for r in p["reads"]]
         out["round_s_p50"] = _median(get("round_s"))
         out["round_s_p90"] = _p90(get("round_s"))
         out["point_read_s_p50"] = _median(reads)
@@ -160,10 +155,34 @@ def _pass_s(name: str, passes: list[dict]) -> float:
     return _median(p["pass_s"] for p in passes)
 
 
+def _start(work: str, cores: int):
+    """A cold start: launch the JVM, build the session, run one small job."""
+    t0 = time.perf_counter()
+    spark = _session(work, cores)
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    return spark, time.perf_counter() - t0
+
+
+def _untraced_run(args) -> tuple[dict, dict]:
+    """The same workload and seed run untraced in a process of its own:
+    the traced pass is then compared with a pass that, like it, is the
+    first in a fresh process and JVM. Returns its detail and result."""
+    cmd = [sys.executable, os.path.abspath(__file__), "--workload", args.workload,
+           "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"]
+    if args.tiny:
+        cmd.append("--tiny")
+    res = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=600)
+    if res.returncode != 0:
+        raise RuntimeError(f"untraced run exited {res.returncode}:\n{res.stderr[-3000:]}")
+    detail, result = res.stdout.strip().splitlines()[-2:]
+    return json.loads(detail), json.loads(result)
+
+
 def run(args) -> dict:
-    from perfbench.trace import Tracer
+    from perfbench.trace import Tracer, write_spans
     from perfbench.workloads import TINY, WORKLOADS, Sizes
 
+    untraced = _untraced_run(args) if args.trace else None
     cores = os.cpu_count() or 1
     cache = os.path.join(ROOT, ".bench_cache")
     work = os.path.join(ROOT, ".bench_work", f"{args.workload}-{os.getpid()}")
@@ -175,71 +194,64 @@ def run(args) -> dict:
         sha_before = bench._sha_control()
         wl = WORKLOADS[args.workload](cache, work, args.seed, TINY if args.tiny else Sizes(), cores)
         wl.prepare()
-        sessions = []
-        for _ in range(SETUP_REPEATS):
-            if spark is not None:
-                spark.stop()
-            t0 = time.perf_counter()
-            spark = _session(work, cores)
-            spark.range(1_000_000).selectExpr("sum(id)").collect()
-            sessions.append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        wl.setup(spark)
-        state_s = time.perf_counter() - t0
         run_id = f"{args.workload}-s{args.seed}-{os.getpid()}"
-        tracer = Tracer(spark, run_id)
-        wl.warm_up(spark, tracer)
-        if args.trace:
-            # traced and untraced passes are compared pairwise, so neither
-            # side may get the first pass, which compiles the plans
-            wl.run_pass(spark, tracer)
-        passes, traced = [], []
-        t_start = time.perf_counter()
-        min_passes = 2 if args.trace else 1
-        while time.perf_counter() - t_start < args.seconds or len(passes) < min_passes:
-            on = bool(args.trace) and len(passes) % 2 == 1
-            tracer.enable(on)
-            gc0 = tracer.store.gc_seconds() if on else 0.0
+        setups, passes, spans = [], [], []
+        measured_s = 0.0
+        while measured_s < args.seconds or not passes:
+            # every pass gets a JVM of its own and starts from the same state
+            if spark is not None:
+                _stop_jvm(spark)
+                spark = None
+            spark, start_s = _start(work, cores)
+            t0 = time.perf_counter()
+            wl.setup(spark)
+            setups.append((start_s, time.perf_counter() - t0))
+            tracer = Tracer(spark, run_id)
+            tracer.enable(bool(args.trace))
+            gc0 = tracer.store.gc_seconds() if args.trace else 0.0
             p = wl.run_pass(spark, tracer)
-            if on:
+            if args.trace:
                 p["jvm.gc_s"] = tracer.store.gc_seconds() - gc0
+                p["jvm.peak_rss_mb"] = tracer.store.peak_rss_mb()
+            tracer.enable(False)
+            spans += tracer.spans
             passes.append(p)
-            traced.append(on)
-        tracer.enable(False)
-        measured_s = time.perf_counter() - t_start
+            measured_s += p["pass_s"]
         wl.check(spark)
-        plain = [p for p, on in zip(passes, traced) if not on]
-        metrics = {
-            "setup_s": _median(sessions) + state_s,
-            "pass_s": _pass_s(args.workload, plain),
-        }
-        figures = _workload_figures(args.workload, plain, wl)
-        detail = {
-            "workload": args.workload, "seed": args.seed, "cores": cores,
-            "passes": len(plain), "traced_passes": sum(traced),
-            "measured_s": measured_s, "session_starts_s": sessions, "state_setup_s": state_s,
-            "reads": sum(len(p.get("reads", [])) for p in plain),
-            "host_probe": {"sha_before_s": sha_before, "sha_after_s": None},
-            **figures,
-        }
-        if args.trace:
-            tp = [p for p, on in zip(passes, traced) if on]
-            layers = {k: _median(p[k] for p in tp if k in p) for k in LAYERS}
-            layers["jvm.peak_rss_mb"] = tracer.store.peak_rss_mb()
-            traced_pass = _pass_s(args.workload, tp)
-            layers["trace.overhead_s"] = traced_pass - metrics["pass_s"]
-            layers["trace.overhead_ratio"] = layers["trace.overhead_s"] / metrics["pass_s"]
-            metrics = {**layers, **figures}
-            tracer.write(os.path.join(ROOT, ".bench_out", f"spans-{run_id}.jsonl"))
         _stop_jvm(spark)
         spark = None
-        detail["host_probe"]["sha_after_s"] = bench._sha_control()
+        attempted, failed = wl.attempted, wl.failed
+        detail = {
+            "workload": args.workload, "seed": args.seed, "cores": cores,
+            "passes": len(passes), "traced": bool(args.trace), "measured_s": measured_s,
+            "cold_starts_s": [a for a, _ in setups], "state_setups_s": [b for _, b in setups],
+            "host_probe": {"sha_before_s": sha_before, "sha_after_s": bench._sha_control()},
+        }
+        if args.trace:
+            # workload figures and the overhead's base come from the untraced run
+            ref_detail, ref = untraced
+            attempted += ref["attempted"]
+            failed += ref["failed"]
+            ref_pass_s = ref["metrics"]["pass_s"]["value"]
+            metrics = {k: _median(p[k] for p in passes if k in p) for k in LAYERS}
+            metrics["trace.overhead_s"] = _pass_s(args.workload, passes) - ref_pass_s
+            metrics["trace.overhead_ratio"] = metrics["trace.overhead_s"] / ref_pass_s
+            metrics.update({k: ref_detail[k] for k in WORKLOAD_FIGURES})
+            metrics["op_fail_ratio"] = failed / attempted
+            write_spans(os.path.join(ROOT, ".bench_out", f"spans-{run_id}.jsonl"), spans)
+        else:
+            metrics = {
+                "setup_s": _median(a + b for a, b in setups),
+                "pass_s": _pass_s(args.workload, passes),
+            }
+            detail["reads"] = sum(len(p.get("reads", [])) for p in passes)
+            detail.update(_workload_figures(args.workload, passes, wl))
         print(json.dumps(detail), flush=True)
         units = PER_LAYER if args.trace else END_TO_END
         return {
-            "correct": wl.failed == 0,
-            "attempted": wl.attempted,
-            "failed": wl.failed,
+            "correct": failed == 0,
+            "attempted": attempted,
+            "failed": failed,
             "metrics": {k: {"value": metrics[k], "unit": units[k]} for k in units},
         }
     finally:
@@ -274,7 +286,7 @@ def smoke() -> None:
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", choices=["replay_cow", "incremental_rounds", "query_suite"])
+    ap.add_argument("--workload", choices=["incremental_rounds", "query_suite"])
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)

@@ -28,6 +28,8 @@ from contextlib import contextmanager
 from pyspark.sql.streaming import StreamingQueryListener
 
 _BATCH = re.compile(r"batch = (\d+)")
+# span ids run on across the tracers of one process (one per JVM)
+_SPAN_IDS = itertools.count(1)
 
 
 class _ProgressListener(StreamingQueryListener):
@@ -167,7 +169,6 @@ class Tracer:
         self.marks: list[tuple[str, float]] = []
         self.store = StatusStore(spark)
         self._listener = _ProgressListener()
-        self._ids = itertools.count(1)
         self._stack: list[dict] = []
 
     def enable(self, on: bool) -> None:
@@ -187,7 +188,7 @@ class Tracer:
         if not self.enabled:
             yield None
             return
-        sid = next(self._ids)
+        sid = next(_SPAN_IDS)
         rec = {"id": sid, "name": name, "parent": self._stack[-1]["id"] if self._stack else None,
                "run_id": self.run_id, "group": f"pb-{self.run_id}-{sid}", **attrs}
         sc = self.spark.sparkContext
@@ -220,9 +221,10 @@ class Tracer:
         out, self.marks = self.marks, []
         return out
 
-    def write(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            for s in self.spans:
-                f.write(json.dumps({k: s.get(k) for k in
-                                    ("id", "name", "start", "end", "parent", "run_id")}) + "\n")
+
+def write_spans(path: str, spans: list[dict]) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        for s in spans:
+            f.write(json.dumps({k: s.get(k) for k in
+                                ("id", "name", "start", "end", "parent", "run_id")}) + "\n")

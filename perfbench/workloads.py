@@ -1,11 +1,13 @@
-"""The three benchmark workloads.
+"""The benchmark workloads.
 
 Each workload is one closed-loop client driving the engine's public
 functions. ``prepare`` builds the cached inputs (untimed); ``setup``
 builds the state the timed loop starts from (timed into ``setup_s``);
-``warm_up`` runs untimed before the loop; ``run_pass`` is one timed pass
-and returns its measurements; ``check`` compares the outputs with an
-oracle after the loop (untimed). Calls that raise and failed checks are
+``run_pass`` is one timed pass and returns its measurements; ``check``
+compares the outputs with an oracle after the loop (untimed). Every pass
+runs in a JVM of its own, right after ``setup``: a pass is the first run
+of its plans in the JVM, as in a scheduled job that starts, does its
+work and stops. Calls that raise and failed checks are
 counted in ``attempted``/``failed``.
 
 A pass returns flat ``{name: value}`` measurements; the runner takes the
@@ -23,7 +25,6 @@ import time
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 from etlframwork_spark.events import apply_oracle, oracle_digests, read_log_pandas
 from etlframwork_spark.streaming import IngestJob, run_ingest
@@ -35,23 +36,14 @@ from .trace import Tracer, batch_of, sum_stages
 
 @dataclass
 class Sizes:
-    replay_events: int = 200_000
-    replay_files: int = 8
-    replay_per_trigger: int = 3
-    replay_warm_events: int = 20_000
-    replay_reads: int = 8
     seg_events: int = 500
-    seed_segments: int = 40
-    max_rounds: int = 80
-    round_reads: int = 8
-    compact_min_deltas: int = 4
+    seed_segments: int = 10
+    round_reads: int = 4
+    # examples/medallion_job.json folds a bucket's deltas at 2 files
+    compact_min_deltas: int = 2
 
 
-TINY = Sizes(
-    replay_events=4_000, replay_files=3, replay_per_trigger=2, replay_warm_events=1_000,
-    replay_reads=2, seg_events=100, seed_segments=4, max_rounds=6, round_reads=2,
-    compact_min_deltas=2,
-)
+TINY = Sizes(seg_events=100, seed_segments=4, round_reads=2)
 
 
 def _dir_bytes(path: str) -> int:
@@ -166,7 +158,7 @@ class Workload:
 
     def call(self, fn, *args, **kwargs):
         """One attempted public call; a raise counts as failed and ends
-        the run (the next pass would start from a broken state)."""
+        the run."""
         self.attempted += 1
         try:
             return fn(*args, **kwargs)
@@ -175,10 +167,7 @@ class Workload:
             raise
 
     def setup(self, spark) -> None:
-        """State the timed loop starts from; timed into ``setup_s``."""
-
-    def warm_up(self, spark, tracer: Tracer) -> None:
-        """Untimed work before the timed loop."""
+        """State each pass starts from; timed into ``setup_s``."""
 
     def check(self, spark) -> None:
         """Untimed oracle checks after the timed loop."""
@@ -190,87 +179,28 @@ class Workload:
         return d
 
 
-class ReplayCow(Workload):
-    """Bulk backfill: one ``run_ingest`` drain (available-now, cow) of a
-    pre-generated log per pass, then keyed reads of the result."""
-
-    name = "replay_cow"
-
-    def prepare(self) -> None:
-        s = self.sizes
-        self.log = inputs.replay_log(self.cache, self.seed, s.replay_events, s.replay_files)
-        self.warm_log = inputs.replay_log(self.cache, self.seed, s.replay_warm_events, 2)
-        events = read_log_pandas(self.log)
-        self.events = len(events)
-        self.state = apply_oracle(events)
-        n_repos = max(200, s.replay_events // 500)
-        self.keys = _point_keys(np.random.default_rng(self.seed), s.replay_reads, 40, n_repos, 40)
-        self.passes = 0
-
-    def _job(self, root: str, log: str) -> IngestJob:
-        return IngestJob(
-            job_id="replay", events_dir=log, table_root=os.path.join(root, "table"),
-            checkpoint_dir=os.path.join(root, "ckpt"), metrics_dir=os.path.join(root, "metrics"),
-            num_buckets=32, max_files_per_trigger=self.sizes.replay_per_trigger,
-            write_mode="cow",
-        )
-
-    def warm_up(self, spark, tracer: Tracer) -> None:
-        # one small drain compiles the cow merge path before timing
-        self.call(run_ingest, spark, self._job(self.fresh_dir("warm"), self.warm_log))
-
-    def run_pass(self, spark, tracer: Tracer) -> dict:
-        root = self.fresh_dir(f"pass{self.passes % 2}")
-        self.passes += 1
-        self.last_root = root
-        with tracer.span("run_ingest"):
-            t0 = time.perf_counter()
-            table = self.call(run_ingest, spark, self._job(root, self.log), fault_injector=tracer.hook())
-            wall = time.perf_counter() - t0
-        out = {"pass_s": wall, "replay_events_per_s": self.events / wall}
-        if tracer.enabled:
-            progress, marks = tracer.take_progress(), tracer.take_marks()
-            jobs = tracer.store.new_jobs()
-            out.update(_stream_layers(progress, marks, jobs, wall, self.events, self.cores))
-            out["lineage.metrics_files"] = _count_files(os.path.join(root, "metrics"))
-            out["table.data_bytes"] = _live_bytes(table)
-            out["table.metadata_bytes"] = _dir_bytes(os.path.join(table.root, "metadata"))
-        reads = []
-        for f in self.keys:
-            with tracer.span("point_read"):
-                t0 = time.perf_counter()
-                self.call(lambda: table.read(spark, filters=f).collect())
-                reads.append(time.perf_counter() - t0)
-        out["reads"] = reads
-        return out
-
-    def check(self, spark) -> None:
-        table = SnapshotTable.load(os.path.join(self.last_root, "table"))
-        self.attempted += 1
-        if _mismatches(spark, table, self.state):
-            self.failed += 1
-        self.space_amp = _live_bytes(table) / _content_bytes(self.state)
-
-
 class IncrementalRounds(Workload):
-    """A scheduled job: per round land one small segment, resume the mor
-    ingest, ``delete_where`` one repo, purge tombstones below the
-    watermark, sync bronze to silver, then run keyed and full reads.
-    Maintenance runs every round so that every pass does the same work."""
+    """A scheduled job, the shape ``plans/job.py`` runs. A pass is one
+    round: land one small segment, resume the mor ingest (which folds a
+    bucket's deltas once it holds ``compact_min_deltas`` of them), sync
+    bronze to silver, run keyed reads and one full read, then
+    ``delete_where`` one repo and purge the tombstones below the
+    watermark of the segments landed."""
 
     name = "incremental_rounds"
 
     def prepare(self) -> None:
         s = self.sizes
         self.segments = inputs.round_segments(
-            self.cache, self.seed, s.seg_events, s.seed_segments + s.max_rounds
+            self.cache, self.seed, s.seg_events, s.seed_segments + 1
         )
         lows = [inputs.segment_min_lsn(p) for p in self.segments]
         # watermark[i]: every event with a lower lsn lands in segments[:i]
         self.watermark = [min(lows[i:]) for i in range(len(lows))] + [max(lows) + 1]
         rng = np.random.default_rng(self.seed)
         self.keys = _point_keys(rng, s.round_reads, 40, 250, 40)
-        self.victim_repos = [f"org{r // 10}/repo{r}" for r in rng.integers(1, 250, s.max_rounds)]
+        r = int(rng.integers(1, 250))
+        self.victim_repo = f"org{r // 10}/repo{r}"
 
     def _job(self) -> IngestJob:
         return IngestJob(
@@ -301,13 +231,6 @@ class IncrementalRounds(Workload):
             key_cols=self.bronze.key_cols, order_col=self.bronze.order_col, num_buckets=16,
         )
         self.call(sync_incremental, spark, self.bronze, self.silver, job_id="silver")
-        self.rounds = 0
-        self.deletes: list[tuple[int, str]] = []  # (segments landed, repo)
-
-    def warm_up(self, spark, tracer: Tracer) -> None:
-        """One untimed round: the first incremental sync, delete, purge
-        and keyed read compile paths the seed did not."""
-        self.run_pass(spark, tracer)
 
     def run_pass(self, spark, tracer: Tracer) -> dict:
         from etlframwork_spark import maintenance
@@ -316,9 +239,6 @@ class IncrementalRounds(Workload):
         from pyspark.sql import functions as F
 
         s = self.sizes
-        if self.landed >= len(self.segments):
-            raise RuntimeError("out of round segments: raise Sizes.max_rounds")
-        self.rounds += 1
         out: dict = {}
         compactions: list[tuple[float, float, dict]] = []
         real_compact = maintenance.compact_buckets
@@ -330,119 +250,94 @@ class IncrementalRounds(Workload):
                 return res
 
             maintenance.compact_buckets = compact
-        t_round = time.perf_counter()
+        t_pass = time.perf_counter()
         try:
-            with tracer.span("round"):
-                self._land(self.landed)
-                with tracer.span("run_ingest"):
+            self._land(self.landed)
+            with tracer.span("run_ingest"):
+                t0 = time.perf_counter()
+                self.bronze = self.call(run_ingest, spark, self._job(), fault_injector=tracer.hook())
+                ingest_s = time.perf_counter() - t0
+            out["round_s"] = time.perf_counter() - t_pass
+            if tracer.enabled:
+                # in-memory metadata: the delta files the reads below see
+                delta_max = max(self.bronze.delta_file_counts().values(), default=0)
+            with tracer.span("sync_incremental"):
+                t0 = time.perf_counter()
+                res = self.call(sync_incremental, spark, self.bronze, self.silver, job_id="silver")
+                out["sync_s"] = time.perf_counter() - t0
+            reads = []
+            for f in self.keys:
+                with tracer.span("point_read"):
                     t0 = time.perf_counter()
-                    self.bronze = self.call(run_ingest, spark, self._job(),
-                                            fault_injector=tracer.hook())
-                    ingest_wall = time.perf_counter() - t0
-                out["round_s"] = time.perf_counter() - t_round
-                if tracer.enabled:
-                    maintenance.compact_buckets = real_compact
-                    progress, marks = tracer.take_progress(), tracer.take_marks()
-                    jobs = tracer.store.new_jobs()
-                    windows = [(a, b) for a, b, _ in compactions]
-                    out.update(_stream_layers(progress, marks, jobs, ingest_wall,
-                                              s.seg_events, self.cores, windows))
-                    out["maintenance.compact_s"] = sum(b - a for a, b in windows)
-                    out["maintenance.delta_files_folded"] = sum(
-                        r["delta_files_folded"] for _, _, r in compactions)
-                    out["table.delta_files_max"] = max(
-                        self.bronze.delta_file_counts().values(), default=0)
-                repo = self.victim_repos[self.rounds - 1]
-                with tracer.span("delete_where"):
-                    t0 = time.perf_counter()
-                    self.call(delete_where, spark, self.bronze, F.col("repo") == repo,
-                              filters=[("repo", "=", repo)])
-                    out["merge.delete_where_s"] = time.perf_counter() - t0
-                self.deletes.append((self.landed, repo))
-                with tracer.span("purge_tombstones"):
-                    t0 = time.perf_counter()
-                    res = self.call(maintenance.purge_tombstones, spark, self.bronze,
-                                    self.watermark[self.landed])
-                    out["maintenance.purge_s"] = time.perf_counter() - t0
-                out["maintenance.tombstones_purged"] = res["tombstones_purged"]
-                with tracer.span("sync_incremental"):
-                    t0 = time.perf_counter()
-                    res = self.call(sync_incremental, spark, self.bronze, self.silver,
-                                    job_id="silver")
-                    out["sync_s"] = time.perf_counter() - t0
-                if tracer.enabled:
-                    out["changes.sync_s"] = out["sync_s"]
-                out["changes.rows_per_event_landed"] = (res.get("rows") or 0) / s.seg_events
-                reads, files, plan_ms = [], [], []
-                for f in self.keys:
-                    if tracer.enabled:
-                        t0 = time.perf_counter()
-                        clean, dirty = self.bronze.scan_files(filters=f)
-                        plan_ms.append(1000.0 * (time.perf_counter() - t0))
-                        files.append(len(clean) + len(dirty))
-                    with tracer.span("point_read"):
-                        t0 = time.perf_counter()
-                        self.call(lambda: self.bronze.read(spark, filters=f).collect())
-                        reads.append(time.perf_counter() - t0)
-                out["reads"] = reads
-                with tracer.span("scan_read"):
-                    t0 = time.perf_counter()
-                    self.call(lambda: self.bronze.read(spark).write.format("noop")
-                              .mode("overwrite").save())
-                    out["scan_read_s"] = time.perf_counter() - t0
+                    self.call(lambda: self.bronze.read(spark, filters=f).collect())
+                    reads.append(time.perf_counter() - t0)
+            out["reads"] = reads
+            with tracer.span("scan_read"):
+                t0 = time.perf_counter()
+                self.call(lambda: self.bronze.read(spark).write.format("noop")
+                          .mode("overwrite").save())
+                out["scan_read_s"] = time.perf_counter() - t0
+            with tracer.span("delete_where"):
+                t0 = time.perf_counter()
+                self.call(delete_where, spark, self.bronze, F.col("repo") == self.victim_repo,
+                          filters=[("repo", "=", self.victim_repo)])
+                delete_s = time.perf_counter() - t0
+            with tracer.span("purge_tombstones"):
+                t0 = time.perf_counter()
+                purged = self.call(maintenance.purge_tombstones, spark, self.bronze,
+                                   self.watermark[self.landed])
+                purge_s = time.perf_counter() - t0
         finally:
             maintenance.compact_buckets = real_compact
-        out["pass_s"] = time.perf_counter() - t_round
+        out["pass_s"] = time.perf_counter() - t_pass
         if tracer.enabled:
+            # the benchmark's own bookkeeping runs after the pass clock stops
+            progress, marks = tracer.take_progress(), tracer.take_marks()
+            jobs = tracer.store.new_jobs()
+            windows = [(a, b) for a, b, _ in compactions]
+            out.update(_stream_layers(progress, marks, jobs, ingest_s, s.seg_events,
+                                      self.cores, windows))
+            out["maintenance.compact_s"] = sum(b - a for a, b in windows)
+            out["maintenance.delta_files_folded"] = sum(
+                r["delta_files_folded"] for _, _, r in compactions)
+            out["maintenance.purge_s"] = purge_s
+            out["maintenance.tombstones_purged"] = purged["tombstones_purged"]
+            out["merge.delete_where_s"] = delete_s
+            out["table.delta_files_max"] = delta_max
+            out["changes.sync_s"] = out["sync_s"]
+            out["changes.rows_per_event_landed"] = (res.get("rows") or 0) / s.seg_events
+            self.bronze.refresh()
+            plan_ms, files = [], []
+            for f in self.keys:
+                t0 = time.perf_counter()
+                clean, dirty = self.bronze.scan_files(filters=f)
+                plan_ms.append(1000.0 * (time.perf_counter() - t0))
+                files.append(len(clean) + len(dirty))
             out["table.scan_files_ms"] = statistics.median(plan_ms)
             out["table.point_read_files"] = statistics.median(files)
-            tracer.store.new_jobs()
-            self.bronze.refresh()
             out["table.data_bytes"] = _live_bytes(self.bronze)
             out["table.metadata_bytes"] = _dir_bytes(os.path.join(self.bronze.root, "metadata"))
             out["lineage.metrics_files"] = _count_files(os.path.join(self.root, "metrics"))
         return out
 
-    def _oracle(self) -> dict:
-        """LWW over the landed segments, with each ``delete_where`` victim
-        deleted at its own (lsn, commit): the engine's delete-beats-live
-        rule for out-of-band tombstones."""
-        frames, done = [], 0
-        for landed, repo in self.deletes + [(self.landed, None)]:
-            if landed > done:
-                frames.append(read_log_pandas(self.segments[done:landed]))
-            done = landed
-            if repo is None:
-                break
-            state = apply_oracle(pd.concat(frames, ignore_index=True))
-            victims = [v for k, v in state.items() if k[0] == repo]
-            frames.append(pd.DataFrame({
-                "op": pd.array(["delete"] * len(victims), dtype="string"),
-                "lsn": [v["lsn"] for v in victims],
-                "repo": pd.array([v["repo"] for v in victims], dtype="string"),
-                "path": pd.array([v["path"] for v in victims], dtype="string"),
-                "commit": pd.array([v["commit"] for v in victims], dtype="string"),
-                "content": pd.array([pd.NA] * len(victims), dtype="string"),
-                "lang": pd.array([pd.NA] * len(victims), dtype="string"),
-            }))
-        return apply_oracle(pd.concat(frames, ignore_index=True))
-
     def check(self, spark) -> None:
-        """Bronze and silver against the oracle (each round syncs after
-        its maintenance, so silver is level with bronze)."""
-        state = self._oracle()
-        for table in (self.bronze, self.silver):
+        """Silver against ``apply_oracle`` over the landed segments, and
+        bronze against the same state without the victim repo's keys. The
+        delete is the pass's last write, so no later event can bring a
+        victim back; silver was synced before it."""
+        synced = apply_oracle(read_log_pandas(self.segments[:self.landed]))
+        state = {k: v for k, v in synced.items() if v["repo"] != self.victim_repo}
+        for table, want in ((self.bronze, state), (self.silver, synced)):
             self.attempted += 1
-            if _mismatches(spark, table.refresh(), state):
+            if _mismatches(spark, table.refresh(), want):
                 self.failed += 1
         self.space_amp = _live_bytes(self.bronze) / _content_bytes(state)
 
 
 class QuerySuite(Workload):
-    """One pass over the 17 headline query legs at sf0.1. The pass is the
-    first run of each plan in the JVM, as in a scheduled batch job, and
-    each leg's result is collected as Arrow so the check sees exactly
-    what was timed."""
+    """One pass over the 17 headline query legs at sf0.01. Each leg's
+    result is collected as Arrow so the check sees exactly what was
+    timed."""
 
     name = "query_suite"
 
@@ -457,8 +352,9 @@ class QuerySuite(Workload):
     def prepare(self) -> None:
         from bench import HEADLINE, _resolve_query
 
-        self.sf_dir = inputs.star_schema(self.cache)
-        self.small_dir = inputs.small_star(self.cache, self.sf_dir)
+        # a tenth of the sf0.1 star schema: the run budget holds a cold
+        # pass at this size, and DuckDB's quadratic dedup twins answer
+        self.data_dir = inputs.small_star(self.cache, inputs.star_schema(self.cache))
         self.legs = [(n, _resolve_query(n)) for n in HEADLINE]
 
     def run_pass(self, spark, tracer: Tracer) -> dict:
@@ -468,7 +364,7 @@ class QuerySuite(Workload):
         for name, fn in self.legs:
             with tracer.span(f"query.{name}") as sp:
                 t0 = time.perf_counter()
-                self.results[name] = self.call(lambda: fn(spark, self.sf_dir).toArrow())
+                self.results[name] = self.call(lambda: fn(spark, self.data_dir).toArrow())
                 out[f"query.{name}_s"] = time.perf_counter() - t0
             spans[name] = sp
         out["pass_s"] = out["query_suite_s"] = sum(out[f"query.{n}_s"] for n, _ in self.legs)
@@ -489,20 +385,13 @@ class QuerySuite(Workload):
         return out
 
     def check(self, spark) -> None:
-        """The last pass's results against their DuckDB twins. The dedup
-        twins are quadratic in the documents, so those two legs are
-        checked again over a tenth of the input instead."""
+        """The last pass's results against their DuckDB twins."""
         from .checks import check_leg
 
-        for name, fn in self.legs:
+        for name, _ in self.legs:
             self.attempted += 1
-            if name in ("docs_dedup_keepers", "docs_dedup_pipeline"):
-                ok = self.results[name].num_rows > 0 and check_leg(
-                    self.cache, name, fn(spark, self.small_dir).toArrow(), self.small_dir)
-            else:
-                ok = check_leg(self.cache, name, self.results[name], self.sf_dir)
-            if not ok:
+            if not check_leg(self.cache, name, self.results[name], self.data_dir):
                 self.failed += 1
 
 
-WORKLOADS = {w.name: w for w in (ReplayCow, IncrementalRounds, QuerySuite)}
+WORKLOADS = {w.name: w for w in (IncrementalRounds, QuerySuite)}
