@@ -2,9 +2,10 @@
 
     python3 perfbench/run.py --workload incremental_rounds --seed 1 --seconds 10 --trace 0
 
-Runs from the root of a checkout. ``--trace 0`` prints the end-to-end
-metrics; ``--trace 1`` runs an untraced and a traced pass, each in a JVM
-of its own, and prints the per-layer metrics plus the tracing overhead. ``--smoke`` runs every
+Runs from the root of a checkout, in one JVM: a cold start, one untimed
+warm-up pass, then timed passes for ``--seconds``. ``--trace 0`` prints
+the end-to-end metrics; ``--trace 1`` alternates untraced and traced
+passes and prints the per-layer metrics plus the tracing overhead. ``--smoke`` runs every
 workload in both modes at tiny sizes and checks that every metric in
 ``BENCHMARK.json`` is printed with its unit. See perfbench/README.md.
 """
@@ -29,7 +30,7 @@ from bench import HEADLINE  # noqa: E402
 END_TO_END = {"setup_s": "s", "pass_s": "s"}
 
 # the workload-level figures the issue tracker names claims by; from the
-# untraced passes of a traced run
+# untraced passes
 WORKLOAD_FIGURES = {
     "round_s_p50": "s",
     "round_s_p90": "s",
@@ -163,26 +164,10 @@ def _start(work: str, cores: int):
     return spark, time.perf_counter() - t0
 
 
-def _untraced_run(args) -> tuple[dict, dict]:
-    """The same workload and seed run untraced in a process of its own:
-    the traced pass is then compared with a pass that, like it, is the
-    first in a fresh process and JVM. Returns its detail and result."""
-    cmd = [sys.executable, os.path.abspath(__file__), "--workload", args.workload,
-           "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"]
-    if args.tiny:
-        cmd.append("--tiny")
-    res = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=600)
-    if res.returncode != 0:
-        raise RuntimeError(f"untraced run exited {res.returncode}:\n{res.stderr[-3000:]}")
-    detail, result = res.stdout.strip().splitlines()[-2:]
-    return json.loads(detail), json.loads(result)
-
-
 def run(args) -> dict:
     from perfbench.trace import Tracer, write_spans
-    from perfbench.workloads import TINY, WORKLOADS, Sizes
+    from perfbench.workloads import TINY, WORKLOADS, Sizes, shared_inputs
 
-    untraced = _untraced_run(args) if args.trace else None
     cores = os.cpu_count() or 1
     cache = os.path.join(ROOT, ".bench_cache")
     work = os.path.join(ROOT, ".bench_work", f"{args.workload}-{os.getpid()}")
@@ -192,66 +177,73 @@ def run(args) -> dict:
     spark = None
     try:
         sha_before = bench._sha_control()
+        shared_inputs(cache)
         wl = WORKLOADS[args.workload](cache, work, args.seed, TINY if args.tiny else Sizes(), cores)
         wl.prepare()
         run_id = f"{args.workload}-s{args.seed}-{os.getpid()}"
-        setups, passes, spans = [], [], []
-        measured_s = 0.0
-        while measured_s < args.seconds or not passes:
-            # every pass gets a JVM of its own and starts from the same state
-            if spark is not None:
-                _stop_jvm(spark)
-                spark = None
-            spark, start_s = _start(work, cores)
+        spark, start_s = _start(work, cores)
+        tracer = Tracer(spark, run_id)
+        setups: list[float] = []
+
+        def one_pass(traced: bool) -> dict:
+            # every pass starts from the same state, built anew by setup
             t0 = time.perf_counter()
             wl.setup(spark)
-            setups.append((start_s, time.perf_counter() - t0))
-            tracer = Tracer(spark, run_id)
-            tracer.enable(bool(args.trace))
-            gc0 = tracer.store.gc_seconds() if args.trace else 0.0
+            setups.append(time.perf_counter() - t0)
+            tracer.enable(traced)
+            gc0 = tracer.store.gc_seconds() if traced else 0.0
             p = wl.run_pass(spark, tracer)
-            if args.trace:
+            if traced:
                 p["jvm.gc_s"] = tracer.store.gc_seconds() - gc0
                 p["jvm.peak_rss_mb"] = tracer.store.peak_rss_mb()
             tracer.enable(False)
-            spans += tracer.spans
-            passes.append(p)
-            measured_s += p["pass_s"]
+            return p
+
+        # the first pass compiles every plan and starts the Python workers
+        # in this JVM; it is not timed into pass_s
+        warmup_s = one_pass(False)["pass_s"]
+        # timed passes until --seconds of wall time have gone by; traced
+        # runs alternate untraced and traced passes in the same JVM
+        plain, traced = [], []
+        t_loop = time.perf_counter()
+        while (time.perf_counter() - t_loop < args.seconds or not plain
+               or (args.trace and not traced)):
+            on = bool(args.trace) and len(traced) < len(plain)
+            (traced if on else plain).append(one_pass(on))
+        loop_s = time.perf_counter() - t_loop
         wl.check(spark)
         _stop_jvm(spark)
         spark = None
-        attempted, failed = wl.attempted, wl.failed
         detail = {
             "workload": args.workload, "seed": args.seed, "cores": cores,
-            "passes": len(passes), "traced": bool(args.trace), "measured_s": measured_s,
-            "cold_starts_s": [a for a, _ in setups], "state_setups_s": [b for _, b in setups],
+            "traced": bool(args.trace), "passes": len(plain), "traced_passes": len(traced),
+            "loop_s": loop_s, "cold_start_s": start_s, "state_setups_s": setups,
+            "warmup_pass_s": warmup_s, "pass_s": [p["pass_s"] for p in plain],
+            "reads": sum(len(p.get("reads", [])) for p in plain),
             "host_probe": {"sha_before_s": sha_before, "sha_after_s": bench._sha_control()},
+            **_workload_figures(args.workload, plain, wl),
         }
+        print(json.dumps(detail), flush=True)
         if args.trace:
-            # workload figures and the overhead's base come from the untraced run
-            ref_detail, ref = untraced
-            attempted += ref["attempted"]
-            failed += ref["failed"]
-            ref_pass_s = ref["metrics"]["pass_s"]["value"]
-            metrics = {k: _median(p[k] for p in passes if k in p) for k in LAYERS}
-            metrics["trace.overhead_s"] = _pass_s(args.workload, passes) - ref_pass_s
-            metrics["trace.overhead_ratio"] = metrics["trace.overhead_s"] / ref_pass_s
-            metrics.update({k: ref_detail[k] for k in WORKLOAD_FIGURES})
-            metrics["op_fail_ratio"] = failed / attempted
-            write_spans(os.path.join(ROOT, ".bench_out", f"spans-{run_id}.jsonl"), spans)
+            ref = _pass_s(args.workload, plain)
+            metrics = {k: _median(p[k] for p in traced if k in p) for k in LAYERS}
+            metrics["trace.overhead_s"] = _pass_s(args.workload, traced) - ref
+            metrics["trace.overhead_ratio"] = metrics["trace.overhead_s"] / ref
+            metrics.update({k: detail[k] for k in WORKLOAD_FIGURES})
+            write_spans(os.path.join(ROOT, ".bench_out", f"spans-{run_id}.jsonl"), tracer.spans)
+            units = PER_LAYER
         else:
             metrics = {
-                "setup_s": _median(a + b for a, b in setups),
-                "pass_s": _pass_s(args.workload, passes),
+                # what a user waits for before the first call: the later
+                # setups run warm and would hide the first ingest's cost
+                "setup_s": start_s + setups[0],
+                "pass_s": _pass_s(args.workload, plain),
             }
-            detail["reads"] = sum(len(p.get("reads", [])) for p in passes)
-            detail.update(_workload_figures(args.workload, passes, wl))
-        print(json.dumps(detail), flush=True)
-        units = PER_LAYER if args.trace else END_TO_END
+            units = END_TO_END
         return {
-            "correct": failed == 0,
-            "attempted": attempted,
-            "failed": failed,
+            "correct": wl.failed == 0,
+            "attempted": wl.attempted,
+            "failed": wl.failed,
             "metrics": {k: {"value": metrics[k], "unit": units[k]} for k in units},
         }
     finally:

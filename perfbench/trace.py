@@ -28,7 +28,7 @@ from contextlib import contextmanager
 from pyspark.sql.streaming import StreamingQueryListener
 
 _BATCH = re.compile(r"batch = (\d+)")
-# span ids run on across the tracers of one process (one per JVM)
+# span ids are unique within the process
 _SPAN_IDS = itertools.count(1)
 
 

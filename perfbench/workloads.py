@@ -4,11 +4,10 @@ Each workload is one closed-loop client driving the engine's public
 functions. ``prepare`` builds the cached inputs (untimed); ``setup``
 builds the state the timed loop starts from (timed into ``setup_s``);
 ``run_pass`` is one timed pass and returns its measurements; ``check``
-compares the outputs with an oracle after the loop (untimed). Every pass
-runs in a JVM of its own, right after ``setup``: a pass is the first run
-of its plans in the JVM, as in a scheduled job that starts, does its
-work and stops. Calls that raise and failed checks are
-counted in ``attempted``/``failed``.
+compares the outputs with an oracle after the loop (untimed). All passes of a run
+share one JVM, and each runs right after its own ``setup``, so every
+pass does the same work on the same state. Calls that raise and failed
+checks are counted in ``attempted``/``failed``.
 
 A pass returns flat ``{name: value}`` measurements; the runner takes the
 median of each over the passes. Names without a layer prefix are the
@@ -148,6 +147,22 @@ def _stream_layers(progress: list[dict], marks: list[tuple[str, float]], jobs: l
     }
 
 
+def shared_inputs(cache: str) -> str:
+    """The query suite's input and DuckDB's answers over it. Neither
+    depends on the seed; every run builds them if they are missing, so
+    the first run in a checkout, whatever its workload, generates all of
+    them. Returns the input directory."""
+    from bench import HEADLINE
+
+    from .checks import warm_oracles
+
+    # a tenth of the sf0.1 star schema: DuckDB's quadratic dedup twins
+    # answer in seconds at this size
+    data_dir = inputs.small_star(cache, inputs.star_schema(cache))
+    warm_oracles(cache, HEADLINE, data_dir)
+    return data_dir
+
+
 class Workload:
     name = ""
 
@@ -167,7 +182,8 @@ class Workload:
             raise
 
     def setup(self, spark) -> None:
-        """State each pass starts from; timed into ``setup_s``."""
+        """State each pass starts from, built before every pass; the
+        first build is timed into ``setup_s``."""
 
     def check(self, spark) -> None:
         """Untimed oracle checks after the timed loop."""
@@ -352,9 +368,7 @@ class QuerySuite(Workload):
     def prepare(self) -> None:
         from bench import HEADLINE, _resolve_query
 
-        # a tenth of the sf0.1 star schema: the run budget holds a cold
-        # pass at this size, and DuckDB's quadratic dedup twins answer
-        self.data_dir = inputs.small_star(self.cache, inputs.star_schema(self.cache))
+        self.data_dir = shared_inputs(self.cache)
         self.legs = [(n, _resolve_query(n)) for n in HEADLINE]
 
     def run_pass(self, spark, tracer: Tracer) -> dict:
