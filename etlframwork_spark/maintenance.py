@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_expr
+from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_exchange, bucket_expr
 
 
 _MAX_RECOMPUTE = 3
@@ -67,7 +67,7 @@ def _purge_once(spark: SparkSession, table: SnapshotTable, watermark_lsn: int) -
     )
     data_dir = table.new_data_dir()
     (
-        keep.repartition(max(len(buckets), 1), F.col(BUCKET_COL))
+        bucket_exchange(keep, buckets)
         # same key-clustered layout as sorted compaction: the rewrite is
         # already paying the shuffle, sorting keeps per-file key bounds
         # tight for stats.py file skipping
@@ -147,7 +147,7 @@ def _compact_once(
         BUCKET_COL, bucket_expr(table.key_cols, table.num_buckets)
     )
     data_dir = table.new_data_dir()
-    out = keep.repartition(max(len(buckets), 1), F.col(BUCKET_COL))
+    out = bucket_exchange(keep, buckets)
     if sort_by_key:
         # rows arrive grouped by bucket within the task; sorting by
         # (bucket, *key) keeps the grouping and orders each bucket's rows
@@ -227,9 +227,9 @@ def _rebucket_once(
         BUCKET_COL, bucket_expr(table.key_cols, new_num_buckets)
     )
     data_dir = table.new_data_dir()
-    # 4x partition spread for the same balls-in-bins reason as merge's
-    # write distribution: each bucket still maps wholly to one task
-    out = full.repartition(4 * new_num_buckets, F.col(BUCKET_COL)).sortWithinPartitions(
+    # every new bucket is affected: each maps wholly to one task, one
+    # file per bucket (bar maxRecordsPerFile splits)
+    out = bucket_exchange(full, range(new_num_buckets)).sortWithinPartitions(
         BUCKET_COL, *table.key_cols
     )
     writer = out.write.partitionBy(BUCKET_COL).option("compression", "zstd")

@@ -50,8 +50,8 @@ second full scan + a collect barrier per epoch). Copy-on-write keeps the
 pre-pass because it must know the affected buckets before reading their
 stored rows. The target table is never scanned beyond affected buckets;
 all logic is JVM-side except the optional sorted-merge fold; the write
-routes each bucket wholly to one task (4x-spread hash partitioning —
-see step 5) with ``partitionBy`` splitting bucket directories.
+routes each bucket wholly to one task (``table.bucket_exchange`` — see
+step 5) with ``partitionBy`` splitting bucket directories.
 """
 
 from __future__ import annotations
@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .lineage import MetricsTable, shuffle_totals
-from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_expr
+from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_exchange, bucket_expr
 
 VALID_OPS = ("insert", "update", "delete")
 _STORED = "__stored__"
@@ -477,20 +477,16 @@ def merge_batch(
     # bucket to exactly ONE task so an epoch writes ONE file per affected
     # bucket. Without this, every shuffle partition writes a sliver into
     # every bucket directory (tasks x buckets tiny files) and subsequent
-    # epochs drown in file-open overhead. The partition count is 4x the
-    # bucket count (empty partitions are free): hashing B distinct bucket
-    # values into exactly B partitions is balls-in-bins — ~1/e of the
-    # partitions land empty while others carry 3-4 buckets, and at high
-    # core counts the multi-bucket stragglers gate the stage (measured
-    # round 3). Each bucket still maps wholly to ONE partition, so the
-    # one-file-per-bucket invariant holds. Parallelism remains bounded by
-    # #affected buckets — size num_buckets >= cluster cores at scale.
+    # epochs drown in file-open overhead. bucket_exchange gives each
+    # affected bucket a dense slot and deals the slots over
+    # min(#affected, cores) tasks: no hash collisions, no empty tasks
+    # (each costs a task launch). Single-pass does not know the affected
+    # set before the write, so it deals every bucket.
     hook("pre_write")
     t_w0 = time.monotonic()
     data_dir = table.new_data_dir()
-    n_parts = 4 * nb if single_pass else max(4 * len(affected), 1)
     (
-        final.repartition(n_parts, F.col(BUCKET_COL))
+        bucket_exchange(final, range(nb) if single_pass else affected)
         .write.partitionBy(BUCKET_COL)
         .option("compression", "zstd")
         .parquet(data_dir)
@@ -535,7 +531,9 @@ def merge_batch(
         affected,
         fence=fence,
         new_schema=schema if new_cols else None,
-        summary={**summary, "operation": f"merge_{write_mode}", "timings": timings},
+        # a COPY: commit/lineage timings land in the returned dict only,
+        # so the in-memory snapshot keeps matching the manifest on disk
+        summary={**summary, "operation": f"merge_{write_mode}", "timings": dict(timings)},
         mode="append_delta" if write_mode == "mor" else "replace",
         validate_from_snapshot=read_snapshot,
         branch=branch,
@@ -689,7 +687,7 @@ def _delete_once(spark, table, pred, filters) -> dict:
     out = out.drop("_to_del").withColumn(BUCKET_COL, bucket_expr(table.key_cols, nb))
     data_dir = table.new_data_dir()
     (
-        out.repartition(max(len(buckets), 1), F.col(BUCKET_COL))
+        bucket_exchange(out, buckets)
         .sortWithinPartitions(BUCKET_COL, *table.key_cols)
         .write.partitionBy(BUCKET_COL)
         .option("compression", "zstd")

@@ -135,6 +135,27 @@ def bucket_expr(key_cols: list[str], num_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
 
 
+def bucket_exchange(df: DataFrame, buckets: Iterable[int]) -> DataFrame:
+    """Bucket-aligned write distribution: route every ``BUCKET_COL`` value
+    wholly to ONE task, so a partitioned write emits one file per bucket.
+
+    Each bucket in ``buckets`` (the affected set — every bucket when the
+    set is unknown up front) gets a dense slot, its position in the sorted
+    list, and lands in partition ``slot % n`` with ``n = min(#buckets,
+    defaultParallelism)``. Every task then takes ceil(#buckets / n)
+    buckets in one wave: no hash collisions, no empty tasks, and an
+    explicit count that AQE leaves alone. ``df`` must carry
+    ``BUCKET_COL`` and hold no bucket outside ``buckets``.
+    """
+    ordered = sorted({int(b) for b in buckets})
+    n = min(len(ordered), df.sparkSession.sparkContext.defaultParallelism)
+    slot_of = [0] * (ordered[-1] + 1)
+    for pos, b in enumerate(ordered):
+        slot_of[b] = pos
+    slot = F.element_at(F.array(*[F.lit(s) for s in slot_of]), F.col(BUCKET_COL) + 1)
+    return df.repartitionById(n, slot % n)
+
+
 def _parse_simple_type(name: str):
     """Atomic Spark type from its simple string (no session needed —
     ``_parse_datatype_string`` requires an active SparkSession)."""

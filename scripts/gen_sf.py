@@ -46,7 +46,7 @@ def _write(out_dir: str, name: str, table: pa.Table) -> None:
     print(f"  {name}: {table.num_rows} rows")
 
 
-def _ts_us(days_from, spans_days, rng, n, base="2024-01-01"):
+def _ts_us(spans_days, rng, n, base="2024-01-01"):
     base_us = np.datetime64(base, "us").astype(np.int64)
     offs = np.sort(rng.uniform(0, spans_days * 86400e6, n).astype(np.int64))
     return pa.array(base_us + offs, type=pa.timestamp("us"))
@@ -130,7 +130,7 @@ def main() -> None:
     n_users = max(150, n_events // 67)
     _write(out_dir, "events", pa.table({
         "event_id": np.arange(n_events, dtype=np.int64),
-        "ts": _ts_us(0, 30, rng, n_events),
+        "ts": _ts_us(30, rng, n_events),
         "user_id": rng.integers(0, n_users, n_events).astype(np.int64),
         "event_type": pa.array(np.array(EVENT_TYPES)[rng.integers(0, 5, n_events)]),
         "value": np.round(rng.exponential(50.0, n_events), 2),

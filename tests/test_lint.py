@@ -63,3 +63,34 @@ def test_collect_confined_to_metadata_paths():
         if ".collect()" in src and base not in COLLECT_ALLOWED:
             problems.append(path)
     assert not problems, f"collect() outside metadata paths: {problems}"
+
+
+# The bucket-aligned write distribution has ONE spelling,
+# table.bucket_exchange (dense slot per affected bucket, dealt over
+# min(#buckets, cores) tasks). A hand-sized repartition on the bucket
+# column elsewhere brings back hash collisions and empty tasks.
+_REPARTITION = re.compile(r"\.repartition(ById|ByRange)?\s*\(")
+
+
+def _call_args(src: str, start: int) -> str:
+    """Source text of a call's arguments, from just after its '('."""
+    depth, i = 1, start
+    while depth and i < len(src):
+        depth += {"(": 1, ")": -1}.get(src[i], 0)
+        i += 1
+    return src[start : i - 1]
+
+
+def test_bucket_exchange_is_the_only_bucket_repartition():
+    problems = []
+    for path in _engine_files():
+        with open(path) as fh:
+            src = fh.read()
+        for m in _REPARTITION.finditer(src):
+            args = _call_args(src, m.end())
+            line = src.count("\n", 0, m.start()) + 1
+            if "BUCKET_COL" in args or "_bucket" in args:
+                problems.append(f"{path}:{line}: repartition on the bucket column")
+            if m.group(1) == "ById" and os.path.basename(path) != "table.py":
+                problems.append(f"{path}:{line}: repartitionById outside table.bucket_exchange")
+    assert not problems, problems

@@ -227,3 +227,21 @@ def test_empty_single_pass_epoch_leaves_no_orphan_dir(tmp_path, spark):
     # re-delivery of the empty epoch stays a fenced no-op
     again = merge_batch(spark, table, empty, job_id="e", epoch_id=0, write_mode="mor", resolve="raw")
     assert again.get("skipped")
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_commit_summary_matches_manifest_on_disk(spark, tmp_path, mode):
+    """merge_batch times commit and lineage AFTER committing; those
+    timings must not leak into the in-memory snapshot's summary, or the
+    live table and a fresh load of its manifest disagree."""
+    spec = EventLogSpec(seed=9, n_events=400, n_repos=5, paths_per_repo=6)
+    pdf = _make_events_frame(spec).drop(columns=["lang"])
+    table = _mk_table(tmp_path)
+    out = merge_batch(
+        spark, table, spark.createDataFrame(pdf, schema=CDC_BASE_SCHEMA),
+        epoch_id=0, write_mode=mode,
+    )
+    assert "commit" in out["timings"]
+    live = table.snapshot()["summary"]
+    assert "commit" not in live["timings"]
+    assert live == SnapshotTable.load(table.root).snapshot()["summary"]
