@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .table import TOMBSTONE_COL, SnapshotTable
+from .table import TOMBSTONE_COL, SnapshotTable, lww_order_cols
 
 
 def changed_buckets(table: SnapshotTable, from_snapshot: int, to_snapshot: int) -> list[int]:
@@ -93,11 +93,11 @@ def read_changes(
     # otherwise surface with a NULL order and be silently dropped by the
     # downstream merge's validation gate (round-6 advice #2). The old
     # side's order is the deleted row's own (lsn, commit); the downstream
-    # delete-beats-live tie-break (merge._LWW_PRI) makes a delete at that
+    # delete-beats-live tie-break (table.LWW_PRI) makes a delete at that
     # exact order deterministically remove the stored row, while any
     # genuinely newer upstream event still wins. For insert/update rows
     # the new side is non-null and the coalesce is an identity.
-    order_like = {order_col} | ({"commit"} if "commit" in cols else set())
+    order_like = set(lww_order_cols(order_col, cols))
     out_cols = [
         F.coalesce(F.col(c), F.col(f"_old_{c}")).alias(c)
         if c in key_cols or c in order_like

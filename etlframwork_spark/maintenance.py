@@ -14,10 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_exchange, bucket_expr
-
-
-_MAX_RECOMPUTE = 3
+from .table import TOMBSTONE_COL, SnapshotTable, recompute_on_conflict
 
 
 def purge_tombstones(
@@ -29,70 +26,35 @@ def purge_tombstones(
     guarantees no re-delivery below ``watermark_lsn``. Racing a concurrent
     writer to the same buckets fails the commit (CommitConflict) and the
     rewrite is recomputed from fresh state."""
-    from .table import CommitConflict
-
-    for attempt in range(_MAX_RECOMPUTE):
-        try:
-            return _purge_once(spark, table, watermark_lsn)
-        except CommitConflict:
-            if attempt == _MAX_RECOMPUTE - 1:
-                raise
-    raise AssertionError("unreachable")
+    return recompute_on_conflict(_purge_once, spark, table, watermark_lsn)
 
 
 def _purge_once(spark: SparkSession, table: SnapshotTable, watermark_lsn: int) -> dict:
     table.refresh()
     read_snapshot = table.snapshot()["snapshot_id"]
-    full = table.read(spark, include_tombstones=True)
     purgeable = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) & (
         F.col(table.order_col) < F.lit(watermark_lsn)
     )
-    nb = table.num_buckets
-    hit = (
-        full.filter(purgeable)
-        .select(bucket_expr(table.key_cols, nb).alias(BUCKET_COL))
-        .groupBy(BUCKET_COL)
-        .count()
-        .collect()
-    )
-    buckets = sorted(r[BUCKET_COL] for r in hit)
-    n_purged = sum(r["count"] for r in hit)
-    if not buckets:
+    hit = table.bucket_counts(table.read(spark, include_tombstones=True).filter(purgeable))
+    if not hit:
         return {"buckets_rewritten": 0, "tombstones_purged": 0}
-
-    keep = (
-        table.read(spark, buckets=buckets, include_tombstones=True)
-        .filter(~purgeable)
-        .withColumn(BUCKET_COL, bucket_expr(table.key_cols, nb))
-    )
-    data_dir = table.new_data_dir()
-    (
-        bucket_exchange(keep, buckets)
-        # same key-clustered layout as sorted compaction: the rewrite is
-        # already paying the shuffle, sorting keeps per-file key bounds
-        # tight for stats.py file skipping
-        .sortWithinPartitions(BUCKET_COL, *table.key_cols)
-        .write.partitionBy(BUCKET_COL)
-        .option("compression", "zstd")
-        .parquet(data_dir)
-    )
-    from .merge import _list_written_files
-
-    files_by_bucket = _list_written_files(data_dir)
-    table.commit(
-        files_by_bucket,
-        buckets,
-        summary={"operation": "purge_tombstones", "watermark_lsn": watermark_lsn, "purged": n_purged},
+    n_purged = sum(hit.values())
+    # sorted like compaction: the rewrite already pays the shuffle, and
+    # sorting keeps per-file key bounds tight for stats.py file skipping
+    table.rewrite_buckets(
+        table.read(spark, buckets=hit, include_tombstones=True).filter(~purgeable),
+        hit,
+        {"operation": "purge_tombstones", "watermark_lsn": watermark_lsn, "purged": n_purged},
+        key_sort=True,
         validate_from_snapshot=read_snapshot,
     )
-    return {"buckets_rewritten": len(buckets), "tombstones_purged": n_purged}
+    return {"buckets_rewritten": len(hit), "tombstones_purged": n_purged}
 
 
 def compact_buckets(
     spark: SparkSession,
     table: SnapshotTable,
     min_deltas: int = 1,
-    sort_by_key: bool = True,
     max_records_per_file: int | None = None,
 ) -> dict:
     """Fold merge-on-read delta files back into bucket base files.
@@ -106,34 +68,25 @@ def compact_buckets(
     commit (CommitConflict) and the compaction is recomputed from fresh
     state — never silently dropping the new delta.
 
-    **Clustering for file skipping** (the stats.py payoff): with
-    ``sort_by_key`` (default) the rewrite sorts each bucket by the key
-    columns, and ``max_records_per_file`` splits the sorted stream into
-    size-bounded files. Each file then covers a CONTIGUOUS key range, so
-    its recorded (repo, path) bounds are tight and a repo-equality
-    predicate — which hash bucketing alone cannot prune (the bucket is
-    hash(repo, path), so one repo's paths land everywhere) — skips every
-    file whose range excludes it. This is Iceberg's sort-order/rewrite
-    concept: ingest stays fast and hash-bucketed; compaction buys the
-    read-side pruning. With ``max_records_per_file=None`` each bucket
-    stays one file (today's layout) and sorting costs one in-task sort.
+    **Clustering for file skipping** (the stats.py payoff): the rewrite
+    always sorts each bucket by the key columns, and
+    ``max_records_per_file`` splits the sorted stream into size-bounded
+    files. Each file then covers a CONTIGUOUS key range, so its recorded
+    (repo, path) bounds are tight and a repo-equality predicate — which
+    hash bucketing alone cannot prune (the bucket is hash(repo, path), so
+    one repo's paths land everywhere) — skips every file whose range
+    excludes it. This is Iceberg's sort-order/rewrite concept: ingest
+    stays fast and hash-bucketed; compaction buys the read-side pruning.
+    With ``max_records_per_file=None`` each bucket stays one file and
+    sorting costs one in-task sort.
     """
-    from .table import CommitConflict
-
-    for attempt in range(_MAX_RECOMPUTE):
-        try:
-            return _compact_once(spark, table, min_deltas, sort_by_key, max_records_per_file)
-        except CommitConflict:
-            if attempt == _MAX_RECOMPUTE - 1:
-                raise
-    raise AssertionError("unreachable")
+    return recompute_on_conflict(_compact_once, spark, table, min_deltas, max_records_per_file)
 
 
 def _compact_once(
     spark: SparkSession,
     table: SnapshotTable,
     min_deltas: int,
-    sort_by_key: bool = True,
     max_records_per_file: int | None = None,
 ) -> dict:
     table.refresh()
@@ -143,29 +96,12 @@ def _compact_once(
     if not buckets:
         return {"buckets_compacted": 0, "delta_files_folded": 0}
     folded = sum(counts[b] for b in buckets)
-    keep = table.read(spark, buckets=buckets, include_tombstones=True).withColumn(
-        BUCKET_COL, bucket_expr(table.key_cols, table.num_buckets)
-    )
-    data_dir = table.new_data_dir()
-    out = bucket_exchange(keep, buckets)
-    if sort_by_key:
-        # rows arrive grouped by bucket within the task; sorting by
-        # (bucket, *key) keeps the grouping and orders each bucket's rows
-        # by key, so maxRecordsPerFile cuts the stream into contiguous
-        # key-range runs (tight per-file bounds for stats.py skipping)
-        out = out.sortWithinPartitions(BUCKET_COL, *table.key_cols)
-    writer = out.write.partitionBy(BUCKET_COL).option("compression", "zstd")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.parquet(data_dir)
-    from .merge import _list_written_files
-
-    files_by_bucket = _list_written_files(data_dir)
-    table.commit(
-        files_by_bucket,
+    table.rewrite_buckets(
+        table.read(spark, buckets=buckets, include_tombstones=True),
         buckets,
-        summary={"operation": "compact", "buckets": len(buckets), "delta_files_folded": folded},
-        mode="replace",
+        {"operation": "compact", "buckets": len(buckets), "delta_files_folded": folded},
+        key_sort=True,
+        max_records_per_file=max_records_per_file,
         validate_from_snapshot=read_snapshot,
     )
     return {"buckets_compacted": len(buckets), "delta_files_folded": folded}
@@ -195,17 +131,11 @@ def rebucket(
     separate watermark-gated op). Racing a concurrent writer fails the
     commit (CommitConflict) and the rewrite recomputes from fresh state.
     """
-    from .table import CommitConflict
-
     if int(new_num_buckets) < 1:
         raise ValueError(f"new_num_buckets must be >= 1, got {new_num_buckets}")
-    for attempt in range(_MAX_RECOMPUTE):
-        try:
-            return _rebucket_once(spark, table, int(new_num_buckets), max_records_per_file)
-        except CommitConflict:
-            if attempt == _MAX_RECOMPUTE - 1:
-                raise
-    raise AssertionError("unreachable")
+    return recompute_on_conflict(
+        _rebucket_once, spark, table, int(new_num_buckets), max_records_per_file
+    )
 
 
 def _rebucket_once(
@@ -217,39 +147,23 @@ def _rebucket_once(
     table.refresh()
     if new_num_buckets == table.num_buckets:
         return {"rebucketed": False, "num_buckets": new_num_buckets}
-    read_snapshot = table.snapshot()["snapshot_id"]
     snap = table.snapshot()
-    old_buckets = sorted(
-        {int(b) for b in snap["files"]}
-        | {int(b) for b, fs in snap.get("delta_files", {}).items() if fs}
-    )
-    full = table.read(spark, include_tombstones=True).withColumn(
-        BUCKET_COL, bucket_expr(table.key_cols, new_num_buckets)
-    )
-    data_dir = table.new_data_dir()
-    # every new bucket is affected: each maps wholly to one task, one
-    # file per bucket (bar maxRecordsPerFile splits)
-    out = bucket_exchange(full, range(new_num_buckets)).sortWithinPartitions(
-        BUCKET_COL, *table.key_cols
-    )
-    writer = out.write.partitionBy(BUCKET_COL).option("compression", "zstd")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.parquet(data_dir)
-    from .merge import _list_written_files
-
-    files_by_bucket = _list_written_files(data_dir)
-    changed = sorted(set(old_buckets) | set(files_by_bucket))
-    table.commit(
-        files_by_bucket,
-        changed,
-        summary={
+    old_buckets = {int(b) for b in snap["files"]} | {
+        int(b) for b, fs in snap.get("delta_files", {}).items() if fs
+    }
+    # the commit replaces every bucket of both specs; each new bucket maps
+    # wholly to one task, one file per bucket (bar maxRecordsPerFile splits)
+    _, files_by_bucket = table.rewrite_buckets(
+        table.read(spark, include_tombstones=True),
+        old_buckets | set(range(new_num_buckets)),
+        {
             "operation": "rebucket",
             "from_buckets": len(old_buckets),
             "num_buckets": new_num_buckets,
         },
-        mode="replace",
-        validate_from_snapshot=read_snapshot,
+        key_sort=True,
+        max_records_per_file=max_records_per_file,
+        validate_from_snapshot=snap["snapshot_id"],
         new_num_buckets=new_num_buckets,
     )
     return {

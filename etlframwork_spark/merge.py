@@ -11,18 +11,19 @@ sorted-merge apply)" as a copy-on-write merge into the bucketed
 3.  one bucket-granular pass over the batch collects affected buckets +
     per-bucket source offset ranges (drives manifest-level pruning);
 4.  union the batch with ONLY the affected buckets' stored rows and take
-    the last writer per key — two interchangeable, test-proven-equal
-    resolution strategies:
+    the last writer per key — three resolve strategies:
 
-    * ``maxby`` (scale default): ``groupBy(key).agg(max_by(row,
-      (lsn, commit)))``. Catalyst plans partial_max_by before the shuffle,
-      so a hot key is pre-reduced map-side on every input partition —
-      skew defuses for free and everything stays in whole-stage codegen.
+    * ``maxby`` (scale default): ``table.lww_resolve``, i.e.
+      ``groupBy(key).agg(max_by(row, (lsn, commit)))``. Catalyst plans
+      partial_max_by before the shuffle, so a hot key is pre-reduced
+      map-side on every input partition — skew defuses for free and
+      everything stays in whole-stage codegen.
     * ``sorted_merge``: the north-rule's literal per-key sorted-merge
       apply — a salted ``max_by`` pre-reduce (explicit skew salt,
       BJ:6 "salted repartitioning on hot repos") caps group sizes, then
       ``applyInPandas`` folds each key's events in (lsn, commit) order.
       Vectorized Arrow transfer; no per-row Python outside the fold.
+      Test-proven equal to ``maxby``.
     * ``raw`` (merge-on-read only): no batch dedup at all — every
       validated event lands as a delta row and the read/compaction LWW
       resolves winners. One payload shuffle per epoch (the bucket-aligned
@@ -31,15 +32,16 @@ sorted-merge apply)" as a copy-on-write merge into the bucketed
       streams; costs larger delta files under heavy per-key churn.
 
     LWW is associative/commutative over the total order (lsn, commit) —
-    commit ids are unique per event — so both strategies and any salting
+    commit ids are unique per event — so every strategy and any salting
     produce the identical final row; ties (event re-delivery) are exact
     duplicates and collapse. A late LOWER-lsn event never clobbers: the
     stored row participates in the same max with its stored lsn.
-5.  winners that are deletes drop the row; survivors are rewritten into
-    the affected buckets (zstd parquet, ``_bucket=K`` layout); unaffected
-    buckets carry forward by reference;
-6.  atomic, epoch-fenced manifest commit (idempotent under re-delivery);
-7.  per-bucket/file lineage + per-epoch throughput metrics from parquet
+5.  winners that are deletes become tombstones; survivors are rewritten
+    into the affected buckets and committed, epoch-fenced and atomic
+    (idempotent under re-delivery), by ``table.rewrite_buckets`` — the
+    same primitive every bucket rewrite goes through; unaffected buckets
+    carry forward by reference;
+6.  per-bucket/file lineage + per-epoch throughput metrics from parquet
     footers (no extra Spark job).
 
 Scale notes (100 TB posture): merge-on-read epochs scan the batch
@@ -50,13 +52,11 @@ second full scan + a collect barrier per epoch). Copy-on-write keeps the
 pre-pass because it must know the affected buckets before reading their
 stored rows. The target table is never scanned beyond affected buckets;
 all logic is JVM-side except the optional sorted-merge fold; the write
-routes each bucket wholly to one task (``table.bucket_exchange`` — see
-step 5) with ``partitionBy`` splitting bucket directories.
+routes each bucket wholly to one task (``table.bucket_exchange``).
 """
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Any, Callable
 
@@ -67,42 +67,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .lineage import MetricsTable, shuffle_totals
-from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_exchange, bucket_expr
+from .table import (
+    BUCKET_COL,
+    LWW_PRI,
+    TOMBSTONE_COL,
+    SnapshotTable,
+    bucket_expr,
+    lww_order_cols,
+    lww_resolve,
+    recompute_on_conflict,
+)
 
 VALID_OPS = ("insert", "update", "delete")
 _STORED = "__stored__"
 SHA_COL = "content_sha256"
-# Deterministic LWW tie-break (round-6, advice item #1): at an IDENTICAL
-# (lsn, commit) ordering key, a delete/tombstone beats a live row. Ties
-# between NON-identical rows arise only from out-of-band corrections that
-# stamp a tombstone at the victim's own order (delete_where) — and then
-# again downstream when read_changes propagates that delete into a table
-# holding the identical live row. Without a tie-break, max_by's winner is
-# partition/merge-order dependent: a re-delivered original event could
-# resurrect a deleted key, and a propagated delete could silently fail to
-# apply. The priority column is appended LAST in the order struct, so it
-# only ever decides exact (lsn, commit) ties.
-_LWW_PRI = "_lww_pri"
-
-
-def _list_written_files(data_dir: str) -> dict[int, list[str]]:
-    """Enumerate ``data_dir/_bucket=K/*.parquet`` after a partitioned write."""
-    out: dict[int, list[str]] = {}
-    if not os.path.isdir(data_dir):
-        return out
-    for entry in os.listdir(data_dir):
-        if not entry.startswith(f"{BUCKET_COL}="):
-            continue
-        b = int(entry.split("=", 1)[1])
-        bdir = os.path.join(data_dir, entry)
-        files = [
-            os.path.join(bdir, f)
-            for f in os.listdir(bdir)
-            if f.endswith(".parquet") or f.endswith(".zstd.parquet")
-        ]
-        if files:
-            out[b] = sorted(files)
-    return out
 
 
 def _evolved_schema(table: SnapshotTable, batch: DataFrame) -> tuple[StructType, list[str]]:
@@ -131,72 +109,6 @@ def _align(df: DataFrame, schema: StructType, extra: list[str]) -> DataFrame:
     return df.select(*cols, *[F.col(c) for c in extra])
 
 
-def _resolve_maxby(
-    unioned: DataFrame, key_cols: list[str], all_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """LWW via max_by — partial aggregation map-side (skew-proof, codegen)."""
-    winner = F.max_by(
-        F.struct(*[F.col(c) for c in all_cols]),
-        F.struct(*[F.col(c) for c in order_cols]),
-    ).alias("_w")
-    return unioned.groupBy(*key_cols).agg(winner).select("_w.*")
-
-
-# Winner-set size above which _resolve_two_phase abandons the broadcast
-# semi join and falls back to maxby: broadcasting ~120B/winner, 2M rows is
-# ~240MB on the driver AND every executor — past that the "minimal payload
-# movement" trade inverts into an OOM risk. LWW associativity makes the
-# fallback state-identical (tests/test_merge.py pins the digest).
-TWO_PHASE_MAX_BROADCAST_ROWS = 2_000_000
-
-
-def _resolve_two_phase(
-    unioned: DataFrame,
-    key_cols: list[str],
-    all_cols: list[str],
-    order_cols: list[str],
-    max_broadcast_rows: int | None = None,
-) -> DataFrame:
-    """LWW with minimal payload movement — the large-row scale path.
-
-    ``maxby`` shuffles every full row (large ``content``) into the
-    group-by exchange. Here the winner per key is chosen on a SLIM
-    projection (keys + order columns, ~50B/row — column pruning means the
-    underlying scans don't even read content), then the full rows are
-    fetched back with a null-safe LEFT SEMI join on (key, order). Payload
-    bytes cross a shuffle only for WINNER rows (post-dedup), which at
-    CDC update ratios is a small fraction of the raw batch.
-
-    Exact re-deliveries (same key+lsn+commit as a stored row or a
-    duplicate event) tie in the semi join; the rows are state-identical
-    by construction, so ``dropDuplicates(key)`` resolves the tie without
-    affecting the final state.
-    """
-    if max_broadcast_rows is None:
-        max_broadcast_rows = TWO_PHASE_MAX_BROADCAST_ROWS
-    slim = unioned.select(*key_cols, *order_cols)
-    winner = F.max(F.struct(*[F.col(c) for c in order_cols])).alias("_w")
-    winners = slim.groupBy(*key_cols).agg(winner).select(*key_cols, "_w.*")
-    # Materialize the slim winner set once (localCheckpoint) so the size
-    # check and the subsequent broadcast share one computation, then GUARD
-    # the broadcast: round-2 review — an unconditionally forced broadcast
-    # on a very large epoch OOMs the driver instead of degrading. Past the
-    # threshold, fall back to maxby (state-identical by LWW associativity).
-    w = winners.select(
-        *[F.col(c).alias(f"_win_{c}") for c in key_cols + order_cols]
-    ).localCheckpoint(eager=True)
-    if w.count() > max_broadcast_rows:
-        return _resolve_maxby(unioned, key_cols, all_cols, order_cols)
-    cond = None
-    for c in key_cols + order_cols:
-        e = F.col(c).eqNullSafe(F.col(f"_win_{c}"))
-        cond = e if cond is None else cond & e
-    # broadcast is forced below the guard: a sort-merge semi join would
-    # shuffle the full payload rows on the join keys, defeating the point.
-    fetched = unioned.join(F.broadcast(w), cond, "left_semi")
-    return fetched.dropDuplicates(key_cols)
-
-
 def _resolve_sorted_merge(
     unioned: DataFrame,
     key_cols: list[str],
@@ -213,17 +125,13 @@ def _resolve_sorted_merge(
     order: the last writer wins whole-row.
     """
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(num_salts)).alias("_salt")
-    winner = F.max_by(
-        F.struct(*[F.col(c) for c in all_cols]),
-        F.struct(*[F.col(c) for c in order_cols]),
-    ).alias("_w")
-    pre = unioned.groupBy(*key_cols, salt).agg(winner).select("_w.*")
+    pre = lww_resolve(unioned, [*key_cols, salt], all_cols, order_cols)
 
     out_schema = StructType([pre.schema[c] for c in all_cols])
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         # na_position='first' matches Spark struct ordering (nulls sort
-        # FIRST ascending), so all three resolve strategies agree on the
+        # FIRST ascending), so both resolve strategies agree on the
         # winner even if an order column is ever null on one side.
         pdf = pdf.sort_values(order_cols, kind="stable", na_position="first")
         return pdf.iloc[[-1]]
@@ -265,12 +173,13 @@ def merge_batch(
     """
     if write_mode not in ("cow", "mor"):
         raise ValueError(f"unknown write_mode {write_mode!r}")
+    if resolve not in ("maxby", "sorted_merge", "raw"):
+        raise ValueError(f"unknown resolve strategy {resolve!r}")
     if resolve == "raw" and write_mode != "mor":
         raise ValueError("resolve='raw' (no batch dedup) requires write_mode='mor'")
     t0 = time.monotonic()
     shuffle0 = shuffle_totals(spark)  # None unless the UI/REST is enabled
     fence = f"{job_id}:{epoch_id}"
-    hook = fault_injector or (lambda stage: None)
     table.refresh()
     if table.is_fence_committed(fence, branch=branch):
         return {"skipped": True, "fence": fence}
@@ -311,10 +220,8 @@ def merge_batch(
 
     # -- 3. batch stats: affected buckets + offset ranges -------------------
     # Two execution shapes (identical outputs):
-    #   * cow / two_phase: a dedicated stats pass BEFORE the resolve — cow
-    #     must know the affected buckets to read only their stored rows,
-    #     and two_phase's plan traverses the batch twice (an observe node
-    #     there would double-count).
+    #   * cow: a dedicated stats pass BEFORE the resolve — cow must know
+    #     the affected buckets to read only their stored rows.
     #   * mor single-pass (the ingest hot path): NO extra job. Stats ride
     #     the resolve+write action itself via Observation, and the
     #     affected-bucket list falls out of the partitioned write's
@@ -323,27 +230,22 @@ def merge_batch(
     #     and scaled worst, being a short-task barrier).
     t_stats0 = time.monotonic()
     nb = table.num_buckets
-    single_pass = write_mode == "mor" and resolve != "two_phase"
-    obs = None
-    affected: list[int] | None = None
-    n_events = n_deletes = 0
-    src_lo = src_hi = None
+    single_pass = write_mode == "mor"
+    stat_cols = (
+        F.count(F.lit(1)).alias("n"),
+        F.min(order_col).alias("lo"),
+        F.max(order_col).alias("hi"),
+        F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
+    )
+    st: dict[str, Any] = {"n": 0, "dels": 0, "lo": None, "hi": None}
+    affected: list[int] = list(range(nb))
     if not single_pass:
-        bstats = (
-            ev.groupBy(bucket_expr(key_cols, nb).alias(BUCKET_COL))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(order_col).alias("lo"),
-                F.max(order_col).alias("hi"),
-                F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
-            )
-            .collect()
-        )
+        bstats = ev.groupBy(bucket_expr(key_cols, nb).alias(BUCKET_COL)).agg(*stat_cols).collect()
         affected = sorted(r[BUCKET_COL] for r in bstats)
-        n_events = sum(r["n"] for r in bstats)
-        n_deletes = sum(r["dels"] for r in bstats)
-        src_lo = min((r["lo"] for r in bstats), default=None)
-        src_hi = max((r["hi"] for r in bstats), default=None)
+        st["n"] = sum(r["n"] for r in bstats)
+        st["dels"] = sum(r["dels"] for r in bstats)
+        st["lo"] = min((r["lo"] for r in bstats), default=None)
+        st["hi"] = max((r["hi"] for r in bstats), default=None)
 
     timings: dict[str, float] = {"stats": round(time.monotonic() - t_stats0, 2)}
     summary: dict[str, Any] = {
@@ -352,17 +254,20 @@ def merge_batch(
         "new_columns": new_cols,
     }
 
+    def noop() -> dict[str, Any]:
+        # still commit the fence so re-delivery of an empty epoch is a no-op
+        snap = table.commit(
+            {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
+        )
+        summary["snapshot_id"] = None if snap is None else snap["snapshot_id"]
+        summary["skipped"] = snap is None
+        summary["timings"] = timings
+        return summary
+
     if not single_pass:
-        summary.update(events=n_events, deletes=n_deletes, affected_buckets=len(affected))
-        if n_events == 0:
-            # still commit the fence so re-delivery of an empty epoch is a no-op
-            snap = table.commit(
-                {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
-            )
-            summary["snapshot_id"] = None if snap is None else snap["snapshot_id"]
-            summary["skipped"] = snap is None
-            summary["timings"] = timings
-            return summary
+        summary.update(events=st["n"], deletes=st["dels"], affected_buckets=len(affected))
+        if st["n"] == 0:
+            return noop()
 
     # -- 4. LWW resolve ------------------------------------------------------
     # cow: resolve over (batch ∪ affected stored rows); the stored side
@@ -376,13 +281,7 @@ def merge_batch(
         from pyspark.sql import Observation
 
         obs = Observation(f"epoch_stats_{fence}")
-        ev_aligned = ev_aligned.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.min(order_col).alias("lo"),
-            F.max(order_col).alias("hi"),
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
-        )
+        ev_aligned = ev_aligned.observe(obs, *stat_cols)
     if write_mode == "mor":
         unioned = ev_aligned
     else:
@@ -412,18 +311,12 @@ def merge_batch(
         unioned = ev_aligned.unionByName(stored_aligned)
         timings["read_plan"] = round(time.monotonic() - t_rp0, 3)
 
-    # deterministic total order: (lsn, commit) — commit is unique per event;
-    # tables without a commit column fall back to lsn alone (SURVEY §7.4.3).
-    # _LWW_PRI is appended as the FINAL order component: delete beats live
-    # at an exact (lsn, commit) tie (see the constant's comment).
-    order_cols = [table.order_col] + (["commit"] if "commit" in all_cols else [])
-    if resolve != "raw":
-        del_flag = (F.col("op") == "delete") | (
-            (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-        )
-        unioned = unioned.withColumn(_LWW_PRI, del_flag.cast("int"))
-    carry_cols = all_cols + ["op", _LWW_PRI]
-    resolve_order = order_cols + [_LWW_PRI]
+    order_cols = lww_order_cols(order_col, all_cols)
+    # a delete event or a stored tombstone: it beats a live row at an
+    # exact order tie (LWW_PRI) and, as the winner, becomes a tombstone
+    is_del = (F.col("op") == "delete") | (
+        (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+    )
     if resolve == "raw":
         # merge-on-read fast path with NO batch dedup: every validated event
         # becomes a delta row (deletes as tombstones) and read/compaction's
@@ -433,20 +326,16 @@ def merge_batch(
         # exactly ONE exchange per epoch (the bucket-aligned write
         # distribution). Best for insert-heavy / low-duplication streams.
         resolved = ev_aligned
-    elif resolve == "maxby":
-        resolved = _resolve_maxby(unioned, key_cols, carry_cols, resolve_order).drop(_LWW_PRI)
-    elif resolve == "two_phase":
-        resolved = _resolve_two_phase(unioned, key_cols, carry_cols, resolve_order).drop(_LWW_PRI)
-    elif resolve == "sorted_merge":
-        resolved = _resolve_sorted_merge(
-            unioned, key_cols, carry_cols, resolve_order, num_salts
-        ).drop(_LWW_PRI)
     else:
-        raise ValueError(f"unknown resolve strategy {resolve!r}")
+        unioned = unioned.withColumn(LWW_PRI, is_del.cast("int"))
+        carry_cols = all_cols + ["op", LWW_PRI]
+        resolve_order = order_cols + [LWW_PRI]
+        if resolve == "maxby":
+            resolved = lww_resolve(unioned, key_cols, carry_cols, resolve_order)
+        else:
+            resolved = _resolve_sorted_merge(unioned, key_cols, carry_cols, resolve_order, num_salts)
+        resolved = resolved.drop(LWW_PRI)
 
-    is_del = (F.col("op") == "delete") | (
-        (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-    )
     # winners: stored rows keep their sha; winning deletes become tombstones
     # (payload nulled — only key + lsn are retained); new upserts get
     # sha2(content) computed JVM-side.
@@ -470,81 +359,58 @@ def merge_batch(
     for c in payload_cols:
         f = schema[c]
         final = final.withColumn(c, F.when(is_del, F.lit(None).cast(f.dataType)).otherwise(F.col(c)))
-    final = final.drop("op").withColumn(BUCKET_COL, bucket_expr(key_cols, nb))
+    final = final.drop("op")
 
-    # -- 5. copy-on-write: rewrite affected buckets ---------------------------
-    # Bucket-aligned write distribution (Iceberg's hash mode): route each
-    # bucket to exactly ONE task so an epoch writes ONE file per affected
-    # bucket. Without this, every shuffle partition writes a sliver into
-    # every bucket directory (tasks x buckets tiny files) and subsequent
-    # epochs drown in file-open overhead. bucket_exchange gives each
-    # affected bucket a dense slot and deals the slots over
-    # min(#affected, cores) tasks: no hash collisions, no empty tasks
-    # (each costs a task launch). Single-pass does not know the affected
-    # set before the write, so it deals every bucket.
-    hook("pre_write")
-    t_w0 = time.monotonic()
-    data_dir = table.new_data_dir()
-    (
-        bucket_exchange(final, range(nb) if single_pass else affected)
-        .write.partitionBy(BUCKET_COL)
-        .option("compression", "zstd")
-        .parquet(data_dir)
-    )
-    timings["resolve_write"] = round(time.monotonic() - t_w0, 2)
-    files_by_bucket = _list_written_files(data_dir)
-    if single_pass:
-        # stats observed during the write action; affected buckets from
-        # the partitioned directory layout — no separate stats job ran.
-        # Zero written files <=> zero validated events (every event yields
-        # a row on this path), and on an EMPTY plan Catalyst's
-        # empty-relation propagation erases the CollectMetrics node, so
-        # obs.get must not be consulted there.
-        if files_by_bucket:
-            m = obs.get
-            n_events = m["n"] or 0
-            n_deletes = m["dels"] or 0
-            src_lo, src_hi = m["lo"], m["hi"]
-        affected = sorted(files_by_bucket)
-        summary.update(events=n_events, deletes=n_deletes, affected_buckets=len(affected))
-        if n_events == 0:
-            # single-pass learns the epoch was empty only AFTER the write
-            # ran; the write produced no committed-referenced files (zero
-            # rows), so drop the orphan data_dir (+_SUCCESS marker) instead
-            # of leaving one per empty epoch of a long-running stream
-            import shutil
+    # -- 5. rewrite the affected buckets, fenced atomic commit --------------
+    # Single-pass does not know the affected set before the write, so the
+    # exchange deals every bucket and the stats are read once the write
+    # has run. The hook timestamps the primitive's phases.
+    marks: dict[str, float] = {}
 
-            shutil.rmtree(data_dir, ignore_errors=True)
-            snap = table.commit(
-                {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
+    def hook(stage: str) -> None:
+        if fault_injector is not None:
+            fault_injector(stage)
+        marks[stage] = time.monotonic()
+
+    def epoch_summary(files_by_bucket: dict[int, list[str]]) -> dict[str, Any] | None:
+        timings["resolve_write"] = round(time.monotonic() - marks["pre_write"], 2)
+        if single_pass:
+            # Zero written files <=> zero validated events (every event
+            # yields a row on this path), and on an EMPTY plan Catalyst's
+            # empty-relation propagation erases the CollectMetrics node,
+            # so obs.get must not be consulted there.
+            if files_by_bucket:
+                m = obs.get
+                st.update(n=m["n"] or 0, dels=m["dels"] or 0, lo=m["lo"], hi=m["hi"])
+            summary.update(
+                events=st["n"], deletes=st["dels"], affected_buckets=len(files_by_bucket)
             )
-            summary["snapshot_id"] = None if snap is None else snap["snapshot_id"]
-            summary["skipped"] = snap is None
-            summary["timings"] = timings
-            return summary
-
-    # -- 6. fenced atomic commit ---------------------------------------------
-    hook("pre_commit")
-    t_c0 = time.monotonic()
-    snap = table.commit(
-        files_by_bucket,
-        affected,
-        fence=fence,
-        new_schema=schema if new_cols else None,
+        if st["n"] == 0:
+            return None  # an empty single-pass epoch commits only its fence
         # a COPY: commit/lineage timings land in the returned dict only,
         # so the in-memory snapshot keeps matching the manifest on disk
-        summary={**summary, "operation": f"merge_{write_mode}", "timings": dict(timings)},
+        return {**summary, "operation": f"merge_{write_mode}", "timings": dict(timings)}
+
+    snap, files_by_bucket = table.rewrite_buckets(
+        final,
+        affected,
+        epoch_summary,
+        fault_injector=hook,
+        fence=fence,
+        new_schema=schema if new_cols else None,
         mode="append_delta" if write_mode == "mor" else "replace",
         validate_from_snapshot=read_snapshot,
         branch=branch,
     )
-    if snap is None:  # fence raced us — our files are orphans, vacuum later
+    if st["n"] == 0:
+        return noop()
+    if snap is None:  # fence raced us
         summary["skipped"] = True
         return summary
-    hook("post_commit")
-    timings["commit"] = round(time.monotonic() - t_c0, 2)
+    timings["commit"] = round(time.monotonic() - marks["pre_commit"], 2)
+    n_events, n_deletes = st["n"], st["dels"]
 
-    # -- 7. lineage + throughput metrics --------------------------------------
+    # -- 6. lineage + throughput metrics --------------------------------------
     t_l0 = time.monotonic()
     secs = time.monotonic() - t0
     shuffle1 = shuffle_totals(spark) if shuffle0 is not None else None
@@ -565,7 +431,7 @@ def merge_batch(
     timings["lineage"] = 0.0
     if metrics is not None:
         metrics.emit_lineage(
-            job_id, epoch_id, snap["snapshot_id"], files_by_bucket, src_lo, src_hi, table.root
+            job_id, epoch_id, snap["snapshot_id"], files_by_bucket, st["lo"], st["hi"], table.root
         )
         timings["lineage"] = round(time.monotonic() - t_l0, 2)
         metrics.emit_epoch(
@@ -577,7 +443,7 @@ def merge_batch(
                 "upserts": n_events - n_deletes,
                 "deletes": n_deletes,
                 "quarantined": quarantined,
-                "affected_buckets": len(affected),
+                "affected_buckets": summary["affected_buckets"],
                 "files_written": summary["files_written"],
                 "seconds": secs,
                 "events_per_sec": summary["events_per_sec"],
@@ -627,16 +493,8 @@ def delete_where(
     untouched buckets carry forward by reference. Racing writers fail the
     CAS commit and the delete recomputes from fresh state.
     """
-    from .table import CommitConflict
-
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    for attempt in range(3):
-        try:
-            return _delete_once(spark, table, pred, filters)
-        except CommitConflict:
-            if attempt == 2:
-                raise
-    raise AssertionError("unreachable")
+    return recompute_on_conflict(_delete_once, spark, table, pred, filters)
 
 
 def _delete_once(spark, table, pred, filters) -> dict:
@@ -644,35 +502,25 @@ def _delete_once(spark, table, pred, filters) -> dict:
 
     table.refresh()
     read_snapshot = table.snapshot()["snapshot_id"]
-    nb = table.num_buckets
     # table.read(filters=...) re-applies the filters as a row predicate, so
     # the find scan already counts pred AND filters; conjoin the same
     # filters into the rewrite's delete condition below so both agree.
     fexpr = filters_to_expr(validate_filters(filters)) if filters else None
     if fexpr is not None:
         pred = pred & fexpr
-    live = table.read(spark, filters=filters)
-    hit = (
-        live.filter(pred)
-        .select(bucket_expr(table.key_cols, nb).alias(BUCKET_COL))
-        .groupBy(BUCKET_COL)
-        .count()
-        .collect()
-    )
-    buckets = sorted(r[BUCKET_COL] for r in hit)
-    n_deleted = sum(r["count"] for r in hit)
-    if not buckets:
+    hit = table.bucket_counts(table.read(spark, filters=filters).filter(pred))
+    n_deleted = sum(hit.values())
+    if not hit:
         return {"buckets_rewritten": 0, "rows_deleted": 0, "snapshot_id": read_snapshot}
 
     schema = table.schema()
-    all_cols = schema.fieldNames()
-    order_cols = [table.order_col] + (["commit"] if "commit" in all_cols else [])
+    order_cols = lww_order_cols(table.order_col, schema.fieldNames())
     keep_cols = set(table.key_cols) | set(order_cols) | {TOMBSTONE_COL}
     # live row AND matches the predicate -> tombstone with nulled payload.
     # Materialize the flag BEFORE touching TOMBSTONE_COL: the expression
     # references _deleted, which the tombstone withColumn replaces.
     is_live = ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-    full = table.read(spark, buckets=buckets, include_tombstones=True)
+    full = table.read(spark, buckets=hit, include_tombstones=True)
     out = full.withColumn(
         "_to_del", is_live & F.coalesce(pred.cast("boolean"), F.lit(False))
     ).withColumn(
@@ -684,24 +532,15 @@ def _delete_once(spark, table, pred, filters) -> dict:
                 f.name,
                 F.when(F.col("_to_del"), F.lit(None).cast(f.dataType)).otherwise(F.col(f.name)),
             )
-    out = out.drop("_to_del").withColumn(BUCKET_COL, bucket_expr(table.key_cols, nb))
-    data_dir = table.new_data_dir()
-    (
-        bucket_exchange(out, buckets)
-        .sortWithinPartitions(BUCKET_COL, *table.key_cols)
-        .write.partitionBy(BUCKET_COL)
-        .option("compression", "zstd")
-        .parquet(data_dir)
-    )
-    files_by_bucket = _list_written_files(data_dir)
-    snap = table.commit(
-        files_by_bucket,
-        buckets,
-        summary={"operation": "delete_where", "rows_deleted": n_deleted},
+    snap, _ = table.rewrite_buckets(
+        out.drop("_to_del"),
+        hit,
+        {"operation": "delete_where", "rows_deleted": n_deleted},
+        key_sort=True,
         validate_from_snapshot=read_snapshot,
     )
     return {
-        "buckets_rewritten": len(buckets),
+        "buckets_rewritten": len(hit),
         "rows_deleted": n_deleted,
         "snapshot_id": snap["snapshot_id"],
     }
@@ -776,15 +615,7 @@ def merge_into(
 
     # bucket-prune the target read to the buckets the source keys hash
     # into (same shape as delete_where's find scan; O(num_buckets) rows)
-    nb = table.num_buckets
-    hit = (
-        src.select(bucket_expr(key_cols, nb).alias(BUCKET_COL))
-        .groupBy(BUCKET_COL)
-        .count()
-        .collect()
-    )
-    buckets = sorted(r[BUCKET_COL] for r in hit)
-    tgt = table.read(spark, buckets=buckets).select(
+    tgt = table.read(spark, buckets=table.bucket_counts(src)).select(
         *[F.col(k).alias(f"_t_{k}") for k in key_cols],
         *[
             F.col(f.name).alias(f"t_{f.name}")

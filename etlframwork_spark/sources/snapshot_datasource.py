@@ -469,16 +469,18 @@ class SnapshotTableReader(DataSourceReader):
             # max and nulls-first ordering the writer uses.
             both = read_files(partition.base_files + partition.delta_files)
             pdf = both.to_pandas()
-            order_cols = [self.order_col] + (["commit"] if "commit" in pdf.columns else [])
-            # deterministic tie-break, mirroring table.read / merge._LWW_PRI:
-            # a tombstone beats a live row at an exact (lsn, commit) tie
+            from ..table import LWW_PRI, lww_order_cols
+
+            order_cols = lww_order_cols(self.order_col, pdf.columns)
+            # deterministic tie-break, mirroring table.read (LWW_PRI): a
+            # tombstone beats a live row at an exact (lsn, commit) tie
             if "_deleted" in pdf.columns:
-                pdf["_lww_pri"] = pdf["_deleted"].fillna(False).astype(bool).astype(int)
-                order_cols = order_cols + ["_lww_pri"]
+                pdf[LWW_PRI] = pdf["_deleted"].fillna(False).astype(bool).astype(int)
+                order_cols = order_cols + [LWW_PRI]
             pdf = pdf.sort_values(order_cols, kind="stable", na_position="first")
             pdf = pdf.groupby(self.key_cols, as_index=False, sort=False).tail(1)
-            if "_lww_pri" in pdf.columns:
-                pdf = pdf.drop(columns=["_lww_pri"])
+            if LWW_PRI in pdf.columns:
+                pdf = pdf.drop(columns=[LWW_PRI])
             base = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
         else:
             base = read_files(partition.base_files)

@@ -80,7 +80,7 @@ class IngestJob:
     order_col: str = "lsn"
     num_buckets: int = 16
     max_files_per_trigger: int = 8
-    resolve: str = "maxby"  # or "two_phase" / "sorted_merge" (north-rule-literal)
+    resolve: str = "maxby"  # or "sorted_merge" (north-rule-literal) / "raw" (mor only)
     write_mode: str = "cow"  # or "mor" (delta-append merge-on-read fast path)
     compact_min_deltas: int | None = None  # mor: fold deltas when a bucket reaches this many
     num_salts: int = 16

@@ -35,9 +35,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -129,6 +130,38 @@ def hydrate_meta(root: str, meta: dict) -> dict:
 # impossible.
 TOMBSTONE_COL = "_deleted"
 
+# Deterministic LWW tie-break (round-6, advice item #1): at an IDENTICAL
+# (lsn, commit) ordering key, a delete/tombstone beats a live row. Ties
+# between NON-identical rows arise only from out-of-band corrections that
+# stamp a tombstone at the victim's own order (delete_where) — and then
+# again downstream when read_changes propagates that delete into a table
+# holding the identical live row. Without a tie-break, max_by's winner is
+# partition/merge-order dependent: a re-delivered original event could
+# resurrect a deleted key, and a propagated delete could silently fail to
+# apply. Every resolve appends this priority column LAST in its order, so
+# it only ever decides exact (lsn, commit) ties.
+LWW_PRI = "_lww_pri"
+
+
+def lww_order_cols(order_col: str, cols: Iterable[str]) -> list[str]:
+    """The LWW total order: the order column, then the per-event unique
+    ``commit`` tiebreak when the table has one (SURVEY §7.4.3). Resolves
+    append ``LWW_PRI`` after these."""
+    return [order_col] + (["commit"] if "commit" in cols else [])
+
+
+def lww_resolve(
+    df: DataFrame, key_cols: list, cols: list[str], order_cols: list[str]
+) -> DataFrame:
+    """Last writer per key: ``max_by(struct(cols), struct(order_cols))``.
+    Catalyst plans partial_max_by before the shuffle, so a hot key is
+    pre-reduced map-side on every input partition (skew-proof, codegen)."""
+    winner = F.max_by(
+        F.struct(*[F.col(c) for c in cols]),
+        F.struct(*[F.col(c) for c in order_cols]),
+    ).alias("_w")
+    return df.groupBy(*key_cols).agg(winner).select("_w.*")
+
 
 def bucket_expr(key_cols: list[str], num_buckets: int):
     """Deterministic bucket id for a row: xxhash64(key) mod B (JVM-side)."""
@@ -198,6 +231,36 @@ class CommitConflict(Exception):
 
 
 _MAX_COMMIT_RETRIES = 16
+_MAX_RECOMPUTE = 3
+
+
+def recompute_on_conflict(step: Callable[..., Any], *args: Any) -> Any:
+    """Run a read-rewrite-commit ``step`` until its commit wins. A
+    :class:`CommitConflict` means the step computed its rewrite from
+    stale state, so it runs again from fresh state (``_MAX_RECOMPUTE``
+    attempts in all; the last conflict propagates)."""
+    for attempt in range(_MAX_RECOMPUTE):
+        try:
+            return step(*args)
+        except CommitConflict:
+            if attempt == _MAX_RECOMPUTE - 1:
+                raise
+
+
+def _list_written_files(data_dir: str) -> dict[int, list[str]]:
+    """Enumerate ``data_dir/_bucket=K/*.parquet`` after a partitioned write."""
+    out: dict[int, list[str]] = {}
+    if not os.path.isdir(data_dir):
+        return out
+    for entry in os.listdir(data_dir):
+        if not entry.startswith(f"{BUCKET_COL}="):
+            continue
+        b = int(entry.split("=", 1)[1])
+        bdir = os.path.join(data_dir, entry)
+        files = [os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")]
+        if files:
+            out[b] = sorted(files)
+    return out
 
 
 class SnapshotTable:
@@ -784,23 +847,17 @@ class SnapshotTable:
         if dirty_files:
             ddf = self._read_files(spark, dirty_files, schema, target_sid)
             cols = schema.fieldNames()
-            order_cols = [self.order_col] + (["commit"] if "commit" in cols else [])
-            # same deterministic tie-break as the writer (merge._LWW_PRI):
-            # at an exact (lsn, commit) tie a tombstone beats a live row —
-            # e.g. a delete_where tombstone propagated as a MOR delta over
-            # the identical stored base row.
-            order_struct = [F.col(c) for c in order_cols]
+            order_cols = lww_order_cols(self.order_col, cols)
+            # same deterministic tie-break as the writer (LWW_PRI): at an
+            # exact (lsn, commit) tie a tombstone beats a live row — e.g. a
+            # delete_where tombstone propagated as a MOR delta over the
+            # identical stored base row.
             if TOMBSTONE_COL in cols:
-                order_struct.append(
-                    F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).cast("int").alias("_lww_pri")
+                ddf = ddf.withColumn(
+                    LWW_PRI, F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).cast("int")
                 )
-            winner = F.max_by(
-                F.struct(*[F.col(c) for c in cols]),
-                F.struct(*order_struct),
-            ).alias("_w")
-            parts.append(
-                ddf.groupBy(*[F.col(k) for k in self.key_cols]).agg(winner).select("_w.*")
-            )
+                order_cols = order_cols + [LWW_PRI]
+            parts.append(lww_resolve(ddf, self.key_cols, cols, order_cols))
         if not parts:
             df = spark.createDataFrame([], schema)
         elif len(parts) == 1:
@@ -1112,6 +1169,93 @@ class SnapshotTable:
         Safe to abandon: unreferenced files are invisible to readers."""
         d = os.path.join(self.root, "data", f"snap-{uuid.uuid4().hex[:12]}")
         return d
+
+    def bucket_counts(self, df: DataFrame) -> dict[int, int]:
+        """``{bucket: rows}`` of ``df`` under the current bucket spec — how
+        predicate DML finds the buckets it must rewrite. Collects at most
+        ``num_buckets`` rows."""
+        hit = (
+            df.select(bucket_expr(self.key_cols, self.num_buckets).alias(BUCKET_COL))
+            .groupBy(BUCKET_COL)
+            .count()
+            .collect()
+        )
+        return {r[BUCKET_COL]: r["count"] for r in hit}
+
+    def rewrite_buckets(
+        self,
+        df: DataFrame,
+        buckets: Iterable[int],
+        summary: dict[str, Any] | Callable[[dict[int, list[str]]], dict[str, Any] | None],
+        *,
+        key_sort: bool = False,
+        max_records_per_file: int | None = None,
+        fault_injector: Callable[[str], None] | None = None,
+        **commit_args: Any,
+    ) -> tuple[dict[str, Any] | None, dict[int, list[str]]]:
+        """Write ``df`` as new files for ``buckets`` and commit them — the
+        one move behind every table change: cow and mor epochs,
+        ``delete_where``, tombstone purge, compaction and rebucketing.
+
+        ``df`` holds table rows; each gets its ``BUCKET_COL`` under the
+        spec being written (``new_num_buckets`` for a rebucket, else the
+        current one). ``bucket_exchange`` routes every bucket wholly to one
+        task, so each written bucket gets one zstd file under
+        ``_bucket=K`` (more when ``max_records_per_file`` splits it).
+        ``key_sort`` orders each bucket's rows by key, which keeps
+        per-file key bounds tight for stats.py file skipping.
+
+        ``summary`` is the commit summary, or a function of the written
+        files ``{bucket: [paths]}`` returning it (``None`` publishes
+        nothing). A replace commit replaces every bucket in ``buckets``
+        (one written empty is emptied; a rebucket lists the old spec's
+        buckets too); an ``append_delta`` commit appends to the buckets
+        that got files. ``commit_args`` pass through to ``commit``.
+
+        ``fault_injector`` fires at ``pre_write``, ``pre_commit`` and
+        ``post_commit``. The data dir is deleted whenever nothing in it
+        gets published: no file written, no summary, a CommitConflict, or
+        a fence already committed. A crash leaves it for ``vacuum``.
+
+        Returns the new snapshot (``None`` if nothing was published) and
+        the written files.
+        """
+        hook = fault_injector or (lambda stage: None)
+        nb = commit_args.get("new_num_buckets") or self.num_buckets
+        buckets = sorted({int(b) for b in buckets})
+        hook("pre_write")
+        data_dir = self.new_data_dir()
+        # the exchange deals only buckets of the spec being written: a
+        # rebucket's old-spec buckets hold none of df's rows
+        out = bucket_exchange(
+            df.withColumn(BUCKET_COL, bucket_expr(self.key_cols, nb)), [b for b in buckets if b < nb]
+        )
+        if key_sort:
+            # rows arrive grouped by bucket within the task; sorting by
+            # (bucket, *key) keeps the grouping, so maxRecordsPerFile cuts
+            # each bucket into contiguous key-range files
+            out = out.sortWithinPartitions(BUCKET_COL, *self.key_cols)
+        writer = out.write.partitionBy(BUCKET_COL).option("compression", "zstd")
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+        writer.parquet(data_dir)
+        files = _list_written_files(data_dir)
+        if callable(summary):
+            summary = summary(files)
+        snap = None
+        if summary is not None:
+            changed = sorted(files) if commit_args.get("mode") == "append_delta" else buckets
+            hook("pre_commit")
+            try:
+                snap = self.commit(files, changed, summary=summary, **commit_args)
+            except CommitConflict:
+                shutil.rmtree(data_dir, ignore_errors=True)
+                raise
+        if snap is None or not files:
+            shutil.rmtree(data_dir, ignore_errors=True)
+        if snap is not None:
+            hook("post_commit")
+        return snap, files
 
     def commit(
         self,

@@ -213,7 +213,7 @@ def test_sync_propagates_delete_where_ties(spark, tmp_path):
     read_changes then feeds those deletes downstream where dst holds the
     identical live row at the identical order — a tie max_by alone does
     not resolve deterministically. The delete-beats-live tie-break
-    (merge._LWW_PRI) must make every delete propagate (round-6 advice #1)."""
+    (table.LWW_PRI) must make every delete propagate (round-6 advice #1)."""
     from etlframwork_spark.changes import sync_incremental
     from etlframwork_spark.merge import delete_where
 

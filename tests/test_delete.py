@@ -292,7 +292,7 @@ def test_tie_semantics_identical_across_strategies(spark, tmp_path):
     history — containing in-batch ties, cross-epoch ties against stored
     rows, and a stale re-delivery against a tombstone — must produce the
     IDENTICAL final state through every resolve strategy and write mode
-    (maxby/two_phase/sorted_merge cow, maxby/raw mor). The table has no
+    (maxby/sorted_merge cow, maxby/raw mor). The table has no
     commit column, so order = lsn alone and the ties are exact."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -337,7 +337,6 @@ def test_tie_semantics_identical_across_strategies(spark, tmp_path):
     )
     states = {
         "maxby_cow": run("maxby_cow", "maxby", "cow"),
-        "two_phase_cow": run("two_phase_cow", "two_phase", "cow"),
         "sorted_merge_cow": run("sorted_merge_cow", "sorted_merge", "cow"),
         "maxby_mor": run("maxby_mor", "maxby", "mor"),
         "raw_mor": run("raw_mor", "raw", "mor"),

@@ -23,8 +23,8 @@ BANNED = [
 # .collect() is allowed ONLY for O(#buckets)/O(#files)/O(model) metadata,
 # never data rows
 COLLECT_ALLOWED = {
-    "merge.py",  # bucket-stat rows (<= num_buckets)
-    "maintenance.py",  # purgeable-bucket rows (<= num_buckets)
+    "merge.py",  # cow epoch bucket-stat rows (<= num_buckets)
+    "table.py",  # SnapshotTable.bucket_counts rows (<= num_buckets)
     # trained IVF centroids (K rows — the model), and round 7's
     # cosine_topk query matrix (O(#queries) — the exact driver footprint
     # the former F.broadcast of the query side already implied)
@@ -93,4 +93,29 @@ def test_bucket_exchange_is_the_only_bucket_repartition():
                 problems.append(f"{path}:{line}: repartition on the bucket column")
             if m.group(1) == "ById" and os.path.basename(path) != "table.py":
                 problems.append(f"{path}:{line}: repartitionById outside table.bucket_exchange")
+    assert not problems, problems
+
+
+# Every bucket rewrite goes through SnapshotTable.rewrite_buckets, which
+# owns the data dir, the partitioned write, the commit, the orphan cleanup
+# and (with recompute_on_conflict) the CommitConflict recompute. These
+# spellings outside table.py mean a hand-rolled second copy of it.
+_REWRITE_OWNED = [
+    (re.compile(r"\bnew_data_dir\s*\("), "new_data_dir("),
+    (re.compile(r"partitionBy\(\s*BUCKET_COL"), "partitionBy(BUCKET_COL"),
+    (re.compile(r"except\s+\(?[\w., ]*CommitConflict"), "except CommitConflict"),
+]
+
+
+def test_bucket_rewrite_is_owned_by_table():
+    problems = []
+    for path in _engine_files():
+        if os.path.basename(path) == "table.py":
+            continue
+        with open(path) as fh:
+            src = fh.read()
+        for rx, what in _REWRITE_OWNED:
+            for m in rx.finditer(src):
+                line = src.count("\n", 0, m.start()) + 1
+                problems.append(f"{path}:{line}: {what} outside table.py")
     assert not problems, problems

@@ -43,7 +43,7 @@ def _assert_state_equal(spark, table, oracle_state):
             assert got["lang"] == expect["lang"], k
 
 
-@pytest.mark.parametrize("resolve", ["maxby", "two_phase", "sorted_merge"])
+@pytest.mark.parametrize("resolve", ["maxby", "sorted_merge"])
 def test_merge_single_batch_matches_oracle(spark, tmp_path, resolve):
     spec = EventLogSpec(seed=7, n_events=2000, n_repos=20, paths_per_repo=10, p_delete=0.1)
     pdf = _make_events_frame(spec)
@@ -56,38 +56,7 @@ def test_merge_single_batch_matches_oracle(spark, tmp_path, resolve):
     _assert_state_equal(spark, table, oracle_nolang)
 
 
-def test_two_phase_broadcast_guard_falls_back_to_maxby(spark, tmp_path, monkeypatch):
-    """Round-2 verdict: the forced broadcast of the winner set must not
-    OOM on a very large epoch. With the threshold forced to 1, the guard
-    engages (fallback to maxby) and the final state stays digest-identical
-    to an unguarded two_phase run."""
-    import etlframwork_spark.merge as merge_mod
-
-    spec = EventLogSpec(seed=9, n_events=1500, n_repos=15, paths_per_repo=8, p_delete=0.1)
-    pdf = _make_events_frame(spec)
-    oracle = apply_oracle(pdf)
-    batch_pdf = pdf.drop(columns=["lang"])
-
-    # guarded run: threshold=1 -> every batch exceeds it -> maxby path
-    monkeypatch.setattr(merge_mod, "TWO_PHASE_MAX_BROADCAST_ROWS", 1)
-    t_guarded = _mk_table(tmp_path / "a")
-    merge_batch(
-        spark, t_guarded, spark.createDataFrame(batch_pdf, schema=CDC_BASE_SCHEMA),
-        job_id="g", epoch_id=0, resolve="two_phase",
-    )
-    # unguarded run (default threshold far above 1500 winners)
-    monkeypatch.setattr(merge_mod, "TWO_PHASE_MAX_BROADCAST_ROWS", 2_000_000)
-    t_plain = _mk_table(tmp_path / "b")
-    merge_batch(
-        spark, t_plain, spark.createDataFrame(batch_pdf, schema=CDC_BASE_SCHEMA),
-        job_id="p", epoch_id=0, resolve="two_phase",
-    )
-    oracle_nolang = {k: dict(v, lang=None) for k, v in oracle.items()}
-    _assert_state_equal(spark, t_guarded, oracle_nolang)
-    _assert_state_equal(spark, t_plain, oracle_nolang)
-
-
-@pytest.mark.parametrize("resolve", ["maxby", "two_phase", "sorted_merge"])
+@pytest.mark.parametrize("resolve", ["maxby", "sorted_merge"])
 def test_merge_multi_batch_out_of_order(spark, tmp_path, resolve):
     """Events split across epochs in a NON-lsn order; a late lower-LSN
     update must never clobber the stored higher-LSN row (T4)."""

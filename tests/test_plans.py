@@ -48,12 +48,12 @@ def test_lww_maxby_has_partial_aggregation(spark):
     """The MERGE's dedup kernel must pre-reduce map-side: a hot key's
     events collapse to one row per input partition before the shuffle —
     this IS the first line of skew defense at 10^10 events."""
-    from etlframwork_spark.merge import _resolve_maxby
+    from etlframwork_spark.table import lww_resolve
 
     df = spark.createDataFrame(
         [("r", "p", 1, "c", "x")], ["repo", "path", "lsn", "commit", "content"]
     )
-    resolved = _resolve_maxby(df, ["repo", "path"], ["repo", "path", "lsn", "commit", "content"], ["lsn", "commit"])
+    resolved = lww_resolve(df, ["repo", "path"], ["repo", "path", "lsn", "commit", "content"], ["lsn", "commit"])
     p = _plan(resolved)
     assert "partial_max_by" in p
 
