@@ -19,37 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "filter_project_pushdown",
-    "lww_dedup_events",
-    "window_rank_orders",
-    "rollup_order_metrics",
-    "topk_hot_users",
-    "json_extract_events",
-    "docs_token_stats",
-    "docs_exact_dedup",
-    "docs_dedup_keepers",
-    "docs_dedup_pipeline",
-    "docs_quality_fingerprint",
-    "emb_cosine_topk",
-    "emb_ann_lsh",
-    "multimodal_feature_extract",
-]
-
-
-def _resolve_query(name):
-    from etlframwork_spark.functions import dedup, similarity
-    from etlframwork_spark.operators import QUERIES
-
-    if name in QUERIES:
-        return QUERIES[name]
-    for mod in (similarity, dedup):
-        if hasattr(mod, name):
-            return getattr(mod, name)
-    raise KeyError(name)
+from bench import HEADLINE, _resolve_query  # noqa: E402
 
 
 def main() -> None:

@@ -1,11 +1,14 @@
 """Deduplication for training-data pipelines: exact, n-gram Jaccard,
 MinHash+LSH, SimHash.
 
-Everything stays JVM-side (higher-order array functions + xxhash64) —
-there is no Python in any per-row path, so the same code scales to a
-multi-billion-document corpus: shingling/hashing is map-only, LSH turns
-the quadratic pair search into a band-bucket shuffle, and the verify step
-joins only within buckets.
+Tokenization, banding and verification stay JVM-side (higher-order
+array functions + xxhash64). MinHash signatures and shingle sets run as
+batch-native ``mapInArrow`` kernels (numpy XXH64 over the Arrow token
+buffers) once the corpus is large enough to pay for the Python worker;
+their per-row loop only assembles shingle byte strings. Shingling and
+hashing are map-only, LSH turns the quadratic pair search into a
+band-bucket shuffle, and the verify step joins only within buckets, so
+the same code scales to a multi-billion-document corpus.
 
 Exact dedup and bounded n-gram Jaccard have DuckDB oracles; MinHash/
 SimHash use Spark's xxhash64 (no DuckDB twin) so the driver records
@@ -21,8 +24,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
+from ..hashing import SPARK_SEED, xxh64_arrow
 from ..operators.registry import query
-from ..sources.io import _input_bytes, load_table
+from ..sources.io import load_table, scan_bytes
 
 # deterministic (a, b) constants for the MinHash permutation family.
 # 31-bit arithmetic: a*h31 + b stays < 2^62, so Spark's ANSI-mode long
@@ -201,16 +205,10 @@ def _minhash_signature_hof(df: DataFrame, text_col: str = "text", ngram: int = 3
 _VECTORIZE_MIN_BYTES = 2 << 20
 
 
-def _use_vectorized(sf_dir: str) -> bool:
-    import os
-
-    try:
-        return (
-            _input_bytes(os.path.join(sf_dir, "documents.parquet"))
-            >= _VECTORIZE_MIN_BYTES
-        )
-    except OSError:
-        return True
+def _use_vectorized(docs: DataFrame) -> bool:
+    """Kernel or HOF plan for the corpus scan ``docs``, taken before any
+    ``select`` (a projection scales the size estimate)."""
+    return scan_bytes(docs) >= _VECTORIZE_MIN_BYTES
 
 
 def minhash_signature(
@@ -227,8 +225,8 @@ def minhash_signature(
     (``split(trim(lower(text)), '\\s+')`` — codegen'd, so the exact
     trim/lower/split semantics are Spark's own), then ONE ``mapInArrow``
     stage assembles shingle byte strings from the Arrow token buffers and
-    hashes them with the vectorized numpy XXH64 already
-    bit-equality-pinned against the JVM for the DSv2 writer (S20).
+    hashes them with the numpy XXH64 of ``hashing.py`` (pinned
+    bit-equal to the JVM's ``xxhash64``).
     Because the kernel hashes exactly the UTF-8 bytes
     ``concat_ws(' ', slice(_tokens, i+1, n))`` would produce, and the
     permutation arithmetic (``pmod(a*(h & P) + b, P)``) is the same
@@ -247,8 +245,6 @@ def minhash_signature(
     if not vectorized:
         return _minhash_signature_hof(df, text_col, ngram)
     import pyarrow as pa
-
-    from ..sources.snapshot_datasource import _xxh64_fixed_np
 
     tokens_expr = F.expr(rf"split(trim(lower({text_col})), '\\s+')")
     base = df.withColumn("_tokens", tokens_expr)
@@ -301,24 +297,10 @@ def minhash_signature(
                 else:
                     shingles.append(space.join(tok_views[ts : ts + nt]))
                     counts[i] = 1
-            # hash every shingle: group rows by byte length so each group is
-            # a fixed-width matrix for the pinned vectorized XXH64
-            sh = pa.array(shingles, type=pa.large_binary())
-            n_sh = len(sh)
-            _, sob, sdb = sh.buffers()
-            soff = np.frombuffer(sob, np.int64, n_sh + 1, sh.offset * 8)
-            sdata = (
-                np.frombuffer(sdb, np.uint8) if sdb is not None else np.empty(0, np.uint8)
+            H = xxh64_arrow(
+                pa.array(shingles, type=pa.large_binary()),
+                np.full(len(shingles), SPARK_SEED, np.uint64),
             )
-            slens = soff[1:] - soff[:-1]
-            H = np.empty(n_sh, dtype=np.uint64)
-            for L in np.unique(slens):
-                idx = np.nonzero(slens == L)[0]
-                if L == 0:
-                    m = np.empty((len(idx), 0), dtype=np.uint8)
-                else:
-                    m = sdata[soff[idx][:, None] + np.arange(L)]
-                H[idx] = _xxh64_fixed_np(m, np.full(len(idx), 42, np.uint64))
             h31 = (H & mask).astype(np.int64)
             perms = (a_arr * h31[None, :] + b_arr) % p64  # (nperm, n_sh)
             starts = np.concatenate([[0], np.cumsum(counts)])[:-1]
@@ -519,14 +501,17 @@ def shingle_sets(
                     uniq = {space.join(tok_views[ts : ts + nt]): None}
                 flat.extend(uniq)
                 offs[i + 1] = offs[i] + len(uniq)
+            # int64 value offsets (large_string): a batch's shingle bytes
+            # may pass 2 GB; mapInArrow takes list<large_string> for
+            # array<string> but rejects LargeList, so list offsets stay int32
             sh_col = pa.ListArray.from_arrays(
-                pa.array(offs), pa.array(flat, type=pa.string())
+                pa.array(offs), pa.array(flat, type=pa.large_string())
             )
             yield pa.RecordBatch.from_arrays(
                 [batch.column(c) for c in range(n_cols)] + [sh_col],
                 schema=pa.schema(
                     [batch.schema.field(c) for c in range(n_cols)]
-                    + [pa.field("shingles", pa.list_(pa.string()))]
+                    + [pa.field("shingles", pa.list_(pa.large_string()))]
                 ),
             )
 
@@ -567,8 +552,9 @@ def _verified_dup_pairs(spark, sf_dir):
     plan evaluated the full-corpus shingle subtree twice — once per side
     of the verify join; identical output, ~10x less shingle work on a
     typical (mostly-unique) corpus."""
-    d = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    vec = _use_vectorized(sf_dir)
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    vec = _use_vectorized(docs)
+    d = docs.select("doc_id", "text")
     sigs = minhash_signature(d, vectorized=vec)
     cands = lsh_candidate_pairs(sigs, with_est=False).localCheckpoint(eager=True)
     involved = cands.select(F.explode(F.array("id_a", "id_b")).alias("doc_id")).distinct()
@@ -627,8 +613,8 @@ def docs_minhash_lsh(spark, sf_dir):
     NOT driver-registered: subsumed by docs_dedup_pipeline (same candidate
     generation plus the exact-verify leg and a brute-force DuckDB twin) —
     the registry is capped at 50 so every entry gets a CORRECTNESS row."""
-    d = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    sigs = minhash_signature(d, vectorized=_use_vectorized(sf_dir))
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    sigs = minhash_signature(docs.select("doc_id", "text"), vectorized=_use_vectorized(docs))
     return lsh_candidate_pairs(sigs).filter(F.col("est_jaccard") >= 0.5).orderBy("id_a", "id_b")
 
 

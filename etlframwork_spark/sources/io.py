@@ -112,15 +112,11 @@ _SPREAD_MIN_BYTES = 1 << 20
 _SPLIT_FLOOR_BYTES = 4 << 20  # mirrors spark.sql.files.openCostInBytes
 
 
-def _input_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for dirpath, _d, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(dirpath, f))
-    return total
+def scan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of a file scan: the bytes of the files it
+    lists, on any filesystem Spark reads, with no extra listing. Take it
+    on the bare scan — a ``select`` scales the estimate by row width."""
+    return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
 
 
 def load_table(
@@ -144,10 +140,7 @@ def load_table(
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
     if spread:
-        try:
-            size = _input_bytes(path)
-        except OSError:
-            return df
+        size = scan_bytes(df)
         par = spark.sparkContext.defaultParallelism
         if size >= spread_min_bytes and math.ceil(size / _SPLIT_FLOOR_BYTES) < par:
             df = df.repartition(par)

@@ -1,7 +1,7 @@
 """DataSource V2 exposure of ``SnapshotTable`` (Spark 4 Python Data
-Source API) — closes round-2's "largest remaining architectural gap":
-manifest-level pruning was Python-side only, invisible to Catalyst, so
-``spark.sql`` over the CDC table could not prune.
+Source API): ``spark.read.format("snapshot_table")`` and
+``df.write.format("snapshot_table")``, so ``spark.sql`` over the CDC table
+gets the table's pruning, time travel and merge-on-read semantics.
 
 Registration + use::
 
@@ -10,15 +10,19 @@ Registration + use::
     df = spark.read.format("snapshot_table").option("root", root).load()
     df.filter((df.repo == "org1/repo17") & (df.path == "src/mod0/f3.js"))
 
-What Catalyst sees:
+The reader and writer are Arrow adapters over ``SnapshotTable``; every
+planning decision is the table's own:
 
-- **Key-equality bucket pruning** via ``pushFilters``: equality filters
-  on ALL key columns let the reader compute the row's bucket with a
-  pure-Python reimplementation of Spark's ``xxhash64`` (bit-equality vs
-  the JVM pinned in tests/test_datasource.py) and plan exactly ONE input
-  partition instead of ``num_buckets``. Every filter is still returned to
-  Spark for post-scan evaluation, so pruning can never change results.
-- **Snapshot time travel** via ``option("snapshot_id", N)``.
+- **Pruning**: ``pushFilters`` translates Spark's filters into the
+  ``(col, op, value)`` triplets ``SnapshotTable.read(filters=...)`` takes,
+  and ``partitions()`` emits one partition per bucket of
+  ``SnapshotTable.plan_buckets`` — equality on ALL key columns pins ONE
+  bucket, clean buckets skip files by their min/max stats. Every filter is
+  still returned to Spark for post-scan evaluation, so pruning can never
+  change results.
+- **Snapshot time travel** via ``option("snapshot_id", N)`` or
+  ``option("tag", name)``, under the snapshot's own schema
+  (``SnapshotTable.resolve_read``).
 - **Merge-on-read semantics**: each partition = one bucket; delta files
   are LWW-resolved against the base inside the partition (same
   associative (lsn, commit) max the writer and ``table.read`` use), and
@@ -28,17 +32,14 @@ Scale/fit notes, stated honestly: rows cross the Python worker as Arrow
 record batches, so this reader costs an Arrow hop that the native
 ``table.read`` path (pure JVM parquet scan) does not. It is the SQL
 convenience/interop surface — ad-hoc ``spark.sql`` over CDC tables with
-pruning — not the ingest hot path, which stays on ``table.read``. A JVM
-DSv2 implementation would remove the hop; the PLANNING behavior
-(partition-per-bucket, filter-driven pruning, snapshot pinning) is
-exactly what that implementation would do.
+pruning — not the ingest hot path, which stays on ``table.read``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import re
+import shutil
+import uuid
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -56,259 +57,18 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructField, StructType
 
-# ------------------------------------------------------------- xxhash64
-# Pure-Python XXH64 matching Spark's `xxhash64` on strings (UTF-8 bytes,
-# seed chaining across columns, seed 42 at the head — the exact semantics
-# of table.bucket_expr). Bit-equality vs the JVM is pinned in tests.
-_M = (1 << 64) - 1
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
+from ..hashing import buckets_np
+from ..table import LWW_PRI, TOMBSTONE_COL, SnapshotTable, lww_order_cols
 
 
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M
-
-
-def _round(acc: int, inp: int) -> int:
-    acc = (acc + inp * _P2) & _M
-    return (_rotl(acc, 31) * _P1) & _M
-
-
-def xxhash64(data: bytes, seed: int) -> int:
-    """XXH64 over ``data`` with ``seed`` (unsigned 64-bit result)."""
-    seed &= _M
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M
-        v2 = (seed + _P2) & _M
-        v3 = seed
-        v4 = (seed - _P1) & _M
-        while i + 32 <= n:
-            v1 = _round(v1, int.from_bytes(data[i : i + 8], "little"))
-            v2 = _round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            v3 = _round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            v4 = _round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M
-        for v in (v1, v2, v3, v4):
-            h = ((h ^ _round(0, v)) * _P1 + _P4) & _M
-    else:
-        h = (seed + _P5) & _M
-    h = (h + n) & _M
-    while i + 8 <= n:
-        h = ((_rotl(h ^ _round(0, int.from_bytes(data[i : i + 8], "little")), 27)) * _P1 + _P4) & _M
-        i += 8
-    if i + 4 <= n:
-        h = ((_rotl(h ^ (int.from_bytes(data[i : i + 4], "little") * _P1) & _M, 23)) * _P2 + _P3) & _M
-        i += 4
-    while i < n:
-        h = (_rotl(h ^ (data[i] * _P5) & _M, 11) * _P1) & _M
-        i += 1
-    h ^= h >> 33
-    h = (h * _P2) & _M
-    h ^= h >> 29
-    h = (h * _P3) & _M
-    h ^= h >> 32
-    return h
-
-
-def spark_xxhash64_strings(values: list[str], seed: int = 42) -> int:
-    """Spark's multi-column ``xxhash64(c1, c2, ...)`` over string columns:
-    each column's hash seeds the next, starting at 42. Returns the SIGNED
-    64-bit value Spark produces."""
-    h = seed
-    for v in values:
-        h = xxhash64(v.encode("utf-8"), h)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def bucket_of(key_values: list[str], num_buckets: int) -> int:
-    """pmod(xxhash64(keys), num_buckets) — Python twin of table.bucket_expr."""
-    return spark_xxhash64_strings(key_values) % num_buckets
-
-
-# ------------------------------------------------- vectorized xxhash64
-# Round-4 verdict #4/#6: the DSv2 writer hashed keys PER ROW in pure
-# Python (to_pylist loops) — a hard ceiling on large SQL INSERTs. This
-# numpy implementation runs the same XXH64 over Arrow string buffers:
-# rows are grouped by byte length so each group is a fixed-width (n, L)
-# uint8 matrix and every hash step is an elementwise uint64 op (numpy
-# wraps mod 2^64 natively). Seeds are per-row arrays, which is exactly
-# what Spark's multi-column seed chaining needs. Bit-equality with the
-# scalar path (and hence the JVM) is pinned in tests/test_datasource.py.
-
-import numpy as _np
-
-_NP1 = _np.uint64(_P1)
-_NP2 = _np.uint64(_P2)
-_NP3 = _np.uint64(_P3)
-_NP4 = _np.uint64(_P4)
-_NP5 = _np.uint64(_P5)
-
-
-def _rotl_np(x: "_np.ndarray", r: int) -> "_np.ndarray":
-    return (x << _np.uint64(r)) | (x >> _np.uint64(64 - r))
-
-
-def _round_np(acc: "_np.ndarray", inp: "_np.ndarray") -> "_np.ndarray":
-    return _rotl_np(acc + inp * _NP2, 31) * _NP1
-
-
-def _lane(mat: "_np.ndarray", i: int, width: int) -> "_np.ndarray":
-    return _np.ascontiguousarray(mat[:, i : i + width]).view(f"<u{width}").ravel()
-
-
-def _xxh64_fixed_np(mat: "_np.ndarray", seeds: "_np.ndarray") -> "_np.ndarray":
-    """XXH64 of every row of a fixed-width (n, L) uint8 matrix, one seed
-    per row. Mirrors the scalar ``xxhash64`` above step for step."""
-    n, L = mat.shape
-    i = 0
-    if L >= 32:
-        v1 = seeds + _NP1 + _NP2
-        v2 = seeds + _NP2
-        v3 = seeds.copy()
-        v4 = seeds - _NP1
-        while i + 32 <= L:
-            v1 = _round_np(v1, _lane(mat, i, 8))
-            v2 = _round_np(v2, _lane(mat, i + 8, 8))
-            v3 = _round_np(v3, _lane(mat, i + 16, 8))
-            v4 = _round_np(v4, _lane(mat, i + 24, 8))
-            i += 32
-        h = _rotl_np(v1, 1) + _rotl_np(v2, 7) + _rotl_np(v3, 12) + _rotl_np(v4, 18)
-        zero = _np.zeros(n, dtype=_np.uint64)
-        for v in (v1, v2, v3, v4):
-            h = (h ^ _round_np(zero, v)) * _NP1 + _NP4
-    else:
-        h = seeds + _NP5
-    h = h + _np.uint64(L)
-    while i + 8 <= L:
-        zero = _np.zeros(n, dtype=_np.uint64)
-        h = _rotl_np(h ^ _round_np(zero, _lane(mat, i, 8)), 27) * _NP1 + _NP4
-        i += 8
-    if i + 4 <= L:
-        k = _lane(mat, i, 4).astype(_np.uint64)
-        h = _rotl_np(h ^ (k * _NP1), 23) * _NP2 + _NP3
-        i += 4
-    while i < L:
-        h = _rotl_np(h ^ (mat[:, i].astype(_np.uint64) * _NP5), 11) * _NP1
-        i += 1
-    h ^= h >> _np.uint64(33)
-    h = h * _NP2
-    h ^= h >> _np.uint64(29)
-    h = h * _NP3
-    h ^= h >> _np.uint64(32)
-    return h
-
-
-def _xxh64_string_array_np(arr, seeds: "_np.ndarray") -> "_np.ndarray":
-    """Per-row XXH64 of an Arrow string array with per-row seeds.
-    Null entries follow Spark semantics: the seed passes through
-    unchanged (xxhash64 skips null columns)."""
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    arr = arr.cast(pa.large_string())  # one offsets dtype to handle
-    n = len(arr)
-    validity, offsets_buf, data_buf = arr.buffers()
-    offsets = _np.frombuffer(offsets_buf, dtype=_np.int64, count=n + 1, offset=arr.offset * 8)
-    data = _np.frombuffer(data_buf, dtype=_np.uint8) if data_buf is not None else _np.empty(0, _np.uint8)
-    lengths = (offsets[1:] - offsets[:-1]).astype(_np.int64)
-    out = seeds.copy()
-    valid = _np.ones(n, dtype=bool)
-    if arr.null_count:
-        valid = _np.array(arr.is_valid())
-    for L in _np.unique(lengths[valid]):
-        idx = _np.nonzero(valid & (lengths == L))[0]
-        if L == 0:
-            mat = _np.empty((len(idx), 0), dtype=_np.uint8)
-        else:
-            mat = data[offsets[idx][:, None] + _np.arange(L)]
-        out[idx] = _xxh64_fixed_np(mat, seeds[idx])
-    return out
-
-
-def buckets_np(key_arrays: list, num_buckets: int) -> "_np.ndarray":
-    """Vectorized ``bucket_of`` over Arrow string arrays (one per key
-    column): Spark's seed-chained multi-column xxhash64 starting at 42,
-    then ``pmod(signed, num_buckets)``. Returns an int64 bucket array."""
-    n = len(key_arrays[0])
-    h = _np.full(n, 42, dtype=_np.uint64)
-    for col in key_arrays:
-        h = _xxh64_string_array_np(col, h)
-    signed = h.astype(_np.int64)
-    return _np.mod(signed, _np.int64(num_buckets))
-
-
-# ----------------------------------------------------------- the source
-_VERSION_RE = re.compile(r"^v(\d+)\.json$")
-
-
-def _load_meta(root: str) -> dict:
-    mdir = os.path.join(root, "metadata")
-    versions = [
-        int(m.group(1)) for f in os.listdir(mdir) if (m := _VERSION_RE.match(f))
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no table metadata under {mdir}")
-    with open(os.path.join(mdir, f"v{max(versions)}.json")) as f:
-        meta = json.load(f)
-    # round-6 manifest sharding: inflate per-snapshot shard pointers into
-    # the in-memory file lists this module plans against (driver-side
-    # only — executors receive pre-resolved file lists in partitions)
-    from ..table import hydrate_meta
-
-    return hydrate_meta(root, meta)
-
-
-def _resolve_snapshot_schema(meta: dict, options: dict) -> tuple[int, dict, dict, int]:
-    """Resolve (snapshot_id, snapshot, schema_struct_json, schema_id) for a read.
-
-    Shared by planning (``DataSource.schema``) and execution
-    (``SnapshotTableReader``) so they can never disagree: a ``tag`` or
-    explicit ``snapshot_id`` option reads the pinned snapshot's OWN schema
-    (Iceberg time-travel semantics); a plain read uses the current schema.
-    Round-3 review: schema() resolved only snapshot_id, so reading by tag
-    on a table whose schema evolved after the tag planned with the current
-    schema while the reader yielded old-schema batches."""
+def _read_target(table: SnapshotTable, options: dict) -> tuple[int | None, int]:
+    """The ``(snapshot_id, schema_id)`` the read options select."""
     sid = options.get("snapshot_id")
-    tag = options.get("tag")
-    if tag is not None:
-        refs = meta.get("refs", {})
-        if tag not in refs:
-            raise KeyError(f"tag {tag!r} not found (known: {sorted(refs)})")
-        sid = refs[tag]["snapshot_id"]
-    snapshot_id = int(sid) if sid is not None else meta["current_snapshot_id"]
-    snaps = {s["snapshot_id"]: s for s in meta["snapshots"]}
-    if snapshot_id not in snaps:
-        raise KeyError(f"snapshot {snapshot_id} not found (expired or never existed)")
-    snap = snaps[snapshot_id]
-    explicit = "snapshot_id" in options or "tag" in options
-    schema_id = (
-        snap.get("schema_id", meta["current_schema_id"])
-        if explicit
-        else meta["current_schema_id"]
-    )
-    struct = next(s["struct"] for s in meta["schemas"] if s["schema_id"] == schema_id)
-    return snapshot_id, snap, struct, schema_id
+    return table.resolve_read(None if sid is None else int(sid), options.get("tag"))
 
 
-def _field_ids_of(meta: dict, schema_id: int) -> dict[str, int]:
-    """``{column name -> stable field id}`` for a schema entry (mirrors
-    SnapshotTable.field_ids — this module works on the raw meta dict).
-    Pre-field-id schemas get positional ids, correct for additive-only
-    history (see table.py)."""
-    for s in meta["schemas"]:
-        if s["schema_id"] == schema_id:
-            if "field_ids" in s:
-                return dict(s["field_ids"])
-            names = [f["name"] for f in s["struct"]["fields"]]
-            return {n: i for i, n in enumerate(names)}
-    raise KeyError(f"schema_id {schema_id} not found")
+def _include_tombstones(options: dict) -> bool:
+    return str(options.get("include_tombstones", "false")).lower() == "true"
 
 
 class _BucketPartition(InputPartition):
@@ -319,38 +79,11 @@ class _BucketPartition(InputPartition):
 
 
 class SnapshotTableReader(DataSourceReader):
-    def __init__(self, options: dict, meta: dict):
-        self.root = options["root"]
-        self.meta = meta
-        self.snapshot_id, self.snap, self.schema_json, self.schema_id = _resolve_snapshot_schema(
-            meta, options
-        )
-        self.include_tombstones = str(options.get("include_tombstones", "false")).lower() == "true"
-        self.key_cols = meta["key_cols"]
-        self.order_col = meta["order_col"]
-        # bucket spec is per-snapshot (rebucketing rewrites under a new
-        # count; time travel must prune with the count the files were
-        # written under)
-        self.num_buckets = self.snap.get("num_buckets", meta["num_buckets"])
-        self._pruned_bucket: int | None = None
-        self._stats_filters: list[tuple] = []
-        # field-id projection (rename/drop evolution, parity with
-        # table._read_files): per written-schema-id map of
-        # {target column name -> source column name in the file}. Files
-        # written under the read schema (or with no recorded writer
-        # schema — additive-only legacy) read by name.
-        self._file_schema = {
-            k: int(v) for k, v in meta.get("file_schemas", {}).items()
-        }
-        target_ids = _field_ids_of(meta, self.schema_id)
-        self._src_names: dict[int, dict[str, str]] = {}
-        for s in meta["schemas"]:
-            if s["schema_id"] == self.schema_id:
-                continue
-            by_id = {i: n for n, i in _field_ids_of(meta, s["schema_id"]).items()}
-            self._src_names[s["schema_id"]] = {
-                tn: by_id[ti] for tn, ti in target_ids.items() if ti in by_id
-            }
+    def __init__(self, options: dict, table: SnapshotTable):
+        self.table = table
+        self.snapshot_id, self.schema_id = _read_target(table, options)
+        self.include_tombstones = _include_tombstones(options)
+        self.filters: list[tuple] = []
 
     # -------------------------------------------------------- planning
     _FILTER_OPS = (
@@ -363,98 +96,55 @@ class SnapshotTableReader(DataSourceReader):
     )
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
-        """Two pruning layers; every filter is handed back to Spark (full
-        post-scan evaluation), so pruning is a pure optimization that
-        cannot change results.
-
-        1. Bucket pruning: equality on ALL key columns pins the bucket.
-        2. File skipping: comparison filters are matched against the
-           per-file min/max bounds recorded at commit time (stats.py) —
-           clean buckets only; see partitions().
-        """
-        eq = {
-            f.attribute[0]: f.value
-            for f in filters
-            if isinstance(f, EqualTo) and len(f.attribute) == 1 and isinstance(f.value, str)
-        }
-        # Pin the bucket ONLY when every key column is declared string:
-        # hashing a str literal against a non-string key column would hash
-        # the wrong bytes (Spark matches via implicit cast) and silently
-        # prune to the wrong bucket.
-        col_types = {f["name"]: f["type"] for f in self.schema_json["fields"]}
-        keys_are_strings = all(col_types.get(k) == "string" for k in self.key_cols)
-        if keys_are_strings and all(k in eq for k in self.key_cols):
-            self._pruned_bucket = bucket_of([eq[k] for k in self.key_cols], self.num_buckets)
+        """Record the filters ``SnapshotTable.plan_buckets`` can prune
+        with; every filter is handed back to Spark (full post-scan
+        evaluation), so pruning is a pure optimization."""
         for f in filters:
             for klass, op in self._FILTER_OPS:
                 if isinstance(f, klass) and len(f.attribute) == 1:
                     value = list(f.value) if op == "in" else f.value
-                    self._stats_filters.append((f.attribute[0], op, value))
+                    self.filters.append((f.attribute[0], op, value))
                     break
         return filters  # Spark re-applies everything; we only pruned
 
     def partitions(self):
-        from ..stats import prune_files
-
-        base = self.snap.get("files", {})
-        delta = self.snap.get("delta_files", {})
-        fstats = self.meta.get("file_stats", {})
-        buckets = sorted({int(b) for b in base} | {int(b) for b, fs in delta.items() if fs})
-        if self._pruned_bucket is not None:
-            buckets = [b for b in buckets if b == self._pruned_bucket]
-        parts = []
-        for b in buckets:
-            base_rels = base.get(str(b), [])
-            delta_rels = delta.get(str(b), [])
-            if self._stats_filters and not delta_rels:
-                # file skipping is only sound where no read-time LWW
-                # resolve runs (stats.py safety rules): clean buckets
-                base_rels = prune_files(fstats, base_rels, self._stats_filters)
-            parts.append(
-                _BucketPartition(
-                    b,
-                    [os.path.join(self.root, f) for f in base_rels],
-                    [os.path.join(self.root, f) for f in delta_rels],
-                )
-            )
+        plan = self.table.plan_buckets(filters=self.filters, snapshot_id=self.snapshot_id)
+        parts = [_BucketPartition(b, base, delta) for b, base, delta in plan]
         # empty table: one empty partition keeps the scan well-formed
         return parts or [_BucketPartition(-1, [], [])]
 
     # -------------------------------------------------------- execution
     def read(self, partition: _BucketPartition) -> Iterator:
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        spark_schema = StructType.fromJson(self.schema_json)
+        table = self.table
+        spark_schema = table.schema(self.schema_id)
         out_fields = [
             f.name
             for f in spark_schema.fields
-            if self.include_tombstones or f.name != "_deleted"
+            if self.include_tombstones or f.name != TOMBSTONE_COL
         ]
         arrow_schema = to_arrow_schema(spark_schema)
         out_schema = pa.schema([arrow_schema.field(n) for n in out_fields])
-        if not partition.base_files and not partition.delta_files:
-            yield pa.RecordBatch.from_pylist([], schema=out_schema)
-            return
+        file_schemas = table.meta.get("file_schemas", {})
 
         def read_files(files):
             tables = []
             for f in files:
                 t = pq.read_table(f)
-                # Project onto the read schema. Files written under a
-                # DIFFERENT schema project strictly by FIELD ID (a renamed
-                # column's old name maps to the new one; a name that was
-                # dropped-then-readded must NOT match the old bytes —
-                # hence no name fallback when the writer schema is known).
-                # Same-schema / legacy files project by name: columns
-                # added after the write surface nulls.
-                sid = self._file_schema.get(os.path.relpath(f, self.root), self.schema_id)
-                remap = None if sid == self.schema_id else self._src_names.get(sid, {})
+                # Project onto the read schema, as table._read_files does:
+                # files written under a DIFFERENT schema project strictly
+                # by field id; same-schema and legacy files (no recorded
+                # writer schema) by name, columns added since reading null.
+                sid = int(file_schemas.get(os.path.relpath(f, table.root), self.schema_id))
+                names = None if sid == self.schema_id else table.source_names(sid, self.schema_id)
                 cols = []
                 for fld in arrow_schema:
-                    src = fld.name if remap is None else remap.get(fld.name)
+                    src = fld.name if names is None else names.get(fld.name)
                     if src is not None and src in t.column_names:
                         cols.append(t.column(src).cast(fld.type))
                     else:
@@ -469,16 +159,14 @@ class SnapshotTableReader(DataSourceReader):
             # max and nulls-first ordering the writer uses.
             both = read_files(partition.base_files + partition.delta_files)
             pdf = both.to_pandas()
-            from ..table import LWW_PRI, lww_order_cols
-
-            order_cols = lww_order_cols(self.order_col, pdf.columns)
+            order_cols = lww_order_cols(table.order_col, pdf.columns)
             # deterministic tie-break, mirroring table.read (LWW_PRI): a
             # tombstone beats a live row at an exact (lsn, commit) tie
-            if "_deleted" in pdf.columns:
-                pdf[LWW_PRI] = pdf["_deleted"].fillna(False).astype(bool).astype(int)
+            if TOMBSTONE_COL in pdf.columns:
+                pdf[LWW_PRI] = pdf[TOMBSTONE_COL].fillna(False).astype(bool).astype(int)
                 order_cols = order_cols + [LWW_PRI]
             pdf = pdf.sort_values(order_cols, kind="stable", na_position="first")
-            pdf = pdf.groupby(self.key_cols, as_index=False, sort=False).tail(1)
+            pdf = pdf.groupby(table.key_cols, as_index=False, sort=False).tail(1)
             if LWW_PRI in pdf.columns:
                 pdf = pdf.drop(columns=[LWW_PRI])
             base = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
@@ -487,10 +175,8 @@ class SnapshotTableReader(DataSourceReader):
         if base is None:
             yield pa.RecordBatch.from_pylist([], schema=out_schema)
             return
-        if not self.include_tombstones and "_deleted" in base.column_names:
-            import pyarrow.compute as pc
-
-            mask = pc.fill_null(base.column("_deleted"), False)
+        if not self.include_tombstones and TOMBSTONE_COL in base.column_names:
+            mask = pc.fill_null(base.column(TOMBSTONE_COL), False)
             base = base.filter(pc.invert(mask))
         base = base.select(out_fields)
         for batch in base.to_batches(max_chunksize=10_000):
@@ -505,7 +191,7 @@ class _WriteMessage(WriterCommitMessage):
 
 class SnapshotTableWriter(DataSourceArrowWriter):
     """DSv2 batch writer: ``df.write.format("snapshot_table")`` — the SQL/
-    interop DML surface (round-3 verdict #2: the source was read-only).
+    interop DML surface.
 
     Semantics are **MERGE-shaped upsert**, not blind append: every task
     splits its Arrow batches by the table's key-hash bucket and writes
@@ -520,38 +206,29 @@ class SnapshotTableWriter(DataSourceArrowWriter):
     Options: ``root`` (required), ``fence`` (optional — idempotent
     re-delivery key, e.g. ``"job:epoch"``). Additive schema evolution is
     resolved at commit like merge_batch. Failed jobs ``abort()`` by
-    deleting the written files; an abandoned dir is invisible to readers
-    (manifest is the source of truth) and vacuum() collects it.
+    deleting the written files unless a snapshot already references them;
+    an abandoned dir is invisible to readers (manifest is the source of
+    truth) and vacuum() collects it.
 
     Scale/fit: rows cross the Python worker as Arrow batches (like the
-    reader); per-row key hashing is pure-Python xxhash64 — fine for the
-    interop surface, while the ingest hot path stays on merge_batch
-    (JVM-side bucket_expr). The task-level bucket split preserves the
-    invariant that every delta file belongs to ONE bucket, which is what
-    keeps the bucket-local MOR resolve sound.
+    reader); keys are hashed per batch by the numpy XXH64
+    (``hashing.buckets_np``) — fine for the interop surface, while the
+    ingest hot path stays on merge_batch (JVM-side bucket_expr). The
+    task-level bucket split preserves the invariant that every delta file
+    belongs to ONE bucket, which is what keeps the bucket-local MOR
+    resolve sound.
     """
 
-    def __init__(self, options: dict, meta: dict, write_schema: StructType, root: str):
-        import uuid as _uuid
-
-        self.root = root
-        self.meta = meta
-        self.key_cols = meta["key_cols"]
-        self.order_col = meta["order_col"]
-        self.num_buckets = meta["num_buckets"]
+    def __init__(self, options: dict, table: SnapshotTable, write_schema: StructType):
+        self.root = table.root
+        self.key_cols = table.key_cols
+        self.num_buckets = table.num_buckets
         self.fence = options.get("fence")
-        self.write_schema = write_schema
         # driver-chosen unique dir; tasks write under it, commit publishes
-        self.data_rel = os.path.join("data", f"snap-{_uuid.uuid4().hex[:12]}")
-        table_schema = StructType.fromJson(
-            next(
-                s["struct"]
-                for s in meta["schemas"]
-                if s["schema_id"] == meta["current_schema_id"]
-            )
-        )
+        self.data_rel = os.path.join("data", f"snap-{uuid.uuid4().hex[:12]}")
+        table_schema = table.schema()
         table_types = {f.name: f.dataType for f in table_schema.fields}
-        for k in [*self.key_cols, self.order_col]:
+        for k in [*self.key_cols, table.order_col]:
             if k not in write_schema.fieldNames():
                 raise ValueError(
                     f"snapshot_table write is a keyed upsert: column {k!r} "
@@ -594,9 +271,10 @@ class SnapshotTableWriter(DataSourceArrowWriter):
 
     def write(self, iterator) -> _WriteMessage:
         import hashlib
-        import uuid as _uuid
 
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         by_bucket: dict[int, list] = {}
@@ -611,15 +289,8 @@ class SnapshotTableWriter(DataSourceArrowWriter):
                     type=pa.string(),
                 )
                 tbl = tbl.append_column("content_sha256", shas)
-            # vectorized bucket hash over the Arrow buffers (round-4
-            # verdict: the per-row Python loop was the writer's ceiling)
-            bnp = buckets_np(
-                [tbl.column(k) for k in self.key_cols], self.num_buckets
-            )
+            bnp = buckets_np([tbl.column(k) for k in self.key_cols], self.num_buckets)
             buckets = pa.array(bnp, type=pa.int64())
-            import numpy as np
-            import pyarrow.compute as pc
-
             for b in np.unique(bnp):
                 by_bucket.setdefault(int(b), []).append(
                     tbl.filter(pc.equal(buckets, int(b)))
@@ -628,7 +299,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         for b, tables in by_bucket.items():
             bdir = os.path.join(self.root, self.data_rel, f"_bucket={b}")
             os.makedirs(bdir, exist_ok=True)
-            rel = os.path.join(self.data_rel, f"_bucket={b}", f"part-{_uuid.uuid4().hex}.zstd.parquet")
+            rel = os.path.join(self.data_rel, f"_bucket={b}", f"part-{uuid.uuid4().hex}.zstd.parquet")
             pq.write_table(
                 pa.concat_tables(tables), os.path.join(self.root, rel), compression="zstd"
             )
@@ -636,8 +307,6 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         return _WriteMessage(files)
 
     def commit(self, messages) -> None:
-        from ..table import SnapshotTable
-
         files_by_bucket: dict[int, list[str]] = {}
         for m in messages:
             if m is None:
@@ -672,9 +341,13 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         )
 
     def abort(self, messages) -> None:
-        import shutil
-
-        shutil.rmtree(os.path.join(self.root, self.data_rel), ignore_errors=True)
+        # Spark also aborts when commit() raises AFTER table.commit linked
+        # the new metadata (say the version-hint write failed, or the
+        # commit worker died): the files are then published. As in
+        # rewrite_buckets, only a dir nothing publishes is deleted.
+        prefix = self.data_rel + os.sep
+        if not any(f.startswith(prefix) for f in SnapshotTable.load(self.root).live_files()):
+            shutil.rmtree(os.path.join(self.root, self.data_rel), ignore_errors=True)
 
 
 def upsert_dataframe(df, root: str, fence: str | None = None) -> None:
@@ -692,15 +365,7 @@ def upsert_dataframe(df, root: str, fence: str | None = None) -> None:
     """
     from pyspark.sql import functions as F
 
-    meta = _load_meta(root)
-    table_schema = StructType.fromJson(
-        next(
-            s["struct"]
-            for s in meta["schemas"]
-            if s["schema_id"] == meta["current_schema_id"]
-        )
-    )
-    table_cols = set(table_schema.fieldNames())
+    table_cols = set(SnapshotTable.load(root).schema().fieldNames())
     if (
         "content_sha256" in table_cols
         and "content" in df.columns
@@ -752,16 +417,15 @@ class SnapshotTableDataSource(DataSource):
                 "upsert here: read-time LWW resolves new rows against stored "
                 "keys); full rewrites go through compaction/maintenance"
             )
-        root = self._root()
-        return SnapshotTableWriter(dict(self.options), _load_meta(root), schema, root)
+        return SnapshotTableWriter(dict(self.options), SnapshotTable.load(self._root()), schema)
 
     def schema(self) -> StructType:
-        meta = _load_meta(self._root())
-        _sid, _snap, struct, _schema_id = _resolve_snapshot_schema(meta, dict(self.options))
-        full = StructType.fromJson(struct)
-        if str(self.options.get("include_tombstones", "false")).lower() == "true":
+        table = SnapshotTable.load(self._root())
+        _sid, schema_id = _read_target(table, self.options)
+        full = table.schema(schema_id)
+        if _include_tombstones(self.options):
             return full
-        return StructType([f for f in full.fields if f.name != "_deleted"])
+        return StructType([f for f in full.fields if f.name != TOMBSTONE_COL])
 
     def reader(self, schema: StructType) -> SnapshotTableReader:
-        return SnapshotTableReader(dict(self.options), _load_meta(self._root()))
+        return SnapshotTableReader(dict(self.options), SnapshotTable.load(self._root()))

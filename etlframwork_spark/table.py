@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .hashing import bucket_of
 from .stats import filters_to_expr, prune_files, validate_filters
 
 _VERSION_RE = re.compile(r"^v(\d+)\.json$")
@@ -473,6 +474,14 @@ class SnapshotTable:
                 return {n: i for i, n in enumerate(names)}
         raise KeyError(f"schema_id {sid} not found")
 
+    def source_names(self, written_sid: int, target_sid: int) -> dict[str, str]:
+        """``{target column -> its name in a file written under
+        written_sid}``, matched by stable field id. A target column the
+        written schema lacks is absent (it reads back as null), and a name
+        dropped and then re-added never matches the old bytes."""
+        by_id = {i: n for n, i in self.field_ids(written_sid).items()}
+        return {n: by_id[i] for n, i in self.field_ids(target_sid).items() if i in by_id}
+
     def _fresh_field_id(self) -> int:
         used = [-1]
         for s in self.meta["schemas"]:
@@ -643,6 +652,22 @@ class SnapshotTable:
                 return s
         raise KeyError(f"snapshot {sid} not found")
 
+    def resolve_read(
+        self, snapshot_id: int | None = None, tag: str | None = None
+    ) -> tuple[int | None, int]:
+        """The ``(snapshot_id, schema_id)`` a read targets. A ``tag`` or an
+        explicit ``snapshot_id`` pins that snapshot, read under its OWN
+        schema (Iceberg time travel); a plain read is ``(None, current
+        schema)``, i.e. the current snapshot."""
+        if tag is not None:
+            if snapshot_id is not None:
+                raise ValueError("pass snapshot_id or tag, not both")
+            snapshot_id = self.resolve_tag(tag)
+        if snapshot_id is None:
+            return None, self.meta["current_schema_id"]
+        schema_id = self.snapshot(snapshot_id).get("schema_id", self.meta["current_schema_id"])
+        return snapshot_id, schema_id
+
     def files_for(
         self,
         buckets: Iterable[int] | None = None,
@@ -681,6 +706,17 @@ class SnapshotTable:
         }
         return requested - dirty, dirty
 
+    def live_files(self) -> set[str]:
+        """Root-relative paths of every data file a retained snapshot
+        references (branch and tag heads included)."""
+        live: set[str] = set()
+        for s in self.meta["snapshots"]:
+            for fs in s["files"].values():
+                live.update(fs)
+            for fs in s.get("delta_files", {}).values():
+                live.update(fs)
+        return live
+
     def has_deltas(self, buckets: Iterable[int] | None = None, snapshot_id: int | None = None) -> bool:
         return bool(self.files_for(buckets=buckets, snapshot_id=snapshot_id, kind="delta"))
 
@@ -689,14 +725,17 @@ class SnapshotTable:
         snap = self.snapshot(snapshot_id)
         return {int(b): len(fs) for b, fs in snap.get("delta_files", {}).items() if fs}
 
-    def scan_files(
+    def plan_buckets(
         self,
         filters: list[tuple] | None = None,
         buckets: Iterable[int] | None = None,
         snapshot_id: int | None = None,
-    ) -> tuple[list[str], list[str]]:
-        """Plan a filtered scan: the exact ``(clean_files, dirty_files)``
-        sets ``read(filters=...)`` will hand to Spark.
+    ) -> list[tuple[int, list[str], list[str]]]:
+        """Plan a filtered scan bucket by bucket: ``(bucket, base_files,
+        delta_files)`` in absolute paths, in bucket order, for every
+        bucket the read must touch. A bucket with delta files is dirty: it
+        needs the read-time LWW resolve. ``read`` and the ``snapshot_table``
+        source both scan exactly this plan.
 
         Three pruning layers, each a pure optimization (the caller
         re-applies the predicate on the DataFrame):
@@ -713,31 +752,50 @@ class SnapshotTable:
            granularity (layer 1), which is key-exact and thus safe.
         """
         filters = validate_filters(filters) if filters else []
+        snap = self.snapshot(snapshot_id)
         if buckets is None and filters:
             eq = {c: v for c, op, v in filters if op == "=" and isinstance(v, str)}
             # Pin the bucket ONLY when every key column is declared string:
             # a str filter value on (say) a bigint key would hash the UTF-8
             # bytes of "5" (wrong bucket) while Spark's re-applied predicate
             # still matches via implicit cast — silently empty results.
-            # Skipping the pin is always safe (just a wider scan).
+            # Skipping the pin is always safe (just a wider scan). Key
+            # columns cannot be renamed or widened, so the current schema's
+            # key types hold for every snapshot.
             from pyspark.sql.types import StringType
 
             types = {f.name: f.dataType for f in self.schema().fields}
             keys_are_strings = all(isinstance(types.get(k), StringType) for k in self.key_cols)
             if keys_are_strings and all(k in eq for k in self.key_cols):
-                from .sources.snapshot_datasource import bucket_of
-
-                nb = self.snapshot(snapshot_id).get("num_buckets", self.num_buckets)
+                nb = snap.get("num_buckets", self.num_buckets)
                 buckets = [bucket_of([eq[k] for k in self.key_cols], nb)]
         clean_b, dirty_b = self._split_buckets_for_read(buckets, snapshot_id)
-        clean_files = self.files_for(buckets=clean_b, snapshot_id=snapshot_id) if clean_b else []
-        dirty_files = self.files_for(buckets=dirty_b, snapshot_id=snapshot_id) if dirty_b else []
-        if filters and clean_files:
-            fstats = self.meta.get("file_stats", {})
-            rels = [os.path.relpath(p, self.root) for p in clean_files]
-            kept = set(prune_files(fstats, rels, filters))
-            clean_files = [p for p, r in zip(clean_files, rels) if r in kept]
-        return clean_files, dirty_files
+        fstats = self.meta.get("file_stats", {})
+        plan = []
+        for b in sorted(clean_b | dirty_b):
+            base = snap["files"].get(str(b), [])
+            delta = snap.get("delta_files", {}).get(str(b), [])
+            if not delta:
+                base = prune_files(fstats, base, filters)
+            plan.append((
+                b,
+                [os.path.join(self.root, f) for f in base],
+                [os.path.join(self.root, f) for f in delta],
+            ))
+        return plan
+
+    def scan_files(
+        self,
+        filters: list[tuple] | None = None,
+        buckets: Iterable[int] | None = None,
+        snapshot_id: int | None = None,
+    ) -> tuple[list[str], list[str]]:
+        """``plan_buckets`` flattened into the ``(clean_files, dirty_files)``
+        sets ``read(filters=...)`` hands to Spark."""
+        plan = self.plan_buckets(filters, buckets, snapshot_id)
+        clean = [f for _b, base, delta in plan if not delta for f in base]
+        dirty = [f for _b, base, delta in plan if delta for f in base + delta]
+        return clean, dirty
 
     def _read_files(
         self,
@@ -771,17 +829,16 @@ class SnapshotTable:
         for p in files:
             rel = os.path.relpath(p, self.root)
             groups.setdefault(int(fsch.get(rel, target_sid)), []).append(p)
-        target_ids = self.field_ids(target_sid)
         parts: list[DataFrame] = []
         for sid, grp in sorted(groups.items()):
             if sid == target_sid:
                 parts.append(spark.read.schema(schema).parquet(*grp))
                 continue
             written = self.schema(sid)
-            name_by_id = {i: n for n, i in self.field_ids(sid).items()}
+            names = self.source_names(sid, target_sid)
             cols = []
             for f in schema.fields:
-                src = name_by_id.get(target_ids[f.name])
+                src = names.get(f.name)
                 if src is not None:
                     cols.append(F.col(src).cast(f.dataType).alias(f.name))
                 else:
@@ -813,20 +870,10 @@ class SnapshotTable:
         the hidden column dropped unless ``include_tombstones``.
         ``tag`` is name-based time travel (``set_tag``).
         """
-        if tag is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id or tag, not both")
-            snapshot_id = self.resolve_tag(tag)
+        snapshot_id, pinned_sid = self.resolve_read(snapshot_id, tag)
         target_sid: int | None = None
         if schema is None:
-            if schema_id is None and snapshot_id is not None:
-                # Iceberg time travel: an explicitly pinned snapshot (id or
-                # tag) reads its OWN schema — matching the DSv2 surface; a
-                # plain read uses the current registry schema
-                schema_id = self.snapshot(snapshot_id).get(
-                    "schema_id", self.meta["current_schema_id"]
-                )
-            target_sid = self.meta["current_schema_id"] if schema_id is None else schema_id
+            target_sid = pinned_sid if schema_id is None else schema_id
             schema = self.schema(target_sid)
         # merge-on-read: delta files may carry newer versions of keys in the
         # base (and each other) — resolve last-writer-wins at read time.
@@ -1540,24 +1587,10 @@ class SnapshotTable:
         self.meta["committed_fences"] = pruned_fences
         # GC per-file stats with their files: keep bounds only for files
         # some retained snapshot still references (metadata stays O(live))
-        fstats = self.meta.get("file_stats")
-        if fstats:
-            live: set[str] = set()
-            for s in kept:
-                for fs in s["files"].values():
-                    live.update(fs)
-                for fs in s.get("delta_files", {}).values():
-                    live.update(fs)
-            self.meta["file_stats"] = {f: st for f, st in fstats.items() if f in live}
-        fsch = self.meta.get("file_schemas")
-        if fsch:
-            live2: set[str] = set()
-            for s in kept:
-                for fs in s["files"].values():
-                    live2.update(fs)
-                for fs in s.get("delta_files", {}).values():
-                    live2.update(fs)
-            self.meta["file_schemas"] = {f: v for f, v in fsch.items() if f in live2}
+        live = self.live_files()
+        for key in ("file_stats", "file_schemas"):
+            if self.meta.get(key):
+                self.meta[key] = {f: v for f, v in self.meta[key].items() if f in live}
         self._write_version(self.version + 1)
         # metadata-log hygiene: a long-running stream commits one
         # v{N}.json per epoch; prune superseded versions (the current
@@ -1599,12 +1632,7 @@ class SnapshotTable:
         the (single) maintenance owner, quiesced against writers (the
         streaming ingest calls it only between epochs, on its own table)."""
         self.refresh()
-        live: set[str] = set()
-        for s in self.meta["snapshots"]:
-            for fs in s["files"].values():
-                live.update(fs)
-            for fs in s.get("delta_files", {}).values():
-                live.update(fs)
+        live = self.live_files()
         removed = 0
         data_root = os.path.join(self.root, "data")
         for dirpath, _dirnames, filenames in os.walk(data_root, topdown=False):

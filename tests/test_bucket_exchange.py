@@ -25,7 +25,7 @@ from etlframwork_spark.events import (
 )
 from etlframwork_spark.maintenance import compact_buckets, purge_tombstones, rebucket
 from etlframwork_spark.merge import delete_where, merge_batch
-from etlframwork_spark.sources.snapshot_datasource import bucket_of
+from etlframwork_spark.hashing import bucket_of
 from etlframwork_spark.table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_exchange
 
 NB = 16

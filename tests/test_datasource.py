@@ -1,7 +1,9 @@
 """DataSource V2 exposure of SnapshotTable (Python Data Source API):
 
-- the pure-Python xxhash64 must be BIT-equal to Spark's JVM xxhash64
-  (it is what makes key-equality bucket pruning correct);
+- the scalar reference xxhash64 (tests/xxh64_reference.py) must be
+  BIT-equal to Spark's JVM xxhash64, and the numpy XXH64 of
+  etlframwork_spark/hashing.py bit-equal to it (together they make
+  key-equality bucket pruning and the writer's bucket split correct);
 - reads through spark.read.format("snapshot_table") must be row-identical
   to SnapshotTable.read for cow tables, merge-on-read tables (deltas),
   tombstones and time travel;
@@ -24,10 +26,9 @@ from etlframwork_spark.merge import merge_batch
 from etlframwork_spark.sources.snapshot_datasource import (
     SnapshotTableDataSource,
     SnapshotTableReader,
-    bucket_of,
-    spark_xxhash64_strings,
 )
 from etlframwork_spark.table import SnapshotTable, bucket_expr
+from xxh64_reference import bucket_of, spark_xxhash64_strings
 
 
 def _mk_table(spark, tmp_path, write_mode="cow", n_events=1200, nb=8):
@@ -114,7 +115,7 @@ def test_key_equality_filters_prune_to_one_bucket(spark, tmp_path):
     # planning-level check: pushFilters pins the bucket, partitions() = 1
     from pyspark.sql.datasource import EqualTo
 
-    reader = SnapshotTableReader({"root": table.root}, table.meta)
+    reader = SnapshotTableReader({"root": table.root}, table)
     leftover = reader.pushFilters([EqualTo(("repo",), repo), EqualTo(("path",), path)])
     assert len(list(leftover)) == 2  # everything handed back to Spark
     parts = reader.partitions()
@@ -231,6 +232,63 @@ def test_dsv2_write_fence_is_idempotent(spark, tmp_path):
     assert dirs == live
 
 
+@pytest.mark.parametrize("stage", ["pre_commit", "post_commit"])
+def test_dsv2_write_killed_around_table_commit(spark, tmp_path, stage):
+    """Kill the writer's commit() before or after its table.commit; Spark
+    then calls abort(). The table loads, a pre-commit kill leaves the
+    snapshot unchanged, a post-commit kill keeps the published files, and
+    a re-run with the same fence reaches the state of an uninterrupted
+    write (a fenced no-op after the post-commit kill) and removes its own
+    data dir. The classes are local so they ship to the commit worker by
+    value."""
+    import os
+
+    from etlframwork_spark.sources.snapshot_datasource import SnapshotTableWriter
+
+    class KilledWriter(SnapshotTableWriter):
+        def commit(self, messages):
+            if stage == "post_commit":
+                super().commit(messages)
+            raise RuntimeError(f"killed at {stage}")
+
+    class KilledSource(SnapshotTableDataSource):
+        @classmethod
+        def name(cls):
+            return f"snapshot_table_killed_{stage}"
+
+        def writer(self, schema, overwrite):
+            return KilledWriter(dict(self.options), SnapshotTable.load(self._root()), schema)
+
+    _register(spark)
+    spark.dataSource.register(KilledSource)
+    chunk, _ = _event_chunks(seed=13, n_events=300)
+    df = spark.createDataFrame(chunk.drop(columns=["op"]))
+
+    def write(fmt, root):
+        df.write.format(fmt).option("root", root).option("fence", "j:0").mode("append").save()
+
+    want = _new_table(tmp_path, "want")
+    write("snapshot_table", want.root)
+    want.refresh()
+    t = _new_table(tmp_path, "killed")
+    before = t.snapshot()["snapshot_id"]
+    with pytest.raises(Exception, match="killed at"):
+        write(KilledSource.name(), t.root)
+    t = SnapshotTable.load(t.root)
+    if stage == "pre_commit":
+        assert t.snapshot()["snapshot_id"] == before
+    else:
+        assert t.is_fence_committed("j:0")
+    committed = t.snapshot()["snapshot_id"]
+    write("snapshot_table", t.root)
+    t.refresh()
+    if stage == "post_commit":
+        assert t.snapshot()["snapshot_id"] == committed
+    assert _rows(t.read(spark)) == _rows(want.read(spark))
+    dirs = {d for d in os.listdir(os.path.join(t.root, "data")) if d.startswith("snap-")}
+    assert dirs == {f.split(os.sep)[1] for f in t.live_files()}
+
+
 def test_dsv2_write_additive_evolution(spark, tmp_path):
     _register(spark)
     t = _new_table(tmp_path, "e")
@@ -275,7 +333,8 @@ def test_vectorized_buckets_bit_equal_scalar():
 
     import pyarrow as pa
 
-    from etlframwork_spark.sources.snapshot_datasource import bucket_of, buckets_np
+    from etlframwork_spark.hashing import buckets_np
+    from xxh64_reference import bucket_of
 
     rng = random.Random(7)
     pool = "abcXYZ0189/._-éß漢🎉 "
@@ -290,8 +349,6 @@ def test_vectorized_buckets_bit_equal_scalar():
     # nulls: Spark's xxhash64 skips null columns (seed passes through)
     arr = pa.array(["k1", None, "k2", None])
     got = buckets_np([arr], 16).tolist()
-    import etlframwork_spark.sources.snapshot_datasource as sds
-
     assert got[0] == bucket_of(["k1"], 16) and got[2] == bucket_of(["k2"], 16)
     # null rows hash to pmod(signed(42-passthrough-avalanche-less seed)...):
     # semantics = seed unchanged, then pmod of signed 42
@@ -306,7 +363,8 @@ def test_vectorized_buckets_speedup():
 
     import pyarrow as pa
 
-    from etlframwork_spark.sources.snapshot_datasource import bucket_of, buckets_np
+    from etlframwork_spark.hashing import buckets_np
+    from xxh64_reference import bucket_of
 
     n = 200_000
     a = [f"org{i % 997}/repo{i % 7919}" for i in range(n)]

@@ -206,7 +206,7 @@ def test_dsv2_write_aborts_on_concurrent_rebucket(spark, tmp_path):
     _merge(spark, t, [(f"k{i}", i, None, i, "insert") for i in range(50)], 0)
     t.refresh()
     write_schema = StructType([f for f in SCHEMA.fields])
-    w = SnapshotTableWriter({"root": t.root}, t.meta, write_schema, t.root)
+    w = SnapshotTableWriter({"root": t.root}, t, write_schema)
     maintenance.rebucket(spark, t, 8)
     with pytest.raises(RuntimeError, match="rebucketed"):
         w.commit([_WriteMessage({})])

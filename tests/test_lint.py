@@ -119,3 +119,46 @@ def test_bucket_rewrite_is_owned_by_table():
                 line = src.count("\n", 0, m.start()) + 1
                 problems.append(f"{path}:{line}: {what} outside table.py")
     assert not problems, problems
+
+
+def _engine_sources():
+    for path in _engine_files():
+        with open(path) as fh:
+            yield os.path.relpath(path, ENGINE), fh.read()
+
+
+# One home per decision: the Python-side XXH64 lives in hashing.py, scan
+# planning (bucket pin, file skipping, clean/dirty split) in table.py, and
+# input sizes come from Catalyst's estimate (sources.io.scan_bytes), which
+# works on any filesystem Spark reads — a local walk does not.
+_XXH64_PRIME = re.compile(
+    r"0x(9E3779B185EBCA87|C2B2AE3D27D4EB4F|165667B19E3779F9|85EBCA77C2B2AE63|27D4EB2F165667C5)",
+    re.IGNORECASE,
+)
+
+
+def test_xxh64_lives_in_hashing():
+    bad = [rel for rel, src in _engine_sources() if rel != "hashing.py" and _XXH64_PRIME.search(src)]
+    assert not bad, f"XXH64 primes outside hashing.py: {bad}"
+
+
+def test_file_skipping_is_planned_by_table():
+    rx = re.compile(r"(?<!def )\bprune_files\(")
+    bad = [rel for rel, src in _engine_sources() if rel != "table.py" and rx.search(src)]
+    assert not bad, f"prune_files( called outside table.py: {bad}"
+
+
+def test_no_local_walk_in_sources_or_functions():
+    bad = [
+        rel
+        for rel, src in _engine_sources()
+        if rel.split(os.sep)[0] in ("sources", "functions") and "os.walk" in src
+    ]
+    assert not bad, f"os.walk under sources/ or functions/: {bad}"
+
+
+def test_snapshot_datasource_is_imported_by_nobody_in_the_engine():
+    rx = re.compile(r"^\s*(from|import)\s+[\w.]*snapshot_datasource\b", re.MULTILINE)
+    own = os.path.join("sources", "snapshot_datasource.py")
+    bad = [rel for rel, src in _engine_sources() if rel != own and rx.search(src)]
+    assert not bad, f"engine modules importing sources.snapshot_datasource: {bad}"

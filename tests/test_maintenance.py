@@ -68,7 +68,7 @@ def test_rebucket_mid_ingest_digest_and_pruning(spark, tmp_path):
     the NEW spec; time travel to the pre-rebucket snapshot still reads
     correctly and pins under the OLD spec."""
     from etlframwork_spark.maintenance import rebucket
-    from etlframwork_spark.sources.snapshot_datasource import bucket_of
+    from etlframwork_spark.hashing import bucket_of
 
     spec = EventLogSpec(seed=21, n_events=2400, n_repos=12, paths_per_repo=6, p_delete=0.15)
     pdf = _make_events_frame(spec).drop(columns=["lang"])
@@ -120,14 +120,14 @@ def test_rebucket_mid_ingest_digest_and_pruning(spark, tmp_path):
     # 4. DSv2 planning honors the per-snapshot spec
     from etlframwork_spark.sources.snapshot_datasource import SnapshotTableReader
 
-    r_new = SnapshotTableReader({"root": evolving.root}, evolving.meta)
+    r_new = SnapshotTableReader({"root": evolving.root}, evolving)
     from pyspark.sql.datasource import EqualTo
 
     r_new.pushFilters([EqualTo(("repo",), row["repo"]), EqualTo(("path",), row["path"])])
     parts = r_new.partitions()
     assert len(parts) == 1 and parts[0].bucket == want_b
     r_old = SnapshotTableReader(
-        {"root": evolving.root, "snapshot_id": str(pre_rebucket_snap)}, evolving.meta
+        {"root": evolving.root, "snapshot_id": str(pre_rebucket_snap)}, evolving
     )
     r_old.pushFilters([EqualTo(("repo",), row["repo"]), EqualTo(("path",), row["path"])])
     parts_old = r_old.partitions()

@@ -293,16 +293,15 @@ def test_datasource_pushed_filters_skip_files_and_match(spark, tmp_path):
     from etlframwork_spark.sources.snapshot_datasource import (
         SnapshotTableDataSource,
         SnapshotTableReader,
-        _load_meta,
     )
 
     table = _mk_table(spark, tmp_path, name="dsv2")
     mid = table.read(spark).agg(F.expr("percentile(lsn, 0.9)")).first()[0]
 
-    meta = _load_meta(table.root)
-    plain = SnapshotTableReader({"root": table.root}, meta)
+    loaded = SnapshotTable.load(table.root)
+    plain = SnapshotTableReader({"root": table.root}, loaded)
     n_all = sum(len(p.base_files) for p in plain.partitions())
-    pushed = SnapshotTableReader({"root": table.root}, meta)
+    pushed = SnapshotTableReader({"root": table.root}, loaded)
     pushed.pushFilters([GreaterThan(("lsn",), int(mid))])
     n_pruned = sum(len(p.base_files) for p in pushed.partitions())
     assert 0 < n_pruned < n_all
