@@ -605,19 +605,6 @@ def docs_dedup_pipeline(spark, sf_dir):
     return _verified_dup_pairs(spark, sf_dir).orderBy("id_a", "id_b")
 
 
-def docs_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH near-dup candidates (shingle -> minhash -> band ->
-    bucket-join). Deterministic given the fixed permutation constants;
-    recall vs exact Jaccard is asserted in tests/test_dedup.py.
-
-    NOT driver-registered: subsumed by docs_dedup_pipeline (same candidate
-    generation plus the exact-verify leg and a brute-force DuckDB twin) —
-    the registry is capped at 50 so every entry gets a CORRECTNESS row."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    sigs = minhash_signature(docs.select("doc_id", "text"), vectorized=_use_vectorized(docs))
-    return lsh_candidate_pairs(sigs).filter(F.col("est_jaccard") >= 0.5).orderBy("id_a", "id_b")
-
-
 # -------------------------------------------- cluster representatives (CC)
 #: Edge cap for the driver-side union-find fast path. The input is the
 #: VERIFIED near-dup pair graph — orders of magnitude smaller than the
@@ -837,18 +824,6 @@ def simhash(df: DataFrame, text_col: str = "text", ngram: int = 1) -> DataFrame:
         term = F.when(s > 0, F.lit(1 << i)).otherwise(F.lit(0))
         code = term if code is None else code + term
     return df.withColumn("simhash", code.cast("long")).drop("_h")
-
-
-def docs_simhash(spark, sf_dir):
-    """SimHash codes + bucket sizes: docs sharing a code are near-dup
-    candidates at Hamming distance 0.
-
-    NOT driver-registered: subsumed by docs_simhash_pairs (same codes,
-    strictly stronger Hamming-<=3 banding) — registry capped at 50."""
-    d = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    coded = simhash(d)
-    sizes = coded.groupBy("simhash").agg(F.count(F.lit(1)).alias("bucket_size"))
-    return coded.join(sizes, "simhash").select("doc_id", "simhash", "bucket_size").orderBy("doc_id")
 
 
 # SimHash Hamming-<=k pairing: split the SIMHASH_BITS-bit code into

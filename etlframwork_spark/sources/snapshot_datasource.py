@@ -72,18 +72,38 @@ def _include_tombstones(options: dict) -> bool:
 
 
 class _BucketPartition(InputPartition):
-    def __init__(self, bucket: int, base_files: list[str], delta_files: list[str]):
+    """One planned bucket. ``projection`` maps each file written under
+    another schema to ``{read column -> its name in the file}``; every
+    other file reads by name."""
+
+    def __init__(
+        self,
+        bucket: int,
+        base_files: list[str],
+        delta_files: list[str],
+        projection: dict[str, dict[str, str]],
+    ):
         self.bucket = bucket
         self.base_files = base_files
         self.delta_files = delta_files
+        self.projection = projection
 
 
 class SnapshotTableReader(DataSourceReader):
     def __init__(self, options: dict, table: SnapshotTable):
         self.table = table
         self.snapshot_id, self.schema_id = _read_target(table, options)
+        self.read_schema = table.schema(self.schema_id)
+        self.key_cols, self.order_col = table.key_cols, table.order_col
         self.include_tombstones = _include_tombstones(options)
         self.filters: list[tuple] = []
+
+    def __getstate__(self) -> dict:
+        # Spark pickles the reader into the function it ships to every
+        # read task. read() needs only the read schema and the key/order
+        # columns (each partition carries its files and projections), so
+        # the table handle, with every snapshot's file lists, stays here.
+        return {k: v for k, v in self.__dict__.items() if k != "table"}
 
     # -------------------------------------------------------- planning
     _FILTER_OPS = (
@@ -108,10 +128,20 @@ class SnapshotTableReader(DataSourceReader):
         return filters  # Spark re-applies everything; we only pruned
 
     def partitions(self):
-        plan = self.table.plan_buckets(filters=self.filters, snapshot_id=self.snapshot_id)
-        parts = [_BucketPartition(b, base, delta) for b, base, delta in plan]
+        table = self.table
+        plan = table.plan_buckets(filters=self.filters, snapshot_id=self.snapshot_id)
+        # As table._read_files does: files written under a DIFFERENT schema
+        # project strictly by field id; same-schema and legacy files (no
+        # recorded writer schema) by name, columns added since reading null.
+        parts = []
+        for b, base, delta in plan:
+            projection = {}
+            for sid, grp in table.files_by_schema(base + delta, self.schema_id).items():
+                if sid != self.schema_id:
+                    projection.update(dict.fromkeys(grp, table.source_names(sid, self.schema_id)))
+            parts.append(_BucketPartition(b, base, delta, projection))
         # empty table: one empty partition keeps the scan well-formed
-        return parts or [_BucketPartition(-1, [], [])]
+        return parts or [_BucketPartition(-1, [], [], {})]
 
     # -------------------------------------------------------- execution
     def read(self, partition: _BucketPartition) -> Iterator:
@@ -121,27 +151,19 @@ class SnapshotTableReader(DataSourceReader):
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        table = self.table
-        spark_schema = table.schema(self.schema_id)
         out_fields = [
             f.name
-            for f in spark_schema.fields
+            for f in self.read_schema.fields
             if self.include_tombstones or f.name != TOMBSTONE_COL
         ]
-        arrow_schema = to_arrow_schema(spark_schema)
+        arrow_schema = to_arrow_schema(self.read_schema)
         out_schema = pa.schema([arrow_schema.field(n) for n in out_fields])
-        file_schemas = table.meta.get("file_schemas", {})
 
         def read_files(files):
             tables = []
             for f in files:
                 t = pq.read_table(f)
-                # Project onto the read schema, as table._read_files does:
-                # files written under a DIFFERENT schema project strictly
-                # by field id; same-schema and legacy files (no recorded
-                # writer schema) by name, columns added since reading null.
-                sid = int(file_schemas.get(os.path.relpath(f, table.root), self.schema_id))
-                names = None if sid == self.schema_id else table.source_names(sid, self.schema_id)
+                names = partition.projection.get(f)
                 cols = []
                 for fld in arrow_schema:
                     src = fld.name if names is None else names.get(fld.name)
@@ -159,14 +181,14 @@ class SnapshotTableReader(DataSourceReader):
             # max and nulls-first ordering the writer uses.
             both = read_files(partition.base_files + partition.delta_files)
             pdf = both.to_pandas()
-            order_cols = lww_order_cols(table.order_col, pdf.columns)
+            order_cols = lww_order_cols(self.order_col, pdf.columns)
             # deterministic tie-break, mirroring table.read (LWW_PRI): a
             # tombstone beats a live row at an exact (lsn, commit) tie
             if TOMBSTONE_COL in pdf.columns:
                 pdf[LWW_PRI] = pdf[TOMBSTONE_COL].fillna(False).astype(bool).astype(int)
                 order_cols = order_cols + [LWW_PRI]
             pdf = pdf.sort_values(order_cols, kind="stable", na_position="first")
-            pdf = pdf.groupby(table.key_cols, as_index=False, sort=False).tail(1)
+            pdf = pdf.groupby(self.key_cols, as_index=False, sort=False).tail(1)
             if LWW_PRI in pdf.columns:
                 pdf = pdf.drop(columns=[LWW_PRI])
             base = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
@@ -205,10 +227,12 @@ class SnapshotTableWriter(DataSourceArrowWriter):
 
     Options: ``root`` (required), ``fence`` (optional — idempotent
     re-delivery key, e.g. ``"job:epoch"``). Additive schema evolution is
-    resolved at commit like merge_batch. Failed jobs ``abort()`` by
-    deleting the written files unless a snapshot already references them;
-    an abandoned dir is invisible to readers (manifest is the source of
-    truth) and vacuum() collects it.
+    resolved at commit like merge_batch. A write racing a rebucket fails
+    its commit with ``CommitConflict`` (its rows were hashed under the old
+    bucket count). Failed jobs ``abort()`` by deleting the written files
+    unless a snapshot already references them; an abandoned dir is
+    invisible to readers (manifest is the source of truth) and vacuum()
+    collects it.
 
     Scale/fit: rows cross the Python worker as Arrow batches (like the
     reader); keys are hashed per batch by the numpy XXH64
@@ -220,22 +244,22 @@ class SnapshotTableWriter(DataSourceArrowWriter):
     """
 
     def __init__(self, options: dict, table: SnapshotTable, write_schema: StructType):
-        self.root = table.root
-        self.key_cols = table.key_cols
-        self.num_buckets = table.num_buckets
+        # the spec the tasks hash and write under: commit records the
+        # files under it, and fails if the table was rebucketed since
+        self.table = table.spec_only()
         self.fence = options.get("fence")
         # driver-chosen unique dir; tasks write under it, commit publishes
         self.data_rel = os.path.join("data", f"snap-{uuid.uuid4().hex[:12]}")
         table_schema = table.schema()
         table_types = {f.name: f.dataType for f in table_schema.fields}
-        for k in [*self.key_cols, table.order_col]:
+        for k in [*table.key_cols, table.order_col]:
             if k not in write_schema.fieldNames():
                 raise ValueError(
                     f"snapshot_table write is a keyed upsert: column {k!r} "
                     f"(key/order) is required in the written data, got "
                     f"{write_schema.fieldNames()}"
                 )
-        if not all(table_types[k].typeName() == "string" for k in self.key_cols):
+        if not all(table_types[k].typeName() == "string" for k in table.key_cols):
             raise ValueError(
                 "snapshot_table DSv2 writes require string key columns "
                 "(the Python-side bucket hash matches Spark's xxhash64 on "
@@ -289,7 +313,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
                     type=pa.string(),
                 )
                 tbl = tbl.append_column("content_sha256", shas)
-            bnp = buckets_np([tbl.column(k) for k in self.key_cols], self.num_buckets)
+            bnp = buckets_np([tbl.column(k) for k in self.table.key_cols], self.table.num_buckets)
             buckets = pa.array(bnp, type=pa.int64())
             for b in np.unique(bnp):
                 by_bucket.setdefault(int(b), []).append(
@@ -297,11 +321,11 @@ class SnapshotTableWriter(DataSourceArrowWriter):
                 )
         files: dict[int, list[str]] = {}
         for b, tables in by_bucket.items():
-            bdir = os.path.join(self.root, self.data_rel, f"_bucket={b}")
+            bdir = os.path.join(self.table.root, self.data_rel, f"_bucket={b}")
             os.makedirs(bdir, exist_ok=True)
             rel = os.path.join(self.data_rel, f"_bucket={b}", f"part-{uuid.uuid4().hex}.zstd.parquet")
             pq.write_table(
-                pa.concat_tables(tables), os.path.join(self.root, rel), compression="zstd"
+                pa.concat_tables(tables), os.path.join(self.table.root, rel), compression="zstd"
             )
             files[b] = [rel]
         return _WriteMessage(files)
@@ -313,25 +337,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
                 continue
             for b, fs in m.files_by_bucket.items():
                 files_by_bucket.setdefault(int(b), []).extend(fs)
-        table = SnapshotTable.load(self.root)
-        if self.fence is not None and table.is_fence_committed(self.fence):
-            self.abort(messages)  # duplicate delivery: drop our files
-            return
-        if table.num_buckets != self.num_buckets:
-            # a concurrent maintenance.rebucket() landed between planning
-            # and commit: tasks hashed rows under the OLD bucket count, so
-            # appending these files would put rows in wrong buckets and
-            # the bucket-local LWW resolve would silently miss collisions.
-            # Abort (orphaned files are invisible and vacuum()-collected).
-            self.abort(messages)
-            raise RuntimeError(
-                f"snapshot_table write aborted: table was rebucketed "
-                f"({self.num_buckets} -> {table.num_buckets} buckets) while "
-                "this write was in flight; rows were hashed under the old "
-                "bucket spec. Retry the write — it will plan against the "
-                "new spec."
-            )
-        table.commit(
+        snap = self.table.commit(
             files_by_bucket,
             sorted(files_by_bucket),
             fence=self.fence,
@@ -339,15 +345,18 @@ class SnapshotTableWriter(DataSourceArrowWriter):
             summary={"operation": "dsv2_append", "files": sum(len(v) for v in files_by_bucket.values())},
             mode="append_delta",
         )
+        if snap is None:
+            self.abort(messages)  # duplicate delivery: drop our files
 
     def abort(self, messages) -> None:
         # Spark also aborts when commit() raises AFTER table.commit linked
         # the new metadata (say the version-hint write failed, or the
         # commit worker died): the files are then published. As in
         # rewrite_buckets, only a dir nothing publishes is deleted.
+        root = self.table.root
         prefix = self.data_rel + os.sep
-        if not any(f.startswith(prefix) for f in SnapshotTable.load(self.root).live_files()):
-            shutil.rmtree(os.path.join(self.root, self.data_rel), ignore_errors=True)
+        if not any(f.startswith(prefix) for f in SnapshotTable.load(root).live_files()):
+            shutil.rmtree(os.path.join(root, self.data_rel), ignore_errors=True)
 
 
 def upsert_dataframe(df, root: str, fence: str | None = None) -> None:

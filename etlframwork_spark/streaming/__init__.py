@@ -1,1 +1,1 @@
-from .ingest import IngestJob, run_ingest, discover_event_schema  # noqa: F401
+from .ingest import IngestJob, run_ingest  # noqa: F401

@@ -39,12 +39,6 @@ from .sources import FileStreamSource
 from pyspark.sql.types import StringType
 
 
-def discover_event_schema(events_dir: str) -> StructType:
-    """Back-compat wrapper over FileStreamSource.discover_schema (the
-    source seam owns schema discovery since round 2 — see sources.py)."""
-    return FileStreamSource(events_dir).discover_schema()
-
-
 def derive_target_schema(
     event_schema: StructType, key_cols: list[str], order_col: str
 ) -> StructType:

@@ -218,9 +218,10 @@ class FenceAlreadyCommitted(Exception):
 class VersionConflict(Exception):
     """Another writer published this metadata version first (CAS miss).
 
-    Raised by ``_write_version``; ``commit()``/``expire_snapshots()`` catch
-    it, refresh to the winner's state, and re-apply their mutation —
-    optimistic concurrency exactly like Iceberg's metadata CAS."""
+    Raised by ``_write_version``; ``SnapshotTable._transact`` catches it,
+    refreshes to the winner's state and re-applies its mutation —
+    optimistic concurrency exactly like Iceberg's metadata CAS. Raised to
+    the caller, naming the operation, once every attempt has lost."""
 
 
 class CommitConflict(Exception):
@@ -233,6 +234,14 @@ class CommitConflict(Exception):
 
 _MAX_COMMIT_RETRIES = 16
 _MAX_RECOMPUTE = 3
+
+
+class _Unchanged:
+    """What a ``_transact`` mutation returns when it has nothing to
+    publish; the transaction returns ``result`` as is."""
+
+    def __init__(self, result: Any = None):
+        self.result = result
 
 
 def recompute_on_conflict(step: Callable[..., Any], *args: Any) -> Any:
@@ -325,8 +334,7 @@ class SnapshotTable:
             "file_stats": {},
         }
         t = cls(root, meta, version=0)
-        t._write_version(1)
-        return t
+        return t._transact("create", lambda: t)
 
     @classmethod
     def load(cls, root: str) -> "SnapshotTable":
@@ -390,6 +398,35 @@ class SnapshotTable:
         # best-effort fast-path hint (load() never trusts it blindly)
         self._publish_hint(mdir, new_version)
 
+    def _transact(self, what: str, mutate: Callable[[], Any]) -> Any:
+        """The one metadata transaction: every change to the table's
+        metadata runs through here.
+
+        Each attempt refreshes to the latest published version (a table
+        being created, version 0, has none), applies ``mutate`` to the
+        fresh ``self.meta`` and publishes ``v{N+1}`` through the
+        ``_write_version`` CAS. A lost CAS means another writer published
+        first: the attempt is dropped and ``mutate`` runs again on the
+        winner's state, so ``mutate`` must derive its change from
+        ``self.meta`` alone. ``mutate`` returns the operation's result, or
+        ``_Unchanged(result)`` to publish nothing. After
+        ``_MAX_COMMIT_RETRIES`` lost attempts raises ``VersionConflict``
+        naming ``what``."""
+        for _attempt in range(_MAX_COMMIT_RETRIES):
+            if self.version:
+                self.refresh()
+            result = mutate()
+            if isinstance(result, _Unchanged):
+                return result.result
+            try:
+                self._write_version(self.version + 1)
+            except VersionConflict:
+                continue
+            return result
+        raise VersionConflict(
+            f"{what} lost the metadata CAS {_MAX_COMMIT_RETRIES} times in a row"
+        )
+
     def _publish_hint(self, mdir: str, new_version: int) -> None:
         hint_tmp = os.path.join(mdir, f".hint-{uuid.uuid4().hex}")
         with open(hint_tmp, "w") as f:
@@ -402,7 +439,7 @@ class SnapshotTable:
         For every snapshot, any present bucket without a manifest pointer
         gets one: those buckets' file lists + their per-file stats and
         writer-schema ids are written into ONE new immutable shard under
-        ``metadata/manifests/``. ``_commit_once`` pre-seeds the new
+        ``metadata/manifests/``. ``commit`` pre-seeds the new
         snapshot's pointer map with the parent's pointers minus the
         changed buckets, so steady-state each commit writes exactly one
         shard covering the changed buckets — O(commit delta). The root
@@ -495,6 +532,14 @@ class SnapshotTable:
                 return StructType.fromJson(s["struct"])
         raise KeyError(f"schema_id {sid} not found")
 
+    def spec_only(self) -> "SnapshotTable":
+        """This handle's write spec alone: key/order columns, bucket count
+        and schemas, without the snapshot and file lists. Small enough to
+        ship inside a Spark writer; ``commit`` on it records the files
+        under this spec and loads the rest."""
+        keep = ("key_cols", "order_col", "num_buckets", "schemas", "current_schema_id")
+        return SnapshotTable(self.root, {k: self.meta[k] for k in keep}, self.version)
+
     @property
     def key_cols(self) -> list[str]:
         return self.meta["key_cols"]
@@ -566,7 +611,11 @@ class SnapshotTable:
         column name after a rename — a batch still carrying the old name
         would be treated as a brand-new additive column (fresh field id).
 
-        Returns the new schema_id. CAS-safe against concurrent writers.
+        Returns the new schema_id. The schema change itself is one
+        metadata transaction, so concurrent metadata commits both survive.
+        A commit racing the change records its files under the schema they
+        were written under, so a rename never nulls them; a batch still
+        carrying an old name is the additive case above.
         """
         renames = dict(renames or {})
         drops = list(drops or [])
@@ -596,53 +645,47 @@ class SnapshotTable:
         for name in widen:
             if name in drops:
                 raise ValueError(f"column {name!r} cannot be both widened and dropped")
-        for _attempt in range(_MAX_COMMIT_RETRIES):
-            try:
-                self.refresh()
-                cur = self.schema()
-                cur_names = set(cur.fieldNames())
-                for old in list(renames) + drops + list(widen):
-                    if old not in cur_names:
-                        raise KeyError(f"column {old!r} not in current schema {sorted(cur_names)}")
-                surviving = [f.name for f in cur.fields if f.name not in drops]
-                final_names = [renames.get(n, n) for n in surviving]
-                dup = {n for n in final_names if final_names.count(n) > 1}
-                if dup:
-                    raise ValueError(f"rename collides on {sorted(dup)}")
-                new_types = {}
-                for name, to_name in widen.items():
-                    from_t = cur[name].dataType
-                    to_t = _parse_simple_type(to_name)
-                    if to_t.typeName() not in self._SAFE_WIDENINGS.get(from_t.typeName(), ()):
-                        raise ValueError(
-                            f"widen {name!r}: {from_t.simpleString()} -> "
-                            f"{to_t.simpleString()} is not a safe (lossless) "
-                            f"promotion; allowed: {self._SAFE_WIDENINGS}"
-                        )
-                    new_types[name] = to_t
-                ids = self.field_ids()
-                new_fields = [
-                    StructField(renames.get(f.name, f.name), new_types.get(f.name, f.dataType), True)
-                    for f in cur.fields
-                    if f.name not in drops
-                ]
-                new_ids = {
-                    renames.get(n, n): i for n, i in ids.items() if n not in drops
-                }
-                sid = max(s["schema_id"] for s in self.meta["schemas"]) + 1
-                self.meta["schemas"].append(
-                    {
-                        "schema_id": sid,
-                        "struct": StructType(new_fields).jsonValue(),
-                        "field_ids": new_ids,
-                    }
-                )
-                self.meta["current_schema_id"] = sid
-                self._write_version(self.version + 1)
-                return sid
-            except VersionConflict:
-                continue
-        raise VersionConflict("evolve_schema lost the metadata CAS repeatedly")
+
+        def mutate() -> int:
+            cur = self.schema()
+            cur_names = set(cur.fieldNames())
+            for old in list(renames) + drops + list(widen):
+                if old not in cur_names:
+                    raise KeyError(f"column {old!r} not in current schema {sorted(cur_names)}")
+            surviving = [f.name for f in cur.fields if f.name not in drops]
+            final_names = [renames.get(n, n) for n in surviving]
+            dup = {n for n in final_names if final_names.count(n) > 1}
+            if dup:
+                raise ValueError(f"rename collides on {sorted(dup)}")
+            new_types = {}
+            for name, to_name in widen.items():
+                from_t = cur[name].dataType
+                to_t = _parse_simple_type(to_name)
+                if to_t.typeName() not in self._SAFE_WIDENINGS.get(from_t.typeName(), ()):
+                    raise ValueError(
+                        f"widen {name!r}: {from_t.simpleString()} -> "
+                        f"{to_t.simpleString()} is not a safe (lossless) "
+                        f"promotion; allowed: {self._SAFE_WIDENINGS}"
+                    )
+                new_types[name] = to_t
+            new_fields = [
+                StructField(renames.get(f.name, f.name), new_types.get(f.name, f.dataType), True)
+                for f in cur.fields
+                if f.name not in drops
+            ]
+            new_ids = {renames.get(n, n): i for n, i in self.field_ids().items() if n not in drops}
+            return self._add_schema(StructType(new_fields), new_ids)
+
+        return self._transact("evolve_schema", mutate)
+
+    def _add_schema(self, struct: StructType, field_ids: dict[str, int]) -> int:
+        """Register ``struct`` as the next schema id and make it current."""
+        sid = max(s["schema_id"] for s in self.meta["schemas"]) + 1
+        self.meta["schemas"].append(
+            {"schema_id": sid, "struct": struct.jsonValue(), "field_ids": field_ids}
+        )
+        self.meta["current_schema_id"] = sid
+        return sid
 
     # ------------------------------------------------------------- snapshots
     def snapshot(self, snapshot_id: int | None = None) -> dict[str, Any]:
@@ -797,6 +840,16 @@ class SnapshotTable:
         dirty = [f for _b, base, delta in plan if delta for f in base + delta]
         return clean, dirty
 
+    def files_by_schema(self, files: list[str], default_sid: int) -> dict[int, list[str]]:
+        """Data files (absolute paths) grouped by the schema id each was
+        written under; files with no recorded writer schema (written
+        before field ids) fall under ``default_sid``, the read schema."""
+        fsch = self.meta.get("file_schemas", {})
+        groups: dict[int, list[str]] = {}
+        for p in files:
+            groups.setdefault(int(fsch.get(os.path.relpath(p, self.root), default_sid)), []).append(p)
+        return groups
+
     def _read_files(
         self,
         spark: SparkSession,
@@ -824,13 +877,8 @@ class SnapshotTable:
         """
         if target_sid is None:
             return spark.read.schema(schema).parquet(*files)
-        fsch = self.meta.get("file_schemas", {})
-        groups: dict[int, list[str]] = {}
-        for p in files:
-            rel = os.path.relpath(p, self.root)
-            groups.setdefault(int(fsch.get(rel, target_sid)), []).append(p)
         parts: list[DataFrame] = []
-        for sid, grp in sorted(groups.items()):
+        for sid, grp in sorted(self.files_by_schema(files, target_sid).items()):
             if sid == target_sid:
                 parts.append(spark.read.schema(schema).parquet(*grp))
                 continue
@@ -1059,45 +1107,47 @@ class SnapshotTable:
             "history, schemas, refs"
         )
 
-    # ---------------------------------------------------------------- commit
-    # -------------------------------------------------------------- tags
+    # -------------------------------------------------------------- refs
+    def _refs(self, kind: str) -> dict[str, int]:
+        """``{name: snapshot id}`` of the refs of one kind (tag, branch)."""
+        return {
+            n: r["snapshot_id"]
+            for n, r in self.meta.get("refs", {}).items()
+            if r.get("type") == kind
+        }
+
+    def _ref(self, name: str, kind: str) -> dict[str, Any]:
+        """The mutable ref entry ``name`` of ``kind``; KeyError otherwise."""
+        ref = self.meta.get("refs", {}).get(name)
+        if ref is None or ref.get("type") != kind:
+            raise KeyError(f"{kind} {name!r} not found")
+        return ref
+
+    def _drop_ref(self, name: str, kind: str) -> None:
+        def mutate() -> None:
+            self._ref(name, kind)
+            del self.meta["refs"][name]
+
+        self._transact(f"drop_{kind}", mutate)
+
     def set_tag(self, name: str, snapshot_id: int | None = None) -> int:
         """Name a snapshot (Iceberg tag concept). Tagged snapshots are
         exempt from expire_snapshots' retention window — a tag like
         ``audit-2026Q3`` pins that table state until the tag is dropped.
-        Returns the tagged snapshot id. CAS-safe against concurrent
-        metadata writers."""
-        for _attempt in range(_MAX_COMMIT_RETRIES):
-            try:
-                self.refresh()
-                sid = self.snapshot(snapshot_id)["snapshot_id"]  # must exist
-                self.meta.setdefault("refs", {})[name] = {"snapshot_id": sid, "type": "tag"}
-                self._write_version(self.version + 1)
-                return sid
-            except VersionConflict:
-                continue
-        raise VersionConflict("set_tag lost the metadata CAS repeatedly")
+        Returns the tagged snapshot id."""
+
+        def mutate() -> int:
+            sid = self.snapshot(snapshot_id)["snapshot_id"]  # must exist
+            self.meta.setdefault("refs", {})[name] = {"snapshot_id": sid, "type": "tag"}
+            return sid
+
+        return self._transact("set_tag", mutate)
 
     def drop_tag(self, name: str) -> None:
-        for _attempt in range(_MAX_COMMIT_RETRIES):
-            try:
-                self.refresh()
-                refs = self.meta.get("refs", {})
-                if name not in refs:
-                    raise KeyError(f"tag {name!r} not found")
-                del refs[name]
-                self._write_version(self.version + 1)
-                return
-            except VersionConflict:
-                continue
-        raise VersionConflict("drop_tag lost the metadata CAS repeatedly")
+        self._drop_ref(name, "tag")
 
     def tags(self) -> dict[str, int]:
-        return {
-            n: r["snapshot_id"]
-            for n, r in self.meta.get("refs", {}).items()
-            if r.get("type") == "tag"
-        }
+        return self._refs("tag")
 
     def resolve_tag(self, name: str) -> int:
         """Resolve a named ref — tag OR branch — to its snapshot id
@@ -1116,44 +1166,26 @@ class SnapshotTable:
     def create_branch(self, name: str, snapshot_id: int | None = None) -> int:
         """Create a branch pointing at ``snapshot_id`` (default: current).
         Branch heads are retention-exempt like tags."""
-        for _attempt in range(_MAX_COMMIT_RETRIES):
-            try:
-                self.refresh()
-                refs = self.meta.setdefault("refs", {})
-                if name in refs:
-                    raise ValueError(f"ref {name!r} already exists ({refs[name]})")
-                sid = self.snapshot(snapshot_id)["snapshot_id"]
-                # base = where the branch was cut; fast_forward publishes
-                # only while main still sits at the base (descent check
-                # that survives snapshot expiry — a parent-id walk would
-                # break when intermediate snapshots are retired)
-                refs[name] = {"snapshot_id": sid, "type": "branch", "base_snapshot_id": sid}
-                self._write_version(self.version + 1)
-                return sid
-            except VersionConflict:
-                continue
-        raise VersionConflict("create_branch lost the metadata CAS repeatedly")
+
+        def mutate() -> int:
+            refs = self.meta.setdefault("refs", {})
+            if name in refs:
+                raise ValueError(f"ref {name!r} already exists ({refs[name]})")
+            sid = self.snapshot(snapshot_id)["snapshot_id"]
+            # base = where the branch was cut; fast_forward publishes
+            # only while main still sits at the base (descent check
+            # that survives snapshot expiry — a parent-id walk would
+            # break when intermediate snapshots are retired)
+            refs[name] = {"snapshot_id": sid, "type": "branch", "base_snapshot_id": sid}
+            return sid
+
+        return self._transact("create_branch", mutate)
 
     def drop_branch(self, name: str) -> None:
-        for _attempt in range(_MAX_COMMIT_RETRIES):
-            try:
-                self.refresh()
-                refs = self.meta.get("refs", {})
-                if name not in refs or refs[name].get("type") != "branch":
-                    raise KeyError(f"branch {name!r} not found")
-                del refs[name]
-                self._write_version(self.version + 1)
-                return
-            except VersionConflict:
-                continue
-        raise VersionConflict("drop_branch lost the metadata CAS repeatedly")
+        self._drop_ref(name, "branch")
 
     def branches(self) -> dict[str, int]:
-        return {
-            n: r["snapshot_id"]
-            for n, r in self.meta.get("refs", {}).items()
-            if r.get("type") == "branch"
-        }
+        return self._refs("branch")
 
     def fast_forward(self, name: str) -> int:
         """Publish a branch: atomically move main (current_snapshot_id) to
@@ -1161,35 +1193,31 @@ class SnapshotTable:
         i.e. nothing was committed to main since the branch was cut; a
         diverged branch must be recomputed from fresh main, never
         force-published over concurrent commits."""
-        for _attempt in range(_MAX_COMMIT_RETRIES):
-            try:
-                self.refresh()
-                refs = self.meta.get("refs", {})
-                if name not in refs or refs[name].get("type") != "branch":
-                    raise KeyError(f"branch {name!r} not found")
-                head = refs[name]["snapshot_id"]
-                cur = self.meta["current_snapshot_id"]
-                if head == cur:
-                    return cur
-                base = refs[name].get("base_snapshot_id")
-                if base != cur:
-                    raise ValueError(
-                        f"branch {name!r} (head {head}, cut from {base}) does not "
-                        f"descend from main ({cur}) — main advanced since the "
-                        "branch was cut; fast-forward would drop those commits. "
-                        "Recompute the branch from current main instead."
-                    )
-                self.meta["current_snapshot_id"] = head
-                refs[name]["base_snapshot_id"] = head  # branch stays publishable
-                # promote branch-scoped fences: the epochs are now durably
-                # published on main, so re-delivery must skip globally
-                self.meta["committed_fences"].update(refs[name].pop("fences", {}))
-                self._write_version(self.version + 1)
-                return head
-            except VersionConflict:
-                continue
-        raise VersionConflict("fast_forward lost the metadata CAS repeatedly")
 
+        def mutate() -> Any:
+            ref = self._ref(name, "branch")
+            head = ref["snapshot_id"]
+            cur = self.meta["current_snapshot_id"]
+            if head == cur:
+                return _Unchanged(cur)
+            base = ref.get("base_snapshot_id")
+            if base != cur:
+                raise ValueError(
+                    f"branch {name!r} (head {head}, cut from {base}) does not "
+                    f"descend from main ({cur}) — main advanced since the "
+                    "branch was cut; fast-forward would drop those commits. "
+                    "Recompute the branch from current main instead."
+                )
+            self.meta["current_snapshot_id"] = head
+            ref["base_snapshot_id"] = head  # branch stays publishable
+            # promote branch-scoped fences: the epochs are now durably
+            # published on main, so re-delivery must skip globally
+            self.meta["committed_fences"].update(ref.pop("fences", {}))
+            return head
+
+        return self._transact("fast_forward", mutate)
+
+    # ---------------------------------------------------------------- commit
     def is_fence_committed(self, fence: str, branch: str | None = None) -> bool:
         """Whether an epoch fence is already committed.
 
@@ -1339,68 +1367,157 @@ class SnapshotTable:
         APPENDED to each bucket's delta list; base files untouched.
         Readers resolve last-writer-wins across base+deltas.
 
+        The files were written under this handle's state when ``commit``
+        is called: its current schema (or ``new_schema``) and its bucket
+        count. Each file is recorded under that schema, so the field-id
+        projection maps it even if a rename publishes meanwhile.
+
         Returns the new snapshot dict, or ``None`` when ``fence`` was
         already committed (idempotent re-delivery short-circuit).
 
-        Conflict semantics (Iceberg-style validation): a ``replace`` commit
-        rewrites buckets from data it READ at some snapshot; if any of its
-        buckets changed since (a concurrent delta append or another
-        rewrite), publishing it would clear or supersede files whose rows
-        this rewrite never saw — silent data loss. Callers that read table
-        state to compute the rewrite pass ``validate_from_snapshot`` (the
-        snapshot id they read from); commit raises :class:`CommitConflict`
-        when a validated bucket differs from that snapshot, including
-        changes that landed BEFORE the first CAS attempt. Without the
-        parameter, validation still covers the refresh-and-retry window.
-        ``append_delta`` commits are append-only and always safe to
-        (re-)apply.
+        Conflict semantics (Iceberg-style validation), checked on the
+        fresh state of every attempt; each raises :class:`CommitConflict`:
+
+        - a ``replace`` commit rewrites buckets from data it READ at some
+          snapshot; if any of its buckets changed since (a concurrent
+          delta append or another rewrite), publishing it would clear or
+          supersede files whose rows this rewrite never saw. Callers pass
+          ``validate_from_snapshot`` (the snapshot id they read from) to
+          cover changes that landed BEFORE the first attempt; without it
+          validation still covers the retry window. ``append_delta``
+          commits are append-only and skip this check.
+        - any commit that names buckets fails if the table was rebucketed
+          since: its bucket ids belong to a spec that is no longer current.
         """
         if mode not in ("replace", "append_delta"):
             raise ValueError(f"unknown commit mode {mode!r}")
         if branch is not None and new_num_buckets is not None:
             raise ValueError("rebucketing commits must target main, not a branch")
-        changed_buckets = list(changed_buckets)  # may be re-iterated on retry
+        changed_buckets = [int(b) for b in changed_buckets]
+        rels_by_bucket = {
+            b: [
+                os.path.relpath(p, self.root) if os.path.isabs(p) else p
+                for p in changed_files_by_bucket.get(b, [])
+            ]
+            for b in changed_buckets
+        }
         # Footer-derived per-file column bounds, computed ONCE (outside the
-        # CAS retry loop — the files are immutable, their stats don't
-        # change across retries). Metadata-only read: no data scan.
+        # transaction — the files are immutable, their stats don't change
+        # across retries). Metadata-only read: no data scan.
         from .stats import collect_file_stats
 
-        new_rels = [
-            os.path.relpath(p, self.root) if os.path.isabs(p) else p
-            for b in changed_buckets
-            for p in changed_files_by_bucket.get(int(b), [])
-        ]
-        new_stats = collect_file_stats(self.root, new_rels, self._stats_cols())
+        new_stats = collect_file_stats(
+            self.root, [r for rels in rels_by_bucket.values() for r in rels], self._stats_cols()
+        )
+        written_sid = self.meta["current_schema_id"]
+        written_nb = self.num_buckets
         baseline: dict[str, Any] | None = None
         if validate_from_snapshot is not None and mode == "replace":
             baseline = self._bucket_state(changed_buckets, validate_from_snapshot)
-        for _attempt in range(_MAX_COMMIT_RETRIES):
-            try:
-                self.refresh()
-                base_sid = None
-                if branch is not None:
-                    refs = self.meta.get("refs", {})
-                    if branch not in refs or refs[branch].get("type") != "branch":
-                        raise KeyError(f"branch {branch!r} not found (create_branch first)")
-                    base_sid = refs[branch]["snapshot_id"]
-                state = self._bucket_state(changed_buckets, base_sid)
-                if baseline is None:
-                    baseline = state
-                elif mode == "replace" and state != baseline:
-                    raise CommitConflict(
-                        f"buckets {sorted(set(changed_buckets))} changed under this "
-                        "replace commit (concurrent writer); the rewrite was computed "
-                        "from stale data — recompute and retry"
-                    )
-                return self._commit_once(
-                    changed_files_by_bucket, changed_buckets, fence, new_schema, summary, mode,
-                    new_stats, new_num_buckets, branch,
+
+        def mutate() -> Any:
+            nonlocal baseline
+            # branch commits chain off the BRANCH head, not main
+            ref = None if branch is None else self._ref(branch, "branch")
+            parent = self.snapshot(None if ref is None else ref["snapshot_id"])
+            state = self._bucket_state(changed_buckets, parent["snapshot_id"])
+            if baseline is None:
+                baseline = state
+            elif mode == "replace" and state != baseline:
+                raise CommitConflict(
+                    f"buckets {sorted(set(changed_buckets))} changed under this "
+                    "replace commit (concurrent writer); the rewrite was computed "
+                    "from stale data — recompute and retry"
                 )
-            except VersionConflict:
-                continue
-        raise VersionConflict(
-            f"commit lost the metadata CAS {_MAX_COMMIT_RETRIES} times in a row"
-        )
+            if fence is not None and self.is_fence_committed(fence, branch=branch):
+                return _Unchanged(None)
+            if changed_buckets and self.num_buckets != written_nb:
+                raise CommitConflict(
+                    f"the table was rebucketed ({written_nb} -> {self.num_buckets} "
+                    "buckets) under this commit; its rows were hashed under the "
+                    "old bucket spec — recompute and retry"
+                )
+            file_sid = written_sid
+            if new_schema is not None:
+                added = self.check_additive(new_schema)
+                if added:
+                    ids = self.field_ids()
+                    nxt = self._fresh_field_id()
+                    for f in added:
+                        ids[f.name] = nxt
+                        nxt += 1
+                    self._add_schema(new_schema, ids)
+                file_sid = self.meta["current_schema_id"]
+
+            if new_num_buckets is not None and int(new_num_buckets) != self.num_buckets:
+                # bucket-spec evolution: the caller rewrote EVERY bucket under
+                # the new hash. Backfill per-snapshot specs first — snapshots
+                # without the key default to meta["num_buckets"], which is
+                # about to change out from under them.
+                stale = (set(parent["files"]) | {
+                    b for b, fs in parent.get("delta_files", {}).items() if fs
+                }) - {str(b) for b in changed_buckets}
+                if stale:
+                    raise ValueError(
+                        f"rebucket commit must replace every bucket; missing {sorted(stale)}"
+                    )
+                for s in self.meta["snapshots"]:
+                    s.setdefault("num_buckets", self.num_buckets)
+                self.meta["num_buckets"] = int(new_num_buckets)
+
+            files = {b: list(fs) for b, fs in parent["files"].items()}
+            deltas = {b: list(fs) for b, fs in parent.get("delta_files", {}).items()}
+            # manifest-pointer inheritance (round-6 sharding): unchanged
+            # buckets keep the parent's shard pointers; the changed buckets'
+            # pointers are dropped so _dehydrate writes exactly ONE new shard
+            # for them — per-commit metadata bytes stay O(changed buckets).
+            inherited = dict(parent.get("manifests", {}))
+            for b, rels in rels_by_bucket.items():
+                bs = str(b)
+                inherited.pop(bs, None)
+                if mode == "append_delta":
+                    deltas.setdefault(bs, []).extend(rels)
+                    continue
+                deltas.pop(bs, None)  # replace folds deltas into the new base
+                if rels:
+                    files[bs] = rels
+                else:
+                    files.pop(bs, None)
+
+            new_id = max(s["snapshot_id"] for s in self.meta["snapshots"]) + 1
+            snap = {
+                "snapshot_id": new_id,
+                "committed_at": round(time.time(), 3),
+                "parent_id": parent["snapshot_id"],
+                "schema_id": self.meta["current_schema_id"],
+                "num_buckets": self.num_buckets,
+                "files": files,
+                "delta_files": {b: fs for b, fs in deltas.items() if fs},
+                "manifests": inherited,
+                "summary": summary or {},
+                "fence": fence,
+            }
+            self.meta["snapshots"].append(snap)
+            if ref is None:
+                self.meta["current_snapshot_id"] = new_id
+            else:
+                ref["snapshot_id"] = new_id
+            if fence is not None:
+                # fences scope to their ref: branch fences live on the branch
+                # and are promoted to main only by fast_forward (see
+                # is_fence_committed) — drop_branch discards them with the ref
+                fences = self.meta["committed_fences"] if ref is None else ref.setdefault("fences", {})
+                fences[fence] = new_id
+            self.meta.setdefault("file_stats", {}).update(new_stats)
+            # each file records the schema it was WRITTEN under — the
+            # field-id mapping basis for rename/drop evolution (reads
+            # project old files onto the current schema by id)
+            self.meta.setdefault("file_schemas", {}).update(
+                {r: file_sid for rels in rels_by_bucket.values() for r in rels}
+            )
+            return snap
+
+        return self._transact("commit", mutate)
 
     def _bucket_state(self, buckets: list[int], snapshot_id: int | None = None) -> dict[str, Any]:
         """(base files, delta files) of the given buckets at a snapshot —
@@ -1419,130 +1536,6 @@ class SnapshotTable:
         """Columns to record bounds for: every top-level field except the
         hidden tombstone (stats.py skips unusable types per row group)."""
         return [f.name for f in self.schema().fields if f.name != TOMBSTONE_COL]
-
-    def _commit_once(
-        self,
-        changed_files_by_bucket: dict[int, list[str]],
-        changed_buckets: Iterable[int],
-        fence: str | None,
-        new_schema: StructType | None,
-        summary: dict[str, Any] | None,
-        mode: str,
-        new_stats: dict[str, dict[str, Any]] | None = None,
-        new_num_buckets: int | None = None,
-        branch: str | None = None,
-    ) -> dict[str, Any] | None:
-        # NOTE: caller (the retry loop) has already refreshed and validated
-        # against THIS metadata state; refreshing again here would open a
-        # validation race. Anything that lands between this state and our
-        # publish is caught by the _write_version CAS.
-        if fence is not None and self.is_fence_committed(fence, branch=branch):
-            return None
-
-        schema_id = self.meta["current_schema_id"]
-        if new_schema is not None:
-            added = self.check_additive(new_schema)
-            if added:
-                ids = self.field_ids(schema_id)
-                nxt = self._fresh_field_id()
-                for f in added:
-                    ids[f.name] = nxt
-                    nxt += 1
-                schema_id = max(s["schema_id"] for s in self.meta["schemas"]) + 1
-                self.meta["schemas"].append(
-                    {"schema_id": schema_id, "struct": new_schema.jsonValue(), "field_ids": ids}
-                )
-                self.meta["current_schema_id"] = schema_id
-
-        if new_num_buckets is not None and int(new_num_buckets) != self.meta["num_buckets"]:
-            # bucket-spec evolution: the caller rewrote EVERY bucket under
-            # the new hash. Backfill per-snapshot specs first — snapshots
-            # without the key default to meta["num_buckets"], which is
-            # about to change out from under them.
-            old_nb = self.meta["num_buckets"]
-            covered = {str(int(b)) for b in changed_buckets}
-            parent = self.snapshot()
-            stale = (set(parent["files"]) | {
-                b for b, fs in parent.get("delta_files", {}).items() if fs
-            }) - covered
-            if stale:
-                raise ValueError(
-                    f"rebucket commit must replace every bucket; missing {sorted(stale)}"
-                )
-            for s in self.meta["snapshots"]:
-                s.setdefault("num_buckets", old_nb)
-            self.meta["num_buckets"] = int(new_num_buckets)
-
-        # branch commits chain off the BRANCH head, not main
-        parent = (
-            self.snapshot()
-            if branch is None
-            else self.snapshot(self.meta["refs"][branch]["snapshot_id"])
-        )
-        files = {b: list(fs) for b, fs in parent["files"].items()}
-        deltas = {b: list(fs) for b, fs in parent.get("delta_files", {}).items()}
-        new_file_schemas: dict[str, int] = {}
-        for b in changed_buckets:
-            bs = str(int(b))
-            rels = [
-                os.path.relpath(p, self.root) if os.path.isabs(p) else p
-                for p in changed_files_by_bucket.get(int(b), [])
-            ]
-            # each file records the schema it was WRITTEN under — the
-            # field-id mapping basis for rename/drop evolution (reads
-            # project old files onto the current schema by id)
-            for rel in rels:
-                new_file_schemas[rel] = schema_id
-            if mode == "append_delta":
-                if rels:
-                    deltas.setdefault(bs, []).extend(rels)
-            else:
-                if rels:
-                    files[bs] = rels
-                else:
-                    files.pop(bs, None)
-                deltas.pop(bs, None)  # replace folds deltas into the new base
-
-        # manifest-pointer inheritance (round-6 sharding): unchanged buckets
-        # keep the parent's shard pointers; the changed buckets' pointers
-        # are dropped so _dehydrate writes exactly ONE new shard for them —
-        # per-commit metadata bytes stay O(changed buckets).
-        inherited = dict(parent.get("manifests", {}))
-        for b in changed_buckets:
-            inherited.pop(str(int(b)), None)
-
-        new_id = max(s["snapshot_id"] for s in self.meta["snapshots"]) + 1
-        snap = {
-            "snapshot_id": new_id,
-            "committed_at": round(time.time(), 3),
-            "parent_id": parent["snapshot_id"],
-            "schema_id": schema_id,
-            "num_buckets": self.meta["num_buckets"],
-            "files": files,
-            "delta_files": {b: fs for b, fs in deltas.items() if fs},
-            "manifests": inherited,
-            "summary": summary or {},
-            "fence": fence,
-        }
-        self.meta["snapshots"].append(snap)
-        if branch is None:
-            self.meta["current_snapshot_id"] = new_id
-        else:
-            self.meta["refs"][branch]["snapshot_id"] = new_id
-        if fence is not None:
-            # fences scope to their ref: branch fences live on the branch
-            # and are promoted to main only by fast_forward (see
-            # is_fence_committed) — drop_branch discards them with the ref
-            if branch is None:
-                self.meta["committed_fences"][fence] = new_id
-            else:
-                self.meta["refs"][branch].setdefault("fences", {})[fence] = new_id
-        if new_stats:
-            self.meta.setdefault("file_stats", {}).update(new_stats)
-        if new_file_schemas:
-            self.meta.setdefault("file_schemas", {}).update(new_file_schemas)
-        self._write_version(self.version + 1)
-        return snap
 
     # --------------------------------------------------------- maintenance
     def expire_snapshots(self, keep_last: int = 10, keep_fences_per_job: int = 64) -> int:
@@ -1563,35 +1556,28 @@ class SnapshotTable:
             # intent. Current + tagged snapshots are always retained, so
             # there is no meaningful retention below 1; reject loudly.
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        for _attempt in range(_MAX_COMMIT_RETRIES):
-            try:
-                return self._expire_once(keep_last, keep_fences_per_job)
-            except VersionConflict:
-                continue
-        raise VersionConflict("expire_snapshots lost the metadata CAS repeatedly")
 
-    def _expire_once(self, keep_last: int, keep_fences_per_job: int) -> int:
-        self.refresh()
-        snaps = sorted(self.meta["snapshots"], key=lambda s: s["snapshot_id"])
-        fences = self.meta.get("committed_fences", {})
-        pruned_fences = self._pruned_fences(fences, keep_fences_per_job)
-        if len(snaps) <= keep_last and len(pruned_fences) == len(fences):
-            return 0
-        keep = snaps[-keep_last:]
-        keep_ids = {s["snapshot_id"] for s in keep} | {self.meta["current_snapshot_id"]}
-        # tagged snapshots are pinned regardless of the retention window
-        keep_ids |= {r["snapshot_id"] for r in self.meta.get("refs", {}).values()}
-        kept = [s for s in snaps if s["snapshot_id"] in keep_ids]
-        dropped = len(snaps) - len(kept)
-        self.meta["snapshots"] = kept
-        self.meta["committed_fences"] = pruned_fences
-        # GC per-file stats with their files: keep bounds only for files
-        # some retained snapshot still references (metadata stays O(live))
-        live = self.live_files()
-        for key in ("file_stats", "file_schemas"):
-            if self.meta.get(key):
-                self.meta[key] = {f: v for f, v in self.meta[key].items() if f in live}
-        self._write_version(self.version + 1)
+        def mutate() -> Any:
+            snaps = sorted(self.meta["snapshots"], key=lambda s: s["snapshot_id"])
+            fences = self.meta.get("committed_fences", {})
+            pruned_fences = self._pruned_fences(fences, keep_fences_per_job)
+            if len(snaps) <= keep_last and len(pruned_fences) == len(fences):
+                return _Unchanged(0)
+            keep_ids = {s["snapshot_id"] for s in snaps[-keep_last:]}
+            keep_ids.add(self.meta["current_snapshot_id"])
+            # tagged snapshots are pinned regardless of the retention window
+            keep_ids |= {r["snapshot_id"] for r in self.meta.get("refs", {}).values()}
+            self.meta["snapshots"] = [s for s in snaps if s["snapshot_id"] in keep_ids]
+            self.meta["committed_fences"] = pruned_fences
+            # GC per-file stats with their files: keep bounds only for files
+            # some retained snapshot still references (metadata stays O(live))
+            live = self.live_files()
+            for key in ("file_stats", "file_schemas"):
+                if self.meta.get(key):
+                    self.meta[key] = {f: v for f, v in self.meta[key].items() if f in live}
+            return len(snaps) - len(self.meta["snapshots"])
+
+        dropped = self._transact("expire_snapshots", mutate)
         # metadata-log hygiene: a long-running stream commits one
         # v{N}.json per epoch; prune superseded versions (the current
         # file is the whole state — older ones exist only for debugging)

@@ -3,6 +3,8 @@ two snapshots must equal the oracle-state diff (insert/update/delete)."""
 
 from __future__ import annotations
 
+import pytest
+
 from etlframwork_spark.changes import changed_buckets, read_changes
 from etlframwork_spark.events import (
     CDC_BASE_SCHEMA,
@@ -160,6 +162,54 @@ def test_sync_incremental_propagates_and_fences(spark, tmp_path):
     # idempotent: same src snapshot -> up-to-date no-op
     r3 = sync_incremental(spark, src, dst, job_id="s2s")
     assert r3["skipped"] and r3["reason"] == "up_to_date"
+
+
+class _Crash(Exception):
+    pass
+
+
+def _kill_at(stage):
+    def inject(point):
+        if point == stage:
+            raise _Crash(point)
+
+    return inject
+
+
+@pytest.mark.parametrize("stage", ["pre_commit", "post_commit"])
+def test_sync_incremental_killed_at_commit_points(spark, tmp_path, stage):
+    """sync_incremental killed on its own, bootstrap and incremental, at a
+    commit point of its merge (the merge's ``fault_injector``): dst loads,
+    a kill before the commit leaves dst's snapshot and sync cursor as they
+    were, and a re-run reaches the uninterrupted dst state and cursor (a
+    fenced no-op after a kill past the commit)."""
+    from etlframwork_spark.changes import last_synced_snapshot, sync_incremental
+
+    src = _mk(tmp_path, "src")
+    want = _mk(tmp_path, "want")
+    dst = _mk(tmp_path, "dst")
+    epochs = [
+        [(f"k{i}", i, i, "insert") for i in range(20)],
+        [("k3", 300, 100, "update"), ("k7", 0, 101, "delete"), ("k50", 50, 102, "insert")],
+    ]
+    for epoch, rows in enumerate(epochs):
+        _merge(spark, src, rows, epoch)
+        sync_incremental(spark, src, want, job_id="k")
+        before = dst.refresh().snapshot()["snapshot_id"]
+        cursor = last_synced_snapshot(dst, "k")
+        with pytest.raises(_Crash):
+            sync_incremental(spark, src, dst, job_id="k", fault_injector=_kill_at(stage))
+        dst = SnapshotTable.load(dst.root)
+        if stage == "pre_commit":
+            assert dst.snapshot()["snapshot_id"] == before
+            assert last_synced_snapshot(dst, "k") == cursor
+        r = sync_incremental(spark, src, dst, job_id="k")
+        assert r["skipped"] == (stage == "post_commit")
+        want.refresh()
+        dst.refresh()
+        assert _state(spark, dst) == _state(spark, want)
+        assert last_synced_snapshot(dst, "k") == last_synced_snapshot(want, "k")
+        assert last_synced_snapshot(dst, "k") == src.snapshot()["snapshot_id"]
 
 
 def test_sync_incremental_transform(spark, tmp_path):

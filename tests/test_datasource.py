@@ -132,6 +132,32 @@ def test_key_equality_filters_prune_to_one_bucket(spark, tmp_path):
     assert via_ds.count() == 1
 
 
+def test_pickled_reader_does_not_grow_with_snapshots(spark, tmp_path):
+    """Spark pickles the reader into the function it ships to every read
+    task. Each partition carries its own files and projections, so the
+    pickled reader holds only the read schema and key/order columns: its
+    size is flat in the number of retained snapshots, and it reads a
+    planned partition on its own."""
+    from pyspark import cloudpickle
+
+    table = _mk_table(spark, tmp_path, write_mode="mor")
+
+    def pickled():
+        reader = SnapshotTableReader({"root": table.root}, SnapshotTable.load(table.root))
+        return reader, cloudpickle.dumps(reader)
+
+    _, small = pickled()
+    for i in range(40):
+        table.commit({}, [], fence=f"grow:{i}", summary={"operation": "grow"})
+    reader, large = pickled()
+    assert len(large) == len(small)
+    part = next(p for p in reader.partitions() if p.delta_files)
+    shipped = cloudpickle.loads(large)
+    assert not hasattr(shipped, "table")
+    got = [b.to_pylist() for b in shipped.read(part)]
+    assert got == [b.to_pylist() for b in reader.read(part)] and got[0]
+
+
 def test_tag_read_uses_tagged_snapshot_schema(spark, tmp_path):
     """Round-3 ADVICE: schema() must resolve a tag to the TAGGED snapshot's
     schema — a tag set before an additive evolution reads back in the old

@@ -195,21 +195,27 @@ def test_fast_forward_promotes_branch_fences(spark, tmp_path):
 
 def test_dsv2_write_aborts_on_concurrent_rebucket(spark, tmp_path):
     """ADVICE r4 (low): rows hashed under a stale bucket count must never
-    be committed — the bucket-local LWW would silently miss collisions."""
+    be committed — the bucket-local LWW would silently miss collisions.
+    The check is part of the commit's metadata transaction."""
+    import pyarrow as pa
+
     from etlframwork_spark import maintenance
-    from etlframwork_spark.sources.snapshot_datasource import (
-        SnapshotTableWriter,
-        _WriteMessage,
-    )
+    from etlframwork_spark.sources.snapshot_datasource import SnapshotTableWriter
+    from etlframwork_spark.table import CommitConflict
 
     t = _mk(tmp_path, nb=4)
     _merge(spark, t, [(f"k{i}", i, None, i, "insert") for i in range(50)], 0)
     t.refresh()
     write_schema = StructType([f for f in SCHEMA.fields])
     w = SnapshotTableWriter({"root": t.root}, t, write_schema)
+    row = pa.RecordBatch.from_pylist(
+        [{"k": "k1", "v": 99, "note": None, "lsn": 99}],
+        schema=pa.schema([("k", pa.string()), ("v", pa.int64()), ("note", pa.string()), ("lsn", pa.int64())]),
+    )
+    message = w.write(iter([row]))  # hashed under 4 buckets
     maintenance.rebucket(spark, t, 8)
-    with pytest.raises(RuntimeError, match="rebucketed"):
-        w.commit([_WriteMessage({})])
+    with pytest.raises(CommitConflict, match="rebucketed"):
+        w.commit([message])
     # table unharmed: still reads the pre-race state under the new spec
     t.refresh()
     assert t.num_buckets == 8 and t.read(spark).count() == 50

@@ -4,6 +4,7 @@ Python on data paths)."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -162,3 +163,38 @@ def test_snapshot_datasource_is_imported_by_nobody_in_the_engine():
     own = os.path.join("sources", "snapshot_datasource.py")
     bad = [rel for rel, src in _engine_sources() if rel != own and rx.search(src)]
     assert not bad, f"engine modules importing sources.snapshot_datasource: {bad}"
+
+
+# Every metadata change publishes through SnapshotTable._transact: it
+# refreshes, applies the change to the fresh metadata, publishes through
+# the _write_version CAS, and retries a lost CAS from fresh state. A
+# second publish or a second VersionConflict handler is a hand-copied
+# transaction.
+def _sites(pred):
+    """``(file, enclosing function)`` of every AST node ``pred`` accepts."""
+    sites = []
+    for rel, src in _engine_sources():
+        def walk(node, fn):
+            for child in ast.iter_child_nodes(node):
+                inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+                if pred(child):
+                    sites.append((rel, fn))
+                walk(child, inner)
+
+        walk(ast.parse(src), None)
+    return sites
+
+
+def test_metadata_is_published_only_by_the_transaction():
+    publishes = _sites(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "_write_version"
+    )
+    handlers = _sites(
+        lambda n: isinstance(n, ast.ExceptHandler)
+        and n.type is not None
+        and "VersionConflict" in ast.unparse(n.type)
+    )
+    assert publishes == [("table.py", "_transact")], publishes
+    assert handlers == [("table.py", "_transact")], handlers

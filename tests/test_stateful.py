@@ -7,12 +7,12 @@ from __future__ import annotations
 import os
 
 from etlframwork_spark.events import EventLogSpec, generate_event_log, read_log_pandas
-from etlframwork_spark.streaming.ingest import discover_event_schema
+from etlframwork_spark.streaming.sources import FileStreamSource
 from etlframwork_spark.streaming.stateful import lsn_gap_monitor
 
 
 def _drain(spark, events_dir, out_dir, ckpt):
-    schema = discover_event_schema(events_dir)
+    schema = FileStreamSource(events_dir).discover_schema()
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(events_dir)
     q = (
         lsn_gap_monitor(stream)

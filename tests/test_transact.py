@@ -1,0 +1,191 @@
+"""The metadata transaction: every ``SnapshotTable`` metadata change runs
+through one refresh -> mutate -> CAS-publish primitive.
+
+- CAS-race matrix: for each metadata operation a competing writer
+  publishes between the operation's refresh and its publish. The
+  operation must retry on the winner's state so both changes survive,
+  and an operation that loses every attempt raises ``VersionConflict``
+  naming itself.
+- Commits racing metadata changes: a mor epoch whose rows were hashed
+  under a bucket count that a concurrent ``rebucket`` replaced must fail
+  with ``CommitConflict``, and files a compaction wrote before a
+  concurrent rename must read back under the new name.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from etlframwork_spark.events import CDC_BASE_SCHEMA, EventLogSpec, TARGET_BASE_SCHEMA, _make_events_frame
+from etlframwork_spark.maintenance import compact_buckets, rebucket
+from etlframwork_spark.merge import merge_batch
+from etlframwork_spark.table import CommitConflict, SnapshotTable, VersionConflict
+
+
+def _mk(root):
+    return SnapshotTable.create(
+        str(root), TARGET_BASE_SCHEMA, key_cols=["repo", "path"], order_col="lsn", num_buckets=4
+    )
+
+
+def _fence_commit(table, fence, branch=None):
+    return table.commit({}, [], fence=fence, summary={"operation": "test"}, branch=branch)
+
+
+def _with_branch(t):
+    t.create_branch("wap")
+    _fence_commit(t, "wap:0", branch="wap")
+
+
+def _with_history(t):
+    for epoch in range(3):
+        _fence_commit(t, f"old:{epoch}")
+
+
+# op name -> (setup, operation, "its change is visible" check)
+OPS = {
+    "evolve_schema": (
+        None,
+        lambda t: t.evolve_schema(renames={"content": "body"}),
+        lambda t: "body" in t.schema().fieldNames(),
+    ),
+    "set_tag": (None, lambda t: t.set_tag("audit"), lambda t: "audit" in t.tags()),
+    "drop_tag": (
+        lambda t: t.set_tag("audit"),
+        lambda t: t.drop_tag("audit"),
+        lambda t: "audit" not in t.tags(),
+    ),
+    "create_branch": (None, lambda t: t.create_branch("wap"), lambda t: "wap" in t.branches()),
+    "drop_branch": (
+        lambda t: t.create_branch("wap"),
+        lambda t: t.drop_branch("wap"),
+        lambda t: "wap" not in t.branches(),
+    ),
+    "fast_forward": (
+        _with_branch,
+        lambda t: t.fast_forward("wap"),
+        lambda t: t.meta["current_snapshot_id"] == t.branches()["wap"]
+        and t.is_fence_committed("wap:0"),
+    ),
+    "commit": (None, lambda t: _fence_commit(t, "op:0"), lambda t: t.is_fence_committed("op:0")),
+    "expire_snapshots": (
+        _with_history,
+        lambda t: t.expire_snapshots(keep_last=1),
+        lambda t: [s["snapshot_id"] for s in t.meta["snapshots"]] == [t.meta["current_snapshot_id"]],
+    ),
+}
+
+
+def _race(table, rounds):
+    """After each of the next ``rounds`` refreshes of ``table``, a rival
+    handle publishes a tag, so the attempt's publish loses the CAS."""
+    real, rivals = table.refresh, []
+
+    def refresh():
+        out = real()
+        if len(rivals) < rounds:
+            rivals.append(f"rival{len(rivals)}")
+            SnapshotTable.load(table.root).set_tag(rivals[-1])
+        return out
+
+    table.refresh = refresh
+    return rivals
+
+
+@pytest.mark.parametrize("op", list(OPS))
+def test_metadata_op_retries_past_a_competing_commit(tmp_path, op):
+    setup, run, applied = OPS[op]
+    table = _mk(tmp_path / "t")
+    if setup is not None:
+        setup(table)
+    rivals = _race(table, 1)
+    run(table)
+    final = SnapshotTable.load(table.root)
+    assert rivals == ["rival0"]
+    assert "rival0" in final.tags()
+    assert applied(final)
+
+
+@pytest.mark.parametrize("op", list(OPS))
+def test_metadata_op_losing_every_attempt_names_itself(tmp_path, op):
+    setup, run, applied = OPS[op]
+    table = _mk(tmp_path / "t")
+    if setup is not None:
+        setup(table)
+    _race(table, 10**6)
+    with pytest.raises(VersionConflict, match=f"^{op} lost the metadata CAS"):
+        run(table)
+    assert not applied(SnapshotTable.load(table.root))
+
+
+# ------------------------------------------------ commits racing metadata
+_PDF = _make_events_frame(
+    EventLogSpec(seed=17, n_events=400, n_repos=5, paths_per_repo=12, p_delete=0.1)
+).drop(columns=["lang"])
+
+
+def _merge(spark, table, lo, hi, epoch, mode, **kw):
+    batch = spark.createDataFrame(_PDF.iloc[lo:hi], schema=CDC_BASE_SCHEMA)
+    return merge_batch(spark, table, batch, epoch_id=epoch, write_mode=mode, **kw)
+
+
+def _rows(spark, table, **kw):
+    return {(r["repo"], r["path"]): tuple(r) for r in table.read(spark, **kw).collect()}
+
+
+def test_mor_epoch_racing_rebucket_conflicts(spark, tmp_path):
+    """A rebucket publishing between a mor epoch's write and its commit
+    leaves the epoch's delta files hashed under 4 buckets in an 8-bucket
+    table; appending them would put keys in the wrong buckets. The commit
+    must fail with CommitConflict, and the re-delivered epoch must land
+    every key where full scans and key-pinned reads find it."""
+    want = _mk(tmp_path / "want")
+    _merge(spark, want, 0, 250, 0, "cow")
+    _merge(spark, want, 250, 400, 1, "mor")
+    table = _mk(tmp_path / "t")
+    _merge(spark, table, 0, 250, 0, "cow")
+    raced = []
+
+    def hook(stage):
+        if stage == "pre_commit" and not raced:
+            raced.append(rebucket(spark, SnapshotTable.load(table.root), 8))
+
+    with pytest.raises(CommitConflict, match="rebucketed"):
+        _merge(spark, table, 250, 400, 1, "mor", fault_injector=hook)
+    assert raced and raced[0]["rebucketed"]
+    _merge(spark, table.refresh(), 250, 400, 1, "mor")
+    assert table.refresh().num_buckets == 8
+    expect = _rows(spark, want)
+    assert _rows(spark, table) == expect
+    for repo, path in sorted(expect)[::5]:
+        pinned = [("repo", "=", repo), ("path", "=", path)]
+        assert _rows(spark, table, filters=pinned) == {(repo, path): expect[(repo, path)]}
+
+
+def test_compaction_racing_rename_keeps_column_values(spark, tmp_path, monkeypatch):
+    """A rename publishing between a compaction's write and its commit:
+    the compacted files carry the OLD column name, so they must be
+    recorded under the schema they were written under, and read back
+    under the new name by field id instead of as nulls."""
+    table = _mk(tmp_path / "t")
+    _merge(spark, table, 0, 250, 0, "cow")
+    _merge(spark, table, 250, 400, 1, "mor")
+    content = {k: row[3] for k, row in _rows(spark, table).items()}
+    real = SnapshotTable.rewrite_buckets
+    renamed = []
+
+    def racing(self, *args, fault_injector=None, **kwargs):
+        def inject(stage):
+            if stage == "pre_commit" and not renamed:
+                renamed.append(SnapshotTable.load(self.root).evolve_schema(renames={"content": "body"}))
+
+        return real(self, *args, fault_injector=inject, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "rewrite_buckets", racing)
+    assert compact_buckets(spark, table)["buckets_compacted"] > 0
+    monkeypatch.undo()
+    assert renamed
+    table.refresh()
+    assert not table.has_deltas()
+    got = {(r["repo"], r["path"]): r["body"] for r in table.read(spark).collect()}
+    assert got == content
