@@ -93,7 +93,7 @@ def read_changes(
     # otherwise surface with a NULL order and be silently dropped by the
     # downstream merge's validation gate (round-6 advice #2). The old
     # side's order is the deleted row's own (lsn, commit); the downstream
-    # delete-beats-live tie-break (table.LWW_PRI) makes a delete at that
+    # delete-beats-live tie-break (table.lww_resolve) makes a delete at that
     # exact order deterministically remove the stored row, while any
     # genuinely newer upstream event still wins. For insert/update rows
     # the new side is non-null and the coalesce is an identity.

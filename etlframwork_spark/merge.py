@@ -11,31 +11,18 @@ sorted-merge apply)" as a copy-on-write merge into the bucketed
 3.  one bucket-granular pass over the batch collects affected buckets +
     per-bucket source offset ranges (drives manifest-level pruning);
 4.  union the batch with ONLY the affected buckets' stored rows and take
-    the last writer per key — three resolve strategies:
-
-    * ``maxby`` (scale default): ``table.lww_resolve``, i.e.
-      ``groupBy(key).agg(max_by(row, (lsn, commit)))``. Catalyst plans
-      partial_max_by before the shuffle, so a hot key is pre-reduced
-      map-side on every input partition — skew defuses for free and
-      everything stays in whole-stage codegen.
-    * ``sorted_merge``: the north-rule's literal per-key sorted-merge
-      apply — a salted ``max_by`` pre-reduce (explicit skew salt,
-      BJ:6 "salted repartitioning on hot repos") caps group sizes, then
-      ``applyInPandas`` folds each key's events in (lsn, commit) order.
-      Vectorized Arrow transfer; no per-row Python outside the fold.
-      Test-proven equal to ``maxby``.
-    * ``raw`` (merge-on-read only): no batch dedup at all — every
-      validated event lands as a delta row and the read/compaction LWW
-      resolves winners. One payload shuffle per epoch (the bucket-aligned
-      write) instead of two; measured ~equal to ``maxby`` on the bench
-      workload (~3 events/key/epoch) and strictly better for insert-heavy
-      streams; costs larger delta files under heavy per-key churn.
+    the last writer per key through ``table.lww_resolve``: a ``max_by``
+    of the row over the (lsn, commit) order. Catalyst plans partial_max_by
+    before the shuffle, so a hot key is pre-reduced map-side on every
+    input partition — skew defuses without a salt and everything stays in
+    whole-stage codegen.
 
     LWW is associative/commutative over the total order (lsn, commit) —
-    commit ids are unique per event — so every strategy and any salting
-    produce the identical final row; ties (event re-delivery) are exact
-    duplicates and collapse. A late LOWER-lsn event never clobbers: the
-    stored row participates in the same max with its stored lsn.
+    commit ids are unique per event — so any split of the work produces
+    the identical final row; ties (event re-delivery) are exact
+    duplicates and collapse, and at an exact tie a delete beats a live
+    row. A late LOWER-lsn event never clobbers: the stored row
+    participates in the same max with its stored lsn.
 5.  winners that are deletes become tombstones; survivors are rewritten
     into the affected buckets and committed, epoch-fenced and atomic
     (idempotent under re-delivery), by ``table.rewrite_buckets`` — the
@@ -51,16 +38,14 @@ partitioned write (round 3; previously a dedicated stats job added a
 second full scan + a collect barrier per epoch). Copy-on-write keeps the
 pre-pass because it must know the affected buckets before reading their
 stored rows. The target table is never scanned beyond affected buckets;
-all logic is JVM-side except the optional sorted-merge fold; the write
-routes each bucket wholly to one task (``table.bucket_exchange``).
+all logic is JVM-side; the write routes each bucket wholly to one task
+(``table.bucket_exchange``).
 """
 
 from __future__ import annotations
 
 import time
 from typing import Any, Callable
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,7 +54,6 @@ from pyspark.sql.types import StructField, StructType
 from .lineage import MetricsTable, shuffle_totals
 from .table import (
     BUCKET_COL,
-    LWW_PRI,
     TOMBSTONE_COL,
     SnapshotTable,
     bucket_expr,
@@ -109,46 +93,14 @@ def _align(df: DataFrame, schema: StructType, extra: list[str]) -> DataFrame:
     return df.select(*cols, *[F.col(c) for c in extra])
 
 
-def _resolve_sorted_merge(
-    unioned: DataFrame,
-    key_cols: list[str],
-    all_cols: list[str],
-    order_cols: list[str],
-    num_salts: int,
-) -> DataFrame:
-    """North-rule-literal per-key sorted-merge apply (applyInPandas).
-
-    Stage 1 — salted pre-reduce: ``groupBy(key, salt)`` with max_by caps
-    any hot key at ``num_salts`` surviving rows before the per-key stage
-    (explicit skew handling; LWW associativity makes this lossless).
-    Stage 2 — ``applyInPandas`` folds each key's rows in (lsn, tiebreak)
-    order: the last writer wins whole-row.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(num_salts)).alias("_salt")
-    pre = lww_resolve(unioned, [*key_cols, salt], all_cols, order_cols)
-
-    out_schema = StructType([pre.schema[c] for c in all_cols])
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # na_position='first' matches Spark struct ordering (nulls sort
-        # FIRST ascending), so both resolve strategies agree on the
-        # winner even if an order column is ever null on one side.
-        pdf = pdf.sort_values(order_cols, kind="stable", na_position="first")
-        return pdf.iloc[[-1]]
-
-    return pre.groupBy(*key_cols).applyInPandas(fold, schema=out_schema)
-
-
 def merge_batch(
     spark: SparkSession,
     table: SnapshotTable,
     batch: DataFrame,
     *,
     job_id: str = "job",
-    epoch_id: int = 0,
+    epoch_id: int | None = 0,
     metrics: MetricsTable | None = None,
-    resolve: str = "maxby",
-    num_salts: int = 16,
     quarantine_dir: str | None = None,
     write_mode: str = "cow",
     fault_injector: Callable[[str], None] | None = None,
@@ -168,20 +120,21 @@ def merge_batch(
     commits to the named branch head; main is untouched until
     ``table.fast_forward(branch)`` publishes.
 
+    ``(job_id, epoch_id)`` is the epoch fence: an epoch already committed
+    is skipped (idempotent re-delivery, BJ:6). ``epoch_id=None`` applies
+    the batch unfenced — every call applies, and an empty batch publishes
+    nothing.
+
     Returns a summary dict; ``{"skipped": True}`` when the epoch fence was
-    already committed (idempotent re-delivery, BJ:6).
+    already committed.
     """
     if write_mode not in ("cow", "mor"):
         raise ValueError(f"unknown write_mode {write_mode!r}")
-    if resolve not in ("maxby", "sorted_merge", "raw"):
-        raise ValueError(f"unknown resolve strategy {resolve!r}")
-    if resolve == "raw" and write_mode != "mor":
-        raise ValueError("resolve='raw' (no batch dedup) requires write_mode='mor'")
     t0 = time.monotonic()
     shuffle0 = shuffle_totals(spark)  # None unless the UI/REST is enabled
-    fence = f"{job_id}:{epoch_id}"
+    fence = None if epoch_id is None else f"{job_id}:{epoch_id}"
     table.refresh()
-    if table.is_fence_committed(fence, branch=branch):
+    if fence is not None and table.is_fence_committed(fence, branch=branch):
         return {"skipped": True, "fence": fence}
     # snapshot this cow rewrite READS from — commit validates the affected
     # buckets are unchanged since (Iceberg-style conflict detection; a
@@ -255,12 +208,15 @@ def merge_batch(
     }
 
     def noop() -> dict[str, Any]:
-        # still commit the fence so re-delivery of an empty epoch is a no-op
-        snap = table.commit(
-            {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
-        )
+        # an empty epoch still commits its fence so its re-delivery is a
+        # no-op; an empty unfenced batch publishes nothing
+        snap = None
+        if fence is not None:
+            snap = table.commit(
+                {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
+            )
         summary["snapshot_id"] = None if snap is None else snap["snapshot_id"]
-        summary["skipped"] = snap is None
+        summary["skipped"] = fence is not None and snap is None
         summary["timings"] = timings
         return summary
 
@@ -311,30 +267,12 @@ def merge_batch(
         unioned = ev_aligned.unionByName(stored_aligned)
         timings["read_plan"] = round(time.monotonic() - t_rp0, 3)
 
-    order_cols = lww_order_cols(order_col, all_cols)
     # a delete event or a stored tombstone: it beats a live row at an
-    # exact order tie (LWW_PRI) and, as the winner, becomes a tombstone
+    # exact order tie and, as the winner, becomes a tombstone
     is_del = (F.col("op") == "delete") | (
         (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
     )
-    if resolve == "raw":
-        # merge-on-read fast path with NO batch dedup: every validated event
-        # becomes a delta row (deletes as tombstones) and read/compaction's
-        # LWW resolves winners. Correct by the same associativity argument
-        # as deferring conflicts against stored rows; trades delta size for
-        # removing the resolve shuffle entirely — the payload then crosses
-        # exactly ONE exchange per epoch (the bucket-aligned write
-        # distribution). Best for insert-heavy / low-duplication streams.
-        resolved = ev_aligned
-    else:
-        unioned = unioned.withColumn(LWW_PRI, is_del.cast("int"))
-        carry_cols = all_cols + ["op", LWW_PRI]
-        resolve_order = order_cols + [LWW_PRI]
-        if resolve == "maxby":
-            resolved = lww_resolve(unioned, key_cols, carry_cols, resolve_order)
-        else:
-            resolved = _resolve_sorted_merge(unioned, key_cols, carry_cols, resolve_order, num_salts)
-        resolved = resolved.drop(LWW_PRI)
+    resolved = lww_resolve(unioned, key_cols, all_cols + ["op"], order_col, is_del)
 
     # winners: stored rows keep their sha; winning deletes become tombstones
     # (payload nulled — only key + lsn are retained); new upserts get
@@ -353,9 +291,8 @@ def merge_batch(
     # tiebreak): nulling 'commit' would let a future distinct event with the
     # same lsn and any non-null commit beat the tombstone and resurrect the
     # key, contradicting the (lsn, commit) total order.
-    payload_cols = [
-        c for c in all_cols if c not in (*key_cols, *order_cols, TOMBSTONE_COL, SHA_COL)
-    ]
+    kept = {*key_cols, *lww_order_cols(order_col, all_cols), TOMBSTONE_COL, SHA_COL}
+    payload_cols = [c for c in all_cols if c not in kept]
     for c in payload_cols:
         f = schema[c]
         final = final.withColumn(c, F.when(is_del, F.lit(None).cast(f.dataType)).otherwise(F.col(c)))

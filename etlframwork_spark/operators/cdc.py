@@ -471,7 +471,7 @@ def cdc_sync_incremental_state(spark, sf_dir):
     rows — the tie only the round-6 delete-beats-live tie-break resolves
     deterministically. dst's final state must equal plain SQL LWW over all
     events minus the deleted predicate — end-to-end evidence for
-    changes.read_changes + changes.sync_incremental + table.LWW_PRI."""
+    changes.read_changes + changes.sync_incremental + table.lww_resolve."""
     from ..changes import sync_incremental
     from ..merge import delete_where, merge_batch
     from ..table import SnapshotTable

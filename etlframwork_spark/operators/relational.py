@@ -563,14 +563,14 @@ def case_when_acctbal_buckets(spark, sf_dir):
 # ---------------------------------------------------------------------- P4/F4
 def salted_key_distribution(spark, sf_dir):
     """Deterministic key-hash salting (P4): distribution of events over
-    32 salted shards — the skew-defusing primitive used by the MERGE.
-    xxhash64 has no DuckDB twin so this could only ever be a rows-only
+    32 salted shards. (The MERGE needs no salt: its LWW resolve
+    pre-reduces a hot key map-side, pinned in tests/test_plans.py and
+    tests/test_property.py.) xxhash64 has no DuckDB twin so this could only ever be a rows-only
     driver row; demoted from the 50-query driver window in round 5 (the
     oracle-paired emb_neardup_pairs takes the slot — strictly stronger
     evidence). Correctness (determinism, full coverage, bounded shard
     spread) is asserted in tests/test_queries.py::test_salted_key_
-    distribution_properties; the salted MERGE path itself is
-    property-tested in tests/test_property.py."""
+    distribution_properties."""
     ev = load_table(spark, sf_dir, "events")
     salt = F.pmod(F.xxhash64("user_id", "event_type"), F.lit(32)).alias("shard")
     return ev.groupBy(salt).agg(F.count(F.lit(1)).alias("n")).orderBy("shard")

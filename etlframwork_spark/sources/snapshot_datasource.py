@@ -58,7 +58,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructField, StructType
 
 from ..hashing import buckets_np
-from ..table import LWW_PRI, TOMBSTONE_COL, SnapshotTable, lww_order_cols
+from ..table import TOMBSTONE_COL, SnapshotTable, lww_order_cols
 
 
 def _read_target(table: SnapshotTable, options: dict) -> tuple[int | None, int]:
@@ -182,15 +182,15 @@ class SnapshotTableReader(DataSourceReader):
             both = read_files(partition.base_files + partition.delta_files)
             pdf = both.to_pandas()
             order_cols = lww_order_cols(self.order_col, pdf.columns)
-            # deterministic tie-break, mirroring table.read (LWW_PRI): a
-            # tombstone beats a live row at an exact (lsn, commit) tie
+            # table.lww_resolve's tie-break: a tombstone beats a live row
+            # at an exact (lsn, commit) tie
+            pri = "__delete_first"
             if TOMBSTONE_COL in pdf.columns:
-                pdf[LWW_PRI] = pdf[TOMBSTONE_COL].fillna(False).astype(bool).astype(int)
-                order_cols = order_cols + [LWW_PRI]
+                pdf[pri] = pdf[TOMBSTONE_COL].fillna(False).astype(bool).astype(int)
+                order_cols = order_cols + [pri]
             pdf = pdf.sort_values(order_cols, kind="stable", na_position="first")
             pdf = pdf.groupby(self.key_cols, as_index=False, sort=False).tail(1)
-            if LWW_PRI in pdf.columns:
-                pdf = pdf.drop(columns=[LWW_PRI])
+            pdf = pdf.drop(columns=[pri], errors="ignore")
             base = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
         else:
             base = read_files(partition.base_files)
@@ -221,8 +221,8 @@ class SnapshotTableWriter(DataSourceArrowWriter):
     ``SnapshotTable.commit(mode="append_delta")`` — the same CAS +
     epoch-fence metadata path every other writer uses — and the table's
     read-time LWW resolve (ordered by the order column) makes the new
-    rows upserts against stored state. This is exactly
-    ``merge_batch(write_mode="mor", resolve="raw")``'s shape, pinned
+    rows upserts against stored state. The table state equals what
+    ``merge_batch(write_mode="mor")`` leaves for the same events, pinned
     digest-identical in tests/test_datasource.py.
 
     Options: ``root`` (required), ``fence`` (optional — idempotent

@@ -26,6 +26,7 @@ new column (micro-batch-boundary resolution per BJ:6).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import SparkSession
@@ -33,7 +34,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..lineage import MetricsTable
 from ..merge import SHA_COL, merge_batch
-from ..table import SnapshotTable
+from ..table import SnapshotTable, recompute_on_conflict
 from .sources import FileStreamSource
 
 from pyspark.sql.types import StringType
@@ -74,10 +75,8 @@ class IngestJob:
     order_col: str = "lsn"
     num_buckets: int = 16
     max_files_per_trigger: int = 8
-    resolve: str = "maxby"  # or "sorted_merge" (north-rule-literal) / "raw" (mor only)
     write_mode: str = "cow"  # or "mor" (delta-append merge-on-read fast path)
     compact_min_deltas: int | None = None  # mor: fold deltas when a bucket reaches this many
-    num_salts: int = 16
     available_now: bool = True  # drain-and-stop; else continuous
     processing_interval: str = "5 seconds"
     # metadata hygiene cadence: every N epochs expire old snapshots and
@@ -130,18 +129,22 @@ def run_ingest(
     metrics = MetricsTable(job.metrics_dir) if job.metrics_dir else None
 
     def apply_epoch(batch_df, epoch_id: int) -> None:
-        merge_batch(
-            batch_df.sparkSession,
-            table,
-            batch_df,
-            job_id=job.job_id,
-            epoch_id=epoch_id,
-            metrics=metrics,
-            resolve=job.resolve,
-            num_salts=job.num_salts,
-            quarantine_dir=job.quarantine_dir,
-            write_mode=job.write_mode,
-            fault_injector=fault_injector,
+        # an epoch whose commit lost to another writer (a rebucket, or a
+        # compaction or purge run elsewhere) recomputes from fresh state;
+        # the epoch fence keeps the re-run exactly-once
+        recompute_on_conflict(
+            partial(
+                merge_batch,
+                batch_df.sparkSession,
+                table,
+                batch_df,
+                job_id=job.job_id,
+                epoch_id=epoch_id,
+                metrics=metrics,
+                quarantine_dir=job.quarantine_dir,
+                write_mode=job.write_mode,
+                fault_injector=fault_injector,
+            )
         )
         if job.write_mode == "mor" and job.compact_min_deltas:
             from ..maintenance import compact_buckets

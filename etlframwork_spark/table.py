@@ -40,7 +40,7 @@ import time
 import uuid
 from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -139,24 +139,36 @@ TOMBSTONE_COL = "_deleted"
 # holding the identical live row. Without a tie-break, max_by's winner is
 # partition/merge-order dependent: a re-delivered original event could
 # resurrect a deleted key, and a propagated delete could silently fail to
-# apply. Every resolve appends this priority column LAST in its order, so
-# it only ever decides exact (lsn, commit) ties.
+# apply. lww_resolve appends this priority column LAST in its order, so it
+# only ever decides exact (lsn, commit) ties.
 LWW_PRI = "_lww_pri"
 
 
 def lww_order_cols(order_col: str, cols: Iterable[str]) -> list[str]:
     """The LWW total order: the order column, then the per-event unique
-    ``commit`` tiebreak when the table has one (SURVEY §7.4.3). Resolves
-    append ``LWW_PRI`` after these."""
+    ``commit`` tiebreak when the table has one (SURVEY §7.4.3)."""
     return [order_col] + (["commit"] if "commit" in cols else [])
 
 
 def lww_resolve(
-    df: DataFrame, key_cols: list, cols: list[str], order_cols: list[str]
+    df: DataFrame,
+    key_cols: list[str],
+    cols: list[str],
+    order_col: str,
+    is_delete: Column | None = None,
 ) -> DataFrame:
-    """Last writer per key: ``max_by(struct(cols), struct(order_cols))``.
-    Catalyst plans partial_max_by before the shuffle, so a hot key is
-    pre-reduced map-side on every input partition (skew-proof, codegen)."""
+    """Last writer per key, as rows of ``cols``: ``max_by(struct(cols),
+    struct(order, commit, LWW_PRI))``. ``is_delete`` flags the rows that
+    beat a live row at an exact order tie (default: the stored tombstone
+    flag, when ``cols`` carries one). Catalyst plans partial_max_by before
+    the shuffle, so a hot key is pre-reduced map-side on every input
+    partition (skew-proof, codegen)."""
+    order_cols = lww_order_cols(order_col, cols)
+    if is_delete is None and TOMBSTONE_COL in cols:
+        is_delete = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+    if is_delete is not None:
+        df = df.withColumn(LWW_PRI, is_delete.cast("int"))
+        order_cols = order_cols + [LWW_PRI]
     winner = F.max_by(
         F.struct(*[F.col(c) for c in cols]),
         F.struct(*[F.col(c) for c in order_cols]),
@@ -941,18 +953,9 @@ class SnapshotTable:
             parts.append(self._read_files(spark, clean_files, schema, target_sid))
         if dirty_files:
             ddf = self._read_files(spark, dirty_files, schema, target_sid)
-            cols = schema.fieldNames()
-            order_cols = lww_order_cols(self.order_col, cols)
-            # same deterministic tie-break as the writer (LWW_PRI): at an
-            # exact (lsn, commit) tie a tombstone beats a live row — e.g. a
-            # delete_where tombstone propagated as a MOR delta over the
-            # identical stored base row.
-            if TOMBSTONE_COL in cols:
-                ddf = ddf.withColumn(
-                    LWW_PRI, F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).cast("int")
-                )
-                order_cols = order_cols + [LWW_PRI]
-            parts.append(lww_resolve(ddf, self.key_cols, cols, order_cols))
+            # a stored tombstone beats a live row at an exact order tie,
+            # e.g. a delete_where tombstone propagated as a mor delta
+            parts.append(lww_resolve(ddf, self.key_cols, schema.fieldNames(), self.order_col))
         if not parts:
             df = spark.createDataFrame([], schema)
         elif len(parts) == 1:

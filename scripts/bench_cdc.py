@@ -3,7 +3,7 @@
 Used by bench_scaling.py via subprocess so each parallelism level gets a
 fresh JVM (no heap/codegen carry-over between measurements).
 
-    python scripts/bench_cdc.py --cpus 8 --events 2000000 [--resolve maxby]
+    python scripts/bench_cdc.py --cpus 8 --events 2000000
 
 Prints one JSON line with events/sec and the final-state row count +
 content-digest checksum (so both levels can be asserted identical).
@@ -26,7 +26,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, required=True)
     ap.add_argument("--events", type=int, default=2_000_000)
-    ap.add_argument("--resolve", default="maxby")
     ap.add_argument("--hot-ratio", type=float, default=0.2)
     ap.add_argument("--num-buckets", type=int, default=64)
     ap.add_argument("--files", type=int, default=32)
@@ -84,7 +83,6 @@ def main() -> None:
                 checkpoint_dir=os.path.join(work, "warm_ckpt"),
                 num_buckets=args.num_buckets,
                 max_files_per_trigger=args.cpus // 2,
-                resolve=args.resolve,
                 write_mode=args.write_mode,
             ),
         )
@@ -96,7 +94,6 @@ def main() -> None:
             metrics_dir=os.path.join(work, "metrics"),
             num_buckets=args.num_buckets,
             max_files_per_trigger=args.files_per_trigger,
-            resolve=args.resolve,
             write_mode=args.write_mode,
             compact_min_deltas=args.compact_min_deltas,
         )
@@ -136,7 +133,6 @@ def main() -> None:
                     "steady_events_per_sec": round(s_events / s_secs, 1) if s_secs else None,
                     "steady_epochs": len(steady),
                     "epoch_seconds": [round(s, 2) for _i, _e, s in eps],
-                    "resolve": args.resolve,
                     "write_mode": args.write_mode,
                     "shuffle_read_bytes": sh_read,
                     "shuffle_write_bytes": sh_write,

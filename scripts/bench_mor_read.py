@@ -38,7 +38,7 @@ def main() -> None:
     from etlframwork_spark.events import CDC_BASE_SCHEMA, TARGET_BASE_SCHEMA
     from etlframwork_spark.merge import merge_batch
     from etlframwork_spark.session import build_session
-    from etlframwork_spark.table import SnapshotTable, TOMBSTONE_COL, bucket_expr
+    from etlframwork_spark.table import SnapshotTable, TOMBSTONE_COL, bucket_expr, lww_resolve
 
     from etlframwork_spark.lineage import shuffle_totals
 
@@ -104,15 +104,8 @@ def main() -> None:
         # round-1 global-resolve baseline: LWW groupBy over EVERYTHING
         def global_read():
             schema = table.schema()
-            files = table.files_for()
-            df = spark.read.schema(schema).parquet(*files)
-            cols = schema.fieldNames()
-            order_cols = [table.order_col] + (["commit"] if "commit" in cols else [])
-            winner = F.max_by(
-                F.struct(*[F.col(c) for c in cols]),
-                F.struct(*[F.col(c) for c in order_cols]),
-            ).alias("_w")
-            df = df.groupBy(*[F.col(k) for k in table.key_cols]).agg(winner).select("_w.*")
+            df = spark.read.schema(schema).parquet(*table.files_for())
+            df = lww_resolve(df, table.key_cols, schema.fieldNames(), table.order_col)
             return df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))).drop(TOMBSTONE_COL)
 
         global_s, global_sh = timed(global_read)

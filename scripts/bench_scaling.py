@@ -227,7 +227,6 @@ class _InWindowProbe:
 def run_level(
     cpus: int,
     events: int,
-    resolve: str,
     files: int,
     trigger: int,
     pin: bool,
@@ -246,7 +245,6 @@ def run_level(
         os.path.join(REPO, "scripts", "bench_cdc.py"),
         "--cpus", str(cpus),
         "--events", str(events),
-        "--resolve", resolve,
         "--files", str(files),
         "--files-per-trigger", str(trigger),
         "--write-mode", wmode,
@@ -317,7 +315,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--events", type=int, default=32_000_000)
     ap.add_argument("--levels", default="2,8,32")
-    ap.add_argument("--resolve", default="maxby")
     ap.add_argument("--files", type=int, default=128)
     ap.add_argument("--trigger", type=int, default=32)
     ap.add_argument("--no-pin", action="store_true")
@@ -356,7 +353,7 @@ def main() -> None:
             _time.sleep(args.cooldown)  # credit recovery: fair start per level
         calib[c].append(calibrate())
         pcalib[c].append(calibrate_parallel(c))
-        r = run_level(c, args.events, args.resolve, args.files, args.trigger, pin,
+        r = run_level(c, args.events, args.files, args.trigger, pin,
                       args.write_mode, exec_cores=args.exec_cores)
         win = r.get("cosampled", {}).get("steady_window")
         if win and win.get("median_bytes_per_cpusec"):
@@ -419,7 +416,6 @@ def main() -> None:
 
     out = {
         "events": args.events,
-        "resolve": args.resolve,
         "write_mode": args.write_mode,
         "exec_cores": args.exec_cores,
         "levels": {

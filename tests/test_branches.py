@@ -56,7 +56,7 @@ def test_write_audit_publish_flow(spark, tmp_path):
     )
     merge_batch(
         spark, t, spark.createDataFrame(chunks[3], schema=CDC_BASE_SCHEMA),
-        epoch_id=3, branch="audit", write_mode="mor", resolve="raw",
+        epoch_id=3, branch="audit", write_mode="mor",
     )
     t.refresh()
     assert t.snapshot()["snapshot_id"] == main_snap

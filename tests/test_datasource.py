@@ -203,13 +203,13 @@ def test_dsv2_write_upsert_digest_equals_merge_batch(spark, tmp_path):
     """round-3 verdict #2: the DSv2 writer is MERGE-shaped — appending via
     df.write.format("snapshot_table") lands per-bucket delta files through
     the fenced commit path and the read-time LWW makes it an upsert,
-    state-identical to merge_batch(write_mode='mor', resolve='raw')."""
+    state-identical to merge_batch(write_mode='mor')."""
     _register(spark)
     a, b = _new_table(tmp_path, "a"), _new_table(tmp_path, "b")
     for i, chunk in enumerate(_event_chunks()):
         merge_batch(
             spark, a, spark.createDataFrame(chunk, schema=CDC_BASE_SCHEMA),
-            job_id="m", epoch_id=i, write_mode="mor", resolve="raw",
+            job_id="m", epoch_id=i, write_mode="mor",
         )
         (
             spark.createDataFrame(chunk.drop(columns=["op"]))

@@ -203,6 +203,37 @@ def test_update_where_fenced_idempotent(spark, tmp_path):
     assert r2.get("skipped")
 
 
+def test_unfenced_dml_applies_every_call(spark, tmp_path):
+    """Without ``epoch_id`` update_where and merge_into are unfenced: a
+    second call applies like the first instead of being taken for a
+    re-delivery, and an empty unfenced batch publishes no snapshot."""
+    from etlframwork_spark.merge import merge_into, update_where
+
+    t = _mk(tmp_path)
+    _merge(spark, t, [(f"k{i}", i, None, i, "insert") for i in range(10)], 0)
+    update_where(spark, t, {"note": "low"}, "v < 3", new_order=100)
+    r = update_where(spark, t, {"note": "high"}, "v >= 7", new_order=200)
+    assert not r.get("skipped") and r["events"] == 3
+    t.refresh()
+    notes = {row["k"]: row["note"] for row in t.read(spark).collect()}
+    assert notes == {
+        f"k{i}": "low" if i < 3 else "high" if i >= 7 else None for i in range(10)
+    }
+
+    src = StructType([StructField("k", StringType()), StructField("v", LongType())])
+    merge_into(spark, t, spark.createDataFrame([("k4", 40)], src), new_order=300)
+    r = merge_into(spark, t, spark.createDataFrame([("k5", 50)], src), new_order=300)
+    assert not r.get("skipped") and r["events"] == 1
+    t.refresh()
+    got = {row["k"]: row["v"] for row in t.read(spark).collect()}
+    assert (got["k4"], got["k5"]) == (40, 50)
+
+    sid = t.snapshot()["snapshot_id"]
+    r = update_where(spark, t, {"note": "none"}, "v > 1000", new_order=400)
+    assert r["events"] == 0 and r["snapshot_id"] is None
+    assert t.refresh().snapshot()["snapshot_id"] == sid
+
+
 def test_update_where_rejects_protected_and_unknown(spark, tmp_path):
     from etlframwork_spark.merge import update_where
 
@@ -291,9 +322,9 @@ def test_tie_semantics_identical_across_strategies(spark, tmp_path):
     """Delete-beats-live at exact order ties, uniformly: the same event
     history — containing in-batch ties, cross-epoch ties against stored
     rows, and a stale re-delivery against a tombstone — must produce the
-    IDENTICAL final state through every resolve strategy and write mode
-    (maxby/sorted_merge cow, maxby/raw mor). The table has no
-    commit column, so order = lsn alone and the ties are exact."""
+    IDENTICAL final state through both write modes (cow resolves against
+    stored rows, mor defers that to the read). The table has no commit
+    column, so order = lsn alone and the ties are exact."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     schema = StructType(
@@ -317,16 +348,16 @@ def test_tie_semantics_identical_across_strategies(spark, tmp_path):
         ("k1", 111, 200, "insert"),   # genuinely newer: re-inserts
     ]
 
-    def run(name, resolve, write_mode):
+    def run(write_mode):
         from etlframwork_spark.table import SnapshotTable as ST
 
         t = ST.create(
-            str(tmp_path / name), schema, key_cols=["k"], order_col="lsn", num_buckets=4
+            str(tmp_path / write_mode), schema, key_cols=["k"], order_col="lsn", num_buckets=4
         )
         for e, batch in enumerate((epoch0, epoch1, epoch2)):
             merge_batch(
                 spark, t, spark.createDataFrame(batch, ev),
-                job_id=name, epoch_id=e, resolve=resolve, write_mode=write_mode,
+                job_id=write_mode, epoch_id=e, write_mode=write_mode,
             )
         t.refresh()
         return {(r["k"], r["v"], r["lsn"]) for r in t.read(spark).collect()}
@@ -335,11 +366,6 @@ def test_tie_semantics_identical_across_strategies(spark, tmp_path):
         {("k1", 111, 200)}
         | {(f"k{i}", i, 10 + i) for i in range(4, 8)}
     )
-    states = {
-        "maxby_cow": run("maxby_cow", "maxby", "cow"),
-        "sorted_merge_cow": run("sorted_merge_cow", "sorted_merge", "cow"),
-        "maxby_mor": run("maxby_mor", "maxby", "mor"),
-        "raw_mor": run("raw_mor", "raw", "mor"),
-    }
-    for name, got in states.items():
+    for name in ("cow", "mor"):
+        got = run(name)
         assert got == expected, f"{name}: {sorted(got)} != {sorted(expected)}"

@@ -111,7 +111,7 @@ def test_drop_then_readd_does_not_resurrect(spark, tmp_path):
         ]
     )
     df = spark.createDataFrame([("k100", 100, 100, "fresh", "insert")], ev2)
-    merge_batch(spark, t, df, job_id="evo", epoch_id=1, write_mode="mor", resolve="raw")
+    merge_batch(spark, t, df, job_id="evo", epoch_id=1, write_mode="mor")
     t.refresh()
     got = {r["k"]: r["note"] for r in t.read(spark).collect()}
     assert got["k100"] == "fresh"
@@ -139,7 +139,7 @@ def test_dsv2_read_parity_after_rename(spark, tmp_path):
     df = spark.createDataFrame(
         [(f"k{i}", i * 100, 1000 + i, "update") for i in range(5)], ev2
     )
-    merge_batch(spark, t, df, job_id="evo", epoch_id=1, write_mode="mor", resolve="raw")
+    merge_batch(spark, t, df, job_id="evo", epoch_id=1, write_mode="mor")
     t.refresh()
     native = _rows(t.read(spark))
     dsv2 = spark.read.format("snapshot_table").option("root", t.root).load()

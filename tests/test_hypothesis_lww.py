@@ -68,7 +68,7 @@ def test_engine_matches_oracle_on_arbitrary_histories(spark_session_holder, even
         f"{tmp_root}/t{counter[0]}", TARGET_BASE_SCHEMA, key_cols=["repo", "path"], order_col="lsn", num_buckets=2
     )
     batch = spark.createDataFrame(pd.DataFrame(rows), schema=CDC_BASE_SCHEMA)
-    merge_batch(spark, table, batch, epoch_id=0, resolve="maxby")
+    merge_batch(spark, table, batch, epoch_id=0)
     got = {(r["repo"], r["path"]): r["content"] for r in table.read(spark).collect()}
     assert got == _oracle(rows)
     for r in table.read(spark).collect():

@@ -198,3 +198,18 @@ def test_metadata_is_published_only_by_the_transaction():
     )
     assert publishes == [("table.py", "_transact")], publishes
     assert handlers == [("table.py", "_transact")], handlers
+
+
+# LWW has one spelling, table.lww_resolve: the (lsn, commit) order, the
+# delete-beats-live tie-break (LWW_PRI) and the max_by over them. A
+# max_by or LWW_PRI elsewhere is a second copy of the rule; an
+# applyInPandas fold in the merge or the table is a per-key Python
+# crossing on the write path.
+def test_lww_resolve_has_one_spelling():
+    problems = []
+    for rel, src in _engine_sources():
+        if rel != "table.py":
+            problems += [f"{rel}: {w}" for w in ("max_by(", "LWW_PRI") if w in src]
+        if rel in ("merge.py", "table.py") and "applyInPandas" in src:
+            problems.append(f"{rel}: applyInPandas")
+    assert not problems, problems

@@ -1,8 +1,7 @@
 """MERGE/upsert correctness vs the sequential oracle (SURVEY.md §5.1/§5.3).
 
-Both resolution strategies (maxby / sorted_merge) must produce the
-identical final state; per-row sha256(content) equality vs the oracle is
-the BASELINE.json:15 invariant.
+Per-row sha256(content) equality vs the oracle is the BASELINE.json:15
+invariant.
 """
 
 from __future__ import annotations
@@ -43,21 +42,19 @@ def _assert_state_equal(spark, table, oracle_state):
             assert got["lang"] == expect["lang"], k
 
 
-@pytest.mark.parametrize("resolve", ["maxby", "sorted_merge"])
-def test_merge_single_batch_matches_oracle(spark, tmp_path, resolve):
+def test_merge_single_batch_matches_oracle(spark, tmp_path):
     spec = EventLogSpec(seed=7, n_events=2000, n_repos=20, paths_per_repo=10, p_delete=0.1)
     pdf = _make_events_frame(spec)
     oracle = apply_oracle(pdf)
     table = _mk_table(tmp_path)
     batch = spark.createDataFrame(pdf.drop(columns=["lang"]), schema=CDC_BASE_SCHEMA)
-    summary = merge_batch(spark, table, batch, job_id="j", epoch_id=0, resolve=resolve)
+    summary = merge_batch(spark, table, batch, job_id="j", epoch_id=0)
     assert summary["events"] == 2000
     oracle_nolang = {k: dict(v, lang=None) for k, v in oracle.items()}
     _assert_state_equal(spark, table, oracle_nolang)
 
 
-@pytest.mark.parametrize("resolve", ["maxby", "sorted_merge"])
-def test_merge_multi_batch_out_of_order(spark, tmp_path, resolve):
+def test_merge_multi_batch_out_of_order(spark, tmp_path):
     """Events split across epochs in a NON-lsn order; a late lower-LSN
     update must never clobber the stored higher-LSN row (T4)."""
     spec = EventLogSpec(seed=11, n_events=3000, n_repos=15, paths_per_repo=8, p_delete=0.15, shuffle_window=500)
@@ -73,7 +70,6 @@ def test_merge_multi_batch_out_of_order(spark, tmp_path, resolve):
             spark.createDataFrame(chunk.drop(columns=["lang"]), schema=CDC_BASE_SCHEMA),
             job_id="j",
             epoch_id=e,
-            resolve=resolve,
         )
     _assert_state_equal(spark, table, oracle)
 
@@ -188,13 +184,13 @@ def test_empty_single_pass_epoch_leaves_no_orphan_dir(tmp_path, spark):
         order_col="lsn", num_buckets=4,
     )
     empty = spark.createDataFrame([], CDC_BASE_SCHEMA)
-    out = merge_batch(spark, table, empty, job_id="e", epoch_id=0, write_mode="mor", resolve="raw")
+    out = merge_batch(spark, table, empty, job_id="e", epoch_id=0, write_mode="mor")
     assert out["events"] == 0 and out["snapshot_id"] is not None
     data_root = os.path.join(table.root, "data")
     leftovers = [d for d in os.listdir(data_root) if d.startswith("snap-")]
     assert leftovers == [], f"orphan data dirs from empty epoch: {leftovers}"
     # re-delivery of the empty epoch stays a fenced no-op
-    again = merge_batch(spark, table, empty, job_id="e", epoch_id=0, write_mode="mor", resolve="raw")
+    again = merge_batch(spark, table, empty, job_id="e", epoch_id=0, write_mode="mor")
     assert again.get("skipped")
 
 

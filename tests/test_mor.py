@@ -126,9 +126,9 @@ def test_streaming_mor_with_autocompact_and_resume(spark, tmp_path):
 
 
 def test_mor_raw_append_matches_oracle_and_compacts(spark, tmp_path):
-    """resolve='raw' (no batch dedup — every event a delta row, exactly one
-    payload shuffle per epoch) must still resolve to the oracle state at
-    read time and through compaction."""
+    """The raw log — re-delivered duplicates, arrival shuffled within a
+    400-event window — appended as mor epochs must resolve to the oracle
+    state at read time and through compaction."""
     spec = EventLogSpec(
         seed=45, n_events=3000, n_repos=15, paths_per_repo=8, p_delete=0.15,
         duplicate_ratio=0.1, shuffle_window=400,
@@ -138,18 +138,8 @@ def test_mor_raw_append_matches_oracle_and_compacts(spark, tmp_path):
     raw = _mk(tmp_path, "raw")
     for e, lo in enumerate(range(0, len(pdf), 1000)):
         chunk = spark.createDataFrame(pdf.iloc[lo : lo + 1000], schema=CDC_BASE_SCHEMA)
-        merge_batch(spark, raw, chunk, epoch_id=e, write_mode="mor", resolve="raw")
+        merge_batch(spark, raw, chunk, epoch_id=e, write_mode="mor")
     assert _digests(spark, raw) == want
     compact_buckets(spark, raw, min_deltas=1)
     assert not raw.has_deltas()
     assert _digests(spark, raw) == want
-
-
-def test_raw_resolve_requires_mor(spark, tmp_path):
-    import pandas as pd
-    import pytest
-
-    table = _mk(tmp_path, "t2")
-    ins = pd.DataFrame([{"op": "insert", "lsn": 1, "repo": "r", "path": "p", "commit": "c", "content": "v"}])
-    with pytest.raises(ValueError, match="raw"):
-        merge_batch(spark, table, spark.createDataFrame(ins, schema=CDC_BASE_SCHEMA), write_mode="cow", resolve="raw")

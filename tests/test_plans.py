@@ -50,12 +50,12 @@ def test_lww_maxby_has_partial_aggregation(spark):
     this IS the first line of skew defense at 10^10 events."""
     from etlframwork_spark.table import lww_resolve
 
-    df = spark.createDataFrame(
-        [("r", "p", 1, "c", "x")], ["repo", "path", "lsn", "commit", "content"]
-    )
-    resolved = lww_resolve(df, ["repo", "path"], ["repo", "path", "lsn", "commit", "content"], ["lsn", "commit"])
+    cols = ["repo", "path", "lsn", "commit", "content", "_deleted"]
+    df = spark.createDataFrame([("r", "p", 1, "c", "x", False)], cols)
+    resolved = lww_resolve(df, ["repo", "path"], cols, "lsn")
     p = _plan(resolved)
     assert "partial_max_by" in p
+    assert resolved.columns == cols  # the tie-break column stays internal
 
 
 def test_topk_plans_take_ordered_no_global_sort(spark, sf_dir):

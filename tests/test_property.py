@@ -2,8 +2,8 @@
 
 - order-independence: ANY arrival permutation of the same logical event
   history replays to the same final state (LWW by total (lsn, commit));
-- skew: heavily hot-keyed logs produce identical state through both
-  resolution strategies, including the salted sorted-merge path.
+- skew: a heavily hot-keyed log replays to the oracle state through both
+  write modes (the map-side partial max_by defuses the hot repo).
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ def _digests(spark, table):
     return {(r["repo"], r["path"]): r["content_sha256"] for r in rows}
 
 
-def _replay(spark, tmp_path, pdf, name, resolve="maxby", epochs=3, num_buckets=4):
+def _replay(spark, tmp_path, pdf, name, write_mode="cow", epochs=3, num_buckets=4):
     from etlframwork_spark.events import TARGET_BASE_SCHEMA
 
     table = SnapshotTable.create(
@@ -43,7 +43,7 @@ def _replay(spark, tmp_path, pdf, name, resolve="maxby", epochs=3, num_buckets=4
             spark.createDataFrame(chunk, schema=CDC_BASE_SCHEMA),
             job_id=name,
             epoch_id=e,
-            resolve=resolve,
+            write_mode=write_mode,
         )
     return _digests(spark, table)
 
@@ -60,16 +60,15 @@ def test_arrival_order_independence(spark, tmp_path, perm_seed):
 
 
 def test_skewed_log_both_strategies_identical(spark, tmp_path):
-    """90% of events on one hot repo: maxby (map-side partial agg) and
-    sorted_merge (salted pre-reduce + applyInPandas) must agree with the
-    oracle and each other."""
+    """90% of events on one hot repo: the LWW resolve (map-side partial
+    max_by) must reach the oracle state under both write modes — cow
+    resolves each epoch against stored rows, mor defers that to the
+    read."""
     spec = EventLogSpec(seed=23, n_events=4000, n_repos=100, paths_per_repo=10, hot_ratio=0.9, p_delete=0.1)
     pdf = _make_events_frame(spec).drop(columns=["lang"])
     want = oracle_digests(apply_oracle(pdf.assign(lang=None)))
-    got_maxby = _replay(spark, tmp_path, pdf, "skew_maxby", resolve="maxby")
-    got_sm = _replay(spark, tmp_path, pdf, "skew_sm", resolve="sorted_merge")
-    assert got_maxby == want
-    assert got_sm == want
+    assert _replay(spark, tmp_path, pdf, "skew_cow", write_mode="cow") == want
+    assert _replay(spark, tmp_path, pdf, "skew_mor", write_mode="mor") == want
     # hot repo really is hot (skew reached the merge path)
     hot = sum(1 for (repo, _p) in want if repo == "org0/repo0")
     assert hot >= 8

@@ -81,7 +81,7 @@ def _soak(spark, tmp_path, n_epochs):
         mode = "mor" if epoch % 3 else "cow"  # mixed write modes
         out = merge_batch(
             spark, table, batch, job_id="soak", epoch_id=epoch,
-            write_mode=mode, resolve="raw" if mode == "mor" else "maxby",
+            write_mode=mode,
         )
         assert not out.get("skipped"), f"epoch {epoch} unexpectedly fenced"
         committed_lsn = int(chunk["lsn"].max())
@@ -90,7 +90,7 @@ def _soak(spark, tmp_path, n_epochs):
             old = pdf.iloc[(epoch - 5) * EVENTS_PER_EPOCH:(epoch - 4) * EVENTS_PER_EPOCH]
             dup = merge_batch(
                 spark, table, spark.createDataFrame(old, schema=CDC_BASE_SCHEMA),
-                job_id="soak", epoch_id=epoch - 5, write_mode="mor", resolve="raw",
+                job_id="soak", epoch_id=epoch - 5, write_mode="mor",
             )
             assert dup.get("skipped") is True, f"duplicate epoch {epoch-5} applied twice"
         if epoch % 7 == 6:

@@ -162,6 +162,46 @@ def test_mor_epoch_racing_rebucket_conflicts(spark, tmp_path):
         assert _rows(spark, table, filters=pinned) == {(repo, path): expect[(repo, path)]}
 
 
+def test_stream_survives_a_rebucket_racing_an_epoch(spark, tmp_path):
+    """A running stream whose epoch loses its commit to a concurrent
+    rebucket recomputes the epoch from fresh state instead of dying on
+    CommitConflict, and ends in the sequential oracle's state."""
+    from etlframwork_spark.events import (
+        apply_oracle,
+        generate_event_log,
+        oracle_digests,
+        read_log_pandas,
+    )
+    from etlframwork_spark.streaming import IngestJob, run_ingest
+
+    events_dir = str(tmp_path / "events")
+    generate_event_log(
+        events_dir,
+        EventLogSpec(seed=29, n_events=1500, n_repos=10, paths_per_repo=10, p_delete=0.1, n_files=4),
+    )
+    job = IngestJob(
+        job_id="race",
+        events_dir=events_dir,
+        table_root=str(tmp_path / "table"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        num_buckets=4,
+        max_files_per_trigger=2,
+        write_mode="mor",
+    )
+    raced = []
+
+    def hook(stage):
+        if stage == "pre_commit" and not raced:
+            raced.append(rebucket(spark, SnapshotTable.load(job.table_root), 8))
+
+    table = run_ingest(spark, job, fault_injector=hook)
+    assert raced and raced[0]["rebucketed"]
+    assert table.num_buckets == 8
+    rows = table.read(spark).select("repo", "path", "content_sha256").collect()
+    got = {(r["repo"], r["path"]): r["content_sha256"] for r in rows}
+    assert got == oracle_digests(apply_oracle(read_log_pandas(events_dir)))
+
+
 def test_compaction_racing_rename_keeps_column_values(spark, tmp_path, monkeypatch):
     """A rename publishing between a compaction's write and its commit:
     the compacted files carry the OLD column name, so they must be
