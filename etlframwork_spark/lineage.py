@@ -5,8 +5,9 @@ target snapshot id -> row counts/bytes) and throughput metrics are emitted
 to a metrics table."
 
 Lineage granularity is the table partition (= bucket) and data file; counts
-/ bytes / lsn ranges come from parquet footers (driver-side, O(#files) —
-no extra Spark job, SURVEY.md §4.3 "only manifests cross the driver").
+and order-column ranges come from the parquet footer stats the commit
+already recorded, bytes from the file size (driver-side, O(#files) — no
+extra Spark job, SURVEY.md §4.3 "only manifests cross the driver").
 Each epoch appends one small parquet file per metrics table; the metrics
 tables are themselves plain parquet directories readable by any engine.
 """
@@ -19,6 +20,8 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from .table import SnapshotTable
 
 LINEAGE_SCHEMA = pa.schema(
     [
@@ -89,26 +92,6 @@ def shuffle_totals(spark) -> dict[str, int] | None:
     }
 
 
-def file_stats(path: str, lsn_col: str = "lsn") -> tuple[int, int, int | None, int | None]:
-    """(rows, bytes, min_lsn, max_lsn) from a parquet footer — no data read."""
-    md = pq.ParquetFile(path).metadata
-    rows = md.num_rows
-    nbytes = os.path.getsize(path)
-    lo = hi = None
-    try:
-        idx = md.schema.to_arrow_schema().get_field_index(lsn_col)
-    except (KeyError, ValueError):
-        idx = -1
-    if idx >= 0:
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(idx)
-            st = col.statistics
-            if st is not None and st.has_min_max:
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-    return rows, nbytes, lo, hi
-
-
 def _append(dir_path: str, schema: pa.Schema, rows: list[dict]) -> None:
     if not rows:
         return
@@ -135,22 +118,28 @@ class MetricsTable:
         files_by_bucket: dict[int, list[str]],
         src_min_lsn: int | None,
         src_max_lsn: int | None,
-        table_root: str,
+        table: SnapshotTable,
     ) -> list[dict]:
+        """One lineage row per file the epoch committed. Rows and the
+        order column's bounds come from the footer stats ``commit``
+        recorded (``meta['file_stats']``); bytes from the file size."""
         now = int(time.time() * 1_000_000)
+        fstats = table.meta.get("file_stats", {})
         rows = []
         for bucket, files in sorted(files_by_bucket.items()):
             for f in files:
-                nrows, nbytes, lo, hi = file_stats(f)
+                rel = os.path.relpath(f, table.root)
+                st = fstats.get(rel, {})
+                lo, hi = st.get("cols", {}).get(table.order_col, (None, None))
                 rows.append(
                     {
                         "job_id": job_id,
                         "epoch_id": epoch_id,
                         "snapshot_id": snapshot_id,
                         "bucket": bucket,
-                        "file": os.path.relpath(f, table_root),
-                        "rows": nrows,
-                        "bytes": nbytes,
+                        "file": rel,
+                        "rows": st.get("rows"),
+                        "bytes": os.path.getsize(f),
                         "min_lsn": lo,
                         "max_lsn": hi,
                         "src_min_lsn": src_min_lsn,

@@ -1,4 +1,5 @@
-"""Table maintenance: tombstone purge + snapshot/file GC.
+"""Table maintenance: tombstone purge, compaction, rebucketing and
+snapshot/file GC.
 
 At 10^10-event scale delete tombstones accrue without bound. A tombstone
 is only needed while a LOWER-lsn event for its key could still be
@@ -7,6 +8,11 @@ source offset below ``watermark_lsn`` is fully committed, tombstones with
 ``lsn < watermark_lsn`` are dead weight and can be dropped by a
 copy-on-write rewrite. Snapshot expiry + vacuum then reclaim the old
 files (table.py).
+
+Purge, compaction and rebucketing are each one ``SnapshotTable.rewrite``:
+pick the buckets on fresh state, read them with tombstones at a pinned
+snapshot, rewrite them key-sorted and commit validated from the pin,
+recomputing on CommitConflict.
 """
 
 from __future__ import annotations
@@ -14,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .table import TOMBSTONE_COL, SnapshotTable, recompute_on_conflict
+from .table import TOMBSTONE_COL, SnapshotTable
 
 
 def purge_tombstones(
@@ -26,29 +32,17 @@ def purge_tombstones(
     guarantees no re-delivery below ``watermark_lsn``. Racing a concurrent
     writer to the same buckets fails the commit (CommitConflict) and the
     rewrite is recomputed from fresh state."""
-    return recompute_on_conflict(_purge_once, spark, table, watermark_lsn)
-
-
-def _purge_once(spark: SparkSession, table: SnapshotTable, watermark_lsn: int) -> dict:
-    table.refresh()
-    read_snapshot = table.snapshot()["snapshot_id"]
     purgeable = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) & (
         F.col(table.order_col) < F.lit(watermark_lsn)
     )
-    hit = table.bucket_counts(table.read(spark, include_tombstones=True).filter(purgeable))
-    if not hit:
-        return {"buckets_rewritten": 0, "tombstones_purged": 0}
-    n_purged = sum(hit.values())
-    # sorted like compaction: the rewrite already pays the shuffle, and
-    # sorting keeps per-file key bounds tight for stats.py file skipping
-    table.rewrite_buckets(
-        table.read(spark, buckets=hit, include_tombstones=True).filter(~purgeable),
-        hit,
-        {"operation": "purge_tombstones", "watermark_lsn": watermark_lsn, "purged": n_purged},
-        key_sort=True,
-        validate_from_snapshot=read_snapshot,
+    hit, _, _ = table.rewrite(
+        spark,
+        lambda: table.bucket_counts(table.read(spark, include_tombstones=True).filter(purgeable)),
+        lambda df: df.filter(~purgeable),
+        lambda hit: {"operation": "purge_tombstones", "watermark_lsn": watermark_lsn,
+                     "purged": sum(hit.values())},
     )
-    return {"buckets_rewritten": len(hit), "tombstones_purged": n_purged}
+    return {"buckets_rewritten": len(hit), "tombstones_purged": sum(hit.values())}
 
 
 def compact_buckets(
@@ -80,31 +74,15 @@ def compact_buckets(
     With ``max_records_per_file=None`` each bucket stays one file and
     sorting costs one in-task sort.
     """
-    return recompute_on_conflict(_compact_once, spark, table, min_deltas, max_records_per_file)
-
-
-def _compact_once(
-    spark: SparkSession,
-    table: SnapshotTable,
-    min_deltas: int,
-    max_records_per_file: int | None = None,
-) -> dict:
-    table.refresh()
-    read_snapshot = table.snapshot()["snapshot_id"]
-    counts = table.delta_file_counts()
-    buckets = sorted(b for b, n in counts.items() if n >= min_deltas)
-    if not buckets:
-        return {"buckets_compacted": 0, "delta_files_folded": 0}
-    folded = sum(counts[b] for b in buckets)
-    table.rewrite_buckets(
-        table.read(spark, buckets=buckets, include_tombstones=True),
-        buckets,
-        {"operation": "compact", "buckets": len(buckets), "delta_files_folded": folded},
-        key_sort=True,
+    folded, _, _ = table.rewrite(
+        spark,
+        lambda: {b: n for b, n in table.delta_file_counts().items() if n >= min_deltas},
+        lambda df: df,
+        lambda folded: {"operation": "compact", "buckets": len(folded),
+                        "delta_files_folded": sum(folded.values())},
         max_records_per_file=max_records_per_file,
-        validate_from_snapshot=read_snapshot,
     )
-    return {"buckets_compacted": len(buckets), "delta_files_folded": folded}
+    return {"buckets_compacted": len(folded), "delta_files_folded": sum(folded.values())}
 
 
 def rebucket(
@@ -131,46 +109,33 @@ def rebucket(
     separate watermark-gated op). Racing a concurrent writer fails the
     commit (CommitConflict) and the rewrite recomputes from fresh state.
     """
-    if int(new_num_buckets) < 1:
+    new_num_buckets = int(new_num_buckets)
+    if new_num_buckets < 1:
         raise ValueError(f"new_num_buckets must be >= 1, got {new_num_buckets}")
-    return recompute_on_conflict(
-        _rebucket_once, spark, table, int(new_num_buckets), max_records_per_file
-    )
 
+    def pick() -> dict[int, int]:
+        # every bucket id of both specs: reading them reads every row, and
+        # the commit replaces and validates them all, so a concurrent write
+        # to an old bucket empty at the pin is a CommitConflict too. Each
+        # new bucket maps wholly to one write task, one file per bucket
+        # (bar maxRecordsPerFile splits).
+        if new_num_buckets == table.num_buckets:
+            return {}
+        return dict.fromkeys(range(max(table.num_buckets, new_num_buckets)), 0)
 
-def _rebucket_once(
-    spark: SparkSession,
-    table: SnapshotTable,
-    new_num_buckets: int,
-    max_records_per_file: int | None,
-) -> dict:
-    table.refresh()
-    if new_num_buckets == table.num_buckets:
-        return {"rebucketed": False, "num_buckets": new_num_buckets}
-    snap = table.snapshot()
-    old_buckets = {int(b) for b in snap["files"]} | {
-        int(b) for b, fs in snap.get("delta_files", {}).items() if fs
-    }
-    # the commit replaces every bucket of both specs; each new bucket maps
-    # wholly to one task, one file per bucket (bar maxRecordsPerFile splits)
-    _, files_by_bucket = table.rewrite_buckets(
-        table.read(spark, include_tombstones=True),
-        old_buckets | set(range(new_num_buckets)),
-        {
-            "operation": "rebucket",
-            "from_buckets": len(old_buckets),
-            "num_buckets": new_num_buckets,
-        },
-        key_sort=True,
+    picked, _, files = table.rewrite(
+        spark,
+        pick,
+        lambda df: df,
+        lambda _: {"operation": "rebucket", "from_buckets": table.num_buckets,
+                   "num_buckets": new_num_buckets},
         max_records_per_file=max_records_per_file,
-        validate_from_snapshot=snap["snapshot_id"],
         new_num_buckets=new_num_buckets,
     )
-    return {
-        "rebucketed": True,
-        "num_buckets": new_num_buckets,
-        "files_written": sum(len(v) for v in files_by_bucket.values()),
-    }
+    out = {"rebucketed": bool(picked), "num_buckets": new_num_buckets}
+    if picked:
+        out["files_written"] = sum(len(v) for v in files.values())
+    return out
 
 
 def full_maintenance(

@@ -57,9 +57,8 @@ from .table import (
     TOMBSTONE_COL,
     SnapshotTable,
     bucket_expr,
-    lww_order_cols,
     lww_resolve,
-    recompute_on_conflict,
+    tombstone_where,
 )
 
 VALID_OPS = ("insert", "update", "delete")
@@ -274,29 +273,19 @@ def merge_batch(
     )
     resolved = lww_resolve(unioned, key_cols, all_cols + ["op"], order_col, is_del)
 
-    # winners: stored rows keep their sha; winning deletes become tombstones
-    # (payload nulled — only key + lsn are retained); new upserts get
-    # sha2(content) computed JVM-side.
-    final = resolved.withColumn(TOMBSTONE_COL, is_del)
+    # winners: stored rows keep their sha; new upserts get sha2(content)
+    # computed JVM-side; winning deletes become tombstones (payload and
+    # sha nulled, key + full ordering key retained).
+    final = resolved
     if SHA_COL in all_cols:
         # the per-row invariant column; tables declared without it (generic
         # keyed upsert, no content hash) simply skip this derivation
         final = final.withColumn(
             SHA_COL,
-            F.when(is_del, F.lit(None).cast("string"))
-            .when(F.col("op") == _STORED, F.col(SHA_COL))
+            F.when(F.col("op") == _STORED, F.col(SHA_COL))
             .otherwise(F.sha2(F.col("content"), 256) if "content" in all_cols else F.lit(None).cast("string")),
         )
-    # Tombstones must retain their FULL ordering key (lsn AND the commit
-    # tiebreak): nulling 'commit' would let a future distinct event with the
-    # same lsn and any non-null commit beat the tombstone and resurrect the
-    # key, contradicting the (lsn, commit) total order.
-    kept = {*key_cols, *lww_order_cols(order_col, all_cols), TOMBSTONE_COL, SHA_COL}
-    payload_cols = [c for c in all_cols if c not in kept]
-    for c in payload_cols:
-        f = schema[c]
-        final = final.withColumn(c, F.when(is_del, F.lit(None).cast(f.dataType)).otherwise(F.col(c)))
-    final = final.drop("op")
+    final = tombstone_where(final, is_del, key_cols, order_col).drop("op")
 
     # -- 5. rewrite the affected buckets, fenced atomic commit --------------
     # Single-pass does not know the affected set before the write, so the
@@ -368,7 +357,7 @@ def merge_batch(
     timings["lineage"] = 0.0
     if metrics is not None:
         metrics.emit_lineage(
-            job_id, epoch_id, snap["snapshot_id"], files_by_bucket, st["lo"], st["hi"], table.root
+            job_id, epoch_id, snap["snapshot_id"], files_by_bucket, st["lo"], st["hi"], table
         )
         timings["lineage"] = round(time.monotonic() - t_l0, 2)
         metrics.emit_epoch(
@@ -404,9 +393,11 @@ def delete_where(
     """``DELETE FROM table WHERE predicate`` with CDC-correct semantics.
 
     Matching LIVE rows become delete TOMBSTONES (payload and content-sha
-    nulled; key + the FULL ordering key retained) via a copy-on-write
-    rewrite of only the affected buckets — the same commit shape as
-    ``maintenance.purge_tombstones``. Tombstoning instead of physical
+    nulled; key + the FULL ordering key retained, by the same
+    ``table.tombstone_where`` rule a merged delete follows) via a
+    copy-on-write rewrite of only the affected buckets: one
+    ``SnapshotTable.rewrite``, the read-and-rewrite cycle tombstone purge,
+    compaction and rebucketing also run. Tombstoning instead of physical
     removal keeps the table's replay invariants: a late/duplicate
     re-delivery of any event at-or-below the row's (lsn, commit) order
     cannot resurrect the key, while a genuinely newer event re-inserts it
@@ -430,55 +421,29 @@ def delete_where(
     untouched buckets carry forward by reference. Racing writers fail the
     CAS commit and the delete recomputes from fresh state.
     """
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    return recompute_on_conflict(_delete_once, spark, table, pred, filters)
-
-
-def _delete_once(spark, table, pred, filters) -> dict:
     from .stats import filters_to_expr, validate_filters
 
-    table.refresh()
-    read_snapshot = table.snapshot()["snapshot_id"]
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     # table.read(filters=...) re-applies the filters as a row predicate, so
     # the find scan already counts pred AND filters; conjoin the same
-    # filters into the rewrite's delete condition below so both agree.
-    fexpr = filters_to_expr(validate_filters(filters)) if filters else None
-    if fexpr is not None:
-        pred = pred & fexpr
-    hit = table.bucket_counts(table.read(spark, filters=filters).filter(pred))
-    n_deleted = sum(hit.values())
-    if not hit:
-        return {"buckets_rewritten": 0, "rows_deleted": 0, "snapshot_id": read_snapshot}
-
-    schema = table.schema()
-    order_cols = lww_order_cols(table.order_col, schema.fieldNames())
-    keep_cols = set(table.key_cols) | set(order_cols) | {TOMBSTONE_COL}
-    # live row AND matches the predicate -> tombstone with nulled payload.
-    # Materialize the flag BEFORE touching TOMBSTONE_COL: the expression
-    # references _deleted, which the tombstone withColumn replaces.
-    is_live = ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-    full = table.read(spark, buckets=hit, include_tombstones=True)
-    out = full.withColumn(
-        "_to_del", is_live & F.coalesce(pred.cast("boolean"), F.lit(False))
-    ).withColumn(
-        TOMBSTONE_COL, F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) | F.col("_to_del")
-    )
-    for f in schema.fields:
-        if f.name not in keep_cols:
-            out = out.withColumn(
-                f.name,
-                F.when(F.col("_to_del"), F.lit(None).cast(f.dataType)).otherwise(F.col(f.name)),
-            )
-    snap, _ = table.rewrite_buckets(
-        out.drop("_to_del"),
-        hit,
-        {"operation": "delete_where", "rows_deleted": n_deleted},
-        key_sort=True,
-        validate_from_snapshot=read_snapshot,
+    # filters into the tombstone flag below so both agree.
+    if filters:
+        pred = pred & filters_to_expr(validate_filters(filters))
+    hit, snap, _ = table.rewrite(
+        spark,
+        lambda: table.bucket_counts(table.read(spark, filters=filters).filter(pred)),
+        # a matching row becomes a tombstone; a tombstone stays one
+        lambda df: tombstone_where(
+            df,
+            F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) | F.coalesce(pred.cast("boolean"), F.lit(False)),
+            table.key_cols,
+            table.order_col,
+        ),
+        lambda hit: {"operation": "delete_where", "rows_deleted": sum(hit.values())},
     )
     return {
         "buckets_rewritten": len(hit),
-        "rows_deleted": n_deleted,
+        "rows_deleted": sum(hit.values()),
         "snapshot_id": snap["snapshot_id"],
     }
 

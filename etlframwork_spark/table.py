@@ -176,6 +176,24 @@ def lww_resolve(
     return df.groupBy(*key_cols).agg(winner).select("_w.*")
 
 
+def tombstone_where(
+    df: DataFrame, flag: Column, key_cols: list[str], order_col: str
+) -> DataFrame:
+    """``df`` with ``TOMBSTONE_COL`` set to ``flag`` and every tombstone's
+    payload nulled. ``flag`` is evaluated on the input rows, so it may
+    read the old tombstone flag. A tombstone keeps its key, its FULL
+    ordering key (lsn AND the commit tiebreak: nulling ``commit`` would
+    let a future distinct event at the same lsn beat the tombstone and
+    resurrect the key) and the flag; every other column is nulled."""
+    df = df.withColumn(TOMBSTONE_COL, flag)
+    kept = {*key_cols, *lww_order_cols(order_col, df.columns), TOMBSTONE_COL}
+    return df.select(*[
+        F.col(f.name) if f.name in kept
+        else F.when(F.col(TOMBSTONE_COL), F.lit(None).cast(f.dataType)).otherwise(F.col(f.name)).alias(f.name)
+        for f in df.schema.fields
+    ])
+
+
 def bucket_expr(key_cols: list[str], num_buckets: int):
     """Deterministic bucket id for a row: xxhash64(key) mod B (JVM-side)."""
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
@@ -867,7 +885,7 @@ class SnapshotTable:
         spark: SparkSession,
         files: list[str],
         schema: StructType,
-        target_sid: int | None,
+        target_sid: int,
     ) -> DataFrame:
         """Read data files and project them onto ``schema``.
 
@@ -876,9 +894,7 @@ class SnapshotTable:
         recorded at commit time) and projected onto the target schema by
         stable field id — a renamed column's old files read back under
         the new name, a dropped column is omitted, an added column
-        back-fills null. Files with no recorded writer schema — or when
-        the caller supplied an explicit out-of-registry ``schema``
-        (``target_sid is None``, the mid-merge evolution path) — read by
+        back-fills null. Files with no recorded writer schema read by
         NAME with the target schema: the pre-evolution behavior, correct
         for any additive-only history because additive evolution never
         reuses or moves a name.
@@ -887,8 +903,6 @@ class SnapshotTable:
         versions costs S parquet scans (each a single multi-file scan
         Spark parallelizes), not one scan per file — the 100 TB shape.
         """
-        if target_sid is None:
-            return spark.read.schema(schema).parquet(*files)
         parts: list[DataFrame] = []
         for sid, grp in sorted(self.files_by_schema(files, target_sid).items()):
             if sid == target_sid:
@@ -915,7 +929,6 @@ class SnapshotTable:
         snapshot_id: int | None = None,
         buckets: Iterable[int] | None = None,
         schema_id: int | None = None,
-        schema: StructType | None = None,
         include_tombstones: bool = False,
         filters: list[tuple] | None = None,
         tag: str | None = None,
@@ -925,16 +938,13 @@ class SnapshotTable:
         Always reads with an explicit schema so files written before an
         additive evolution come back with nulls in new columns. By default
         that is the CURRENT registry schema (Iceberg read-with-current-
-        schema); ``schema`` overrides it (used mid-merge for an evolution
-        that is not yet committed). Delete tombstones are filtered out and
-        the hidden column dropped unless ``include_tombstones``.
+        schema). Delete tombstones are filtered out and the hidden column
+        dropped unless ``include_tombstones``.
         ``tag`` is name-based time travel (``set_tag``).
         """
         snapshot_id, pinned_sid = self.resolve_read(snapshot_id, tag)
-        target_sid: int | None = None
-        if schema is None:
-            target_sid = pinned_sid if schema_id is None else schema_id
-            schema = self.schema(target_sid)
+        target_sid = pinned_sid if schema_id is None else schema_id
+        schema = self.schema(target_sid)
         # merge-on-read: delta files may carry newer versions of keys in the
         # base (and each other) — resolve last-writer-wins at read time.
         # LWW is the same associative max the writer uses, so read(resolve)
@@ -1260,6 +1270,46 @@ class SnapshotTable:
         )
         return {r[BUCKET_COL]: r["count"] for r in hit}
 
+    def rewrite(
+        self,
+        spark: SparkSession,
+        pick: Callable[[], dict[int, int]],
+        rows: Callable[[DataFrame], DataFrame],
+        summary: Callable[[dict[int, int]], dict[str, Any]],
+        **rewrite_args: Any,
+    ) -> tuple[dict[int, int], dict[str, Any], dict[int, list[str]]]:
+        """Read some buckets at a pinned snapshot and rewrite them — the
+        one cycle behind ``delete_where``, tombstone purge, compaction and
+        rebucketing (Iceberg's ``validateFromSnapshot`` rewrite shape).
+
+        Each attempt refreshes, pins the current snapshot and calls
+        ``pick()`` on that fresh state; it returns ``{bucket: count}`` for
+        the buckets to rewrite, the counts being whatever the caller
+        reports (an empty pick publishes nothing). The picked buckets are
+        read with tombstones, ``rows`` maps them to their new rows, and
+        ``rewrite_buckets`` replaces them key-sorted, validated from the
+        pin, under the commit summary ``summary(picked)``. A
+        CommitConflict (a concurrent writer changed a picked bucket since
+        the pin) reruns the attempt from fresh state.
+        ``rewrite_args`` pass through to ``rewrite_buckets``.
+
+        Returns ``(picked, snapshot, written files)``; the snapshot is the
+        new one, or the pinned one when nothing was picked.
+        """
+
+        def attempt() -> tuple[dict[int, int], dict[str, Any], dict[int, list[str]]]:
+            pin = self.refresh().snapshot()
+            picked = pick()
+            if not picked:
+                return picked, pin, {}
+            snap, files = self.rewrite_buckets(
+                rows(self.read(spark, buckets=picked, include_tombstones=True)), picked, summary(picked),
+                key_sort=True, validate_from_snapshot=pin["snapshot_id"], **rewrite_args,
+            )
+            return picked, snap, files
+
+        return recompute_on_conflict(attempt)
+
     def rewrite_buckets(
         self,
         df: DataFrame,
@@ -1272,8 +1322,9 @@ class SnapshotTable:
         **commit_args: Any,
     ) -> tuple[dict[str, Any] | None, dict[int, list[str]]]:
         """Write ``df`` as new files for ``buckets`` and commit them — the
-        one move behind every table change: cow and mor epochs,
-        ``delete_where``, tombstone purge, compaction and rebucketing.
+        one move behind every table change: cow and mor epochs call it
+        directly; ``delete_where``, tombstone purge, compaction and
+        rebucketing call it through ``rewrite``.
 
         ``df`` holds table rows; each gets its ``BUCKET_COL`` under the
         spec being written (``new_num_buckets`` for a rebucket, else the

@@ -213,3 +213,24 @@ def test_lww_resolve_has_one_spelling():
         if rel in ("merge.py", "table.py") and "applyInPandas" in src:
             problems.append(f"{rel}: applyInPandas")
     assert not problems, problems
+
+
+# Outside table.py, the read-and-rewrite cycle has one caller per shape:
+# merge_batch's epochs call rewrite_buckets directly, every other bucket
+# rewrite goes through SnapshotTable.rewrite (which owns the pin, the
+# read and the CommitConflict recompute), and run_ingest recomputes its
+# epochs. Tombstones are written only by table.tombstone_where.
+_CYCLE_OWNED = [
+    ("recompute_on_conflict(", {os.path.join("streaming", "ingest.py")}),
+    ("rewrite_buckets(", {"merge.py"}),
+    ("withColumn(TOMBSTONE_COL", set()),
+]
+
+
+def test_rewrite_cycle_and_tombstone_rule_have_one_home():
+    problems = []
+    for rel, src in _engine_sources():
+        if rel == "table.py":
+            continue
+        problems += [f"{rel}: {what}" for what, homes in _CYCLE_OWNED if what in src and rel not in homes]
+    assert not problems, problems

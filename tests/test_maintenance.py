@@ -11,9 +11,10 @@ from etlframwork_spark.events import (
     apply_oracle,
     oracle_digests,
 )
-from etlframwork_spark.maintenance import full_maintenance, purge_tombstones
+from etlframwork_spark.hashing import bucket_of
+from etlframwork_spark.maintenance import full_maintenance, purge_tombstones, rebucket
 from etlframwork_spark.merge import merge_batch
-from etlframwork_spark.table import TOMBSTONE_COL, SnapshotTable
+from etlframwork_spark.table import TOMBSTONE_COL, CommitConflict, SnapshotTable
 
 
 def test_purge_tombstones_preserves_visible_state(spark, tmp_path):
@@ -67,9 +68,6 @@ def test_rebucket_mid_ingest_digest_and_pruning(spark, tmp_path):
     an uninterrupted B=16 run; key-equality pruning pins ONE bucket under
     the NEW spec; time travel to the pre-rebucket snapshot still reads
     correctly and pins under the OLD spec."""
-    from etlframwork_spark.maintenance import rebucket
-    from etlframwork_spark.hashing import bucket_of
-
     spec = EventLogSpec(seed=21, n_events=2400, n_repos=12, paths_per_repo=6, p_delete=0.15)
     pdf = _make_events_frame(spec).drop(columns=["lang"])
     chunks = [pdf.iloc[:800], pdf.iloc[800:1600], pdf.iloc[1600:]]
@@ -134,14 +132,29 @@ def test_rebucket_mid_ingest_digest_and_pruning(spark, tmp_path):
     assert len(parts_old) == 1 and parts_old[0].bucket == old_b
 
 
+def _race_first_commit(table, race):
+    """Run ``race()`` just before ``table``'s first commit; returns the
+    list that records each CommitConflict its commits raise."""
+    real_commit, raced, conflicts = table.commit, [], []
+
+    def racing_commit(*a, **kw):
+        if not raced:
+            raced.append(True)
+            race()
+        try:
+            return real_commit(*a, **kw)
+        except CommitConflict:
+            conflicts.append(True)
+            raise
+
+    table.commit = racing_commit
+    return conflicts
+
+
 def test_rebucket_conflicts_with_concurrent_writer(spark, tmp_path):
-    """A rebucket computed from stale state must fail the commit, not
-    silently drop a concurrent epoch's rows."""
-    import pytest
-
-    from etlframwork_spark.maintenance import _rebucket_once
-    from etlframwork_spark.table import CommitConflict
-
+    """A rebucket computed from stale state must fail its commit, not
+    silently drop a concurrent epoch's rows, and then recompute from
+    fresh state."""
     spec = EventLogSpec(seed=4, n_events=600, n_repos=8, paths_per_repo=5, p_delete=0.1)
     pdf = _make_events_frame(spec).drop(columns=["lang"])
     t = SnapshotTable.create(
@@ -149,30 +162,43 @@ def test_rebucket_conflicts_with_concurrent_writer(spark, tmp_path):
         order_col="lsn", num_buckets=4,
     )
     merge_batch(spark, t, spark.createDataFrame(pdf.iloc[:300], schema=CDC_BASE_SCHEMA), epoch_id=0)
-
-    real_commit = t.commit
-    raced = {"done": False}
-
-    def racing_commit(*a, **kw):
-        if not raced["done"]:
-            raced["done"] = True
-            other = SnapshotTable.load(t.root)
-            merge_batch(
-                spark, other, spark.createDataFrame(pdf.iloc[300:], schema=CDC_BASE_SCHEMA),
-                epoch_id=1, write_mode="mor",
-            )
-        return real_commit(*a, **kw)
-
-    t.commit = racing_commit
-    with pytest.raises(CommitConflict):
-        _rebucket_once(spark, t, 8, None)
-    t.commit = real_commit
-    # retry loop path succeeds and keeps the concurrent epoch's rows
-    from etlframwork_spark.maintenance import rebucket
-
-    rebucket(spark, t, 8)
+    conflicts = _race_first_commit(t, lambda: merge_batch(
+        spark, SnapshotTable.load(t.root), spark.createDataFrame(pdf.iloc[300:], schema=CDC_BASE_SCHEMA),
+        epoch_id=1, write_mode="mor",
+    ))
+    res = rebucket(spark, t, 8)
+    # the first commit lost to the racing epoch; the recompute won
+    assert len(conflicts) == 1
+    assert res["rebucketed"]
     t.refresh()
     assert t.num_buckets == 8
     want = oracle_digests(apply_oracle(pdf.assign(lang=None)))
     got = {(r["repo"], r["path"]): r["content_sha256"] for r in t.read(spark).collect()}
     assert got == want
+
+
+def test_shrinking_rebucket_recomputes_when_a_writer_fills_an_empty_bucket(spark, tmp_path):
+    """A rebucket to fewer buckets validates every bucket id of both
+    specs, so a concurrent epoch landing in an old bucket that was empty
+    at the pin is a CommitConflict the rebucket recomputes from, not an
+    error that stops it."""
+    keys = [f"k{i}" for i in range(64)]
+    low = next(k for k in keys if bucket_of([k], 8) < 4)
+    high = next(k for k in keys if bucket_of([k], 8) >= 4)
+    cols = "k string, lsn bigint, v string"
+    t = SnapshotTable.create(
+        str(tmp_path / "s"), spark.createDataFrame([], cols).schema, key_cols=["k"],
+        order_col="lsn", num_buckets=8,
+    )
+
+    def batch(k, lsn):
+        return spark.createDataFrame([(k, lsn, f"v{lsn}", "insert")], cols + ", op string")
+
+    merge_batch(spark, t, batch(low, 1), epoch_id=0)
+    conflicts = _race_first_commit(t, lambda: merge_batch(
+        spark, SnapshotTable.load(t.root), batch(high, 2), epoch_id=1, write_mode="mor"
+    ))
+    assert rebucket(spark, t, 4)["rebucketed"]
+    assert len(conflicts) == 1
+    assert t.refresh().num_buckets == 4
+    assert sorted((r["k"], r["lsn"]) for r in t.read(spark).collect()) == sorted([(low, 1), (high, 2)])

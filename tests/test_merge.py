@@ -210,3 +210,31 @@ def test_commit_summary_matches_manifest_on_disk(spark, tmp_path, mode):
     live = table.snapshot()["summary"]
     assert "commit" not in live["timings"]
     assert live == SnapshotTable.load(table.root).snapshot()["summary"]
+
+
+def test_lineage_bounds_follow_the_order_column(spark, tmp_path):
+    """Each lineage row carries its file's row count and bounds of the
+    table's order column, whatever that column is named."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from etlframwork_spark.lineage import MetricsTable
+
+    table = SnapshotTable.create(
+        str(tmp_path / "t"),
+        spark.createDataFrame([], "k string, seq bigint, v string").schema,
+        key_cols=["k"], order_col="seq", num_buckets=2,
+    )
+    batch = spark.createDataFrame(
+        [(f"k{i}", 100 + i, f"v{i}", "insert") for i in range(40)],
+        "k string, seq bigint, v string, op string",
+    )
+    metrics = MetricsTable(str(tmp_path / "metrics"))
+    merge_batch(spark, table, batch, epoch_id=0, metrics=metrics)
+    lineage = pq.read_table(metrics.lineage_dir).to_pylist()
+    assert len(lineage) == 2
+    for rec in lineage:
+        seqs = pq.read_table(os.path.join(table.root, rec["file"]), columns=["seq"])["seq"].to_pylist()
+        assert (rec["rows"], rec["min_lsn"], rec["max_lsn"]) == (len(seqs), min(seqs), max(seqs))
+        assert (rec["src_min_lsn"], rec["src_max_lsn"]) == (100, 139)

@@ -121,7 +121,7 @@ def _data_dirs(table):
     return on_disk, referenced
 
 
-@pytest.mark.parametrize("op", ["purge", "delete_where", "compact"])
+@pytest.mark.parametrize("op", ["purge", "delete_where", "compact", "rebucket"])
 def test_conflict_loser_leaves_no_data_dir(spark, tmp_path, op):
     """The first commit races a concurrent mor epoch over the same
     buckets, so it raises CommitConflict and the operation recomputes.
