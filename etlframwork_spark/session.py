@@ -62,9 +62,6 @@ def build_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # Python DataSource filter pushdown (bucket pruning in the
-        # snapshot_table source) is opt-in in Spark 4.1
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # scan splits: aim for ~3 splits per core so a wave of scan tasks
         # can't leave cores idle behind stragglers (splits are bounded
         # below by openCostInBytes, so tiny tables don't shatter). With

@@ -541,14 +541,6 @@ class SnapshotTable:
                 return {n: i for i, n in enumerate(names)}
         raise KeyError(f"schema_id {sid} not found")
 
-    def source_names(self, written_sid: int, target_sid: int) -> dict[str, str]:
-        """``{target column -> its name in a file written under
-        written_sid}``, matched by stable field id. A target column the
-        written schema lacks is absent (it reads back as null), and a name
-        dropped and then re-added never matches the old bytes."""
-        by_id = {i: n for n, i in self.field_ids(written_sid).items()}
-        return {n: by_id[i] for n, i in self.field_ids(target_sid).items() if i in by_id}
-
     def _fresh_field_id(self) -> int:
         used = [-1]
         for s in self.meta["schemas"]:
@@ -561,14 +553,6 @@ class SnapshotTable:
             if s["schema_id"] == sid:
                 return StructType.fromJson(s["struct"])
         raise KeyError(f"schema_id {sid} not found")
-
-    def spec_only(self) -> "SnapshotTable":
-        """This handle's write spec alone: key/order columns, bucket count
-        and schemas, without the snapshot and file lists. Small enough to
-        ship inside a Spark writer; ``commit`` on it records the files
-        under this spec and loads the rest."""
-        keep = ("key_cols", "order_col", "num_buckets", "schemas", "current_schema_id")
-        return SnapshotTable(self.root, {k: self.meta[k] for k in keep}, self.version)
 
     @property
     def key_cols(self) -> list[str]:
@@ -725,22 +709,6 @@ class SnapshotTable:
                 return s
         raise KeyError(f"snapshot {sid} not found")
 
-    def resolve_read(
-        self, snapshot_id: int | None = None, tag: str | None = None
-    ) -> tuple[int | None, int]:
-        """The ``(snapshot_id, schema_id)`` a read targets. A ``tag`` or an
-        explicit ``snapshot_id`` pins that snapshot, read under its OWN
-        schema (Iceberg time travel); a plain read is ``(None, current
-        schema)``, i.e. the current snapshot."""
-        if tag is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id or tag, not both")
-            snapshot_id = self.resolve_tag(tag)
-        if snapshot_id is None:
-            return None, self.meta["current_schema_id"]
-        schema_id = self.snapshot(snapshot_id).get("schema_id", self.meta["current_schema_id"])
-        return snapshot_id, schema_id
-
     def files_for(
         self,
         buckets: Iterable[int] | None = None,
@@ -798,17 +766,16 @@ class SnapshotTable:
         snap = self.snapshot(snapshot_id)
         return {int(b): len(fs) for b, fs in snap.get("delta_files", {}).items() if fs}
 
-    def plan_buckets(
+    def scan_files(
         self,
         filters: list[tuple] | None = None,
         buckets: Iterable[int] | None = None,
         snapshot_id: int | None = None,
-    ) -> list[tuple[int, list[str], list[str]]]:
-        """Plan a filtered scan bucket by bucket: ``(bucket, base_files,
-        delta_files)`` in absolute paths, in bucket order, for every
-        bucket the read must touch. A bucket with delta files is dirty: it
-        needs the read-time LWW resolve. ``read`` and the ``snapshot_table``
-        source both scan exactly this plan.
+    ) -> tuple[list[str], list[str]]:
+        """Plan a filtered scan: the ``(clean_files, dirty_files)`` sets, in
+        absolute paths and bucket order, that ``read(filters=...)`` hands
+        to Spark. A bucket with delta files is dirty: its base and delta
+        files all need the read-time LWW resolve.
 
         Three pruning layers, each a pure optimization (the caller
         re-applies the predicate on the DataFrame):
@@ -844,41 +811,16 @@ class SnapshotTable:
                 buckets = [bucket_of([eq[k] for k in self.key_cols], nb)]
         clean_b, dirty_b = self._split_buckets_for_read(buckets, snapshot_id)
         fstats = self.meta.get("file_stats", {})
-        plan = []
+        clean: list[str] = []
+        dirty: list[str] = []
         for b in sorted(clean_b | dirty_b):
             base = snap["files"].get(str(b), [])
             delta = snap.get("delta_files", {}).get(str(b), [])
-            if not delta:
-                base = prune_files(fstats, base, filters)
-            plan.append((
-                b,
-                [os.path.join(self.root, f) for f in base],
-                [os.path.join(self.root, f) for f in delta],
-            ))
-        return plan
-
-    def scan_files(
-        self,
-        filters: list[tuple] | None = None,
-        buckets: Iterable[int] | None = None,
-        snapshot_id: int | None = None,
-    ) -> tuple[list[str], list[str]]:
-        """``plan_buckets`` flattened into the ``(clean_files, dirty_files)``
-        sets ``read(filters=...)`` hands to Spark."""
-        plan = self.plan_buckets(filters, buckets, snapshot_id)
-        clean = [f for _b, base, delta in plan if not delta for f in base]
-        dirty = [f for _b, base, delta in plan if delta for f in base + delta]
+            if delta:
+                dirty.extend(os.path.join(self.root, f) for f in base + delta)
+            else:
+                clean.extend(os.path.join(self.root, f) for f in prune_files(fstats, base, filters))
         return clean, dirty
-
-    def files_by_schema(self, files: list[str], default_sid: int) -> dict[int, list[str]]:
-        """Data files (absolute paths) grouped by the schema id each was
-        written under; files with no recorded writer schema (written
-        before field ids) fall under ``default_sid``, the read schema."""
-        fsch = self.meta.get("file_schemas", {})
-        groups: dict[int, list[str]] = {}
-        for p in files:
-            groups.setdefault(int(fsch.get(os.path.relpath(p, self.root), default_sid)), []).append(p)
-        return groups
 
     def _read_files(
         self,
@@ -903,16 +845,24 @@ class SnapshotTable:
         versions costs S parquet scans (each a single multi-file scan
         Spark parallelizes), not one scan per file — the 100 TB shape.
         """
+        fsch = self.meta.get("file_schemas", {})
+        groups: dict[int, list[str]] = {}
+        for p in files:
+            groups.setdefault(int(fsch.get(os.path.relpath(p, self.root), target_sid)), []).append(p)
+        target_ids = self.field_ids(target_sid)
         parts: list[DataFrame] = []
-        for sid, grp in sorted(self.files_by_schema(files, target_sid).items()):
+        for sid, grp in sorted(groups.items()):
             if sid == target_sid:
                 parts.append(spark.read.schema(schema).parquet(*grp))
                 continue
             written = self.schema(sid)
-            names = self.source_names(sid, target_sid)
+            # match by stable field id: a column the written schema lacks
+            # reads back null, and a name dropped and then re-added never
+            # matches the old bytes
+            name_by_id = {i: n for n, i in self.field_ids(sid).items()}
             cols = []
             for f in schema.fields:
-                src = names.get(f.name)
+                src = name_by_id.get(target_ids[f.name])
                 if src is not None:
                     cols.append(F.col(src).cast(f.dataType).alias(f.name))
                 else:
@@ -936,14 +886,22 @@ class SnapshotTable:
         """Read a snapshot (time travel when ``snapshot_id`` given).
 
         Always reads with an explicit schema so files written before an
-        additive evolution come back with nulls in new columns. By default
-        that is the CURRENT registry schema (Iceberg read-with-current-
-        schema). Delete tombstones are filtered out and the hidden column
-        dropped unless ``include_tombstones``.
+        additive evolution come back with nulls in new columns. A plain
+        read uses the CURRENT registry schema; a ``tag`` or an explicit
+        ``snapshot_id`` pins that snapshot, read under its OWN schema
+        (Iceberg time travel). Delete tombstones are filtered out and the
+        hidden column dropped unless ``include_tombstones``.
         ``tag`` is name-based time travel (``set_tag``).
         """
-        snapshot_id, pinned_sid = self.resolve_read(snapshot_id, tag)
-        target_sid = pinned_sid if schema_id is None else schema_id
+        if tag is not None:
+            if snapshot_id is not None:
+                raise ValueError("pass snapshot_id or tag, not both")
+            snapshot_id = self.resolve_tag(tag)
+        target_sid = self.meta["current_schema_id"]
+        if schema_id is not None:
+            target_sid = schema_id
+        elif snapshot_id is not None:
+            target_sid = self.snapshot(snapshot_id).get("schema_id", target_sid)
         schema = self.schema(target_sid)
         # merge-on-read: delta files may carry newer versions of keys in the
         # base (and each other) — resolve last-writer-wins at read time.

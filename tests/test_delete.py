@@ -299,8 +299,7 @@ def test_delete_where_filters_conjoined(spark, tmp_path):
 
 def test_mor_read_tie_tombstone_beats_live(spark, tmp_path):
     """Read-time MOR resolve at an exact order tie: a delta tombstone at
-    the SAME lsn as the stored live base row must win deterministically
-    (table.read and the DSv2 reader agree)."""
+    the SAME lsn as the stored live base row must win deterministically."""
     t = _mk(tmp_path)
     _merge(spark, t, [("a", 1, "x", 5, "insert"), ("b", 2, "y", 6, "insert")], 0)
     merge_batch(
@@ -309,13 +308,6 @@ def test_mor_read_tie_tombstone_beats_live(spark, tmp_path):
     )
     t.refresh()
     assert {r["k"] for r in t.read(spark).collect()} == {"b"}
-    from etlframwork_spark.sources.snapshot_datasource import SnapshotTableDataSource
-
-    spark.dataSource.register(SnapshotTableDataSource)
-    dsv2 = (
-        spark.read.format("snapshot_table").option("root", t.root).load()
-    )
-    assert {r["k"] for r in dsv2.collect()} == {"b"}
 
 
 def test_tie_semantics_identical_across_strategies(spark, tmp_path):

@@ -10,12 +10,12 @@ disk; reads project them onto the requested schema by stable field id
   (old name), current reads the new name — same values
 - drop-then-readd: the re-added name gets a FRESH field id, so old
   files' bytes must NOT leak into it (nulls, not resurrection)
-- DSv2 parity: spark.read.format("snapshot_table") rows == table.read
+- time travel by tag ACROSS an additive evolution: the tagged snapshot
+  reads its own schema, without the added column
 - merge after rename: new batches carry the new name; LWW still
   resolves old-file rows against new ones by key
 
-Plus the round-5 ADVICE fixes: branch-scoped fences (WAP discard path)
-and the DSv2-writer rebucket race guard.
+Plus the round-5 ADVICE fix: branch-scoped fences (WAP discard path).
 """
 
 from __future__ import annotations
@@ -119,34 +119,35 @@ def test_drop_then_readd_does_not_resurrect(spark, tmp_path):
     assert all(got[f"k{i}"] is None for i in range(10)), got
 
 
-def test_dsv2_read_parity_after_rename(spark, tmp_path):
-    from etlframwork_spark.sources.snapshot_datasource import SnapshotTableDataSource
+def test_tag_read_uses_tagged_snapshot_schema(spark, tmp_path):
+    """Round-3 ADVICE: a tag resolves to the TAGGED snapshot's schema — a
+    tag set before an additive evolution reads back in the old schema (no
+    phantom new column) with the rows it pinned."""
+    from etlframwork_spark.events import (
+        CDC_BASE_SCHEMA,
+        CDC_EVOLVED_SCHEMA,
+        EventLogSpec,
+        TARGET_BASE_SCHEMA,
+        _make_events_frame,
+    )
 
-    spark.dataSource.register(SnapshotTableDataSource)
-    t = _mk(tmp_path)
-    _merge(spark, t, [(f"k{i}", i, f"n{i}", i, "insert") for i in range(30)], 0)
-    t.evolve_schema(renames={"v": "value"}, drops=["note"])
-    # post-evolution merge so files exist under BOTH schemas (mor: the old
-    # base rows and the new delta resolve together inside the bucket)
-    ev2 = StructType(
-        [
-            StructField("k", StringType()),
-            StructField("value", LongType()),
-            StructField("lsn", LongType()),
-            StructField("op", StringType()),
-        ]
+    t = SnapshotTable.create(
+        str(tmp_path / "tag"), TARGET_BASE_SCHEMA, key_cols=["repo", "path"],
+        order_col="lsn", num_buckets=8,
     )
-    df = spark.createDataFrame(
-        [(f"k{i}", i * 100, 1000 + i, "update") for i in range(5)], ev2
-    )
-    merge_batch(spark, t, df, job_id="evo", epoch_id=1, write_mode="mor")
-    t.refresh()
-    native = _rows(t.read(spark))
-    dsv2 = spark.read.format("snapshot_table").option("root", t.root).load()
-    assert set(dsv2.columns) == {c for c in t.read(spark).columns}
-    assert _rows(dsv2.select(*t.read(spark).columns)) == native
-    want_v = {f"k{i}": (i * 100 if i < 5 else i) for i in range(30)}
-    assert {r["k"]: r["value"] for r in dsv2.collect()} == want_v
+    spec = EventLogSpec(seed=5, n_events=400, n_repos=12, paths_per_repo=6, p_delete=0.12)
+    pdf = _make_events_frame(spec).drop(columns=["lang"])
+    merge_batch(spark, t, spark.createDataFrame(pdf, schema=CDC_BASE_SCHEMA), job_id="tag", epoch_id=0)
+    t.set_tag("pre-evolution")
+    before = _rows(t.read(spark))
+    # evolve: merge a batch that carries the additive `lang` column
+    spec = EventLogSpec(seed=9, n_events=200, n_repos=12, paths_per_repo=6, p_delete=0.1)
+    evolved = spark.createDataFrame(_make_events_frame(spec), schema=CDC_EVOLVED_SCHEMA)
+    merge_batch(spark, t, evolved, job_id="tag", epoch_id=1)
+    assert "lang" in t.schema().fieldNames()
+    pinned = t.read(spark, tag="pre-evolution")
+    assert "lang" not in pinned.columns  # read under the tagged schema
+    assert _rows(pinned) == before and before
 
 
 def test_rename_protected_columns_rejected(spark, tmp_path):
@@ -191,34 +192,6 @@ def test_fast_forward_promotes_branch_fences(spark, tmp_path):
     assert _merge(spark, t, rows, 3).get("skipped")
     t.create_branch("wap2")
     assert _merge(spark, t, rows, 3, branch="wap2").get("skipped")
-
-
-def test_dsv2_write_aborts_on_concurrent_rebucket(spark, tmp_path):
-    """ADVICE r4 (low): rows hashed under a stale bucket count must never
-    be committed — the bucket-local LWW would silently miss collisions.
-    The check is part of the commit's metadata transaction."""
-    import pyarrow as pa
-
-    from etlframwork_spark import maintenance
-    from etlframwork_spark.sources.snapshot_datasource import SnapshotTableWriter
-    from etlframwork_spark.table import CommitConflict
-
-    t = _mk(tmp_path, nb=4)
-    _merge(spark, t, [(f"k{i}", i, None, i, "insert") for i in range(50)], 0)
-    t.refresh()
-    write_schema = StructType([f for f in SCHEMA.fields])
-    w = SnapshotTableWriter({"root": t.root}, t, write_schema)
-    row = pa.RecordBatch.from_pylist(
-        [{"k": "k1", "v": 99, "note": None, "lsn": 99}],
-        schema=pa.schema([("k", pa.string()), ("v", pa.int64()), ("note", pa.string()), ("lsn", pa.int64())]),
-    )
-    message = w.write(iter([row]))  # hashed under 4 buckets
-    maintenance.rebucket(spark, t, 8)
-    with pytest.raises(CommitConflict, match="rebucketed"):
-        w.commit([message])
-    # table unharmed: still reads the pre-race state under the new spec
-    t.refresh()
-    assert t.num_buckets == 8 and t.read(spark).count() == 50
 
 
 def test_sql_literal_rejects_non_finite():
@@ -310,19 +283,6 @@ def test_time_travel_across_widen(spark, tmp_path):
     assert dict(old.dtypes)["v"] == "int"
     assert dict(t.read(spark).dtypes)["v"] == "bigint"
     assert {r["k"]: r["v"] for r in old.collect()} == {f"k{i}": i for i in range(10)}
-
-
-def test_dsv2_read_parity_after_widen(spark, tmp_path):
-    from etlframwork_spark.sources.snapshot_datasource import SnapshotTableDataSource
-
-    spark.dataSource.register(SnapshotTableDataSource)
-    t = _mk_wide(tmp_path)
-    _merge_wide(spark, t, [(f"k{i}", i, i * 1.0, i, "insert") for i in range(30)], 0)
-    t.evolve_schema(widen={"v": "long", "score": "double"})
-    native = t.read(spark)
-    dsv2 = spark.read.format("snapshot_table").option("root", t.root).load()
-    assert dict(dsv2.dtypes)["v"] == "bigint"
-    assert _rows(dsv2.select(*native.columns)) == _rows(native)
 
 
 def test_unsafe_widen_rejected(spark, tmp_path):

@@ -158,11 +158,13 @@ def test_no_local_walk_in_sources_or_functions():
     assert not bad, f"os.walk under sources/ or functions/: {bad}"
 
 
-def test_snapshot_datasource_is_imported_by_nobody_in_the_engine():
-    rx = re.compile(r"^\s*(from|import)\s+[\w.]*snapshot_datasource\b", re.MULTILINE)
-    own = os.path.join("sources", "snapshot_datasource.py")
-    bad = [rel for rel, src in _engine_sources() if rel != own and rx.search(src)]
-    assert not bad, f"engine modules importing sources.snapshot_datasource: {bad}"
+# The table has one read path (SnapshotTable.read, a JVM parquet scan)
+# and one write path (merge_batch): no Python data source re-plans,
+# re-resolves or re-hashes it behind an Arrow hop.
+def test_no_python_data_source_in_the_engine():
+    rx = re.compile(r"^\s*(from|import)\s+pyspark\.sql\.datasource\b", re.MULTILINE)
+    bad = [rel for rel, src in _engine_sources() if rx.search(src)]
+    assert not bad, f"engine modules importing pyspark.sql.datasource: {bad}"
 
 
 # Every metadata change publishes through SnapshotTable._transact: it
@@ -204,12 +206,18 @@ def test_metadata_is_published_only_by_the_transaction():
 # delete-beats-live tie-break (LWW_PRI) and the max_by over them. A
 # max_by or LWW_PRI elsewhere is a second copy of the rule; an
 # applyInPandas fold in the merge or the table is a per-key Python
-# crossing on the write path.
+# crossing on the write path; a pandas or Arrow per-key fold (groupby,
+# group_by, drop_duplicates) anywhere is a second resolve in Python.
+# Spark's camel-case groupBy( does not match.
+_PER_KEY_FOLDS = (".groupby(", "group_by(", "drop_duplicates(")
+
+
 def test_lww_resolve_has_one_spelling():
     problems = []
     for rel, src in _engine_sources():
         if rel != "table.py":
             problems += [f"{rel}: {w}" for w in ("max_by(", "LWW_PRI") if w in src]
+        problems += [f"{rel}: {w}" for w in _PER_KEY_FOLDS if w in src]
         if rel in ("merge.py", "table.py") and "applyInPandas" in src:
             problems.append(f"{rel}: applyInPandas")
     assert not problems, problems

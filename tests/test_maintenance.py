@@ -115,21 +115,6 @@ def test_rebucket_mid_ingest_digest_and_pruning(spark, tmp_path):
     clean_tt, dirty_tt = evolving.scan_files(filters=filters, snapshot_id=pre_rebucket_snap)
     for p in clean_tt + dirty_tt:
         assert f"_bucket={old_b}/" in p, p
-    # 4. DSv2 planning honors the per-snapshot spec
-    from etlframwork_spark.sources.snapshot_datasource import SnapshotTableReader
-
-    r_new = SnapshotTableReader({"root": evolving.root}, evolving)
-    from pyspark.sql.datasource import EqualTo
-
-    r_new.pushFilters([EqualTo(("repo",), row["repo"]), EqualTo(("path",), row["path"])])
-    parts = r_new.partitions()
-    assert len(parts) == 1 and parts[0].bucket == want_b
-    r_old = SnapshotTableReader(
-        {"root": evolving.root, "snapshot_id": str(pre_rebucket_snap)}, evolving
-    )
-    r_old.pushFilters([EqualTo(("repo",), row["repo"]), EqualTo(("path",), row["path"])])
-    parts_old = r_old.partitions()
-    assert len(parts_old) == 1 and parts_old[0].bucket == old_b
 
 
 def _race_first_commit(table, race):

@@ -10,8 +10,7 @@ What must hold:
   otherwise a key whose NEWEST version moved outside the predicate range
   would resurrect its stale version through the read-time LWW resolve;
 - string bounds are truncated with valid widening (upper bound increments);
-- expire_snapshots GCs stats along with their files;
-- the DataSource V2 reader applies the same skipping through pushFilters.
+- expire_snapshots GCs stats along with their files.
 """
 
 from __future__ import annotations
@@ -284,31 +283,3 @@ def test_sorted_compaction_makes_repo_predicates_skip_files(spark, tmp_path):
     assert _rows(table.read(spark, filters=[("repo", "=", repo)])) == _rows(
         table.read(spark).filter(F.col("repo") == repo)
     )
-
-
-# ------------------------------------------------------------- DSv2 parity
-def test_datasource_pushed_filters_skip_files_and_match(spark, tmp_path):
-    from pyspark.sql.datasource import GreaterThan
-
-    from etlframwork_spark.sources.snapshot_datasource import (
-        SnapshotTableDataSource,
-        SnapshotTableReader,
-    )
-
-    table = _mk_table(spark, tmp_path, name="dsv2")
-    mid = table.read(spark).agg(F.expr("percentile(lsn, 0.9)")).first()[0]
-
-    loaded = SnapshotTable.load(table.root)
-    plain = SnapshotTableReader({"root": table.root}, loaded)
-    n_all = sum(len(p.base_files) for p in plain.partitions())
-    pushed = SnapshotTableReader({"root": table.root}, loaded)
-    pushed.pushFilters([GreaterThan(("lsn",), int(mid))])
-    n_pruned = sum(len(p.base_files) for p in pushed.partitions())
-    assert 0 < n_pruned < n_all
-
-    spark.dataSource.register(SnapshotTableDataSource)
-    df = (
-        spark.read.format("snapshot_table").option("root", table.root).load()
-        .filter(F.col("lsn") > int(mid))
-    )
-    assert _rows(df) == _rows(table.read(spark).filter(F.col("lsn") > int(mid)))

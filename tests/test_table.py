@@ -279,17 +279,6 @@ def test_tags_pin_snapshots_and_read_by_name(tmp_path, spark):
     ).collect()
     # tag survives reload (it is table metadata, not session state)
     assert SnapshotTable.load(t.root).tags() == {"audit": s1["snapshot_id"]}
-    # DSv2 surface reads the same rows by tag
-    from etlframwork_spark.sources.snapshot_datasource import SnapshotTableDataSource
-
-    spark.dataSource.register(SnapshotTableDataSource)
-    via_ds = (
-        spark.read.format("snapshot_table")
-        .option("root", t.root).option("tag", "audit").load()
-    )
-    assert [tuple(r) for r in via_ds.collect()] == [
-        tuple(r) for r in t.read(spark, tag="audit").collect()
-    ]
     # drop -> snapshot becomes expirable and unknown tags raise
     t.drop_tag("audit")
     with pytest.raises(KeyError):
@@ -297,6 +286,42 @@ def test_tags_pin_snapshots_and_read_by_name(tmp_path, spark):
     t.expire_snapshots(keep_last=2)
     ids = {s["snapshot_id"] for s in t.meta["snapshots"]}
     assert s1["snapshot_id"] not in ids
+
+
+def test_sql_view_over_read_is_bound_to_its_snapshot(tmp_path, spark):
+    """SQL access is a temp view over ``read``: the view keeps the
+    snapshot it was built at, a re-registered view sees later commits,
+    and a tag-pinned view is SQL time travel. Appends land through
+    ``merge_batch(write_mode="mor")`` over insert rows."""
+    import hashlib
+
+    from etlframwork_spark.events import CDC_BASE_SCHEMA
+    from etlframwork_spark.merge import merge_batch
+
+    t = _mk(tmp_path)
+
+    def append(epoch, rows):
+        df = spark.createDataFrame(
+            [("insert", lsn, "a/b", path, f"c{lsn}", body) for lsn, path, body in rows],
+            CDC_BASE_SCHEMA,
+        )
+        merge_batch(spark, t, df, job_id="sql", epoch_id=epoch, write_mode="mor")
+
+    def count(view):
+        return spark.sql(f"SELECT count(*) FROM {view}").first()[0]
+
+    append(0, [(1, "x.py", "v1"), (2, "y.py", "v2")])
+    t.set_tag("first")
+    t.read(spark).createOrReplaceTempView("files_now")
+    append(1, [(3, "x.py", "v3"), (4, "z.py", "v4")])
+    assert count("files_now") == 2  # bound to the snapshot it was built at
+    t.read(spark).createOrReplaceTempView("files_now")
+    assert count("files_now") == 3
+    t.read(spark, tag="first").createOrReplaceTempView("files_first")
+    got = spark.sql("SELECT content FROM files_first WHERE path = 'x.py'").collect()
+    assert [r[0] for r in got] == ["v1"]
+    sha = spark.sql("SELECT content_sha256 FROM files_now WHERE path = 'x.py'").first()[0]
+    assert sha == hashlib.sha256(b"v3").hexdigest()
 
 
 def test_tag_of_missing_snapshot_and_conflicting_args(tmp_path, spark):
