@@ -8,14 +8,15 @@ sorted-merge apply)" as a copy-on-write merge into the bucketed
 1.  validate/parse the CDC batch (quarantine malformed rows);
 2.  detect additive schema evolution vs the table's schema registry
     (micro-batch-boundary resolution, BJ:6);
-3.  one bucket-granular pass over the batch collects affected buckets +
-    per-bucket source offset ranges (drives manifest-level pruning);
-4.  union the batch with ONLY the affected buckets' stored rows and take
-    the last writer per key through ``table.lww_resolve``: a ``max_by``
-    of the row over the (lsn, commit) order. Catalyst plans partial_max_by
-    before the shuffle, so a hot key is pre-reduced map-side on every
-    input partition — skew defuses without a salt and everything stays in
-    whole-stage codegen.
+3.  batch stats (events, deletes, order-column bounds) ride the
+    resolve+write action through one ``Observation`` on the batch side;
+4.  take the last writer per key through ``table.lww_resolve``: a
+    ``max_by`` of the row over the (lsn, commit) order. Catalyst plans
+    partial_max_by before the shuffle, so a hot key is pre-reduced
+    map-side on every input partition — skew defuses without a salt and
+    everything stays in whole-stage codegen. Copy-on-write resolves the
+    batch with the stored rows of ONLY the buckets the batch hashes into;
+    merge-on-read resolves the batch alone and leaves the rest to reads.
 
     LWW is associative/commutative over the total order (lsn, commit) —
     commit ids are unique per event — so any split of the work produces
@@ -23,23 +24,23 @@ sorted-merge apply)" as a copy-on-write merge into the bucketed
     duplicates and collapse, and at an exact tie a delete beats a live
     row. A late LOWER-lsn event never clobbers: the stored row
     participates in the same max with its stored lsn.
-5.  winners that are deletes become tombstones; survivors are rewritten
-    into the affected buckets and committed, epoch-fenced and atomic
-    (idempotent under re-delivery), by ``table.rewrite_buckets`` — the
-    same primitive every bucket rewrite goes through; unaffected buckets
-    carry forward by reference;
+5.  winners that are deletes become tombstones; ``table.rewrite_buckets``
+    writes and commits the rows, epoch-fenced and atomic. A cow epoch is
+    one ``SnapshotTable.rewrite``, the pinned read-and-rewrite cycle of
+    delete, purge, compaction and rebucket; a mor epoch appends delta
+    files. Both recompute a commit lost to a concurrent writer;
+    unaffected buckets carry forward by reference;
 6.  per-bucket/file lineage + per-epoch throughput metrics from parquet
     footers (no extra Spark job).
 
 Scale notes (100 TB posture): merge-on-read epochs scan the batch
-EXACTLY ONCE — batch stats ride the resolve+write action via
-``Observation`` and the affected-bucket list falls out of the
-partitioned write (round 3; previously a dedicated stats job added a
-second full scan + a collect barrier per epoch). Copy-on-write keeps the
-pre-pass because it must know the affected buckets before reading their
-stored rows. The target table is never scanned beyond affected buckets;
-all logic is JVM-side; the write routes each bucket wholly to one task
-(``table.bucket_exchange``).
+EXACTLY ONCE — the stats ride the write and the affected-bucket list
+falls out of the partitioned write. Copy-on-write adds one bucket-count
+job over the batch (``table.bucket_counts``, at most ``num_buckets``
+rows collected) because it must know the affected buckets before reading
+their stored rows. The target table is never scanned beyond affected
+buckets; all logic is JVM-side; the write routes each bucket wholly to
+one task (``table.bucket_exchange``).
 """
 
 from __future__ import annotations
@@ -47,38 +48,22 @@ from __future__ import annotations
 import time
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 from .lineage import MetricsTable, shuffle_totals
 from .table import (
-    BUCKET_COL,
     TOMBSTONE_COL,
     SnapshotTable,
-    bucket_expr,
     lww_resolve,
+    recompute_on_conflict,
     tombstone_where,
 )
 
 VALID_OPS = ("insert", "update", "delete")
 _STORED = "__stored__"
 SHA_COL = "content_sha256"
-
-
-def _evolved_schema(table: SnapshotTable, batch: DataFrame) -> tuple[StructType, list[str]]:
-    """Additive evolution vs the registry: batch data columns not in the
-    table schema are appended as nullable fields (BJ:6)."""
-    cur = table.schema()
-    known = set(cur.fieldNames())
-    new_fields = [
-        StructField(f.name, f.dataType, True)
-        for f in batch.schema.fields
-        if f.name not in known and f.name != "op"
-    ]
-    if not new_fields:
-        return cur, []
-    return StructType(cur.fields + new_fields), [f.name for f in new_fields]
 
 
 def _align(df: DataFrame, schema: StructType, extra: list[str]) -> DataFrame:
@@ -124,6 +109,12 @@ def merge_batch(
     the batch unfenced — every call applies, and an empty batch publishes
     nothing.
 
+    A commit lost to a concurrent writer (another epoch, a compaction,
+    purge or rebucket changed the epoch's buckets: ``CommitConflict``) is
+    recomputed from fresh table state in both modes. Only the commit cycle
+    (schema gate, read, resolve, write, commit) reruns; validation, the
+    quarantine write and the fence check run once.
+
     Returns a summary dict; ``{"skipped": True}`` when the epoch fence was
     already committed.
     """
@@ -135,21 +126,11 @@ def merge_batch(
     table.refresh()
     if fence is not None and table.is_fence_committed(fence, branch=branch):
         return {"skipped": True, "fence": fence}
-    # snapshot this cow rewrite READS from — commit validates the affected
-    # buckets are unchanged since (Iceberg-style conflict detection; a
-    # concurrent writer to the same bucket must fail the commit, not lose
-    # its rows under our rewrite). Branch merges read the BRANCH head.
     if branch is not None and branch not in table.branches():
         raise KeyError(
             f"branch {branch!r} not found — create_branch first "
             f"(known branches: {sorted(table.branches())})"
         )
-    head_snapshot = table.resolve_tag(branch) if branch is not None else None
-    read_snapshot = (
-        (head_snapshot if branch is not None else table.snapshot()["snapshot_id"])
-        if write_mode == "cow"
-        else None
-    )
 
     key_cols = table.key_cols
 
@@ -166,131 +147,55 @@ def merge_batch(
         if quarantined:
             bad.write.mode("append").option("compression", "zstd").parquet(quarantine_dir)
 
-    # -- 2. schema-evolution gate (T7) --------------------------------------
-    schema, new_cols = _evolved_schema(table, batch)
-    all_cols = [f.name for f in schema.fields]
-
-    # -- 3. batch stats: affected buckets + offset ranges -------------------
-    # Two execution shapes (identical outputs):
-    #   * cow: a dedicated stats pass BEFORE the resolve — cow must know
-    #     the affected buckets to read only their stored rows.
-    #   * mor single-pass (the ingest hot path): NO extra job. Stats ride
-    #     the resolve+write action itself via Observation, and the
-    #     affected-bucket list falls out of the partitioned write's
-    #     directory layout. One scan of the batch per epoch instead of
-    #     two (measured round 3: the stats pass was ~15% of epoch wall
-    #     and scaled worst, being a short-task barrier).
-    t_stats0 = time.monotonic()
-    nb = table.num_buckets
-    single_pass = write_mode == "mor"
-    stat_cols = (
-        F.count(F.lit(1)).alias("n"),
-        F.min(order_col).alias("lo"),
-        F.max(order_col).alias("hi"),
-        F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
-    )
-    st: dict[str, Any] = {"n": 0, "dels": 0, "lo": None, "hi": None}
-    affected: list[int] = list(range(nb))
-    if not single_pass:
-        bstats = ev.groupBy(bucket_expr(key_cols, nb).alias(BUCKET_COL)).agg(*stat_cols).collect()
-        affected = sorted(r[BUCKET_COL] for r in bstats)
-        st["n"] = sum(r["n"] for r in bstats)
-        st["dels"] = sum(r["dels"] for r in bstats)
-        st["lo"] = min((r["lo"] for r in bstats), default=None)
-        st["hi"] = max((r["hi"] for r in bstats), default=None)
-
-    timings: dict[str, float] = {"stats": round(time.monotonic() - t_stats0, 2)}
-    summary: dict[str, Any] = {
-        "fence": fence,
-        "quarantined": quarantined,
-        "new_columns": new_cols,
-    }
-
-    def noop() -> dict[str, Any]:
-        # an empty epoch still commits its fence so its re-delivery is a
-        # no-op; an empty unfenced batch publishes nothing
-        snap = None
-        if fence is not None:
-            snap = table.commit(
-                {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
-            )
-        summary["snapshot_id"] = None if snap is None else snap["snapshot_id"]
-        summary["skipped"] = fence is not None and snap is None
-        summary["timings"] = timings
-        return summary
-
-    if not single_pass:
-        summary.update(events=st["n"], deletes=st["dels"], affected_buckets=len(affected))
-        if st["n"] == 0:
-            return noop()
-
-    # -- 4. LWW resolve ------------------------------------------------------
-    # cow: resolve over (batch ∪ affected stored rows); the stored side
-    # INCLUDES tombstones so a duplicate/late lower-LSN insert re-delivery
-    # can never resurrect a deleted key.
-    # mor: resolve over the batch ALONE — conflicts against stored rows
-    # (including tombstones) are resolved at READ time by the table's
-    # merge-on-read LWW (table.read), which is the same associative max.
-    ev_aligned = _align(ev, schema, ["op"]).select(*all_cols, "op")
-    if single_pass:
-        from pyspark.sql import Observation
-
-        obs = Observation(f"epoch_stats_{fence}")
-        ev_aligned = ev_aligned.observe(obs, *stat_cols)
-    if write_mode == "mor":
-        unioned = ev_aligned
-    else:
-        # read-planning bucket (round-6 verdict #2): driver-side cost of
-        # planning the stored-side scan — scan_files pruning + the
-        # field-id _read_files grouping added in r5. Measured ~1-3 ms per
-        # epoch at 32 buckets / single live schema (see BENCH/BASELINE.md
-        # drift-attribution note); grows with live schema versions S as S
-        # multi-file scans, not with file count.
-        t_rp0 = time.monotonic()
-        # Read stored rows under the CURRENT REGISTRY schema id (never an
-        # explicit out-of-registry StructType): read()'s field-id projection
-        # only engages when it knows the target schema_id, so passing the
-        # evolved StructType here would silently fall back to read-by-NAME
-        # and null out renamed columns' pre-rename files (round-5 bug, caught
-        # by the cdc_rename_evolution_state oracle gate). Mid-merge ADDITIVE
-        # columns (not yet committed to the registry) are null back-filled by
-        # _align below instead.
-        stored = table.read(
-            spark,
-            buckets=affected,
-            schema_id=table.meta["current_schema_id"],
-            include_tombstones=True,
-            snapshot_id=head_snapshot,
-        )
-        stored_aligned = _align(stored, schema, []).withColumn("op", F.lit(_STORED))
-        unioned = ev_aligned.unionByName(stored_aligned)
-        timings["read_plan"] = round(time.monotonic() - t_rp0, 3)
-
+    timings: dict[str, float] = {"stats": 0.0}
+    summary: dict[str, Any] = {"fence": fence, "quarantined": quarantined, "new_columns": [],
+                               "events": 0, "deletes": 0, "affected_buckets": 0}
+    bounds: dict[str, Any] = {"lo": None, "hi": None}
+    obs: Observation | None = None
     # a delete event or a stored tombstone: it beats a live row at an
     # exact order tie and, as the winner, becomes a tombstone
     is_del = (F.col("op") == "delete") | (
         (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
     )
-    resolved = lww_resolve(unioned, key_cols, all_cols + ["op"], order_col, is_del)
 
-    # winners: stored rows keep their sha; new upserts get sha2(content)
-    # computed JVM-side; winning deletes become tombstones (payload and
-    # sha nulled, key + full ordering key retained).
-    final = resolved
-    if SHA_COL in all_cols:
-        # the per-row invariant column; tables declared without it (generic
-        # keyed upsert, no content hash) simply skip this derivation
-        final = final.withColumn(
-            SHA_COL,
-            F.when(F.col("op") == _STORED, F.col(SHA_COL))
-            .otherwise(F.sha2(F.col("content"), 256) if "content" in all_cols else F.lit(None).cast("string")),
+    def epoch_rows(stored: DataFrame | None) -> DataFrame:
+        """The epoch's rows on the attempt's fresh table state: steps 2-4."""
+        nonlocal obs
+        # -- 2. schema-evolution gate (T7), against the fresh registry: the
+        # stored rows are read, and the files recorded, under it
+        schema = table.evolved_schema(f for f in batch.schema.fields if f.name != "op")
+        all_cols = schema.fieldNames()
+        summary["new_columns"] = all_cols[len(table.schema().fields):]
+        # -- 3. batch stats ride the write: an Observation on the batch
+        # side counts events and deletes and bounds the order column, with
+        # no stats job. One Observation serves one action.
+        obs = Observation(f"epoch_stats_{fence}")
+        unioned = _align(ev, schema, ["op"]).select(*all_cols, "op").observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.min(order_col).alias("lo"),
+            F.max(order_col).alias("hi"),
+            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
         )
-    final = tombstone_where(final, is_del, key_cols, order_col).drop("op")
+        if stored is not None:
+            unioned = unioned.unionByName(_align(stored, schema, []).withColumn("op", F.lit(_STORED)))
+        # -- 4. LWW resolve
+        resolved = lww_resolve(unioned, key_cols, all_cols + ["op"], order_col, is_del)
+        if SHA_COL in all_cols:
+            # winners: stored rows keep their sha; new upserts get
+            # sha2(content) computed JVM-side. Tables declared without the
+            # column (generic keyed upsert) skip this derivation.
+            resolved = resolved.withColumn(
+                SHA_COL,
+                F.when(F.col("op") == _STORED, F.col(SHA_COL))
+                .otherwise(F.sha2(F.col("content"), 256) if "content" in all_cols else F.lit(None).cast("string")),
+            )
+        # winning deletes become tombstones (payload and sha nulled, key +
+        # full ordering key retained)
+        return tombstone_where(resolved, is_del, key_cols, order_col).drop("op")
 
-    # -- 5. rewrite the affected buckets, fenced atomic commit --------------
-    # Single-pass does not know the affected set before the write, so the
-    # exchange deals every bucket and the stats are read once the write
-    # has run. The hook timestamps the primitive's phases.
+    # -- 5. write the epoch's buckets, fenced atomic commit ------------------
+    # The hook timestamps the primitive's phases.
     marks: dict[str, float] = {}
 
     def hook(stage: str) -> None:
@@ -300,41 +205,64 @@ def merge_batch(
 
     def epoch_summary(files_by_bucket: dict[int, list[str]]) -> dict[str, Any] | None:
         timings["resolve_write"] = round(time.monotonic() - marks["pre_write"], 2)
-        if single_pass:
-            # Zero written files <=> zero validated events (every event
-            # yields a row on this path), and on an EMPTY plan Catalyst's
-            # empty-relation propagation erases the CollectMetrics node,
-            # so obs.get must not be consulted there.
-            if files_by_bucket:
-                m = obs.get
-                st.update(n=m["n"] or 0, dels=m["dels"] or 0, lo=m["lo"], hi=m["hi"])
-            summary.update(
-                events=st["n"], deletes=st["dels"], affected_buckets=len(files_by_bucket)
-            )
-        if st["n"] == 0:
-            return None  # an empty single-pass epoch commits only its fence
+        # Zero written files <=> zero validated events (a cow epoch rewrites
+        # only the buckets its events hash into). An EMPTY plan loses its
+        # CollectMetrics node to Catalyst, so obs.get must not be read there.
+        if not files_by_bucket:
+            return None
+        m = obs.get
+        bounds.update(lo=m["lo"], hi=m["hi"])
+        summary.update(events=m["n"] or 0, deletes=m["dels"] or 0, affected_buckets=len(files_by_bucket))
         # a COPY: commit/lineage timings land in the returned dict only,
         # so the in-memory snapshot keeps matching the manifest on disk
         return {**summary, "operation": f"merge_{write_mode}", "timings": dict(timings)}
 
-    snap, files_by_bucket = table.rewrite_buckets(
-        final,
-        affected,
-        epoch_summary,
-        fault_injector=hook,
-        fence=fence,
-        new_schema=schema if new_cols else None,
-        mode="append_delta" if write_mode == "mor" else "replace",
-        validate_from_snapshot=read_snapshot,
-        branch=branch,
-    )
-    if st["n"] == 0:
-        return noop()
+    if write_mode == "cow":
+        # rewrite the buckets the batch hashes into with the LWW over the
+        # batch ∪ their stored rows, tombstones included, so a late
+        # lower-LSN re-delivery can never resurrect a deleted key
+        def pick() -> dict[int, int]:
+            t_pick = time.monotonic()
+            picked = table.bucket_counts(ev)
+            marks["picked"] = time.monotonic()
+            timings["stats"] = round(marks["picked"] - t_pick, 2)
+            return picked
+
+        def rows(stored: DataFrame) -> DataFrame:
+            # driver-side planning of the stored-side scan (scan_files +
+            # _read_files); grows with live schema versions, not file count
+            timings["read_plan"] = round(time.monotonic() - marks["picked"], 3)
+            return epoch_rows(stored)
+
+        _, snap, files_by_bucket = table.rewrite(
+            spark, pick, rows, lambda _: epoch_summary, fault_injector=hook, fence=fence, branch=branch
+        )
+    else:
+        # resolve the batch ALONE: stored rows (tombstones included) meet it
+        # in the read-time LWW. The exchange deals every bucket of the
+        # fresh spec, so a recompute after a rebucket hashes anew.
+        def append() -> tuple[dict[str, Any] | None, dict[int, list[str]]]:
+            table.refresh()
+            return table.rewrite_buckets(
+                epoch_rows(None), range(table.num_buckets), epoch_summary,
+                mode="append_delta", fault_injector=hook, fence=fence, branch=branch,
+            )
+
+        snap, files_by_bucket = recompute_on_conflict(append)
+    if not files_by_bucket:
+        # an empty epoch still commits its fence so its re-delivery is a
+        # no-op; an empty unfenced batch publishes nothing
+        snap = None if fence is None else table.commit(
+            {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
+        )
+        summary["snapshot_id"] = None if snap is None else snap["snapshot_id"]
+        summary.update(skipped=fence is not None and snap is None, timings=timings)
+        return summary
     if snap is None:  # fence raced us
         summary["skipped"] = True
         return summary
     timings["commit"] = round(time.monotonic() - marks["pre_commit"], 2)
-    n_events, n_deletes = st["n"], st["dels"]
+    n_events, n_deletes = summary["events"], summary["deletes"]
 
     # -- 6. lineage + throughput metrics --------------------------------------
     t_l0 = time.monotonic()
@@ -357,7 +285,7 @@ def merge_batch(
     timings["lineage"] = 0.0
     if metrics is not None:
         metrics.emit_lineage(
-            job_id, epoch_id, snap["snapshot_id"], files_by_bucket, st["lo"], st["hi"], table
+            job_id, epoch_id, snap["snapshot_id"], files_by_bucket, bounds["lo"], bounds["hi"], table
         )
         timings["lineage"] = round(time.monotonic() - t_l0, 2)
         metrics.emit_epoch(
@@ -396,9 +324,9 @@ def delete_where(
     nulled; key + the FULL ordering key retained, by the same
     ``table.tombstone_where`` rule a merged delete follows) via a
     copy-on-write rewrite of only the affected buckets: one
-    ``SnapshotTable.rewrite``, the read-and-rewrite cycle tombstone purge,
-    compaction and rebucketing also run. Tombstoning instead of physical
-    removal keeps the table's replay invariants: a late/duplicate
+    ``SnapshotTable.rewrite``, the read-and-rewrite cycle cow epochs,
+    purge, compaction and rebucketing also run. Tombstoning instead of
+    physical removal keeps the table's replay invariants: a late/duplicate
     re-delivery of any event at-or-below the row's (lsn, commit) order
     cannot resurrect the key, while a genuinely newer event re-inserts it
     (standard point-in-time DELETE under concurrent ingest). The payload

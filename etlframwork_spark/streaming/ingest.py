@@ -26,7 +26,6 @@ new column (micro-batch-boundary resolution per BJ:6).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import partial
 from typing import Callable
 
 from pyspark.sql import SparkSession
@@ -34,7 +33,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..lineage import MetricsTable
 from ..merge import SHA_COL, merge_batch
-from ..table import SnapshotTable, recompute_on_conflict
+from ..table import SnapshotTable
 from .sources import FileStreamSource
 
 from pyspark.sql.types import StringType
@@ -121,6 +120,12 @@ def run_ingest(
     ``read_stream(spark, schema)`` (sources.py); defaults to the file
     tail described by the job. Swapping in KafkaStreamSource changes
     nothing else — fencing, checkpointing and MERGE are source-agnostic.
+
+    Each micro-batch is one ``merge_batch`` epoch. An epoch whose commit
+    loses to another writer (a rebucket, or a compaction or purge run
+    elsewhere) is recomputed inside ``merge_batch`` from fresh state, so
+    the stream keeps running; its validation and quarantine write run
+    once, and the epoch fence keeps the recompute exactly-once.
     """
     if source is None:
         source = FileStreamSource(job.events_dir, job.max_files_per_trigger)
@@ -129,22 +134,16 @@ def run_ingest(
     metrics = MetricsTable(job.metrics_dir) if job.metrics_dir else None
 
     def apply_epoch(batch_df, epoch_id: int) -> None:
-        # an epoch whose commit lost to another writer (a rebucket, or a
-        # compaction or purge run elsewhere) recomputes from fresh state;
-        # the epoch fence keeps the re-run exactly-once
-        recompute_on_conflict(
-            partial(
-                merge_batch,
-                batch_df.sparkSession,
-                table,
-                batch_df,
-                job_id=job.job_id,
-                epoch_id=epoch_id,
-                metrics=metrics,
-                quarantine_dir=job.quarantine_dir,
-                write_mode=job.write_mode,
-                fault_injector=fault_injector,
-            )
+        merge_batch(
+            batch_df.sparkSession,
+            table,
+            batch_df,
+            job_id=job.job_id,
+            epoch_id=epoch_id,
+            metrics=metrics,
+            quarantine_dir=job.quarantine_dir,
+            write_mode=job.write_mode,
+            fault_injector=fault_injector,
         )
         if job.write_mode == "mor" and job.compact_min_deltas:
             from ..maintenance import compact_buckets

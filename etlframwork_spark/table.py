@@ -241,10 +241,6 @@ def _parse_simple_type(name: str):
         raise ValueError(f"unsupported type string {name!r}; one of {sorted(mapping)}") from None
 
 
-class FenceAlreadyCommitted(Exception):
-    """Raised (optionally) when a fenced commit was already applied."""
-
-
 class VersionConflict(Exception):
     """Another writer published this metadata version first (CAS miss).
 
@@ -565,6 +561,13 @@ class SnapshotTable:
     @property
     def num_buckets(self) -> int:
         return self.meta["num_buckets"]
+
+    def evolved_schema(self, fields: Iterable[StructField]) -> StructType:
+        """The current schema with the ``fields`` it lacks appended as
+        nullable columns: additive evolution (BJ:6)."""
+        cur = self.schema()
+        known = set(cur.fieldNames())
+        return StructType(cur.fields + [StructField(f.name, f.dataType, True) for f in fields if f.name not in known])
 
     def check_additive(self, new_schema: StructType) -> list[StructField]:
         """Validate additive evolution: every current field survives with an
@@ -1233,36 +1236,46 @@ class SnapshotTable:
         spark: SparkSession,
         pick: Callable[[], dict[int, int]],
         rows: Callable[[DataFrame], DataFrame],
-        summary: Callable[[dict[int, int]], dict[str, Any]],
+        summary: Callable[[dict[int, int]], Any],
         **rewrite_args: Any,
     ) -> tuple[dict[int, int], dict[str, Any], dict[int, list[str]]]:
         """Read some buckets at a pinned snapshot and rewrite them — the
-        one cycle behind ``delete_where``, tombstone purge, compaction and
-        rebucketing (Iceberg's ``validateFromSnapshot`` rewrite shape).
+        one cycle behind copy-on-write epochs, ``delete_where``, tombstone
+        purge, compaction and rebucketing (Iceberg's
+        ``validateFromSnapshot`` rewrite shape).
 
-        Each attempt refreshes, pins the current snapshot and calls
-        ``pick()`` on that fresh state; it returns ``{bucket: count}`` for
-        the buckets to rewrite, the counts being whatever the caller
-        reports (an empty pick publishes nothing). The picked buckets are
-        read with tombstones, ``rows`` maps them to their new rows, and
+        Each attempt refreshes, pins the head (of the ``branch`` in
+        ``rewrite_args``, else of main) and calls ``pick()`` on that fresh
+        state; it returns ``{bucket: count}`` for the buckets to rewrite,
+        the counts being whatever the caller reports (an empty pick
+        publishes nothing). The picked buckets are read at the pin with
+        tombstones, ``rows`` maps them to their new rows, and
         ``rewrite_buckets`` replaces them key-sorted, validated from the
-        pin, under the commit summary ``summary(picked)``. A
-        CommitConflict (a concurrent writer changed a picked bucket since
-        the pin) reruns the attempt from fresh state.
+        pin, under ``summary(picked)`` (a summary or a function of the
+        written files). A CommitConflict (a concurrent writer changed a
+        picked bucket since the pin) reruns the attempt from fresh state.
         ``rewrite_args`` pass through to ``rewrite_buckets``.
 
         Returns ``(picked, snapshot, written files)``; the snapshot is the
-        new one, or the pinned one when nothing was picked.
+        new one (``None`` if the fence was already committed), or the
+        pinned one when nothing was picked.
         """
+        branch = rewrite_args.get("branch")
 
         def attempt() -> tuple[dict[int, int], dict[str, Any], dict[int, list[str]]]:
-            pin = self.refresh().snapshot()
+            self.refresh()
+            pin = self.snapshot(None if branch is None else self.resolve_tag(branch))
             picked = pick()
             if not picked:
                 return picked, pin, {}
+            # under the CURRENT registry schema id: a snapshot id alone
+            # reads under the pin's own schema, and a StructType outside
+            # the registry reads by NAME, nulling renamed columns'
+            # pre-rename files (round-5 bug, cdc_rename_evolution_state)
+            stored = self.read(spark, pin["snapshot_id"], picked, schema_id=self.meta["current_schema_id"],
+                               include_tombstones=True)
             snap, files = self.rewrite_buckets(
-                rows(self.read(spark, buckets=picked, include_tombstones=True)), picked, summary(picked),
-                key_sort=True, validate_from_snapshot=pin["snapshot_id"], **rewrite_args,
+                rows(stored), picked, summary(picked), validate_from_snapshot=pin["snapshot_id"], **rewrite_args
             )
             return picked, snap, files
 
@@ -1274,14 +1287,13 @@ class SnapshotTable:
         buckets: Iterable[int],
         summary: dict[str, Any] | Callable[[dict[int, list[str]]], dict[str, Any] | None],
         *,
-        key_sort: bool = False,
         max_records_per_file: int | None = None,
         fault_injector: Callable[[str], None] | None = None,
         **commit_args: Any,
     ) -> tuple[dict[str, Any] | None, dict[int, list[str]]]:
         """Write ``df`` as new files for ``buckets`` and commit them — the
-        one move behind every table change: cow and mor epochs call it
-        directly; ``delete_where``, tombstone purge, compaction and
+        one move behind every table change: mor epochs call it directly;
+        cow epochs, ``delete_where``, tombstone purge, compaction and
         rebucketing call it through ``rewrite``.
 
         ``df`` holds table rows; each gets its ``BUCKET_COL`` under the
@@ -1289,15 +1301,19 @@ class SnapshotTable:
         current one). ``bucket_exchange`` routes every bucket wholly to one
         task, so each written bucket gets one zstd file under
         ``_bucket=K`` (more when ``max_records_per_file`` splits it).
-        ``key_sort`` orders each bucket's rows by key, which keeps
-        per-file key bounds tight for stats.py file skipping.
+        Key order follows the commit mode: a replace write sorts each
+        bucket's rows by key, which keeps per-file key bounds tight for
+        stats.py file skipping; an ``append_delta`` write does not sort
+        (reads resolve deltas by key anyway, and compaction sorts).
 
         ``summary`` is the commit summary, or a function of the written
         files ``{bucket: [paths]}`` returning it (``None`` publishes
         nothing). A replace commit replaces every bucket in ``buckets``
         (one written empty is emptied; a rebucket lists the old spec's
         buckets too); an ``append_delta`` commit appends to the buckets
-        that got files. ``commit_args`` pass through to ``commit``.
+        that got files. Columns ``df`` carries beyond the current schema
+        are additive evolution the commit registers. ``commit_args`` pass
+        through to ``commit``.
 
         ``fault_injector`` fires at ``pre_write``, ``pre_commit`` and
         ``post_commit``. The data dir is deleted whenever nothing in it
@@ -1309,6 +1325,10 @@ class SnapshotTable:
         """
         hook = fault_injector or (lambda stage: None)
         nb = commit_args.get("new_num_buckets") or self.num_buckets
+        # columns df carries beyond the current schema (a merge's schema
+        # gate) are additive evolution, which the commit registers
+        written = self.evolved_schema(df.schema.fields)
+        new_schema = written if len(written) > len(self.schema()) else None
         buckets = sorted({int(b) for b in buckets})
         hook("pre_write")
         data_dir = self.new_data_dir()
@@ -1317,7 +1337,7 @@ class SnapshotTable:
         out = bucket_exchange(
             df.withColumn(BUCKET_COL, bucket_expr(self.key_cols, nb)), [b for b in buckets if b < nb]
         )
-        if key_sort:
+        if commit_args.get("mode") != "append_delta":
             # rows arrive grouped by bucket within the task; sorting by
             # (bucket, *key) keeps the grouping, so maxRecordsPerFile cuts
             # each bucket into contiguous key-range files
@@ -1334,7 +1354,7 @@ class SnapshotTable:
             changed = sorted(files) if commit_args.get("mode") == "append_delta" else buckets
             hook("pre_commit")
             try:
-                snap = self.commit(files, changed, summary=summary, **commit_args)
+                snap = self.commit(files, changed, summary=summary, new_schema=new_schema, **commit_args)
             except CommitConflict:
                 shutil.rmtree(data_dir, ignore_errors=True)
                 raise

@@ -24,7 +24,6 @@ BANNED = [
 # .collect() is allowed ONLY for O(#buckets)/O(#files)/O(model) metadata,
 # never data rows
 COLLECT_ALLOWED = {
-    "merge.py",  # cow epoch bucket-stat rows (<= num_buckets)
     "table.py",  # SnapshotTable.bucket_counts rows (<= num_buckets)
     # trained IVF centroids (K rows — the model), and round 7's
     # cosine_topk query matrix (O(#queries) — the exact driver footprint
@@ -224,13 +223,16 @@ def test_lww_resolve_has_one_spelling():
 
 
 # Outside table.py, the read-and-rewrite cycle has one caller per shape:
-# merge_batch's epochs call rewrite_buckets directly, every other bucket
-# rewrite goes through SnapshotTable.rewrite (which owns the pin, the
-# read and the CommitConflict recompute), and run_ingest recomputes its
-# epochs. Tombstones are written only by table.tombstone_where.
+# merge_batch's mor epochs call rewrite_buckets directly (an append needs
+# no pin and no stored read) and recompute a lost commit themselves;
+# cow epochs and every other bucket rewrite go through
+# SnapshotTable.rewrite, which owns the pin, the read, the validation
+# from the pin and the CommitConflict recompute. Tombstones are written
+# only by table.tombstone_where.
 _CYCLE_OWNED = [
-    ("recompute_on_conflict(", {os.path.join("streaming", "ingest.py")}),
+    ("recompute_on_conflict(", {"merge.py"}),
     ("rewrite_buckets(", {"merge.py"}),
+    ("validate_from_snapshot", set()),
     ("withColumn(TOMBSTONE_COL", set()),
 ]
 
@@ -242,3 +244,15 @@ def test_rewrite_cycle_and_tombstone_rule_have_one_home():
             continue
         problems += [f"{rel}: {what}" for what, homes in _CYCLE_OWNED if what in src and rel not in homes]
     assert not problems, problems
+
+
+def test_merge_calls_rewrite_buckets_only_to_append():
+    with open(os.path.join(ENGINE, "merge.py")) as fh:
+        src = fh.read()
+    calls = [
+        (src.count("\n", 0, m.start()) + 1, _call_args(src, m.end()))
+        for m in re.finditer(r"\brewrite_buckets\(", src)
+    ]
+    assert calls, "merge.py no longer calls rewrite_buckets"
+    bad = [line for line, args in calls if 'mode="append_delta"' not in args or '"replace"' in args]
+    assert not bad, f"merge.py:{bad}: a replace write belongs in SnapshotTable.rewrite"

@@ -6,17 +6,29 @@ through one refresh -> mutate -> CAS-publish primitive.
   operation must retry on the winner's state so both changes survive,
   and an operation that loses every attempt raises ``VersionConflict``
   naming itself.
-- Commits racing metadata changes: a mor epoch whose rows were hashed
-  under a bucket count that a concurrent ``rebucket`` replaced must fail
-  with ``CommitConflict``, and files a compaction wrote before a
-  concurrent rename must read back under the new name.
+- Commits racing other writers: a mor epoch whose rows were hashed
+  under a bucket count that a concurrent ``rebucket`` replaced loses its
+  commit with one ``CommitConflict`` and ``merge_batch`` recomputes it
+  under the new count; a ``sync_incremental`` whose dst buckets another
+  epoch changed recomputes the same way; a recomputed cow epoch keeps
+  the column a racing writer added; a recomputed ingest epoch
+  quarantines its malformed rows once; and files a compaction wrote
+  before a concurrent rename read back under the new name.
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from etlframwork_spark.events import CDC_BASE_SCHEMA, EventLogSpec, TARGET_BASE_SCHEMA, _make_events_frame
+from etlframwork_spark.events import (
+    CDC_BASE_SCHEMA,
+    CDC_EVOLVED_SCHEMA,
+    TARGET_BASE_SCHEMA,
+    EventLogSpec,
+    _make_events_frame,
+)
 from etlframwork_spark.maintenance import compact_buckets, rebucket
 from etlframwork_spark.merge import merge_batch
 from etlframwork_spark.table import CommitConflict, SnapshotTable, VersionConflict
@@ -133,12 +145,29 @@ def _rows(spark, table, **kw):
     return {(r["repo"], r["path"]): tuple(r) for r in table.read(spark, **kw).collect()}
 
 
-def test_mor_epoch_racing_rebucket_conflicts(spark, tmp_path):
+def _count_conflicts(table):
+    """Wrap ``table.commit``; returns the list that records each
+    CommitConflict its commits raise."""
+    real_commit, conflicts = table.commit, []
+
+    def counting_commit(*a, **kw):
+        try:
+            return real_commit(*a, **kw)
+        except CommitConflict as e:
+            conflicts.append(str(e))
+            raise
+
+    table.commit = counting_commit
+    return conflicts
+
+
+def test_mor_epoch_racing_rebucket_recomputes(spark, tmp_path):
     """A rebucket publishing between a mor epoch's write and its commit
     leaves the epoch's delta files hashed under 4 buckets in an 8-bucket
     table; appending them would put keys in the wrong buckets. The commit
-    must fail with CommitConflict, and the re-delivered epoch must land
-    every key where full scans and key-pinned reads find it."""
+    must fail with one CommitConflict, and merge_batch must recompute the
+    epoch under the new bucket count, landing every key where full scans
+    and key-pinned reads find it."""
     want = _mk(tmp_path / "want")
     _merge(spark, want, 0, 250, 0, "cow")
     _merge(spark, want, 250, 400, 1, "mor")
@@ -150,16 +179,116 @@ def test_mor_epoch_racing_rebucket_conflicts(spark, tmp_path):
         if stage == "pre_commit" and not raced:
             raced.append(rebucket(spark, SnapshotTable.load(table.root), 8))
 
-    with pytest.raises(CommitConflict, match="rebucketed"):
-        _merge(spark, table, 250, 400, 1, "mor", fault_injector=hook)
+    conflicts = _count_conflicts(table)
+    out = _merge(spark, table, 250, 400, 1, "mor", fault_injector=hook)
     assert raced and raced[0]["rebucketed"]
-    _merge(spark, table.refresh(), 250, 400, 1, "mor")
+    assert len(conflicts) == 1 and "rebucketed" in conflicts[0]
+    assert not out.get("skipped") and out["events"] == 150
     assert table.refresh().num_buckets == 8
     expect = _rows(spark, want)
     assert _rows(spark, table) == expect
     for repo, path in sorted(expect)[::5]:
         pinned = [("repo", "=", repo), ("path", "=", path)]
         assert _rows(spark, table, filters=pinned) == {(repo, path): expect[(repo, path)]}
+
+
+def test_sync_recomputes_when_a_dst_writer_races(spark, tmp_path):
+    """Another job's mor epoch appending to dst's buckets between a sync's
+    write and its commit: the sync's replace commit conflicts, and the
+    sync recomputes from fresh state instead of raising, so dst ends with
+    both row sets and no unreferenced data dir remains."""
+    from etlframwork_spark.changes import sync_incremental
+
+    src = _mk(tmp_path / "src")
+    _merge(spark, src, 0, 250, 0, "cow")
+    other = spark.createDataFrame(
+        _PDF.iloc[250:400].assign(repo=lambda d: "other/" + d["repo"]), schema=CDC_BASE_SCHEMA
+    )
+    dst = _mk(tmp_path / "dst")
+    raced = []
+
+    def hook(stage):
+        if stage == "pre_commit" and not raced:
+            raced.append(merge_batch(
+                spark, SnapshotTable.load(dst.root), other, job_id="other", epoch_id=0, write_mode="mor"
+            ))
+
+    conflicts = _count_conflicts(dst)
+    sync_incremental(spark, src, dst, fault_injector=hook)
+    assert raced and raced[0]["affected_buckets"] > 0
+    assert len(conflicts) == 1
+    want = _mk(tmp_path / "want")
+    _merge(spark, want, 0, 250, 0, "cow")
+    merge_batch(spark, want, other, job_id="other", epoch_id=0, write_mode="mor")
+    assert _rows(spark, dst.refresh()) == _rows(spark, want)
+    referenced = {f.split(os.sep)[1] for f in dst.live_files()}
+    on_disk = {d for d in os.listdir(os.path.join(dst.root, "data")) if d.startswith("snap-")}
+    assert on_disk == referenced
+
+
+def test_cow_recompute_keeps_a_racing_writers_new_column(spark, tmp_path):
+    """A concurrent epoch that evolves the table (adds ``lang``) and lands
+    in a cow epoch's buckets: the recomputed cow epoch reads the stored
+    rows under the evolved schema and keeps their ``lang`` values."""
+    racer = spark.createDataFrame(
+        _PDF.iloc[250:400].assign(repo=lambda d: "other/" + d["repo"], lang="py"),
+        schema=CDC_EVOLVED_SCHEMA,
+    )
+    want = _mk(tmp_path / "want")
+    _merge(spark, want, 0, 250, 0, "cow")
+    merge_batch(spark, want, racer, job_id="other", epoch_id=0, write_mode="mor")
+    _merge(spark, want, 250, 400, 1, "cow")
+    table = _mk(tmp_path / "t")
+    _merge(spark, table, 0, 250, 0, "cow")
+    raced = []
+
+    def hook(stage):
+        if stage == "pre_commit" and not raced:
+            raced.append(merge_batch(
+                spark, SnapshotTable.load(table.root), racer, job_id="other", epoch_id=0, write_mode="mor"
+            ))
+
+    conflicts = _count_conflicts(table)
+    _merge(spark, table, 250, 400, 1, "cow", fault_injector=hook)
+    assert raced and raced[0]["new_columns"] == ["lang"]
+    assert len(conflicts) == 1
+    assert _rows(spark, table.refresh()) == _rows(spark, want)
+    assert {r["lang"] for r in table.read(spark).collect() if r["repo"].startswith("other/")} == {"py"}
+
+
+def test_recomputed_epoch_quarantines_once(spark, tmp_path):
+    """Only an epoch's commit cycle reruns after a lost commit: a segment
+    of 40 valid and 5 malformed events whose epoch loses to a rebucket
+    quarantines 5 rows, not 5 per attempt."""
+    import pyarrow.parquet as pq
+
+    from etlframwork_spark.streaming import IngestJob, run_ingest
+
+    events_dir = tmp_path / "events"
+    events_dir.mkdir()
+    seg = _PDF.iloc[:45].copy()
+    seg.loc[seg.index[40:], "op"] = "bogus"
+    seg.to_parquet(events_dir / "events-00000.parquet", index=False)
+    job = IngestJob(
+        job_id="quarantine",
+        events_dir=str(events_dir),
+        table_root=str(tmp_path / "table"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        quarantine_dir=str(tmp_path / "quarantine"),
+        num_buckets=4,
+        write_mode="mor",
+    )
+    raced = []
+
+    def hook(stage):
+        if stage == "pre_commit" and not raced:
+            raced.append(rebucket(spark, SnapshotTable.load(job.table_root), 8))
+
+    table = run_ingest(spark, job, fault_injector=hook)
+    assert raced and raced[0]["rebucketed"]
+    assert table.num_buckets == 8
+    assert pq.read_table(job.quarantine_dir).num_rows == 5
+    assert table.snapshot()["summary"]["events"] == 40
 
 
 def test_stream_survives_a_rebucket_racing_an_epoch(spark, tmp_path):
