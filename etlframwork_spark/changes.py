@@ -18,18 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .table import TOMBSTONE_COL, SnapshotTable, lww_order_cols
+from .table import TOMBSTONE_COL, SnapshotTable, is_tombstone, lww_order_cols, parse_fence
 
 
 def changed_buckets(table: SnapshotTable, from_snapshot: int, to_snapshot: int) -> list[int]:
-    out = set()
-    for key in ("files", "delta_files"):  # merge-on-read deltas count too
-        old = table.snapshot(from_snapshot).get(key, {})
-        new = table.snapshot(to_snapshot).get(key, {})
-        for b in set(old) | set(new):
-            if old.get(b) != new.get(b):
-                out.add(int(b))
-    return sorted(out)
+    """Buckets whose base or delta files differ between the snapshots."""
+    old = table.bucket_files(from_snapshot)
+    new = table.bucket_files(to_snapshot)
+    return sorted(b for b in set(old) | set(new) if old.get(b) != new.get(b))
 
 
 def read_changes(
@@ -54,7 +50,6 @@ def read_changes(
     # onto today's names, so the change feed is always in the current schema
     # (round-5; pinned by test_read_changes_across_rename).
     cur_sid = table.meta["current_schema_id"]
-    live = ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
     old = (
         table.read(
             spark,
@@ -63,7 +58,7 @@ def read_changes(
             schema_id=cur_sid,
             include_tombstones=True,
         )
-        .filter(live)
+        .filter(~is_tombstone())
         .select(*[F.col(c).alias(f"_old_{c}") for c in cols])
     )
     new = table.read(
@@ -80,7 +75,7 @@ def read_changes(
         cond = e if cond is None else cond & e
     j = new.join(old, cond, "full_outer")
 
-    new_live = ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) & F.col(key_cols[0]).isNotNull()
+    new_live = ~is_tombstone() & F.col(key_cols[0]).isNotNull()
     old_live = F.col(f"_old_{key_cols[0]}").isNotNull()
     change = (
         F.when(new_live & ~old_live, "insert")
@@ -116,12 +111,8 @@ def last_synced_snapshot(dst: SnapshotTable, job_id: str) -> int | None:
     ``dst`` — recovered from dst's own fence log (``{job_id}:{src_snap}``),
     so the sync cursor is exactly as durable and atomic as the data it
     fences: no sidecar state to drift."""
-    best = None
-    for fence in dst.meta.get("committed_fences", {}):
-        job, _, snap = fence.rpartition(":")
-        if job == job_id and snap.isdigit():
-            best = max(best or 0, int(snap))
-    return best
+    parsed = [parse_fence(fence) for fence in dst.meta.get("committed_fences", {})]
+    return max((p[1] for p in parsed if p is not None and p[0] == job_id), default=None)
 
 
 def sync_incremental(
@@ -181,9 +172,8 @@ def sync_incremental(
                 "source snapshots at least as long as the sync interval "
                 "(expire_snapshots keep_last)."
             )
-        dst_snap = dst.snapshot()
-        if dst_snap["files"] or any(dst_snap.get("delta_files", {}).values()):
-            # delta_files too: a dst populated exclusively via MOR commits
+        if dst.files_for():
+            # delta files too: a dst populated exclusively via MOR commits
             # (append_delta) has empty base files but is NOT empty
             raise ValueError(
                 "first sync requires an EMPTY downstream table (bootstrap "

@@ -1,12 +1,12 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
 with decode/feature-extraction as Arrow-batched ``mapInPandas`` stages.
 
-The container has no image/audio libraries, so the DECODE step is stubbed
-(deterministic fake features; a real decoder raises NotImplementedError
-behind the ``real_decode`` flag) — but the Spark-side plumbing is real
-and tested: binary column schema, typed metadata struct, mapInPandas
-batch shapes, and partition-preserving feature extraction. Swapping the
-fake for PIL/ffmpeg is a one-function change.
+No image/audio libraries are installed, so the DECODE step is a stub:
+``extract_features`` derives deterministic fake features from each
+payload's sha256, batch by batch; a real decoder (PIL/ffmpeg) would
+replace that per-batch loop. The Spark-side plumbing is real and tested:
+binary column schema, typed metadata struct, mapInPandas batch shapes,
+and partition-preserving feature extraction.
 """
 
 from __future__ import annotations
@@ -61,24 +61,12 @@ def as_blob_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_payload(payload: bytes, kind: str, real_decode: bool = False) -> np.ndarray:
-    """Stub decoder. With ``real_decode`` this is where PIL/librosa/ffmpeg
-    would decode the payload; the sandbox has none of them, so a
-    deterministic fake derives FEATURE_DIM doubles from the payload bytes
-    (sha256-seeded) — stable across runs and engines."""
-    if real_decode:
-        raise NotImplementedError("no media codecs in this environment; use the deterministic stub")
-    digest = hashlib.sha256(payload).digest()
-    raw = np.frombuffer(digest[: FEATURE_DIM * 4], dtype="<u4").astype(np.float64)
-    return raw / np.float64(2**32)
-
-
-def extract_features(blobs: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(blobs: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     ``mapInPandas`` keeps partitioning intact (map-only, no shuffle) and
-    moves payload bytes JVM->Python once per Arrow batch. The per-element
-    decode is the pluggable stub above."""
+    moves payload bytes JVM->Python once per Arrow batch. Stub decode: the
+    first FEATURE_DIM uint32 words of each payload's sha256, in [0, 1)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         dim_bytes = FEATURE_DIM * 4
@@ -145,7 +133,7 @@ def multimodal_blob_metadata(spark, sf_dir):
 @query("multimodal_feature_extract")  # rows-only: stub features are Spark-side
 def multimodal_feature_extract(spark, sf_dir):
     """mapInPandas decode/feature-extract over binary payloads
-    (deterministic stub features; see decode_payload)."""
+    (deterministic stub features; see extract_features)."""
     blobs = as_blob_table(load_table(spark, sf_dir, "documents"))
     feats = extract_features(blobs)
     return feats.select(

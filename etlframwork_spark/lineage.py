@@ -154,14 +154,3 @@ class MetricsTable:
         row = dict(row)
         row.setdefault("committed_at", int(time.time() * 1_000_000))
         _append(self.epochs_dir, EPOCH_METRICS_SCHEMA, [row])
-
-    def read_epochs(self, spark):
-        # mergeSchema: EPOCH_METRICS_SCHEMA gained mid-schema columns in
-        # round 2; a metrics dir written before that holds mixed parquet
-        # schemas, and a plain read would silently drop the new columns
-        # (round-2 advice). Metrics dirs are tiny — the footer merge cost
-        # is irrelevant.
-        return spark.read.option("mergeSchema", "true").parquet(self.epochs_dir)
-
-    def read_lineage(self, spark):
-        return spark.read.option("mergeSchema", "true").parquet(self.lineage_dir)

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .table import TOMBSTONE_COL, SnapshotTable
+from .table import SnapshotTable, is_tombstone
 
 
 def purge_tombstones(
@@ -32,9 +32,7 @@ def purge_tombstones(
     guarantees no re-delivery below ``watermark_lsn``. Racing a concurrent
     writer to the same buckets fails the commit (CommitConflict) and the
     rewrite is recomputed from fresh state."""
-    purgeable = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) & (
-        F.col(table.order_col) < F.lit(watermark_lsn)
-    )
+    purgeable = is_tombstone() & (F.col(table.order_col) < F.lit(watermark_lsn))
     hit, _, _ = table.rewrite(
         spark,
         lambda: table.bucket_counts(table.read(spark, include_tombstones=True).filter(purgeable)),

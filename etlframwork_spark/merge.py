@@ -56,6 +56,8 @@ from .lineage import MetricsTable, shuffle_totals
 from .table import (
     TOMBSTONE_COL,
     SnapshotTable,
+    fence_key,
+    is_tombstone,
     lww_resolve,
     recompute_on_conflict,
     tombstone_where,
@@ -122,7 +124,7 @@ def merge_batch(
         raise ValueError(f"unknown write_mode {write_mode!r}")
     t0 = time.monotonic()
     shuffle0 = shuffle_totals(spark)  # None unless the UI/REST is enabled
-    fence = None if epoch_id is None else f"{job_id}:{epoch_id}"
+    fence = None if epoch_id is None else fence_key(job_id, epoch_id)
     table.refresh()
     if fence is not None and table.is_fence_committed(fence, branch=branch):
         return {"skipped": True, "fence": fence}
@@ -154,9 +156,7 @@ def merge_batch(
     obs: Observation | None = None
     # a delete event or a stored tombstone: it beats a live row at an
     # exact order tie and, as the winner, becomes a tombstone
-    is_del = (F.col("op") == "delete") | (
-        (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-    )
+    is_del = (F.col("op") == "delete") | ((F.col("op") == _STORED) & is_tombstone())
 
     def epoch_rows(stored: DataFrame | None) -> DataFrame:
         """The epoch's rows on the attempt's fresh table state: steps 2-4."""
@@ -363,7 +363,7 @@ def delete_where(
         # a matching row becomes a tombstone; a tombstone stays one
         lambda df: tombstone_where(
             df,
-            F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) | F.coalesce(pred.cast("boolean"), F.lit(False)),
+            is_tombstone() | F.coalesce(pred.cast("boolean"), F.lit(False)),
             table.key_cols,
             table.order_col,
         ),
@@ -424,6 +424,7 @@ def merge_into(
         raise ValueError(f"when_matched must be update|delete|ignore, got {when_matched!r}")
     if when_not_matched not in ("insert", "ignore"):
         raise ValueError(f"when_not_matched must be insert|ignore, got {when_not_matched!r}")
+    table.refresh()  # the target is read on this handle before merge_batch refreshes it
     key_cols = table.key_cols
     missing = [k for k in key_cols if k not in source.columns]
     if missing:
@@ -544,6 +545,7 @@ def update_where(
     ``delete_where``); they additionally drive scan pruning.
     """
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    table.refresh()  # the matching rows are read on this handle, as in merge_into
     schema = table.schema()
     cols = set(schema.fieldNames())
     protected = set(table.key_cols) | {table.order_col, TOMBSTONE_COL, SHA_COL}

@@ -22,9 +22,8 @@ network (SURVEY.md §7.4.1), so this module reproduces the Iceberg
 
 Crash safety: a kill between data-file write and metadata rename leaves
 orphan data files that no snapshot references — the manifest is the source
-of truth; ``vacuum()`` collects orphans. Loading scans for the highest
-``v{N}.json`` (version-hint is only a fast path), so a torn hint write
-cannot corrupt the table.
+of truth; ``vacuum()`` collects orphans. Loading takes the highest
+``v{N}.json`` from a listing of ``metadata/``.
 
 Swapping this module for real ``iceberg-spark-runtime`` + ``MERGE INTO``
 is an isolated change if a future environment has the jar.
@@ -131,6 +130,24 @@ def hydrate_meta(root: str, meta: dict) -> dict:
 # impossible.
 TOMBSTONE_COL = "_deleted"
 
+
+def is_tombstone() -> Column:
+    """The stored tombstone flag; a null flag is a live row."""
+    return F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+
+
+def fence_key(job_id: str, epoch_id: int) -> str:
+    """The epoch fence ``"{job_id}:{epoch_id}"`` a commit records."""
+    return f"{job_id}:{epoch_id}"
+
+
+def parse_fence(fence: str) -> tuple[str, int] | None:
+    """``(job_id, epoch_id)`` of a ``fence_key``; ``None`` when the part
+    after the last ``:`` is not an integer."""
+    job, sep, epoch = fence.rpartition(":")
+    return (job, int(epoch)) if sep and epoch.lstrip("-").isdigit() else None
+
+
 # Deterministic LWW tie-break (round-6, advice item #1): at an IDENTICAL
 # (lsn, commit) ordering key, a delete/tombstone beats a live row. Ties
 # between NON-identical rows arise only from out-of-band corrections that
@@ -165,7 +182,7 @@ def lww_resolve(
     partition (skew-proof, codegen)."""
     order_cols = lww_order_cols(order_col, cols)
     if is_delete is None and TOMBSTONE_COL in cols:
-        is_delete = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+        is_delete = is_tombstone()
     if is_delete is not None:
         df = df.withColumn(LWW_PRI, is_delete.cast("int"))
         order_cols = order_cols + [LWW_PRI]
@@ -299,6 +316,13 @@ def _list_written_files(data_dir: str) -> dict[int, list[str]]:
     return out
 
 
+def _bucket_files(snap: dict[str, Any]) -> dict[int, tuple[list[str], list[str]]]:
+    """``SnapshotTable.bucket_files`` of a snapshot dict already in hand."""
+    files, deltas = snap["files"], snap.get("delta_files", {})
+    present = sorted({int(b) for b in files} | {int(b) for b, fs in deltas.items() if fs})
+    return {b: (files.get(str(b), []), deltas.get(str(b), [])) for b in present}
+
+
 class SnapshotTable:
     """A bucketed, snapshot-versioned parquet table with atomic commits."""
 
@@ -421,8 +445,6 @@ class SnapshotTable:
         finally:
             os.remove(tmp)
         self.version = new_version
-        # best-effort fast-path hint (load() never trusts it blindly)
-        self._publish_hint(mdir, new_version)
 
     def _transact(self, what: str, mutate: Callable[[], Any]) -> Any:
         """The one metadata transaction: every change to the table's
@@ -453,12 +475,6 @@ class SnapshotTable:
             f"{what} lost the metadata CAS {_MAX_COMMIT_RETRIES} times in a row"
         )
 
-    def _publish_hint(self, mdir: str, new_version: int) -> None:
-        hint_tmp = os.path.join(mdir, f".hint-{uuid.uuid4().hex}")
-        with open(hint_tmp, "w") as f:
-            f.write(str(new_version))
-        os.rename(hint_tmp, os.path.join(mdir, "version-hint.text"))
-
     def _dehydrate(self) -> dict:
         """Disk form of ``self.meta`` (inverse of ``hydrate_meta``).
 
@@ -479,21 +495,15 @@ class SnapshotTable:
         fsch = self.meta.get("file_schemas", {})
         out_snaps = []
         for snap in self.meta["snapshots"]:
-            files = snap.get("files", {})
-            deltas = snap.get("delta_files", {})
-            present = set(files) | {b for b, fs in deltas.items() if fs}
-            ptrs = {b: r for b, r in snap.get("manifests", {}).items() if b in present}
-            missing = sorted(b for b in present if b not in ptrs)
+            layout = {str(b): fs for b, fs in _bucket_files(snap).items()}
+            ptrs = {b: r for b, r in snap.get("manifests", {}).items() if b in layout}
+            missing = sorted(b for b in layout if b not in ptrs)
             if missing:
                 man: dict[str, Any] = {"buckets": {}, "file_stats": {}, "file_schemas": {}}
                 for bs in missing:
-                    ent: dict[str, Any] = {}
-                    if files.get(bs):
-                        ent["files"] = files[bs]
-                    if deltas.get(bs):
-                        ent["delta_files"] = deltas[bs]
-                    man["buckets"][bs] = ent
-                    for rel_f in (files.get(bs) or []) + (deltas.get(bs) or []):
+                    base, delta = layout[bs]
+                    man["buckets"][bs] = {k: fs for k, fs in (("files", base), ("delta_files", delta)) if fs}
+                    for rel_f in base + delta:
                         if rel_f in fstats:
                             man["file_stats"][rel_f] = fstats[rel_f]
                         if rel_f in fsch:
@@ -712,62 +722,42 @@ class SnapshotTable:
                 return s
         raise KeyError(f"snapshot {sid} not found")
 
+    def bucket_files(self, snapshot_id: int | None = None) -> dict[int, tuple[list[str], list[str]]]:
+        """``{bucket: (base files, delta files)}``, root-relative, in bucket
+        order, for the snapshot's present buckets (those with a base or a
+        delta file): the one reader of a snapshot's file layout."""
+        return _bucket_files(self.snapshot(snapshot_id))
+
     def files_for(
         self,
         buckets: Iterable[int] | None = None,
         snapshot_id: int | None = None,
         kind: str = "all",
     ) -> list[str]:
-        """Absolute data-file paths for a snapshot, optionally pruned to the
-        given buckets (manifest-level partition pruning). ``kind``:
-        'all' (base+delta), 'base', or 'delta' (merge-on-read deltas)."""
-        snap = self.snapshot(snapshot_id)
-        wanted = None if buckets is None else {str(int(b)) for b in buckets}
-        out: list[str] = []
-        if kind in ("all", "base"):
-            for b, files in snap["files"].items():
-                if wanted is None or b in wanted:
-                    out.extend(os.path.join(self.root, f) for f in files)
-        if kind in ("all", "delta"):
-            for b, files in snap.get("delta_files", {}).items():
-                if wanted is None or b in wanted:
-                    out.extend(os.path.join(self.root, f) for f in files)
-        return out
-
-    def _split_buckets_for_read(
-        self, buckets: Iterable[int] | None, snapshot_id: int | None
-    ) -> tuple[set[int], set[int]]:
-        """Partition the requested buckets into (clean, dirty): dirty ones
-        carry merge-on-read delta files and need a read-time LWW resolve;
-        clean ones can be scanned raw with no shuffle."""
-        snap = self.snapshot(snapshot_id)
-        present = {int(b) for b in snap["files"]} | {
-            int(b) for b, fs in snap.get("delta_files", {}).items() if fs
-        }
-        requested = present if buckets is None else (present & {int(b) for b in buckets})
-        dirty = {
-            int(b) for b, fs in snap.get("delta_files", {}).items() if fs and int(b) in requested
-        }
-        return requested - dirty, dirty
+        """Absolute data-file paths for a snapshot, bucket by bucket,
+        optionally pruned to the given buckets (manifest-level partition
+        pruning). ``kind``: 'all' (base+delta), 'base', or 'delta'
+        (merge-on-read deltas)."""
+        wanted = None if buckets is None else {int(b) for b in buckets}
+        return [
+            os.path.join(self.root, f)
+            for b, (base, delta) in self.bucket_files(snapshot_id).items()
+            if wanted is None or b in wanted
+            for f in (base if kind != "delta" else []) + (delta if kind != "base" else [])
+        ]
 
     def live_files(self) -> set[str]:
         """Root-relative paths of every data file a retained snapshot
         references (branch and tag heads included)."""
-        live: set[str] = set()
-        for s in self.meta["snapshots"]:
-            for fs in s["files"].values():
-                live.update(fs)
-            for fs in s.get("delta_files", {}).values():
-                live.update(fs)
-        return live
+        layouts = (_bucket_files(s).values() for s in self.meta["snapshots"])
+        return {f for layout in layouts for base, delta in layout for f in base + delta}
 
     def has_deltas(self, buckets: Iterable[int] | None = None, snapshot_id: int | None = None) -> bool:
         return bool(self.files_for(buckets=buckets, snapshot_id=snapshot_id, kind="delta"))
 
     def delta_file_counts(self, snapshot_id: int | None = None) -> dict[int, int]:
         """Per-bucket delta-file counts (compaction scheduling input)."""
-        snap = self.snapshot(snapshot_id)
-        return {int(b): len(fs) for b, fs in snap.get("delta_files", {}).items() if fs}
+        return {b: len(delta) for b, (_, delta) in self.bucket_files(snapshot_id).items() if delta}
 
     def scan_files(
         self,
@@ -777,8 +767,8 @@ class SnapshotTable:
     ) -> tuple[list[str], list[str]]:
         """Plan a filtered scan: the ``(clean_files, dirty_files)`` sets, in
         absolute paths and bucket order, that ``read(filters=...)`` hands
-        to Spark. A bucket with delta files is dirty: its base and delta
-        files all need the read-time LWW resolve.
+        to Spark, walking ``bucket_files``. A bucket with delta files is
+        dirty: its base and delta files all need the read-time LWW resolve.
 
         Three pruning layers, each a pure optimization (the caller
         re-applies the predicate on the DataFrame):
@@ -812,13 +802,13 @@ class SnapshotTable:
             if keys_are_strings and all(k in eq for k in self.key_cols):
                 nb = snap.get("num_buckets", self.num_buckets)
                 buckets = [bucket_of([eq[k] for k in self.key_cols], nb)]
-        clean_b, dirty_b = self._split_buckets_for_read(buckets, snapshot_id)
+        wanted = None if buckets is None else {int(b) for b in buckets}
         fstats = self.meta.get("file_stats", {})
         clean: list[str] = []
         dirty: list[str] = []
-        for b in sorted(clean_b | dirty_b):
-            base = snap["files"].get(str(b), [])
-            delta = snap.get("delta_files", {}).get(str(b), [])
+        for b, (base, delta) in _bucket_files(snap).items():
+            if wanted is not None and b not in wanted:
+                continue
             if delta:
                 dirty.extend(os.path.join(self.root, f) for f in base + delta)
             else:
@@ -934,9 +924,7 @@ class SnapshotTable:
         else:
             df = parts[0].unionByName(parts[1])
         if not include_tombstones and TOMBSTONE_COL in schema.fieldNames():
-            df = df.filter(
-                ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-            ).drop(TOMBSTONE_COL)
+            df = df.filter(~is_tombstone()).drop(TOMBSTONE_COL)
         if filters:
             # re-apply the exact predicate the pruning assumed — skipping
             # files/buckets can then never change results, only cost
@@ -980,8 +968,10 @@ class SnapshotTable:
 
         if kind == "snapshots":
             cur = self.meta["current_snapshot_id"]
-            rows = [
-                (
+            rows = []
+            for s in self.meta["snapshots"]:
+                layout = _bucket_files(s).values()
+                rows.append((
                     int(s["snapshot_id"]),
                     (None if s.get("parent_id") is None else int(s["parent_id"])),
                     int(s.get("schema_id", 0)),
@@ -989,12 +979,10 @@ class SnapshotTable:
                     str(s.get("summary", {}).get("operation", "")) or None,
                     s.get("fence"),
                     float(s["committed_at"]) if s.get("committed_at") else None,
-                    sum(len(f) for f in s.get("files", {}).values()),
-                    sum(len(f) for f in s.get("delta_files", {}).values()),
+                    sum(len(base) for base, _ in layout),
+                    sum(len(delta) for _, delta in layout),
                     s["snapshot_id"] == cur,
-                )
-                for s in self.meta["snapshots"]
-            ]
+                ))
             return spark.createDataFrame(
                 rows,
                 _struct([
@@ -1005,17 +993,16 @@ class SnapshotTable:
                 ]),
             )
         if kind == "files":
-            snap = self.snapshot()
             fsch = self.meta.get("file_schemas", {})
             fstats = self.meta.get("file_stats", {})
             rows = []
-            for fkind, key in (("base", "files"), ("delta", "delta_files")):
-                for b, rels in snap.get(key, {}).items():
+            for b, (base, delta) in self.bucket_files().items():
+                for fkind, rels in (("base", base), ("delta", delta)):
                     for rel in rels:
                         st = fstats.get(rel, {})
                         path = os.path.join(self.root, rel)
                         rows.append((
-                            int(b), rel, fkind,
+                            b, rel, fkind,
                             (int(fsch[rel]) if rel in fsch else None),
                             (int(st["rows"]) if "rows" in st else None),
                             (int(os.path.getsize(path)) if os.path.exists(path) else None),
@@ -1486,9 +1473,7 @@ class SnapshotTable:
                 # the new hash. Backfill per-snapshot specs first — snapshots
                 # without the key default to meta["num_buckets"], which is
                 # about to change out from under them.
-                stale = (set(parent["files"]) | {
-                    b for b, fs in parent.get("delta_files", {}).items() if fs
-                }) - {str(b) for b in changed_buckets}
+                stale = set(_bucket_files(parent)) - set(changed_buckets)
                 if stale:
                     raise ValueError(
                         f"rebucket commit must replace every bucket; missing {sorted(stale)}"
@@ -1551,18 +1536,11 @@ class SnapshotTable:
 
         return self._transact("commit", mutate)
 
-    def _bucket_state(self, buckets: list[int], snapshot_id: int | None = None) -> dict[str, Any]:
+    def _bucket_state(self, buckets: list[int], snapshot_id: int | None = None) -> dict[int, Any]:
         """(base files, delta files) of the given buckets at a snapshot —
         the validation footprint for replace-commit conflicts."""
-        snap = self.snapshot(snapshot_id)
-        out: dict[str, Any] = {}
-        for b in buckets:
-            bs = str(int(b))
-            out[bs] = (
-                tuple(snap["files"].get(bs, ())),
-                tuple(snap.get("delta_files", {}).get(bs, ())),
-            )
-        return out
+        layout = self.bucket_files(snapshot_id)
+        return {b: layout.get(b, ([], [])) for b in buckets}
 
     def _stats_cols(self) -> list[str]:
         """Columns to record bounds for: every top-level field except the
@@ -1622,14 +1600,14 @@ class SnapshotTable:
 
     @staticmethod
     def _pruned_fences(fences: dict[str, int], keep_per_job: int) -> dict[str, int]:
-        """Keep only each job's trailing ``keep_per_job`` fences (fence key
-        format ``"{job_id}:{epoch_id}"``; unparsable keys are kept)."""
+        """Keep only each job's trailing ``keep_per_job`` fences (keys
+        ``parse_fence`` rejects are kept)."""
         by_job: dict[str, list[tuple[int, str]]] = {}
         keep: dict[str, int] = {}
         for fence, snap_id in fences.items():
-            job, sep, epoch = fence.rpartition(":")
-            if sep and epoch.lstrip("-").isdigit():
-                by_job.setdefault(job, []).append((int(epoch), fence))
+            parsed = parse_fence(fence)
+            if parsed is not None:
+                by_job.setdefault(parsed[0], []).append((parsed[1], fence))
             else:
                 keep[fence] = snap_id
         for entries in by_job.values():

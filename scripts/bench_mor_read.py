@@ -2,11 +2,12 @@
 
 Round-1 review's #1 scale gap: `table.read` resolved deltas with a
 global groupBy over base+deltas — a full-table shuffle on every read
-while ANY delta exists. The fix (table.py `_split_buckets_for_read`)
-resolves per-bucket: only delta-carrying buckets pay the group-by; clean
-buckets union in exchange-free. This script measures both paths on the
-same table (the "global" baseline reproduces the round-1 plan verbatim)
-so BENCH/BASELINE.md can carry the read-after-N-mor-epochs number.
+while ANY delta exists. The fix (the clean/dirty split in table.py
+`SnapshotTable.scan_files`) resolves per-bucket: only delta-carrying
+buckets pay the group-by; clean buckets union in exchange-free. This
+script measures both paths on the same table (the "global" baseline
+reproduces the round-1 plan verbatim) so BENCH/BASELINE.md can carry
+the read-after-N-mor-epochs number.
 
     python scripts/bench_mor_read.py [--rows 2000000] [--buckets 32] [--dirty 2]
 """

@@ -234,6 +234,21 @@ def test_unfenced_dml_applies_every_call(spark, tmp_path):
     assert t.refresh().snapshot()["snapshot_id"] == sid
 
 
+def test_update_where_through_a_stale_handle_keeps_a_delete(spark, tmp_path):
+    """update_where reads the rows it corrects on the caller's handle. A
+    handle loaded before another writer deleted a key must not bring the
+    key back as a correction."""
+    from etlframwork_spark.merge import update_where
+
+    t = _mk(tmp_path)
+    _merge(spark, t, [("a", 1, None, 1, "insert"), ("b", 2, None, 2, "insert")], 0)
+    stale = SnapshotTable.load(t.root)
+    _merge(spark, t, [("a", None, None, 3, "delete")], 1)
+    update_where(spark, stale, {"v": 0}, "v >= 1", new_order=100)
+    got = {r["k"]: (r["v"], r["lsn"]) for r in t.refresh().read(spark).collect()}
+    assert got == {"b": (0, 100)}
+
+
 def test_update_where_rejects_protected_and_unknown(spark, tmp_path):
     from etlframwork_spark.merge import update_where
 

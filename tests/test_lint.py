@@ -256,3 +256,45 @@ def test_merge_calls_rewrite_buckets_only_to_append():
     assert calls, "merge.py no longer calls rewrite_buckets"
     bad = [line for line, args in calls if 'mode="append_delta"' not in args or '"replace"' in args]
     assert not bad, f"merge.py:{bad}: a replace write belongs in SnapshotTable.rewrite"
+
+
+# A snapshot's file layout (its per-bucket "files" and "delta_files"
+# maps) has one reader, SnapshotTable.bucket_files (with _bucket_files,
+# its form for a snapshot dict already in hand). The writers that build
+# or serialize the maps are the only other code that names them.
+_LAYOUT_KEY = re.compile(r'"delta_files"|\["files"\]|\.get\("files"')
+_LAYOUT_OWNERS = {"create", "hydrate_meta", "_dehydrate", "commit", "bucket_files", "_bucket_files"}
+
+
+def _top_level_defs(src: str):
+    """``(name, first line, last line)`` of every module-level function
+    and class method; nested functions count as their enclosing def."""
+    tree = ast.parse(src)
+    nodes = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+    for cls in (n for n in tree.body if isinstance(n, ast.ClassDef)):
+        nodes += [n for n in cls.body if isinstance(n, ast.FunctionDef)]
+    return [(n.name, n.lineno, n.end_lineno) for n in nodes]
+
+
+def test_snapshot_layout_has_one_reader():
+    problems = []
+    for rel, src in _engine_sources():
+        defs = _top_level_defs(src)
+        for m in _LAYOUT_KEY.finditer(src):
+            line = src.count("\n", 0, m.start()) + 1
+            owner = next((name for name, lo, hi in defs if lo <= line <= hi), None)
+            if rel != "table.py" or owner not in _LAYOUT_OWNERS:
+                problems.append(f"{rel}:{line}: {m.group(0)} read in {owner}")
+    assert not problems, problems
+
+
+# The tombstone test and the fence key's parse have one spelling each,
+# in table.py: is_tombstone() and parse_fence().
+def test_tombstone_test_and_fence_parse_live_in_table():
+    problems = []
+    for rel, src in _engine_sources():
+        for what in ("F.coalesce(F.col(TOMBSTONE_COL)", 'rpartition(":")'):
+            lines = [src.count("\n", 0, m.start()) + 1 for m in re.finditer(re.escape(what), src)]
+            if len(lines) > (1 if rel == "table.py" else 0):
+                problems.append(f"{rel}:{lines}: {what}")
+    assert not problems, problems

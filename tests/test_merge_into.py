@@ -118,6 +118,19 @@ def test_merge_into_rewrites_only_source_buckets(spark, tmp_path):
     assert sum(1 for b in after if after[b] != before.get(b)) == 1
 
 
+def test_insert_only_merge_through_a_stale_handle_keeps_the_row(spark, tmp_path):
+    """merge_into matches the source against the target on the caller's
+    handle. A handle loaded before another writer inserted key ``c`` must
+    still see ``c`` as matched, so an insert-only merge leaves it alone."""
+    t = _mk(tmp_path)
+    _seed(spark, t, 2)
+    stale = SnapshotTable.load(t.root)
+    merge_batch(spark, t, spark.createDataFrame([("c", 3, 3, "insert")], EV), job_id="other", epoch_id=0)
+    merge_into(spark, stale, spark.createDataFrame([("c", 99)], SRC), new_order=100, when_matched="ignore")
+    got = {r["k"]: (r["v"], r["lsn"]) for r in t.refresh().read(spark).collect()}
+    assert got == {"k0": (0, 0), "k1": (1, 1), "c": (3, 3)}
+
+
 def test_merge_into_partial_source_keeps_unassigned_target_columns(spark, tmp_path):
     """ANSI/Delta MERGE UPDATE-SET semantics (round-6 advice #1): payload
     columns the source does NOT carry keep the matched target row's

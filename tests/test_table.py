@@ -200,9 +200,13 @@ def test_mor_read_resolves_only_delta_buckets(tmp_path, spark):
     t.refresh()
     dirty_expected = set(t.delta_file_counts())
     assert len(dirty_expected) == 1
-    clean, dirty = t._split_buckets_for_read(None, None)
+    layout = t.bucket_files()
+    dirty = {b for b, (_, delta) in layout.items() if delta}
+    clean = set(layout) - dirty
     assert dirty == dirty_expected
     assert clean == set(range(4)) - dirty_expected
+    clean_files, dirty_files = t.scan_files()
+    assert (clean_files, dirty_files) == (t.files_for(clean), t.files_for(dirty))
     df = t.read(spark)
     import contextlib, io
 
